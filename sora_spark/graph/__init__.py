@@ -7,6 +7,6 @@ no GraphX/RDD dependency).
 """
 
 from sora_spark.graph.derive import e_co, e_seq
-from sora_spark.graph.graph import Graph
+from sora_spark.graph.graph import FixpointError, Graph
 
-__all__ = ["e_co", "e_seq", "Graph"]
+__all__ = ["e_co", "e_seq", "FixpointError", "Graph"]

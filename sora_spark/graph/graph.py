@@ -9,14 +9,20 @@ Spark-first:
 - one-shot ops are joins + aggregations (Catalyst plans them; the
   self-join shuffles on the join key and AQE picks broadcast vs SMJ);
 - fixpoint ops (connected components) are a driver-side loop where
-  EVERY iteration ends in `localCheckpoint(eager=True)` — without the
-  lineage cut the plan tree grows exponentially and the optimizer
-  stalls (SURVEY §4.3, the classic failure mode of DataFrame graph
-  code).
+  EVERY iteration ends in a checkpoint — without the lineage cut the
+  plan tree grows exponentially and the optimizer stalls (SURVEY §4.3,
+  the classic failure mode of DataFrame graph code).
+
+Non-convergence: a loop whose answer IS a fixpoint raises
+`FixpointError` when `max_iter` rounds did not reach it — a partial
+result is never returned as if it were the answer. Loops whose round
+bound is part of their contract (`reduce_pipeline`,
+`assembly_pipeline`, `compact_chains`, `bfs_hops`, `pagerank`,
+`label_propagation`) return once that bound is reached.
 
 Scale posture: edges are repartitioned on `s` once up front so the
 iterated self-joins reuse one partitioning; convergence checks are
-single `count()` actions (one job per iteration, the unavoidable
+single aggregate actions (one job per iteration, the unavoidable
 synchronization barrier of label propagation).
 """
 
@@ -27,6 +33,25 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DecimalType,
+    IntegerType,
+    LongType,
+    ShortType,
+)
+
+
+class FixpointError(RuntimeError):
+    """A fixpoint loop exhausted `max_iter` rounds without converging.
+    Its partial state (labels, peel, distances) is not the answer, so
+    the loop raises instead of returning it; raise `max_iter`."""
+
+    def __init__(self, loop: str, max_iter: int, hint: str = ""):
+        super().__init__(
+            f"{loop}: no fixpoint within max_iter={max_iter} rounds"
+            + (f" ({hint})" if hint else "")
+        )
 
 
 @dataclass
@@ -60,41 +85,34 @@ class Graph:
     vertices: DataFrame | None = None
     reliable_checkpoint_dir: str | None = None
 
-    def _cp(self, df: DataFrame) -> DataFrame:
-        """The per-round lineage cut every fixpoint in this class uses
-        (via `.transform(self._cp)` so call sites stay postfix).
-        Local by default; reliable when the Graph was built with
-        `reliable_checkpoint_dir` (see class docstring for the
-        executor-loss trade)."""
+    def _cut(self, df: DataFrame, eager: bool) -> DataFrame:
         if self.reliable_checkpoint_dir is None:
-            return df.localCheckpoint(eager=True)
+            return df.localCheckpoint(eager=eager)
         sc = df.sparkSession.sparkContext
         # setCheckpointDir once per context/dir, not per round — it
         # round-trips to the JVM and mkdirs the path every call
         if getattr(sc, "_sora_ckpt_dir", None) != self.reliable_checkpoint_dir:
             sc.setCheckpointDir(self.reliable_checkpoint_dir)
             sc._sora_ckpt_dir = self.reliable_checkpoint_dir
-        return df.checkpoint(eager=True)
+        return df.checkpoint(eager=eager)
+
+    def _cp(self, df: DataFrame) -> DataFrame:
+        """The per-round lineage cut every fixpoint in this class uses
+        (via `.transform(self._cp)` so call sites stay postfix).
+        Local by default; reliable when the Graph was built with
+        `reliable_checkpoint_dir` (see class docstring for the
+        executor-loss trade)."""
+        return self._cut(df, eager=True)
 
     def _cp_lazy(self, df: DataFrame) -> DataFrame:
-        """Lineage cut WITHOUT the eager materialization job, for call
-        sites whose very next statement is an action (count/agg) over
-        the cut frame: the action materializes the checkpoint blocks
-        as it aggregates, fusing what used to be two sequential jobs
-        per fixpoint round — a full materialize pass plus a cache-read
-        pass — into ONE pass (r14, guide §1.2: remove whole passes
-        before tuning inside them). Bit-identical data either way;
-        downstream consumers read the same cached/checkpointed blocks.
-        Reliable mode keeps the same contract: doCheckpoint() runs at
-        the end of that first action's job, exactly as it does after
-        the eager count."""
-        if self.reliable_checkpoint_dir is None:
-            return df.localCheckpoint(eager=False)
-        sc = df.sparkSession.sparkContext
-        if getattr(sc, "_sora_ckpt_dir", None) != self.reliable_checkpoint_dir:
-            sc.setCheckpointDir(self.reliable_checkpoint_dir)
-            sc._sora_ckpt_dir = self.reliable_checkpoint_dir
-        return df.checkpoint(eager=False)
+        """`_cp` WITHOUT the eager materialization job, for call sites
+        whose very next statement is an action over the cut frame: that
+        action materializes the checkpoint blocks as it runs, so the
+        round pays one pass instead of a materialize pass plus a read
+        pass (see OPTIMIZATION_r14.md). Bit-identical data either way;
+        in reliable mode doCheckpoint() runs at the end of that first
+        action's job, exactly as after an eager count."""
+        return self._cut(df, eager=False)
 
     # ---- basic structure -------------------------------------------------
 
@@ -150,29 +168,17 @@ class Graph:
 
     # ---- one-shot joins --------------------------------------------------
 
-    def two_hop_count(self) -> DataFrame:
-        """Directed 2-path count e1.d == e2.s (Q-G2 / B9), computed as
-        Σ_v indeg(v)·outdeg(v): every 2-path is exactly one choice of
-        (in-edge, out-edge) at its mid vertex, so the edge-set
-        SELF-JOIN — which materializes every 2-path row just to count
-        it (the path stream can be orders of magnitude larger than the
-        edge set at 100 TB) — collapses to ONE degree aggregation plus
-        a scalar sum. Same scalar, verified against two_hop_count_join
-        (tests/test_graph.py) and the unchanged brute-force oracle.
-
-        Single-pass shape (r14): the r06 form aggregated in-degrees
-        and out-degrees as two SEPARATE groupBys joined on the vertex
-        — but the edge plan does not canonicalize across the two
-        consumers when it carries lambda expressions (e_co's pair
-        expansion), so the WHOLE upstream derivation ran twice with no
-        ReusedExchange (bench q9 plan, plans/r14/). Exploding each
-        edge into (v=s, out) + (v=d, in) counts both directions in one
-        pass over one derivation: one edge-set read, one exchange on
-        v, no join. A vertex missing either side contributes i·o = 0 —
-        exactly the rows the old inner join dropped — so the scalar is
-        unchanged."""
-        deg = (
-            self.edges.select(
+    @staticmethod
+    def _in_out_degrees(edges: DataFrame) -> DataFrame:
+        """(v, outd, ind) for every non-null endpoint v of the directed
+        edges (s, d), in ONE pass: each edge explodes into (v=s, o=1)
+        and (v=d, o=0), so one groupBy counts both directions over one
+        edge read and one exchange (two separate degree groupBys re-run
+        the upstream edge derivation per consumer, see
+        OPTIMIZATION_r14.md). A vertex absent from a column has 0 there.
+        Null endpoints are dropped: no equi-join ever matches them."""
+        return (
+            edges.select(
                 F.explode(
                     F.array(
                         F.struct(F.col("s").alias("v"), F.lit(1).alias("o")),
@@ -180,14 +186,26 @@ class Graph:
                     )
                 ).alias("e")
             )
+            .filter(F.col("e.v").isNotNull())
             .groupBy(F.col("e.v").alias("v"))
             .agg(
-                F.sum("e.o").alias("o"),
-                F.sum(1 - F.col("e.o")).alias("i"),
+                F.sum("e.o").alias("outd"),
+                F.sum(1 - F.col("e.o")).alias("ind"),
             )
         )
+
+    def two_hop_count(self) -> DataFrame:
+        """Directed 2-path count e1.d == e2.s (Q-G2 / B9), computed as
+        Σ_v indeg(v)·outdeg(v): every 2-path is exactly one choice of
+        (in-edge, out-edge) at its mid vertex, so the edge-set
+        SELF-JOIN — which materializes every 2-path row just to count
+        it (the path stream can be orders of magnitude larger than the
+        edge set at 100 TB) — collapses to ONE degree aggregation plus
+        a scalar sum. Equal to `two_hop_count_join`, null endpoints
+        included (a null mid vertex never matches the join key)."""
+        deg = self._in_out_degrees(self.edges)
         return deg.agg(
-            F.coalesce(F.sum(F.col("i") * F.col("o")), F.lit(0))
+            F.coalesce(F.sum(F.col("ind") * F.col("outd")), F.lit(0))
             .cast("bigint")
             .alias("two_hop_count")
         )
@@ -201,29 +219,38 @@ class Graph:
             .agg(F.count("*").alias("two_hop_count"))
         )
 
+    @staticmethod
+    def _triangles(e: DataFrame) -> DataFrame:
+        """(a, b, c) for every wedge a→b→c closed by an edge a→c — on
+        canonical s < d edges, each undirected triangle exactly once,
+        a < b < c. Candidate wedges are bounded by per-vertex degree;
+        the small closing probe joins last."""
+        e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+        return (
+            e1.join(e2, F.col("e1.d") == F.col("e2.s"))
+            .join(
+                e3,
+                (F.col("e1.s") == F.col("e3.s"))
+                & (F.col("e2.d") == F.col("e3.d")),
+            )
+            .select(
+                F.col("e1.s").alias("a"),
+                F.col("e1.d").alias("b"),
+                F.col("e2.d").alias("c"),
+            )
+        )
+
     def triangle_count(self) -> DataFrame:
         """Triangles in canonical undirected edges: s < m < d closing
-        edge (s, d). Join order keeps the small closing probe last.
+        edge (s, d).
 
-        The edge frame is lazily cut first (r14): the three join sides
-        each re-derived the WHOLE upstream edge subplan — the qg3 plan
-        held three complete e_co derivations (three lineitem scans)
-        because exchange reuse never fires across the derivation's
-        lambda-bearing aggregate. With the cut, the first action
-        materializes the edges once and all three sides read blocks.
-        Graphs already checkpointed pay one redundant edge-block
-        write — vertex/edge-sized, dwarfed by the two removed
-        derivations everywhere it matters."""
+        The edge frame is lazily cut first: without it each of the three
+        join sides re-derives the whole upstream edge subplan (exchange
+        reuse never fires across a lambda-bearing derivation, see
+        OPTIMIZATION_r14.md); with it the first action materializes the
+        edges once and all three sides read blocks."""
         e = self.edges.transform(self._cp_lazy)
-        e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-        wedges = e1.join(e2, F.col("e1.d") == F.col("e2.s"))
-        return (
-            wedges.join(
-                e3,
-                (F.col("e1.s") == F.col("e3.s")) & (F.col("e2.d") == F.col("e3.d")),
-            )
-            .agg(F.count("*").alias("triangle_count"))
-        )
+        return self._triangles(e).agg(F.count("*").alias("triangle_count"))
 
     # Edge sets under this row count get broadcast hints in the
     # reduction joins (~128 MB of (long, long) pairs — comfortably
@@ -351,83 +378,40 @@ class Graph:
 
     # ---- fixpoint --------------------------------------------------------
 
-    def connected_components(
-        self, max_iter: int = 50, stats: dict | None = None
-    ) -> DataFrame:
-        """Min-label propagation to fixpoint → (v, component) with
-        component = min vertex id in the component (order-free, hence
-        deterministic). localCheckpoint per iteration cuts lineage.
-        O(diameter) rounds — see `connected_components_twophase` for the
-        O(log n) contraction variant. `stats` records {"rounds": k}.
-        """
-        # one scan (r14): the union form derived the edge subplan once
-        # per direction, and vertex_ids() re-derived it twice more —
-        # four full upstream derivations before round 1. _sym_edges
-        # builds sym in ONE derivation, and labels come from the
-        # CHECKPOINTED sym blocks (every vertex appears as sym.s —
-        # each edge contributes both directions), so the edge
-        # derivation now runs exactly once per CC call. The labels
-        # distinct reuses sym's hashpartitioning(s) — no new exchange.
-        # lazy cuts: the first mass/convergence action below (or round
-        # 1's, for sym) materializes the blocks — see _cp_lazy (r14)
-        sym = self._sym_edges().repartition("s").transform(self._cp_lazy)
-        labels = (
-            sym.select(F.col("s").alias("v"))
-            .distinct()
-            .select(F.col("v"), F.col("v").alias("component"))
-            .transform(self._cp_lazy)
-        )
+    def _min_label(
+        self, edges: DataFrame, labels: DataFrame, max_iter: int, loop: str
+    ) -> tuple[DataFrame, int]:
+        """Min-label propagation to fixpoint along the DIRECTED edges
+        (s, d): each round component(v) = least(component(v), min over
+        in-neighbors' components). `labels` is (v, component); returns
+        (labels, rounds) or raises FixpointError after `max_iter`
+        rounds. Each round is one join + one min-aggregate, lazily cut.
 
-        from pyspark.sql.types import (
-            ByteType,
-            DecimalType,
-            IntegerType,
-            LongType,
-            ShortType,
-        )
+        Convergence: labels only DECREASE, so for integral ids an equal
+        exact decimal(38,0) label mass ⟺ no label changed — one
+        aggregate scan per round (it also materializes the lazy cut),
+        and decimal(38) cannot wrap on huge ids. The cast is lossless
+        only for integral types: fractional ids could move by less than
+        the rounding and fake a fixpoint, so they — and string ids —
+        use the exact old-vs-new comparison join."""
+        ctype = labels.schema["component"].dataType
+        integral = isinstance(
+            ctype, (ByteType, ShortType, IntegerType, LongType)
+        ) or (isinstance(ctype, DecimalType) and ctype.scale == 0)
 
-        # Mass-based convergence (equal decimal sum ⟺ no label changed)
-        # is only sound when the cast to decimal(38,0) is lossless:
-        # integral types only.  Fractional ids (float/double, decimal
-        # with scale>0) would round under the cast, so sub-integer label
-        # movement could leave the rounded mass unchanged and declare a
-        # false fixpoint (ADVICE r06) — those fall back to the exact
-        # comparison join, same as string ids.
-        _ctype = labels.schema["component"].dataType
-        numeric_ids = isinstance(
-            _ctype, (ByteType, ShortType, IntegerType, LongType)
-        ) or (isinstance(_ctype, DecimalType) and _ctype.scale == 0)
-
-        def _label_mass(lab):
-            # exact decimal sum — labels only DECREASE under min-
-            # propagation, so equal mass ⟺ no label changed; this
-            # replaces the per-round full label-set comparison JOIN
-            # with one aggregate scan (change-set-first economics,
-            # SCALE.md). Decimal(38) so huge vertex ids cannot wrap.
-            # Only sound for NUMERIC ids — string-labelled graphs
-            # (e.g. qer1 entity names) keep the exact comparison join.
+        def mass(lab):
             return lab.agg(
                 F.sum(F.col("component").cast("decimal(38,0)"))
             ).collect()[0][0]
 
-        def _changed(new_lab, old_lab):
-            return (
-                new_lab.alias("n")
-                .join(old_lab.alias("o"), "v")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
-
-        mass = _label_mass(labels) if numeric_ids else None
-        rounds = 0
-        for _ in range(max_iter):
-            # candidate label per vertex = min over neighbors' labels
+        m = mass(labels) if integral else None
+        for rounds in range(1, max_iter + 1):
             nbr_min = (
-                sym.join(labels, sym.s == labels.v)
+                edges.join(labels, edges.s == labels.v)
                 .groupBy(F.col("d").alias("v"))
                 .agg(F.min("component").alias("nbr_component"))
             )
-            new_labels = (
+            new = (
                 labels.join(nbr_min, "v", "left")
                 .select(
                     "v",
@@ -438,16 +422,46 @@ class Graph:
                 )
                 .transform(self._cp_lazy)
             )
-            if numeric_ids:
-                new_mass = _label_mass(new_labels)
-                done = new_mass == mass
-                mass = new_mass
+            if integral:
+                m, m_old = mass(new), m
+                done = m == m_old
             else:
-                done = _changed(new_labels, labels) == 0
-            labels = new_labels
-            rounds += 1
+                done = (
+                    new.alias("n")
+                    .join(labels.alias("o"), "v")
+                    .filter(F.col("n.component") != F.col("o.component"))
+                    .count()
+                    == 0
+                )
+            labels = new
             if done:
-                break
+                return labels, rounds
+        raise FixpointError(loop, max_iter, "rounds are O(diameter)")
+
+    def connected_components(
+        self, max_iter: int = 50, stats: dict | None = None
+    ) -> DataFrame:
+        """Min-label propagation to fixpoint → (v, component) with
+        component = min vertex id in the component (order-free, hence
+        deterministic). O(diameter) rounds, and raises FixpointError
+        when `max_iter` rounds do not reach the fixpoint — see
+        `connected_components_twophase` for the O(log n) contraction
+        variant. `stats` records {"rounds": k}.
+
+        The edge subplan is derived exactly once: `_sym_edges` builds
+        both orientations in one pass, and labels come from the
+        checkpointed sym blocks (every vertex appears as sym.s), so the
+        labels distinct reuses sym's hashpartitioning(s)."""
+        sym = self._sym_edges().repartition("s").transform(self._cp_lazy)
+        labels = (
+            sym.select(F.col("s").alias("v"))
+            .distinct()
+            .select(F.col("v"), F.col("v").alias("component"))
+            .transform(self._cp_lazy)
+        )
+        labels, rounds = self._min_label(
+            sym, labels, max_iter, "connected_components"
+        )
         if stats is not None:
             stats["rounds"] = rounds
         return labels
@@ -464,8 +478,11 @@ class Graph:
         big→small; round count is O(log n) regardless of graph
         DIAMETER — the property min-label propagation
         (`connected_components`, O(diameter) rounds) lacks on long
-        chains. Same output contract, same qg4 oracle; `stats` (if
-        given) records {"rounds": k} for the round-count comparison.
+        chains. On low-diameter graphs min-label is the faster kernel
+        (fewer passes per round). Same output contract, same qg4
+        oracle; raises FixpointError when `max_iter` rounds do not
+        reach the star forest. `stats` (if given) records
+        {"rounds": k} for the round-count comparison.
         """
         verts = self.vertex_ids().transform(self._cp_lazy)
         e = (
@@ -483,13 +500,11 @@ class Graph:
         def _edge_sig_n(df):
             # order-insensitive exact-decimal sum of per-edge hashes:
             # equal signatures make set equality overwhelmingly likely,
-            # and the ONE exact subtract below confirms it — so the
-            # per-round full set-difference the loop used to pay
-            # becomes a single aggregate scan per round plus one
-            # confirm at the fixpoint (change-set-first economics,
-            # SCALE.md). Count rides the SAME aggregate (r14): one job
-            # per round where the loop used to run two, and that job
-            # also materializes the round's lazy checkpoint.
+            # and the ONE exact subtract below confirms it — one
+            # aggregate scan per round plus one confirm at the fixpoint
+            # instead of a per-round set difference (SCALE.md). The
+            # count rides the same aggregate, whose job also
+            # materializes the round's lazy checkpoint.
             row = df.agg(
                 F.count(F.lit(1)),
                 F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
@@ -539,10 +554,9 @@ class Graph:
         if stats is not None:
             stats["rounds"] = rounds
         if not converged:
-            raise RuntimeError(
-                f"connected_components_twophase did not reach the "
-                f"star-forest fixpoint in max_iter={max_iter} rounds; "
-                f"raise max_iter (rounds are O(log n))"
+            raise FixpointError(
+                "connected_components_twophase", max_iter,
+                "star forest not reached; rounds are O(log n)",
             )
         # at fixpoint e is a star forest: (vertex, component-min) pairs
         labels = e.groupBy("u").agg(F.min("v").alias("component")).select(
@@ -599,31 +613,21 @@ class Graph:
         removed — contradiction). Rounds >= 2 are pure tip-trims, and
         the unrolled oracles (which re-apply the transitive stage every
         round) still match exactly because that stage is the identity
-        from round 2 on. Measured round 6 (clean host, median-of-3
-        warm at sf0.1): bench q10 10.3s (r05 driver record) -> 8.1s;
-        output verified byte-identical to the alternating loop on
-        e_co_small and the read-overlap graph at sf0.001/0.01."""
+        from round 2 on — which is also why `max_iter=2` is exactly two
+        unrolled reduction rounds (qg11). Measurements: see
+        OPTIMIZATION_r14.md."""
         edges = self.edges.transform(self._cp_lazy)
         prev = edges.count()
-        # MEASURED AND REJECTED (r15): flooring the checkpointed edge
-        # blocks at the core count (the q15 _parallelize_candidates
-        # recipe) widened the 2-path stage from ~10 to 32 tasks and
-        # looked faster in isolation (7.9 -> 5.7 s wall), but task CPU
-        # DOUBLED (round: 30 -> 62 s; whole pipeline: 40 -> 117 s,
-        # q11 wall 6.3 -> 10.5 s) — each extra task re-pays a
-        # broadcast-relation deserialization proportional to the
-        # 1.2M-edge build side, so per-task overhead here scales with
-        # the broadcast size, not a constant. AQE's coalescing of the
-        # edge shuffle is protecting CPU, not wasting width; the q15
-        # floor remains correct because its broadcast side is
-        # probe-sized (hundreds of rows), not edge-sized.
+        # rejected: flooring the edge blocks at the core count — every
+        # extra task re-deserializes the edge-sized broadcast, so task
+        # CPU doubled (see OPTIMIZATION_r15.md)
         counts = [prev]
         rounds = 0
         for it in range(max_iter):
             g = Graph(edges, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
             # seed the broadcast gate with the count the loop already
             # paid for — a fresh Graph would otherwise re-count the
-            # checkpointed edge set (one redundant job per round, r14)
+            # checkpointed edge set (one redundant job per round)
             object.__setattr__(g, "_n_edges", prev)
             if it == 0:
                 # checkpoint the reduced edges BEFORE the tip trim: the
@@ -634,20 +638,16 @@ class Graph:
                 # heaviest join runs 3-4x. Lazy cut: the tips count job
                 # below materializes it (block-level locks serialize
                 # concurrent first readers), saving the separate
-                # materialize pass (r14).
+                # materialize pass.
                 reduced = g.transitive_reduction_round().transform(self._cp_lazy)
             else:
                 reduced = edges
             # tips-first convergence: the tip set is degree-1-bounded
             # and TINY, so materialize it once — when it is empty the
             # trim is the identity, so the round's anti-join + full
-            # edge-set checkpoint + count are skipped AND no confirm
-            # round is needed (the legacy loop paid an entire no-op
-            # trim round to learn n == prev; measured at sf0.1 this
-            # cut bench q10 from 11.6 s to 8.8 s warm). Fixpoint edge
-            # set is identical; `rounds`/`edge_counts` now stop at the
-            # detection round instead of appending the duplicate
-            # confirm entry.
+            # edge-set checkpoint + count are skipped AND no no-op
+            # confirm round is needed; `rounds`/`edge_counts` stop at
+            # the detection round.
             tips = (
                 Graph(reduced,
                       reliable_checkpoint_dir=self.reliable_checkpoint_dir)
@@ -678,17 +678,12 @@ class Graph:
         return edges
 
     @staticmethod
-    def _trim_tips(edges: DataFrame, hub_degree: int, bc: bool) -> DataFrame:
+    def _trim_with_tips(edges: DataFrame, tips: DataFrame, bc: bool) -> DataFrame:
         """Remove edges touching a tip vertex. The tip set is bounded by
         the degree-1 vertex count, far under the edge count, so under
         the broadcast gate BOTH anti-joins are broadcast hash joins in
         one whole-stage-codegen pass over the edges — the per-round
-        trim never shuffles the edge set (was: two shuffled anti-joins)."""
-        tips = Graph(edges).tips(hub_degree=hub_degree)
-        return Graph._trim_with_tips(edges, tips, bc)
-
-    @staticmethod
-    def _trim_with_tips(edges: DataFrame, tips: DataFrame, bc: bool) -> DataFrame:
+        trim never shuffles the edge set."""
         t = F.broadcast(tips) if bc else tips
         return (
             edges.join(t.withColumnRenamed("v", "s"), "s", "left_anti")
@@ -831,31 +826,11 @@ class Graph:
         the result is a union of simple paths — the precondition
         `compact_chains` needs.
 
-        One-pass degrees (r14, the two_hop_count/tips trick): the old
-        form aggregated out-degrees and in-degrees as two separate
-        groupBys — two edge scans, two exchanges. Exploding each edge
-        into (v=s, out) + (v=d, in) counts both directions in one pass
-        over one scan; the vertex-sized degree table is lazily cut
-        (column pruning diverges its two consumers, defeating exchange
-        reuse — the tips() finding) and both semi-joins filter it.
-        out-degree-1 set identical: a vertex absent from the s column
-        has outd = 0 and is excluded either way; same for in."""
-        deg = (
-            self.edges.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("s").alias("v"), F.lit(1).alias("o")),
-                        F.struct(F.col("d").alias("v"), F.lit(0).alias("o")),
-                    )
-                ).alias("e")
-            )
-            .groupBy(F.col("e.v").alias("v"))
-            .agg(
-                F.sum("e.o").alias("outd"),
-                F.sum(1 - F.col("e.o")).alias("ind"),
-            )
-            .transform(self._cp_lazy)
-        )
+        Degrees come from the one-pass `_in_out_degrees`; the
+        vertex-sized degree table is lazily cut because column pruning
+        diverges its two consumers and so defeats exchange reuse (the
+        `tips` finding), and both semi-joins filter it."""
+        deg = self._in_out_degrees(self.edges).transform(self._cp_lazy)
         out1 = deg.filter(F.col("outd") == 1).select(F.col("v").alias("s"))
         in1 = deg.filter(F.col("ind") == 1).select(F.col("v").alias("d"))
         return (
@@ -864,24 +839,14 @@ class Graph:
             .select("s", "d")
         )
 
-    def reduce_rounds(self, n_rounds: int = 2, hub_degree: int = 3) -> DataFrame:
-        """Exactly `n_rounds` of the reduction loop body, NO convergence
-        check — the SQL-expressible (unrollable) twin of
-        `reduce_pipeline`, used by the oracle-checked qg11."""
-        edges = self.edges.transform(self._cp)
-        for _ in range(n_rounds):
-            g = Graph(edges, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
-            edges = self._trim_tips(
-                g.transitive_reduction_round(), hub_degree, g._bc(None)
-            ).transform(self._cp)
-        return edges
-
     def k_core(self, k: int = 2, max_iter: int = 50) -> DataFrame:
         """Vertices of the k-core (maximal subgraph where every vertex
         has degree ≥ k, undirected) → (v,). Iterative peeling: drop
         sub-k vertices, recompute degrees, repeat to fixpoint — each
         round is one groupBy + two semi-joins on a checkpointed,
-        shrinking edge set; rounds bounded by peeling depth."""
+        shrinking edge set; rounds bounded by peeling depth. Raises
+        FixpointError when `max_iter` rounds are still peeling (a
+        partial peel is NOT a k-core)."""
         e = self._sym_edges().distinct().transform(self._cp)
         for _ in range(max_iter):
             deg = e.groupBy("s").agg(F.count("*").alias("_deg"))
@@ -899,10 +864,7 @@ class Graph:
                 .select("s", "d")
                 .transform(self._cp)
             )
-        raise RuntimeError(
-            f"k_core: still peeling after max_iter={max_iter} rounds —"
-            " raise max_iter (a partial peel is NOT a k-core)"
-        )
+        raise FixpointError("k_core", max_iter, "still peeling")
 
     def maximal_matching(
         self, max_iter: int = 30, stats: dict | None = None
@@ -917,15 +879,14 @@ class Graph:
         (md5(round:s:d), neighbor); mutual proposals match, matched
         vertices leave, repeat until no edges remain. The per-ROUND
         salt is the point — static min-neighbor proposals form long
-        proposal chains that match one pair per round (measured 73
-        rounds on the sf0.001 co-occurrence graph), while re-salting
-        each round breaks chains and converges in O(log) rounds
-        (measured 6/5/4 at sf0.001/0.01/0.1). Each round: one
-        edge-hash projection (map-side), one argmin groupBy, one
-        self-join of the vertex-sized proposal table, two anti-joins
-        on the shrinking edge set. Progress is guaranteed: the
+        proposal chains that match one pair per round, while re-salting
+        each round breaks chains and converges in O(log) rounds. Each
+        round: one edge-hash projection (map-side), one argmin groupBy,
+        one self-join of the vertex-sized proposal table, two
+        anti-joins on the shrinking edge set. Progress is guaranteed: the
         globally-minimal-hash edge is mutual every round. Maximality:
-        the loop only stops when the residual edge set is empty."""
+        the loop only stops when the residual edge set is empty, and
+        raises FixpointError if edges remain after `max_iter` rounds."""
         e = (
             self.edges.select(
                 F.least("s", "d").alias("s"), F.greatest("s", "d").alias("d")
@@ -949,10 +910,8 @@ class Graph:
                     F.col("d").cast("string"),
                 )
             )
-            # one pass (r14): the union form scanned the checkpointed
-            # edge blocks once per branch and computed the per-edge md5
-            # TWICE (once per orientation); explode emits both
-            # orientations around ONE hash evaluation per edge
+            # explode emits both orientations around ONE md5 per edge
+            # and one scan of the checkpointed edge blocks
             sym = e.select(
                 F.explode(
                     F.array(
@@ -1000,8 +959,8 @@ class Graph:
             # the matching is still complete if the last round emptied
             # the edge set (emptiness is only polled at round top).
             if not e.isEmpty():
-                raise RuntimeError(
-                    f"maximal_matching: edges remain after max_iter={max_iter}"
+                raise FixpointError(
+                    "maximal_matching", max_iter, "edges remain"
                 )
         if stats is not None:
             stats["rounds"] = rounds
@@ -1030,55 +989,18 @@ class Graph:
         v ∈ SCC(m): assign and remove. Every peeled set is a union of
         COMPLETE SCCs (soundness), and the SCC of each region's
         minimal vertex always peels (progress), so outer rounds are
-        bounded by the SCC condensation depth, not |V| (measured 5/2/1
-        at sf0.001/0.01/0.1 on the bounded lineitem digraph). Inner
-        fixpoints reuse the CC shape: one join + min-aggregate per hop
-        on a checkpointed shrinking edge set. `stats` records
-        {"rounds": outer+trim round count}."""
+        bounded by the SCC condensation depth, not |V|. Inner fixpoints
+        are the CC kernel (`_min_label`) on the checkpointed shrinking
+        edge set, each with a `4 * max_iter` round budget. Raises
+        FixpointError when an inner propagation or the outer peel does
+        not converge. `stats` records {"rounds": outer+trim round
+        count}."""
         edges = self.edges.select("s", "d").filter(
             F.col("s") != F.col("d")
         ).distinct().transform(self._cp)
         remaining = self.vertex_ids().transform(self._cp)
         done: DataFrame | None = None
         rounds = 0
-
-        def _propagate(e, vs):
-            # min-label to fixpoint along DIRECTED edges: lab(v) =
-            # min(v, min over in-neighbors' labels)
-            lab = vs.select("v", F.col("v").alias("lab")).transform(self._cp)
-
-            def _mass(df_):
-                # labels only decrease and are integral → equal decimal
-                # mass ⟺ fixpoint (same soundness argument as CC)
-                return df_.agg(
-                    F.sum(F.col("lab").cast("decimal(38,0)"))
-                ).collect()[0][0]
-
-            m_old = _mass(lab)
-            for _ in range(max_iter * 4):
-                nbr = (
-                    e.join(lab, e.s == lab.v)
-                    .groupBy(F.col("d").alias("v"))
-                    .agg(F.min("lab").alias("nl"))
-                )
-                new = (
-                    lab.join(nbr, "v", "left")
-                    .select(
-                        "v",
-                        F.least(
-                            F.col("lab"), F.coalesce("nl", F.col("lab"))
-                        ).alias("lab"),
-                    )
-                    .transform(self._cp)
-                )
-                # carry the previous round's mass forward — one
-                # aggregate scan (barrier) per hop, not two
-                m_new = _mass(new)
-                lab = new
-                if m_old == m_new:
-                    return lab
-                m_old = m_new
-            raise RuntimeError("scc: label propagation did not converge")
 
         def _emit(part):
             nonlocal done
@@ -1090,36 +1012,10 @@ class Graph:
             while True:
                 rounds += 1
                 # core = vertices with BOTH an in- and an out-edge, in
-                # ONE pass over the checkpointed edges (r14 verdict
-                # item 5, the chain_edges/two_hop explode shape): each
-                # edge contributes (s, o=1) and (d, o=0), so max(o)=1
-                # ⟺ v has an out-edge and min(o)=0 ⟺ an in-edge —
-                # replaces two distinct-scans + a semi-join (two edge
-                # reads + three Exchanges) with one scan + one
-                # aggregation Exchange. Edge ends are null-free here
-                # (the s != d prefilter drops null-keyed rows), which
-                # is what made the old semi-join form equivalent; the
-                # isNotNull filter pins that invariant explicitly.
+                # one pass over the checkpointed edges
                 core = (
-                    edges.select(
-                        F.explode(
-                            F.array(
-                                F.struct(
-                                    F.col("s").alias("v"),
-                                    F.lit(1).alias("o"),
-                                ),
-                                F.struct(
-                                    F.col("d").alias("v"),
-                                    F.lit(0).alias("o"),
-                                ),
-                            )
-                        ).alias("e")
-                    )
-                    .select(F.col("e.v").alias("v"), F.col("e.o").alias("o"))
-                    .filter(F.col("v").isNotNull())
-                    .groupBy("v")
-                    .agg(F.max("o").alias("_o"), F.min("o").alias("_i"))
-                    .filter((F.col("_o") == 1) & (F.col("_i") == 0))
+                    self._in_out_degrees(edges)
+                    .filter((F.col("outd") > 0) & (F.col("ind") > 0))
                     .select("v")
                     .transform(self._cp)
                 )
@@ -1139,12 +1035,19 @@ class Graph:
             if remaining.isEmpty():
                 break
             # (b) forward / backward min labels
-            fwd = _propagate(edges, remaining).withColumnRenamed("lab", "f")
+            labels = remaining.select("v", F.col("v").alias("component"))
             rev = edges.select(
                 F.col("d").alias("s"), F.col("s").alias("d")
             )
-            bwd = _propagate(rev, remaining).withColumnRenamed("lab", "b")
-            lab = fwd.join(bwd, "v")
+            fwd, _ = self._min_label(
+                edges, labels, 4 * max_iter, "strongly_connected_components"
+            )
+            bwd, _ = self._min_label(
+                rev, labels, 4 * max_iter, "strongly_connected_components"
+            )
+            lab = fwd.withColumnRenamed("component", "f").join(
+                bwd.withColumnRenamed("component", "b"), "v"
+            )
             # (c) peel complete SCCs
             peel = lab.filter(F.col("f") == F.col("b")).select(
                 "v", F.col("f").alias("component")
@@ -1160,8 +1063,9 @@ class Graph:
                 .transform(self._cp)
             )
         else:
-            raise RuntimeError(
-                f"scc: not converged in max_iter={max_iter} outer rounds"
+            raise FixpointError(
+                "strongly_connected_components", max_iter,
+                "outer peel rounds",
             )
         if stats is not None:
             stats["rounds"] = rounds
@@ -1177,15 +1081,14 @@ class Graph:
         standard community-detection tightening.
 
         Iterative support peeling: per round, enumerate canonical
-        a<b<c triangles on the surviving edge set (the same two-join
-        wedge shape as triangle_count — candidate wedges bounded by
-        per-vertex degree), charge each triangle to its three edges,
-        drop edges with support < k−2, repeat to fixpoint. Change-set-
-        first convergence like k_core: the drop set is materialized
-        first and the round's anti-join + checkpoint are skipped when
-        it is empty. Rounds are bounded by peeling depth (measured:
-        ≤ 7 at sf0.001–0.1 for k=5 on the bounded co-occurrence
-        graph). `stats` records {"rounds": k}."""
+        a<b<c triangles on the surviving edge set (`_triangles`),
+        charge each triangle to its three edges, drop edges with
+        support < k−2, repeat to fixpoint. Change-set-first convergence
+        like k_core: when the drop set is empty the scored set is
+        returned without another peel. Rounds are bounded by peeling
+        depth; raises FixpointError when `max_iter` rounds are still
+        peeling (a partial peel is NOT a k-truss). `stats` records
+        {"rounds": k}."""
         e = (
             self.edges.select(
                 F.least("s", "d").alias("s"), F.greatest("s", "d").alias("d")
@@ -1196,27 +1099,10 @@ class Graph:
         rounds = 0
 
         def _support(cur):
-            e1, e2, e3 = cur.alias("e1"), cur.alias("e2"), cur.alias("e3")
-            tri = (
-                e1.join(e2, F.col("e1.d") == F.col("e2.s"))
-                .join(
-                    e3,
-                    (F.col("e1.s") == F.col("e3.s"))
-                    & (F.col("e2.d") == F.col("e3.d")),
-                )
-                .select(
-                    F.col("e1.s").alias("a"),
-                    F.col("e1.d").alias("b"),
-                    F.col("e2.d").alias("c"),
-                )
-            )
-            # one derivation (r14): the union-of-three-selects form ran
-            # the triangle-enumeration JOIN — the round's dominant cost
-            # — once per branch (no reuse across the differently-
-            # projected branches); exploding each triangle into its
-            # three edges charges the identical (s, d) multiset over
-            # ONE join
-            per_edge = tri.select(
+            # exploding each triangle into its three edges charges them
+            # over ONE triangle join (a union of three projections
+            # would run the join — the round's dominant cost — thrice)
+            per_edge = self._triangles(cur).select(
                 F.explode(
                     F.array(
                         F.struct(F.col("a").alias("s"), F.col("b").alias("d")),
@@ -1243,10 +1129,7 @@ class Graph:
             e = scored.filter(F.col("support") >= k - 2).select(
                 "s", "d"
             ).transform(self._cp)
-        raise RuntimeError(
-            f"k_truss: still peeling after max_iter={max_iter} rounds —"
-            " raise max_iter (a partial peel is NOT a k-truss)"
-        )
+        raise FixpointError("k_truss", max_iter, "still peeling")
 
     def _power_iterate(self, verts, edges, out_deg, ranks, n_iter, update_fn):
         """Shared PageRank-family round loop: each round is one join
@@ -1413,7 +1296,7 @@ class Graph:
         names a non-negative edge weight (default: every edge = 1.0,
         i.e. weighted BFS). Converges when no distance improves —
         checked with one count() per round; each round is one join +
-        one min-aggregation, checkpointed. Raises RuntimeError if
+        one min-aggregation, checkpointed. Raises FixpointError if
         max_iter rounds still improve distances (a silent truncation
         would return plausible but incomplete/non-minimal rows)."""
         w = (
@@ -1445,9 +1328,9 @@ class Graph:
             dist = cand
             if improved == 0:
                 return dist
-        raise RuntimeError(
-            f"shortest_paths: still improving after max_iter={max_iter}"
-            " rounds — raise max_iter (needs up to |V|-1 on a path graph)"
+        raise FixpointError(
+            "shortest_paths", max_iter,
+            "still improving; a path graph needs up to |V|-1 rounds",
         )
 
     def compact_chains(
@@ -1623,8 +1506,9 @@ class Graph:
         """Kahn-peel topological levels over a DIRECTED ACYCLIC edge
         set → (v, level), level = LONGEST path from any source (a
         vertex peels only once all predecessors have peeled). Raises
-        on a cycle — a partial level assignment is not a topological
-        order. Rounds = DAG depth (structural, not data-sized: the
+        ValueError on a cycle — a partial level assignment is not a
+        topological order — and FixpointError when the depth exceeds
+        `max_iter`. Rounds = DAG depth (structural, not data-sized: the
         overlap graph's depth is reads-per-document, flat across sf —
         SCALE.md).
 
@@ -1636,14 +1520,14 @@ class Graph:
         materialized zero frames, so nothing recomputes. This split
         beats both the checkpoint-everything form (driver-job bound)
         and the fully-lazy form (which recomputed each peel's
-        anti-join three times) — measured at sf0.1. Peels past
+        anti-join three times). Peels past
         exhaustion inside a block emit empty frames — harmless, and
         the block boundary re-checks convergence/cycle exactly as
         before."""
         remaining = self.edges.select("s", "d").transform(self._cp)
         # verts from the CHECKPOINTED blocks (remaining is the
         # unfiltered edge set, so its endpoints ARE the vertex set) —
-        # one upstream derivation instead of two (r14)
+        # one upstream derivation instead of two
         verts = (
             remaining.select(F.explode(F.array("s", "d")).alias("v"))
             .distinct()
@@ -1683,52 +1567,31 @@ class Graph:
                 if stats is not None:
                     # level is rounded up to the block boundary; the
                     # true depth is the deepest emitted level + 1, and
-                    # 0 for an empty graph (max(level) is NULL then —
-                    # the old `or 0` collapsed that to depth 1,
-                    # ADVICE r06)
+                    # 0 for an empty graph (max(level) is NULL then)
                     deepest = out.agg(F.max("level")).collect()[0][0]
                     stats["depth"] = (
                         (deepest + 1) if deepest is not None else 0
                     )
                 return out
-        raise RuntimeError(
-            f"topological_levels: depth exceeds max_iter={max_iter}"
-        )
+        raise FixpointError("topological_levels", max_iter, "depth exceeds it")
 
     def local_clustering(self) -> DataFrame:
         """Per-vertex local clustering coefficient → (v, degree, coef):
         coef = 2·triangles(v) / (deg·(deg−1)), 0.0 for degree < 2 —
         the per-vertex density signal behind community/spam structure
         analysis. Triangles are enumerated once on canonical (s<m<d)
-        edges (same wedge join as triangle_count) and charged to all
-        three corners via one explode; degrees reuse the symmetric
-        count. Two equi-join shuffles + two groupBys, candidate wedges
-        bounded by per-vertex degree exactly like the 2-hop operator.
+        edges (`_triangles`) and charged to all three corners via one
+        explode; degrees reuse the symmetric count. Two equi-join
+        shuffles + two groupBys, candidate wedges bounded by per-vertex
+        degree exactly like the 2-hop operator.
         """
-        # lazy cut (r14): tri's three join sides + degrees() would
-        # otherwise each re-derive the full upstream edge subplan
-        # (four derivations for one coefficient — the qg3 finding);
+        # lazy cut: the three triangle-join sides + degrees() would
+        # otherwise each re-derive the full upstream edge subplan;
         # with the cut everything reads one materialized edge set
         e = self.edges.transform(self._cp_lazy)
         g = Graph(e, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
-        e1 = e.alias("e1")
-        e2 = e.alias("e2")
-        e3 = e.alias("e3")
-        tri = (
-            e1.join(e2, F.col("e1.d") == F.col("e2.s"))
-            .join(
-                e3,
-                (F.col("e1.s") == F.col("e3.s"))
-                & (F.col("e2.d") == F.col("e3.d")),
-            )
-            .select(
-                F.col("e1.s").alias("a"),
-                F.col("e1.d").alias("b"),
-                F.col("e2.d").alias("c"),
-            )
-        )
         per_v = (
-            tri.select(
+            self._triangles(e).select(
                 F.explode(F.array("a", "b", "c")).alias("v")
             )
             .groupBy("v")
@@ -1768,7 +1631,8 @@ class Graph:
         comp-label joins + one min_by aggregation, with the
         contraction itself a component-GRAPH-sized CC (second-order
         small). The standard scalable MST: no global edge sort, no
-        union-find, every step a join or aggregation."""
+        union-find, every step a join or aggregation. Raises
+        FixpointError when `max_iter` rounds still choose edges."""
         e = self.edges.select(
             F.least("s", "d").alias("s"),
             F.greatest("s", "d").alias("d"),
@@ -1777,7 +1641,7 @@ class Graph:
         # comp from the CHECKPOINTED canonical edges: least/greatest
         # keeps every endpoint (self-loops fold to (x, x)), so the
         # exploded ends are exactly the vertex set — one upstream
-        # derivation instead of two (r14)
+        # derivation instead of two
         comp = (
             e.select(F.explode(F.array("s", "d")).alias("v"))
             .distinct()
@@ -1806,7 +1670,8 @@ class Graph:
                 .transform(self._cp)
             )
             rounds += 1
-            if chosen.count() == 0:
+            n_chosen = chosen.count()
+            if n_chosen == 0:
                 break
             picked = chosen.select("s", "d", "w")
             forest = (
@@ -1816,13 +1681,15 @@ class Graph:
             )
             forest = forest.transform(self._cp)
             # contract: CC over the (cs, cd) merge graph — component-
-            # count sized, shrinks >= 2x per round
+            # count sized, shrinks >= 2x per round. Its n_chosen edges
+            # bound its diameter, so n_chosen + 1 min-label rounds
+            # (the last one confirming) always reach the fixpoint
             merge = Graph(
                 chosen.select(
                     F.col("cs").alias("s"), F.col("cd").alias("d")
                 ),
                 reliable_checkpoint_dir=self.reliable_checkpoint_dir,
-            ).connected_components()
+            ).connected_components(max_iter=n_chosen + 1)
             comp = (
                 comp.join(
                     merge.select(
@@ -1837,8 +1704,8 @@ class Graph:
                 .transform(self._cp)
             )
         else:
-            raise RuntimeError(
-                f"minimum_spanning_forest: not converged in {max_iter}"
+            raise FixpointError(
+                "minimum_spanning_forest", max_iter, "still choosing edges"
             )
         if stats is not None:
             stats["rounds"] = rounds

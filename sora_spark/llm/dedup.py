@@ -390,8 +390,8 @@ def near_dup_clusters(
     ONE cluster even when a,c never share a bucket). The pair set is
     CHECKPOINTED before cluster resolution — the component loop runs
     one action per round, and without the cut each round would re-run
-    the whole shingle→minhash→band derivation (measured 3× the total
-    wall time at sf0.1; the B12 bench row now guards this). Resolution
+    the whole shingle→minhash→band derivation (the B12 bench row
+    guards this). Resolution
     is _resolve_components: a driver-side union-find over the
     collected pair list up to its 5M-pair bound (zero Spark rounds —
     the pair graph is radically smaller than the corpus), with
@@ -399,11 +399,13 @@ def near_dup_clusters(
     are bucket-bounded with tiny diameter BY CONSTRUCTION (every
     member pair shares a band bucket), so the fallback converges in
     ~2 rounds where the O(log n) contraction pays its per-round
-    constant for nothing. Docs with no near-dup are their
-    own singleton cluster (cluster_id = doc_id).
+    constant for nothing. A fallback propagation that does not converge
+    within `connected_components`' default round budget raises
+    `FixpointError` instead of returning partial cluster ids. Docs with
+    no near-dup are their own singleton cluster (cluster_id = doc_id).
 
-    EDGES ARE STARS, NOT CLIQUES (r15, the VERDICT-item-4 skew bound,
-    solved structurally instead of by salting): connected components
+    EDGES ARE STARS, NOT CLIQUES (the hot-bucket skew bound, solved
+    structurally instead of by salting): connected components
     only need each band bucket CONNECTED, and a bucket of k docs is
     exactly as connected by its k-1 (min-id -> member) star edges as
     by the k(k-1)/2 candidate pairs `lsh_candidate_pairs` emits —
@@ -427,8 +429,8 @@ def near_dup_clusters(
         .distinct()
         # lazy cut: _resolve_components' count() is the very next
         # action — it materializes the checkpoint blocks as it counts,
-        # fusing the old eager-materialize pass + count pass into one
-        # job (r14); every later consumer reads the same blocks
+        # one job instead of a materialize pass plus a count pass;
+        # every later consumer reads the same blocks
         .localCheckpoint(eager=False)
     )
     comp = _resolve_components(pairs)

@@ -454,7 +454,7 @@ def qg8_bubbles(spark, sf_dir):
 
 def _reduce_round_sql(prev: str, i: int) -> str:
     """One unrolled reduction round (transitive-edge removal + tip
-    trim) as DuckDB CTEs — the oracle twin of Graph.reduce_rounds.
+    trim) as DuckDB CTEs — one round of Graph.reduce_pipeline.
 
     Every CTE is MATERIALIZED: DuckDB inlines plain CTEs at each
     reference, so unrolling k rounds (each referencing the previous
@@ -483,14 +483,14 @@ r{i} AS MATERIALIZED (SELECT s, d FROM s{i} WHERE s NOT IN (SELECT v FROM tips{i
     ),
     doc="Two unrolled rounds of the SORA reduction loop (transitive "
     "edge removal + tip trim) on the bounded co-occurrence graph — the "
-    "SQL-expressible twin of Graph.reduce_pipeline, hash-checked edge "
-    "list. The full fixpoint (qg12) and the sf0.1 bench (q10) build on "
-    "the same loop body.",
+    "SQL-expressible twin of Graph.reduce_pipeline(max_iter=2), "
+    "hash-checked edge list. The full fixpoint (qg12) and the sf0.1 "
+    "bench (q10) build on the same loop body.",
     tags=("graph", "reduction"),
 )
 def qg11_reduce_two_rounds(spark, sf_dir):
     li = tables(spark, sf_dir).lineitem
-    return Graph(e_co_small(li)).reduce_rounds(2).orderBy("s", "d")
+    return Graph(e_co_small(li)).reduce_pipeline(max_iter=2).orderBy("s", "d")
 
 
 @query(
@@ -525,7 +525,7 @@ def qg11b_reduce_to_fixpoint(spark, sf_dir):
 def _trim_round_sql(prev: str, i: int) -> str:
     """One tip-trim-ONLY round as MATERIALIZED DuckDB CTEs. Valid as
     the full-round oracle twin for rounds >= 2 of reduce_pipeline by
-    the round-1-only-transitive proof (graph/graph.py:426): edge
+    the round-1-only-transitive proof (Graph.reduce_pipeline): edge
     removal never creates a 2-path, so the transitive stage is the
     identity from round 2 on and the oracle may skip it — which is
     what makes the FULL-graph qg12 oracle affordable (one 2-path join

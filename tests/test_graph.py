@@ -5,10 +5,11 @@ fixture-derived graphs; these pin the algorithms themselves).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sora_spark.catalog import tables
-from sora_spark.graph import Graph
+from sora_spark.graph import FixpointError, Graph
 
 
 def _g(spark, edges):
@@ -300,18 +301,106 @@ def test_twophase_cc_on_long_chain(spark):
     assert stats["rounds"] <= 8, f"not logarithmic: {stats['rounds']} rounds"
 
 
-def test_twophase_cc_raises_on_exhausted_iterations(spark):
-    """Loop exhaustion without reaching the star-forest fixpoint is
-    loud (RuntimeError), never silently-wrong labels."""
-    import pytest
+_CHAIN = [(i, i + 1, float(i)) for i in range(9)]
 
-    from sora_spark.graph import Graph
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "s BIGINT, d BIGINT"
-    )
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        Graph(edges).connected_components_twophase(max_iter=1)
+@pytest.mark.parametrize(
+    "loop, edges, run",
+    [
+        pytest.param(
+            "connected_components", _CHAIN,
+            lambda g, sp: g.connected_components(max_iter=1),
+            id="connected_components",
+        ),
+        pytest.param(
+            "connected_components_twophase", _CHAIN,
+            lambda g, sp: g.connected_components_twophase(max_iter=1),
+            id="connected_components_twophase",
+        ),
+        pytest.param(
+            "k_core", _CHAIN, lambda g, sp: g.k_core(k=2, max_iter=1),
+            id="k_core",
+        ),
+        pytest.param(
+            "maximal_matching", _CHAIN,
+            lambda g, sp: g.maximal_matching(max_iter=1),
+            id="maximal_matching",
+        ),
+        # a 10-cycle: nothing trims, and forward min-label needs 10
+        # rounds against the inner budget of 4 * max_iter
+        pytest.param(
+            "strongly_connected_components", _CHAIN + [(9, 0, 9.0)],
+            lambda g, sp: g.strongly_connected_components(max_iter=1),
+            id="strongly_connected_components",
+        ),
+        pytest.param(
+            "k_truss", _CHAIN, lambda g, sp: g.k_truss(k=3, max_iter=1),
+            id="k_truss",
+        ),
+        pytest.param(
+            "shortest_paths", _CHAIN,
+            lambda g, sp: g.shortest_paths(
+                sp.createDataFrame([(0,)], "v long"), max_iter=1
+            ),
+            id="shortest_paths",
+        ),
+        pytest.param(
+            "topological_levels", _CHAIN,
+            lambda g, sp: g.topological_levels(max_iter=1),
+            id="topological_levels",
+        ),
+        pytest.param(
+            "minimum_spanning_forest", _CHAIN,
+            lambda g, sp: g.minimum_spanning_forest(max_iter=1),
+            id="minimum_spanning_forest",
+        ),
+    ],
+)
+def test_fixpoint_raises_on_exhausted_iterations(spark, loop, edges, run):
+    """Every loop whose answer is a fixpoint reports exhaustion the same
+    way — FixpointError naming the loop and its budget — on a graph
+    needing >= 2 rounds, never silently-wrong partial state."""
+    g = Graph(spark.createDataFrame(edges, "s long, d long, w double"))
+    with pytest.raises(
+        FixpointError, match=rf"{loop}: no fixpoint within max_iter=\d+"
+    ):
+        run(g, spark)
+
+
+def test_minlabel_cc_raises_instead_of_partial_labels(spark):
+    """An 80-vertex chain has diameter 79: min-label CC's default 50
+    rounds cannot reach the fixpoint, so it raises instead of returning
+    partial labels; with 100 rounds every label is 0. MSF's contraction
+    CC sizes its own budget: on an 80-vertex path with increasing
+    weights, round 1 chooses all 79 edges (a merge graph of diameter
+    79), and the forest is still the whole path."""
+    path = [(i, i + 1, float(i)) for i in range(79)]
+    g = Graph(spark.createDataFrame(path, "s long, d long, w double"))
+    with pytest.raises(FixpointError, match="connected_components"):
+        g.connected_components()
+    labels = {
+        r["v"]: r["component"]
+        for r in g.connected_components(max_iter=100).collect()
+    }
+    assert labels == {v: 0 for v in range(80)}
+    msf = sorted(map(tuple, g.minimum_spanning_forest().collect()))
+    assert msf == path
+
+
+def test_scc_string_ids(spark):
+    """SCC's propagations share CC's min-label kernel, so non-integral
+    ids converge by the exact comparison join instead of a decimal
+    label mass (a string id cannot be cast to decimal)."""
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "x"),
+             ("x", "y"), ("y", "z"), ("z", "x")]
+    g = Graph(spark.createDataFrame(edges, "s string, d string"))
+    comp = {
+        r["v"]: r["component"]
+        for r in g.strongly_connected_components().collect()
+    }
+    assert comp == {
+        "a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"
+    }
 
 
 def test_twophase_matches_minlabel(spark, sf_dir):
@@ -512,8 +601,8 @@ def test_fasta_roundtrip_feeds_assembly(spark, sf_dir, tmp_path):
 
 def test_two_hop_degree_form_matches_join_form(spark, sf_dir):
     """The Σ indeg·outdeg rewrite must equal the literal self-join on
-    the real co-occurrence graph and on a hand-built multigraph-free
-    digraph with hub structure."""
+    the real co-occurrence graph, on a hand-built multigraph-free
+    digraph with hub structure, and with null endpoints."""
     from sora_spark.graph import Graph
     from sora_spark.graph.derive import e_co_small
 
@@ -528,6 +617,11 @@ def test_two_hop_degree_form_matches_join_form(spark, sf_dir):
         h.two_hop_count().collect()[0]["two_hop_count"]
         == h.two_hop_count_join().collect()[0]["two_hop_count"]
     )
+
+    # null endpoints: a null mid vertex never matches the join key
+    n = _g(spark, [(1, None), (None, 2), (3, 4), (4, 5)])
+    assert n.two_hop_count().collect()[0]["two_hop_count"] == 1
+    assert n.two_hop_count_join().collect()[0]["two_hop_count"] == 1
 
     empty = _g(spark, [(1, 2)]).edges.filter("s < 0")
     assert (
