@@ -1,18 +1,40 @@
 """Similarity search over embedding columns (SURVEY §2.11 Q-L3/Q-L4).
 
-Two tiers:
-- `brute_force_topk`: broadcast the (small) probe set, cosine against
-  every vector, window top-k. Exact; O(|probes| × |corpus|) — the
-  baseline and the oracle for recall tests.
-- `lsh_topk`: random-hyperplane LSH — vectors bucket by the sign
-  pattern of `n_planes` fixed hyperplanes; probes only scan their own
-  bucket. The scale path: the corpus-side work drops from all-pairs to
-  per-bucket, and buckets are just a groupBy key (no custom index
-  structure, shuffles bounded by bucket size).
+Exact search, the reference every approximate path is tested against:
+- `brute_force_topk` (probes broadcast) and `brute_force_topk_shuffle`
+  (blocked two-sided join) score every (probe, vector) pair.
+- `range_search_shuffle` / `range_search_vectorized` return every
+  neighbour at or above a similarity threshold.
 
-Hyperplanes are generated from a fixed seed so plans are deterministic
-across runs and executors (they are literals in the plan — broadcast
-with the closure, no data-dependent state).
+Approximate search:
+- `lsh_topk` / `near_duplicate_pairs_lsh`: random-hyperplane LSH. A
+  probe scans its own sign-pattern bucket plus the hamming-1 buckets.
+  Hyperplanes come from a fixed seed, so plans are deterministic.
+- `ivf_topk`: in-memory IVF (k-means lists, nearest-`n_probe` scan).
+- The on-disk IVF index family. `write_ivf_index` / `write_ivfpq_index`
+  build it; `ivf_topk_indexed` / `ivfpq_topk_indexed` probe it;
+  `append_to_ivf_index`, `delete_from_ivf_index`, `split_ivf_list`,
+  `maintain_ivf_index`, `rebuild_ivf_index` and `rebuild_ivfpq_index`
+  maintain it.
+
+On-disk contract of an index at `<path>`:
+- `<path>`: the inverted lists, Hive-partitioned by `_cid`. Every
+  writer stores each vector's norm as `_nrm`, so a probe pays one dot
+  per candidate pair. Plain IVF rows keep every corpus column; IVF-PQ
+  rows are (id, `_codes`, `_nrm`, `_cid`).
+- `<path>_centroids`: the codebook (cid, centroid[, branch]). List ids
+  are whatever this table stores. They need not be contiguous, and no
+  reader derives a cid from a centroid's position.
+- `<path>_coarse` (two-level layout only): the branch centroids
+  (branch, centroid). Probes pick branches first, then leaves in them.
+- `<path>_pq` (IVF-PQ only): the per-subspace code books (sub, code,
+  centroid).
+The layout is read from the filesystem: `_coarse` present means
+two-level, `_pq` present means IVF-PQ.
+
+Every top-k path returns (probe_id, rn, neighbor_id, sim), ranked on
+the rounded cosine with neighbour-id tie-break, so results are
+engine-independent. Design history: OPTIMIZATION_r15.md.
 """
 
 from __future__ import annotations
@@ -31,6 +53,40 @@ from sora_spark.functions import vector
 _RANGE_SEARCH_MAX_PROBES = 2_000_000
 
 
+def _probe_frame(probes: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Probes as (probe_id, probe_vec, _pnrm). The norm is taken once
+    per probe, before any per-list, per-bucket or per-block explode."""
+    return probes.select(
+        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
+    ).withColumn("_pnrm", vector.norm(F.col("probe_vec")))
+
+
+def _cos(vec_col: str, decimals: int = 5):
+    """Rounded cosine of `vec_col` against `probe_vec` from the hoisted
+    norms `_nrm` and `_pnrm`. `vector.cosine` is dot / (norm * norm),
+    so this is bit-identical to it, but each pair pays one interpreted
+    array aggregate (the dot) instead of three. An unrolled scalar dot
+    was measured slower (OPTIMIZATION_r15.md, item 1)."""
+    return F.round(
+        vector.dot(F.col(vec_col), F.col("probe_vec"))
+        / (F.col("_nrm") * F.col("_pnrm")),
+        decimals,
+    )
+
+
+def _topk(pairs: DataFrame, k: int, id_col: str, sim, by=("probe_id",)):
+    """The ranker: the top `k` rows of `pairs` per `by` group, by `sim`
+    descending then neighbour id → (probe_id, rn, neighbor_id, sim).
+    A wider `by` gives the per-block partial top-k."""
+    w = Window.partitionBy(*by).orderBy(F.desc("sim"), "neighbor_id")
+    return (
+        pairs.select(*by, F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("probe_id", "rn", "neighbor_id", "sim")
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -41,32 +97,15 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors per probe (self excluded) →
     (probe_id, rn, neighbor_id, sim). Ranks on the ROUNDED similarity
-    with neighbor-id tie-break so results are engine-independent."""
-    # hoist both norms out of the pair loop: Spark's array HOFs run
-    # interpreted, so cosine-per-pair pays three aggregates where one
-    # dot suffices; sqrt(dot(x,x)) per side is loop-invariant. The
-    # corpus-side projection is pipelined (one extra aggregate per
-    # corpus row, amortized over |probes| pairs), the probe side is
-    # materialized by the broadcast. Bit-identical to cosine(): same
-    # IEEE ops in the same order (r10 scale-table finding — 3x less
-    # probe CPU at organic-sf1.0 pair counts).
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-    ).withColumn("_pnrm", vector.norm(F.col("probe_vec")))
-    c = corpus.withColumn("_cnrm", vector.norm(F.col(vec_col)))
-    j = c.join(F.broadcast(p), F.col(id_col) != F.col("probe_id"))
-    sim = F.round(
-        vector.dot(F.col(vec_col), F.col("probe_vec"))
-        / (F.col("_cnrm") * F.col("_pnrm")),
-        sim_decimals,
+    with neighbor-id tie-break so results are engine-independent. The
+    corpus norm is a pipelined projection; the probe norm is
+    materialized by the broadcast."""
+    c = corpus.withColumn("_nrm", vector.norm(F.col(vec_col)))
+    j = c.join(
+        F.broadcast(_probe_frame(probes, id_col, vec_col)),
+        F.col(id_col) != F.col("probe_id"),
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        j.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "rn", "neighbor_id", "sim")
-    )
+    return _topk(j, k, id_col, _cos(vec_col, sim_decimals))
 
 
 def brute_force_topk_shuffle(
@@ -95,32 +134,15 @@ def brute_force_topk_shuffle(
     size."""
     c = corpus.withColumn(
         "_blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-    ).withColumn(
-        "_blk", F.explode(F.array(*[F.lit(i).cast("long") for i in range(n_blocks)]))
+    ).withColumn("_nrm", vector.norm(F.col(vec_col)))
+    p = _probe_frame(probes, id_col, vec_col).withColumn(
+        "_blk", F.explode(_id_array(range(n_blocks)))
     )
     j = c.join(p, "_blk").filter(F.col(id_col) != F.col("probe_id"))
-    sim = F.round(
-        vector.cosine(F.col(vec_col), F.col("probe_vec")), sim_decimals
+    partial = _topk(
+        j, k, id_col, _cos(vec_col, sim_decimals), by=("probe_id", "_blk")
     )
-    cand = j.select(
-        "probe_id", "_blk", F.col(id_col).alias("neighbor_id"), sim.alias("sim")
-    )
-    w_part = Window.partitionBy("probe_id", "_blk").orderBy(
-        F.desc("sim"), "neighbor_id"
-    )
-    partial = cand.withColumn("_prn", F.row_number().over(w_part)).filter(
-        F.col("_prn") <= k
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        partial.select("probe_id", "neighbor_id", "sim")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "rn", "neighbor_id", "sim")
-    )
+    return _topk(partial, k, "neighbor_id", F.col("sim"))
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -163,7 +185,9 @@ def lsh_topk(
     pass False: the join shuffles BOTH sides on `_bucket`, which is an
     ordinary equi-key shuffle bounded by bucket width."""
     planes = _hyperplanes(dim, n_planes, seed)
-    c = corpus.withColumn("_bucket", bucket_key(F.col(vec_col), planes))
+    c = corpus.withColumn(
+        "_bucket", bucket_key(F.col(vec_col), planes)
+    ).withColumn("_nrm", vector.norm(F.col(vec_col)))
     key = bucket_key(F.col("probe_vec"), planes)
     # candidate buckets: exact key + each single-bit flip
     flips = [
@@ -174,47 +198,90 @@ def lsh_topk(
         )
         for i in range(n_planes)
     ]
-    p = (
-        probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("probe_vec"),
-        )
-        .withColumn("_bucket", F.explode(F.array(key, *flips)))
+    p = _probe_frame(probes, id_col, vec_col).withColumn(
+        "_bucket", F.explode(F.array(key, *flips))
     )
     j = c.join(F.broadcast(p) if broadcast_probes else p, "_bucket").filter(
         F.col(id_col) != F.col("probe_id")
     )
-    sim = F.round(vector.cosine(F.col(vec_col), F.col("probe_vec")), 5)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        j.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "rn", "neighbor_id", "sim")
-    )
+    return _topk(j, k, id_col, _cos(vec_col))
 
 
-def _dist2(vec_col, centroid: list[float]):
-    carr = F.array(*[F.lit(float(x)) for x in centroid])
+def _dist2_col(vec_col, cent_col):
+    """The squared-distance kernel: Σ (v_i - c_i)² between two array
+    columns, as a left fold in element order (fp64)."""
     diff = F.zip_with(
-        vector.to_double(vec_col), carr, lambda a, b: (a - b) * (a - b)
+        vector.to_double(vec_col), cent_col, lambda a, b: (a - b) * (a - b)
     )
     return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _lit_matrix(cents: list[list[float]]):
+    """A centroid matrix as ONE array<array<double>> literal built via
+    a single SQL expression: the per-element `F.lit` route costs one
+    py4j round-trip per scalar (minutes of plan construction at a
+    4096 x 64 codebook); one `F.expr` parse of the equivalent SQL
+    string is milliseconds. CAST('…' AS DOUBLE) keeps repr()'s full
+    precision incl. scientific notation."""
+    rows = ",".join(
+        "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in c)
+        + ")"
+        for c in cents
+    )
+    return F.expr(f"array({rows})")
+
+
+def _id_array(ids):
+    """Integer ids as ONE array<bigint> literal (same single-parse
+    idiom as `_lit_matrix`)."""
+    return F.expr("array(" + ",".join(f"{int(i)}L" for i in ids) + ")")
 
 
 def centroid_distances(vec_col, cents: list[list[float]]):
     """Array of squared distances from `vec_col` to each literal
     centroid — the public argmin building block shared by assignment
-    (`assign_cids`) and the declared clustering query (qkm1)."""
-    return F.array(*[_dist2(vec_col, c) for c in cents])
+    (`assign_cids`) and the declared clustering query (qkm1). One
+    transform over the single-literal matrix."""
+    return F.transform(_lit_matrix(cents), lambda c: _dist2_col(vec_col, c))
+
+
+def _nearest_centroid(vec_col, cents: list[list[float]], ids=None):
+    """Argmin over `centroid_distances`: the 1-based position of the
+    nearest centroid (ties to the first), or, given `ids` in codebook
+    order, the id stored at that position."""
+    d = centroid_distances(vec_col, cents)
+    pos = F.array_position(d, F.array_min(d))
+    if ids is None:
+        return pos
+    return F.element_at(_id_array(ids), pos.cast("int"))
+
+
+def _nearest_ids(vec_col, cents: list[list[float]], ids, n: int):
+    """The list probe: ids of the `n` centroids nearest `vec_col`,
+    nearest first, as an array<bigint>. `ids` are the stored ids in
+    codebook order (ascending); (dist, position) structs sort
+    naturally, so ties go to the lower id. When `n` covers the
+    codebook every id is returned and no distance is computed (the
+    exhaustive probe)."""
+    ids = list(ids)
+    if n >= len(ids):
+        return _id_array(ids)
+    by_pos = _id_array(ids)
+    d = F.transform(
+        _lit_matrix(cents),
+        lambda c, i: F.struct(_dist2_col(vec_col, c).alias("d"), i.alias("i")),
+    )
+    return F.transform(
+        F.slice(F.array_sort(d), 1, n),
+        lambda s: F.element_at(by_pos, s["i"] + 1),
+    )
 
 
 # scanned-candidate budget behind the auto n_probe rule: with a
 # √N-sized codebook, ~scan_rows candidates per probe means per-probe
 # work stays FLAT as the corpus grows (total probe work linear in N,
-# not quadratic) — the r13 verdict's one measured 100×-scale failure
-# was exactly the fixed 16-list codebook whose per-probe scan grew
-# linearly with the corpus
+# not quadratic); a fixed-size codebook's per-probe scan grows
+# linearly with the corpus instead
 IVF_SCAN_ROWS = 1024
 
 
@@ -226,11 +293,10 @@ def scaled_ivf_centroids(n_vectors: int) -> int:
     (n_lists ≤ N // IVF_SCAN_ROWS). Below N = IVF_SCAN_ROWS² the √N
     codebook would split the corpus into lists SMALLER than one
     probe's candidate budget — pure per-file/per-task overhead with
-    zero scan saved (the r14 bench regression: 45 lists of ~44 rows
-    at N=2000 tripled probe wall and anti-scaled with cores). Tiny
-    corpora therefore get few, full lists — down to one exhaustive
-    (exact) list — and the √N asymptote takes over once a list can
-    afford it (N ≥ ~1M at the 1024-row budget)."""
+    zero scan saved (OPTIMIZATION_r15.md, item 1). Tiny corpora
+    therefore get few, full lists — down to one exhaustive (exact)
+    list — and the √N asymptote takes over once a list can afford it
+    (N ≥ ~1M at the 1024-row budget)."""
     import math
 
     n = max(n_vectors, 1)
@@ -253,6 +319,21 @@ def scaled_n_probe(
     return min(max(n_lists, 1), max(1, round(scan_rows / rows_per_list)))
 
 
+def _cluster_means(assigned: DataFrame, vec_col: str) -> dict[int, list]:
+    """One Lloyd update: `_cid` → mean of the vectors assigned to it
+    (posexplode + avg; the collect is codebook-sized, never
+    corpus-sized). Empty clusters are absent."""
+    by_cid: dict[int, dict[int, float]] = {}
+    for r in (
+        assigned.select("_cid", F.posexplode(vector.to_double(F.col(vec_col))))
+        .groupBy("_cid", "pos")
+        .agg(F.avg("col").alias("m"))
+        .collect()
+    ):
+        by_cid.setdefault(int(r["_cid"]), {})[int(r["pos"])] = r["m"]
+    return {c: [m[d] for d in range(len(m))] for c, m in by_cid.items()}
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -266,9 +347,8 @@ def kmeans_centroids(
     Only the (tiny) centroid set ever reaches the driver."""
     # the per-iteration collect() and the literal-centroid argmin are
     # sized by n_centroids x dim — sane for IVF list counts (k ≤ ~4096)
-    # but a footgun if someone reaches for clustering-sized k; refuse
-    # loudly instead of building a megabyte-scale expression tree
-    # (VERDICT r05 blemish)
+    # but a footgun at clustering-sized k; refuse loudly instead of
+    # building a megabyte-scale expression tree
     if n_centroids > 4096:
         raise ValueError(
             f"kmeans_centroids: n_centroids={n_centroids} exceeds the "
@@ -281,26 +361,14 @@ def kmeans_centroids(
         for r in corpus.orderBy(id_col).limit(n_centroids).collect()
     ]
     for _ in range(iters):
-        dists = centroid_distances(F.col(vec_col), cents)
-        assigned = corpus.select(
+        means = _cluster_means(
+            corpus.select(
+                vec_col, _nearest_centroid(F.col(vec_col), cents).alias("_cid")
+            ),
             vec_col,
-            F.array_position(dists, F.array_min(dists)).alias("cid"),
         )
-        means = (
-            assigned.select(
-                "cid", F.posexplode(vector.to_double(F.col(vec_col)))
-            )
-            .groupBy("cid", "pos")
-            .agg(F.avg("col").alias("m"))
-            .collect()
-        )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cid.setdefault(int(r["cid"]) - 1, {})[int(r["pos"])] = r["m"]
-        cents = [
-            [by_cid[i][d] for d in range(len(cents[i]))] if i in by_cid else cents[i]
-            for i in range(len(cents))
-        ]
+        # an empty cluster keeps its previous centroid
+        cents = [means.get(i + 1, c) for i, c in enumerate(cents)]
     return cents
 
 
@@ -323,43 +391,21 @@ def ivf_topk(
     / `ivf_topk_indexed`). `broadcast_probes=False` flips the `_cid`
     join to a two-sided shuffle for beyond-broadcast probe sets."""
     cents = kmeans_centroids(corpus, n_centroids, iters, id_col, vec_col)
-    dists = centroid_distances(F.col(vec_col), cents)
-    c_assigned = corpus.withColumn(
-        "_cid", F.array_position(dists, F.array_min(dists))
+    c = assign_cids(corpus, cents, vec_col).withColumn(
+        "_nrm", vector.norm(F.col(vec_col))
     )
-    # per-probe: n_probe nearest centroid ids via sorted (dist, cid) structs
-    pd_structs = F.array(
-        *[
-            F.struct(_dist2(F.col("probe_vec"), c).alias("d"),
-                     F.lit(i + 1).cast("long").alias("cid"))
-            for i, c in enumerate(cents)
-        ]
+    p = _probe_frame(probes, id_col, vec_col).withColumn(
+        "_cid",
+        F.explode(
+            _nearest_ids(
+                F.col("probe_vec"), cents, range(1, len(cents) + 1), n_probe
+            )
+        ),
     )
-    p = (
-        probes.select(
-            F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-        )
-        .withColumn(
-            "_cid",
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(pd_structs), 1, n_probe),
-                    lambda s: s["cid"],
-                )
-            ),
-        )
-    )
-    j = c_assigned.join(F.broadcast(p) if broadcast_probes else p, "_cid").filter(
+    j = c.join(F.broadcast(p) if broadcast_probes else p, "_cid").filter(
         F.col(id_col) != F.col("probe_id")
     )
-    sim = F.round(vector.cosine(F.col(vec_col), F.col("probe_vec")), 5)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        j.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "rn", "neighbor_id", "sim")
-    )
+    return _topk(j, k, id_col, _cos(vec_col))
 
 
 def assign_cids(
@@ -376,55 +422,6 @@ def assign_cids(
     )
 
 
-def _dist2_col(vec_col, cent_col):
-    """Squared distance between two ARRAY<DOUBLE> columns (the
-    column-vs-column twin of `_dist2`, for centroids that arrive via a
-    broadcast join instead of as plan literals)."""
-    diff = F.zip_with(
-        vector.to_double(vec_col), cent_col, lambda a, b: (a - b) * (a - b)
-    )
-    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _lit_matrix(cents: list[list[float]]):
-    """A centroid matrix as ONE array<array<double>> literal built via
-    a single SQL expression: the per-element `F.lit` route costs one
-    py4j round-trip per scalar (65 branches x dim 8 ≈ 2 s of plan
-    construction per probe call — measured r11); one `F.expr` parse of
-    the equivalent SQL string is milliseconds. CAST('…' AS DOUBLE)
-    keeps repr()'s full precision incl. scientific notation."""
-    rows = ",".join(
-        "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in c)
-        + ")"
-        for c in cents
-    )
-    return F.expr(f"array({rows})")
-
-
-def _nearest_centroid(vec_col, cents: list[list[float]]):
-    """1-based nearest-centroid id via a JVM transform over the
-    single-literal centroid matrix (no per-centroid Python expression
-    building) — shared by coarse-branch assignment, flat `_cid`
-    assignment and the flat probe path."""
-    d = F.transform(
-        _lit_matrix(cents), lambda c: _dist2_col(vec_col, c)
-    )
-    return F.array_position(d, F.array_min(d))
-
-
-def _leaf_table(spark, leaves: dict[int, list[tuple[int, list[float]]]]):
-    """dict branch -> [(cid, centroid), ...] as a broadcastable frame
-    with ONE row per branch carrying its leaf array — the join key is
-    the branch, and per-row argmin/top-k run as array HOFs over the
-    branch's leaves (bounded by the per-level cap, never the full
-    codebook)."""
-    return spark.createDataFrame(
-        [(b, [(cid, c) for cid, c in ls]) for b, ls in leaves.items()],
-        "_branch BIGINT, _leaves ARRAY<STRUCT<cid: BIGINT, "
-        "centroid: ARRAY<DOUBLE>>>",
-    )
-
-
 def kmeans_centroids_hierarchical(
     corpus: DataFrame,
     n_centroids: int,
@@ -434,17 +431,15 @@ def kmeans_centroids_hierarchical(
     vec_col: str = "embedding",
 ) -> tuple[list[list[float]], dict[int, list[tuple[int, list[float]]]]]:
     """Two-level k-means for codebooks past the single-level design
-    bound (the `kmeans_centroids` 4096 refusal — r10 verdict item 5's
-    named upgrade): level 1 clusters the corpus into `n_coarse`
-    branches with the existing distributed Lloyd (literal-argmin
-    assignment, <= max_per_level literals); level 2 refines each
-    branch's share of the codebook with Lloyd rounds where assignment
-    is a per-row HOF over the branch's OWN leaf array, delivered by a
-    broadcast join on the branch id — so no plan ever carries more
-    than max_per_level centroid literals and no row ever compares
-    against more than (n_coarse + leaves-per-branch) centroids, while
-    the total codebook goes to max_per_level² (16.7M; a 65536-list
-    IVF is n_coarse=256 x 256 leaves).
+    bound (the `kmeans_centroids` 4096 refusal): level 1 clusters the
+    corpus into `n_coarse` branches with the existing distributed
+    Lloyd (literal-argmin assignment, <= max_per_level literals);
+    level 2 refines each branch's share of the codebook with Lloyd
+    rounds where assignment is `assign_cids_hierarchical` — a per-row
+    HOF over the branch's OWN leaf array, delivered by a broadcast
+    join on the branch id — so no plan ever carries more than
+    max_per_level centroid literals and no row ever compares against
+    more than (n_coarse + leaves-per-branch) centroids.
 
     Returns (coarse, leaves): coarse = branch centroids (index =
     branch id, 0-based); leaves = branch -> [(global 1-based cid,
@@ -462,10 +457,8 @@ def kmeans_centroids_hierarchical(
     # literal-argmin bound regardless of max_per_level (level 1 IS a
     # single-level k-means); only the LEAF level — per-branch arrays,
     # no literals — scales with max_per_level. So the two-level bound
-    # is 4096 * max_per_level, not max_per_level², and raising
-    # max_per_level widens branches instead of crashing level 1
-    # (r11 review finding: ceil(sqrt(n)) > 4096 made the advertised
-    # escape raise inside kmeans_centroids).
+    # is 4096 * max_per_level, and raising max_per_level widens
+    # branches instead of crashing level 1.
     coarse_cap = min(max_per_level, 4096)
     if n_centroids > coarse_cap * max_per_level:
         raise ValueError(
@@ -474,7 +467,6 @@ def kmeans_centroids_hierarchical(
             f"{max_per_level} leaves); add a level (or raise "
             "max_per_level — it widens the per-branch leaf arrays)"
         )
-    spark = corpus.sparkSession
     # balanced split: ~sqrt branches, but never more than the coarse
     # cap and never so few that a branch's quota would exceed the cap
     n_coarse = min(
@@ -487,14 +479,13 @@ def kmeans_centroids_hierarchical(
         for b in range(n_coarse)
     ]
     coarse = kmeans_centroids(corpus, n_coarse, iters, id_col, vec_col)
-    assigned = corpus.select(id_col, vec_col).withColumn(
-        "_branch", _nearest_centroid(F.col(vec_col), coarse)
-    )
+    vecs = corpus.select(id_col, vec_col)
     # leaf init = first quota[b] vectors of each branch by id (the
     # deterministic first-n convention of kmeans_centroids, per branch)
     w = Window.partitionBy("_branch").orderBy(id_col)
     init_rows = (
-        assigned.withColumn("_rn", F.row_number().over(w))
+        vecs.withColumn("_branch", _nearest_centroid(F.col(vec_col), coarse))
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= max(quota))
         .select("_branch", "_rn", vec_col)
         .collect()
@@ -513,35 +504,12 @@ def kmeans_centroids_hierarchical(
             leaves[b].append((nxt, c))
             nxt += 1
     for _ in range(iters):
-        lt = _leaf_table(spark, {b + 1: ls for b, ls in leaves.items()})
-        j = assigned.join(F.broadcast(lt), "_branch")
-        d = F.transform(
-            "_leaves", lambda s: _dist2_col(F.col(vec_col), s["centroid"])
+        means = _cluster_means(
+            assign_cids_hierarchical(vecs, coarse, leaves, vec_col), vec_col
         )
-        cid = F.element_at(
-            "_leaves", F.array_position(d, F.array_min(d)).cast("int")
-        )["cid"]
-        means = (
-            j.select(
-                cid.alias("_cid"),
-                F.posexplode(vector.to_double(F.col(vec_col))),
-            )
-            .groupBy("_cid", "pos")
-            .agg(F.avg("col").alias("m"))
-            .collect()
-        )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cid.setdefault(int(r["_cid"]), {})[int(r["pos"])] = r["m"]
         for b, ls in leaves.items():
-            leaves[b] = [
-                (
-                    cid_,
-                    [by_cid[cid_][dd] for dd in range(len(c))]
-                    if cid_ in by_cid else c,  # empty cluster keeps init
-                )
-                for cid_, c in ls
-            ]
+            # an empty cluster keeps its previous centroid
+            leaves[b] = [(cid, means.get(cid, c)) for cid, c in ls]
     return coarse, leaves
 
 
@@ -553,14 +521,18 @@ def assign_cids_hierarchical(
 ) -> DataFrame:
     """Corpus + `_cid` via the two-level argmin: nearest coarse branch
     (literal argmin, <= max_per_level literals), then nearest leaf
-    within that branch (HOF over the broadcast-joined leaf array).
-    Standard IVF coarse quantization — a vector near a branch boundary
-    may land in a different list than the flat argmin would pick,
-    which trades a little recall for never materializing a
+    within that branch (HOF over the broadcast-joined leaf array; one
+    row per branch, so the join never carries the full codebook per
+    row). Standard IVF coarse quantization — a vector near a branch
+    boundary may land in a different list than the flat argmin would
+    pick, which trades a little recall for never materializing a
     codebook-sized expression; the probe side compensates with
     n_probe_coarse > 1."""
-    spark = corpus.sparkSession
-    lt = _leaf_table(spark, {b + 1: ls for b, ls in leaves.items()})
+    lt = corpus.sparkSession.createDataFrame(
+        [(b + 1, ls) for b, ls in leaves.items()],
+        "_branch BIGINT, _leaves ARRAY<STRUCT<cid: BIGINT, "
+        "centroid: ARRAY<DOUBLE>>>",
+    )
     j = corpus.withColumn(
         "_branch", _nearest_centroid(F.col(vec_col), coarse)
     ).join(F.broadcast(lt), "_branch")
@@ -573,6 +545,130 @@ def assign_cids_hierarchical(
     return j.withColumn("_cid", cid).drop("_branch", "_leaves")
 
 
+def _existing(spark, paths: list[str]) -> list[str]:
+    """The entries of `paths` that exist. The one filesystem probe for
+    sidecars and list directories: Hadoop FS, so it works on any
+    configured filesystem, and no read.parquet + AnalysisException
+    stands in for a storage check."""
+    if not paths:
+        return []
+    jPath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jPath(paths[0]).getFileSystem(spark._jsc.hadoopConfiguration())
+    return [p for p in paths if fs.exists(jPath(p))]
+
+
+def _assign(vectors: DataFrame, rows, coarse, vec_col: str) -> DataFrame:
+    """`vectors` + `_cid` under a codebook: rows [(cid, centroid,
+    branch or None)] in cid order, coarse centroids or None. Flat: the
+    nearest centroid's STORED cid. Two-level: nearest branch, then
+    nearest leaf in it (`assign_cids_hierarchical`)."""
+    if coarse is None:
+        return vectors.withColumn("_cid", _nearest_centroid(
+            F.col(vec_col), [r[1] for r in rows], [r[0] for r in rows]
+        ))
+    leaves: dict[int, list[tuple[int, list[float]]]] = {}
+    for cid, c, b in rows:
+        leaves.setdefault(b - 1, []).append((cid, c))
+    return assign_cids_hierarchical(vectors, coarse, leaves, vec_col)
+
+
+def _train_assign(corpus, n_centroids, iters, max_per_level, id_col, vec_col):
+    """Train the list quantizer on `corpus` and assign it → (corpus +
+    `_cid`, codebook rows [(cid, centroid, branch or None)] in cid
+    order, coarse centroids or None). Past `max_per_level` lists the
+    quantizer is two-level; otherwise flat, with cids 1..n."""
+    coarse = None
+    if n_centroids > max_per_level:
+        coarse, leaves = kmeans_centroids_hierarchical(
+            corpus, n_centroids, iters, max_per_level, id_col, vec_col
+        )
+        rows = [
+            (cid, c, b + 1) for b, ls in sorted(leaves.items())
+            for cid, c in ls
+        ]
+    else:
+        cents = kmeans_centroids(corpus, n_centroids, iters, id_col, vec_col)
+        rows = [(i + 1, c, None) for i, c in enumerate(cents)]
+    return _assign(corpus, rows, coarse, vec_col), rows, coarse
+
+
+def _write_codebook(spark, path: str, rows, coarse=None) -> None:
+    """Write `<path>_centroids` from [(cid, centroid, branch or None)],
+    with a `branch` column iff the rows carry branches, and, given
+    `coarse`, `<path>_coarse` (branch = 1-based position)."""
+
+    def put(data, schema: str, sfx: str) -> None:
+        spark.createDataFrame(data, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(path + sfx)
+
+    if rows and rows[0][2] is not None:
+        put(rows, "cid BIGINT, centroid ARRAY<DOUBLE>, branch BIGINT",
+            "_centroids")
+    else:
+        put([r[:2] for r in rows], "cid BIGINT, centroid ARRAY<DOUBLE>",
+            "_centroids")
+    if coarse is not None:
+        put([(i + 1, c) for i, c in enumerate(coarse)],
+            "branch BIGINT, centroid ARRAY<DOUBLE>", "_coarse")
+
+
+def _read_codebook(spark, path: str, leaves: bool = True):
+    """The stored quantizer → (rows, coarse): rows = [(cid, centroid,
+    branch or None)] from `<path>_centroids` in cid order; coarse =
+    the `<path>_coarse` centroids in branch order, or None under the
+    flat layout. `leaves=False` skips the `_centroids` collect under
+    the two-level layout (rows is then None)."""
+    coarse = None
+    if _existing(spark, [path + "_coarse"]):
+        coarse = [
+            [float(x) for x in r["centroid"]]
+            for r in spark.read.parquet(path + "_coarse")
+            .orderBy("branch").collect()
+        ]
+        if not leaves:
+            return None, coarse
+    rows = [
+        (int(r["cid"]), [float(x) for x in r["centroid"]],
+         r.asDict().get("branch"))
+        for r in spark.read.parquet(path + "_centroids")
+        .orderBy("cid").collect()
+    ]
+    return rows, coarse
+
+
+def _read_pq(spark, path: str) -> list[list[list[float]]]:
+    """The `<path>_pq` code books: books[s][j] is subspace s's
+    centroid for code j + 1."""
+    books: dict[int, list[list[float]]] = {}
+    for r in spark.read.parquet(path + "_pq").orderBy("sub", "code").collect():
+        books.setdefault(int(r["sub"]), []).append(
+            [float(x) for x in r["centroid"]]
+        )
+    return [books[s] for s in sorted(books)]
+
+
+def _write_lists(assigned, path, mode, id_col, vec_col, books=None) -> None:
+    """Write `_cid`-assigned vectors into the inverted lists with their
+    norm as `_nrm`. Given PQ `books`, a row is (id, `_codes`, `_nrm`,
+    `_cid`), where `_codes` holds, per subspace, the 1-based code of
+    the nearest entry of that subspace's book (the PQ encoder)."""
+    nrm = vector.norm(F.col(vec_col))
+    if books is None:
+        out = assigned.withColumn("_nrm", nrm)
+    else:
+        v = vector.to_double(F.col(vec_col))
+        sub = len(books[0][0])
+        codes = F.array(*[
+            _nearest_centroid(F.slice(v, sub * s + 1, sub), b).cast("int")
+            for s, b in enumerate(books)
+        ])
+        out = assigned.select(
+            id_col, codes.alias("_codes"), nrm.alias("_nrm"), "_cid"
+        )
+    out.write.partitionBy("_cid").mode(mode).parquet(path)
+
+
 def write_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -583,64 +679,35 @@ def write_ivf_index(
     max_per_level: int = 4096,
 ) -> list[list[float]]:
     """Materialize the IVF inverted lists as a Hive-partitioned parquet
-    layout: one partition directory per `_cid`, plus a tiny sibling
-    `<path>_centroids` table. At scale this is the on-disk ANN index —
-    probing reads only the `n_probe` matching partition directories
-    (file pruning, pinned by tests/test_llm.py), never the full corpus.
+    layout: one partition directory per `_cid`, every corpus column
+    plus the stored norm `_nrm`, and a tiny sibling `<path>_centroids`
+    table. At scale this is the on-disk ANN index — probing reads only
+    the `n_probe` matching partition directories (file pruning, pinned
+    by tests/test_plans.py), never the full corpus.
 
     Codebooks past `max_per_level` lists go through the TWO-LEVEL path
     (kmeans_centroids_hierarchical): the layout gains a `branch`
     column in `_centroids` and a sibling `<path>_coarse` table of
     branch centroids, and `ivf_topk_indexed` detects the coarse table
-    and probes hierarchically — up to max_per_level² (65536+) lists,
-    the 10⁹-vector regime, with no level ever exceeding the
+    and probes hierarchically — up to 4096 x max_per_level lists, the
+    10⁹-vector regime, with no level ever exceeding the
     expression-tree/driver bounds.
 
-    `n_centroids=None` (the default, r13 verdict item 1) applies the
-    √N rule via `scaled_ivf_centroids` — one extra count() over the
-    corpus at BUILD time (an index build is already multi-pass), never
-    at probe time. Past ~16.7M vectors the √N codebook exceeds
-    `max_per_level` and the two-level path engages automatically.
+    `n_centroids=None` (the default) applies the √N rule via
+    `scaled_ivf_centroids` — one extra count() over the corpus at
+    BUILD time (an index build is already multi-pass), never at probe
+    time. Past ~16.7M vectors the √N codebook exceeds `max_per_level`
+    and the two-level path engages automatically. Returns the
+    centroids in cid order.
     """
-    spark = corpus.sparkSession
     if n_centroids is None:
         n_centroids = scaled_ivf_centroids(corpus.count())
-    if n_centroids > max_per_level:
-        coarse, leaves = kmeans_centroids_hierarchical(
-            corpus, n_centroids, iters, max_per_level, id_col, vec_col
-        )
-        assigned = assign_cids_hierarchical(corpus, coarse, leaves, vec_col)
-        cent_rows = [
-            (cid, c, b + 1) for b, ls in sorted(leaves.items())
-            for cid, c in ls
-        ]
-        cents = [c for _, c, _ in cent_rows]
-        assigned.withColumn(
-            "_nrm", vector.norm(F.col(vec_col))
-        ).write.partitionBy("_cid").mode("overwrite").parquet(path)
-        spark.createDataFrame(
-            cent_rows, "cid BIGINT, centroid ARRAY<DOUBLE>, branch BIGINT"
-        ).coalesce(1).write.mode("overwrite").parquet(path + "_centroids")
-        spark.createDataFrame(
-            [(i + 1, c) for i, c in enumerate(coarse)],
-            "branch BIGINT, centroid ARRAY<DOUBLE>",
-        ).coalesce(1).write.mode("overwrite").parquet(path + "_coarse")
-        return cents
-    cents = kmeans_centroids(corpus, n_centroids, iters, id_col, vec_col)
-    # store each vector's norm IN the index: cosine at probe time then
-    # pays ONE aggregate (the dot) per candidate pair instead of three
-    # — the two norm aggregates are loop-invariant and Spark's
-    # higher-order array functions evaluate interpreted, so hoisting
-    # them out of the pair loop cut probe CPU ~3x at the organic-sf1.0
-    # pair counts (r10 scale-table finding)
-    assign_cids(corpus, cents, vec_col).withColumn(
-        "_nrm", vector.norm(F.col(vec_col))
-    ).write.partitionBy("_cid").mode("overwrite").parquet(path)
-    spark.createDataFrame(
-        [(i + 1, c) for i, c in enumerate(cents)],
-        "cid BIGINT, centroid ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "_centroids")
-    return cents
+    assigned, rows, coarse = _train_assign(
+        corpus, n_centroids, iters, max_per_level, id_col, vec_col
+    )
+    _write_lists(assigned, path, "overwrite", id_col, vec_col)
+    _write_codebook(corpus.sparkSession, path, rows, coarse)
+    return [c for _, c, _ in rows]
 
 
 def append_to_ivf_index(
@@ -653,19 +720,20 @@ def append_to_ivf_index(
     without rebuilding: the stored codebook (`<path>_centroids`, plus
     `<path>_coarse` under the two-level layout) is read back, the new
     vectors are assigned with the SAME quantizer arithmetic the build
-    used (flat literal argmin / two-level branch-then-leaf HOF), and
-    the rows land as additional part-files inside the existing
-    `_cid=` partition directories via a partitioned append — probes
-    see them immediately through the unchanged partition-pruned read
-    path. Cost is one assignment pass + write over the NEW vectors
-    only; the existing index bytes are never touched, so this is the
-    streaming-ingest shape (pair with commit_log-style retries at the
-    job level if multiple writers append). An IVF-PQ layout (a
-    `<path>_pq` sidecar exists) is detected automatically: new
-    vectors are additionally PRODUCT-QUANTIZED with the stored
-    per-subspace codebooks — same code arithmetic as the build — and
-    land as (id, _codes, _nrm, _cid) rows, so the appended data pays
-    the same ~128x byte shrink as the original lists.
+    used (flat literal argmin mapped to the stored cids / two-level
+    branch-then-leaf HOF), and the rows land as additional part-files
+    inside the existing `_cid=` partition directories via a
+    partitioned append — probes see them immediately through the
+    unchanged partition-pruned read path. Cost is one assignment pass
+    + write over the NEW vectors only; the existing index bytes are
+    never touched, so this is the streaming-ingest shape (pair with
+    commit_log-style retries at the job level if multiple writers
+    append). An IVF-PQ layout (a `<path>_pq` sidecar exists) is
+    detected automatically: new vectors are additionally
+    PRODUCT-QUANTIZED with the stored per-subspace code books — the
+    build's encoder — and land as (id, _codes, _nrm, _cid) rows, so
+    the appended data pays the same ~128x byte shrink as the original
+    lists.
 
     The CENTROIDS ARE FROZEN: appended mass can drift the list
     balance away from the trained codebook. That trades exactness of
@@ -674,68 +742,17 @@ def append_to_ivf_index(
     max/median list size degrades the scan fraction you sized
     n_probe for (~4x is a good trigger). Returns the number of
     vectors appended."""
-    from pyspark.errors import AnalysisException
     from pyspark.sql import Observation
 
     spark = new_vectors.sparkSession
-    # count rides the write via an Observation: no upfront count()
-    # job doubling the source scan (r11 review finding)
+    # the count rides the write via an Observation: no upfront count()
+    # job re-scanning the source
     obs = Observation()
     new_vectors = new_vectors.observe(obs, F.count(F.lit(1)).alias("n"))
-
-    try:
-        coarse_rows = (
-            spark.read.parquet(path + "_coarse").orderBy("branch").collect()
-        )
-    except AnalysisException:
-        coarse_rows = None  # flat layout: no sibling coarse table
-    if coarse_rows:
-        cent = spark.read.parquet(path + "_centroids").collect()
-        coarse = [[float(x) for x in r["centroid"]] for r in coarse_rows]
-        leaves: dict[int, list[tuple[int, list[float]]]] = {}
-        for r in sorted(cent, key=lambda r: int(r["cid"])):
-            leaves.setdefault(int(r["branch"]) - 1, []).append(
-                (int(r["cid"]), [float(x) for x in r["centroid"]])
-            )
-        assigned = assign_cids_hierarchical(
-            new_vectors, coarse, leaves, vec_col
-        )
-    else:
-        cent = (
-            spark.read.parquet(path + "_centroids").orderBy("cid").collect()
-        )
-        cents = [[float(x) for x in r["centroid"]] for r in cent]
-        assigned = assign_cids(new_vectors, cents, vec_col)
-    try:
-        pq_rows = spark.read.parquet(path + "_pq").collect()
-    except AnalysisException:
-        pq_rows = None  # plain IVF layout: vectors stored as-is
-    if pq_rows:
-        books: dict[int, dict[int, list[float]]] = {}
-        for r in pq_rows:
-            books.setdefault(int(r["sub"]), {})[int(r["code"])] = [
-                float(x) for x in r["centroid"]
-            ]
-        m_subs = len(books)
-        sub = len(books[0][1])
-        v = vector.to_double(F.col(vec_col))
-        code_cols = []
-        for s in range(m_subs):
-            book = [books[s][j] for j in sorted(books[s])]
-            d = centroid_distances(F.slice(v, sub * s + 1, sub), book)
-            code_cols.append(
-                F.array_position(d, F.array_min(d)).cast("int")
-            )
-        assigned.select(
-            id_col,
-            F.array(*code_cols).alias("_codes"),
-            vector.norm(F.col(vec_col)).alias("_nrm"),
-            "_cid",
-        ).write.partitionBy("_cid").mode("append").parquet(path)
-        return int(obs.get["n"])
-    assigned.withColumn(
-        "_nrm", vector.norm(F.col(vec_col))
-    ).write.partitionBy("_cid").mode("append").parquet(path)
+    rows, coarse = _read_codebook(spark, path)
+    assigned = _assign(new_vectors, rows, coarse, vec_col)
+    books = _read_pq(spark, path) if _existing(spark, [path + "_pq"]) else None
+    _write_lists(assigned, path, "append", id_col, vec_col, books)
     return int(obs.get["n"])
 
 
@@ -746,9 +763,9 @@ def delete_from_ivf_index(
     id_col: str = "vec_id",
 ) -> int:
     """Remove vectors from an on-disk IVF / IVF-PQ index WITHOUT a
-    rebuild — the removal twin of `append_to_ivf_index` (r11 verdict
-    item 4). One column-pruned pass finds the dead vectors' inverted
-    lists (`_cid` partitions — the only ones that need rewriting);
+    rebuild — the removal twin of `append_to_ivf_index`. One
+    column-pruned pass finds the dead vectors' inverted lists (`_cid`
+    partitions — the only ones that need rewriting);
     those partitions are rewritten survivors-only via a dynamic
     partition overwrite, and lists whose every vector died are
     removed explicitly (dynamic overwrite only replaces partitions it
@@ -820,58 +837,50 @@ def split_ivf_list(
     list's own vectors (kmeans_centroids — same deterministic
     first-n init as the build) yields two sub-centroids; the list's
     vectors are reassigned and rewritten as two partitions (the old
-    cid and a fresh max_cid+1, keeping the id space contiguous so
-    the flat probe's position->cid mapping stays valid), and the
-    codebook sidecar swaps one row for two (same branch under the
-    two-level layout, so hierarchical probes route unchanged). Cost
-    is one pass over the HOT LIST only, never the index. Probing
-    stays exact-by-construction: assignment only decides which list
-    holds a vector, so an exhaustive probe equals brute force before
-    AND after (hash-gated in qix13); targeted probes regain the
+    cid and a fresh max_cid+1), and the codebook sidecar swaps one
+    row for two (same branch under the two-level layout, so
+    hierarchical probes route unchanged). Cost is one pass over the
+    HOT LIST only, never the index. Probing stays
+    exact-by-construction: assignment only decides which list holds a
+    vector, so an exhaustive probe equals brute force before AND
+    after (hash-gated in qix13); targeted probes regain the
     scan-fraction the oversized list was costing. PQ layouts refuse
     (codes cannot be re-clustered without the original vectors —
     rebuild instead). Returns (cid, new_cid)."""
     import os
     import shutil
 
-    if _pq_sidecar_exists(spark, path):
+    if _existing(spark, [path + "_pq"]):
         raise ValueError(
             "split_ivf_list cannot split an IVF-PQ list (stored codes "
             "cannot be re-clustered) — rebuild with rebuild_ivfpq_index"
         )
-    cent_rows = spark.read.parquet(path + "_centroids").collect()
-    by_cid = {int(r["cid"]): r for r in cent_rows}
+    rows, _ = _read_codebook(spark, path)
+    by_cid = {r[0]: r for r in rows}
     if int(cid) not in by_cid:
         raise ValueError(f"no inverted list _cid={cid} in {path!r}")
     new_cid = max(by_cid) + 1
     hot = spark.read.parquet(path).filter(F.col("_cid") == int(cid))
     subs = kmeans_centroids(hot, 2, iters, id_col, vec_col)
-    # degenerate 2-means: kmeans_centroids always RETURNS two entries
-    # (stale init centroids carry through an empty cluster), so the
-    # real collapse signal is identical centroids — a list of
-    # (near-)duplicate vectors that no split can separate (r13
-    # review: the old len()<2 guard could never fire and the loop in
-    # maintain_ivf_index would re-split the same list forever)
+    # kmeans_centroids always RETURNS two entries (stale init centroids
+    # carry through an empty cluster), so the collapse signal is
+    # identical centroids — a list of (near-)duplicate vectors that no
+    # split can separate; without this maintain_ivf_index would
+    # re-split the same list forever
     if len(subs) < 2 or subs[0] == subs[1]:
         raise ValueError(
             f"list _cid={cid} cannot be split: 2-means collapsed to "
             "one centroid (duplicate-heavy mass — rebuild or dedup)"
         )
     reassigned = hot.withColumn(
-        "_cid",
-        F.when(
-            _dist2_col(F.col(vec_col), F.lit(subs[0]).cast(
-                "array<double>")) <= _dist2_col(
-                F.col(vec_col), F.lit(subs[1]).cast("array<double>")),
-            F.lit(int(cid)),
-        ).otherwise(F.lit(new_cid)).cast("bigint"),
+        "_cid", _nearest_centroid(F.col(vec_col), subs, [int(cid), new_cid])
     ).localCheckpoint(eager=True)
     # one-sidedness must be detected BEFORE the dynamic-overwrite
     # write: an all-to-new_cid assignment (subs[0] a stale mean of an
     # emptied 2-means cluster) would emit ONLY the new partition and
-    # leave the old one intact — every hot-list vector then exists
-    # twice in the index (r13 second review). The checkpoint bounds
-    # the extra pass to the hot list it already reads.
+    # leave the old one intact — every hot-list vector would then
+    # exist twice in the index. The checkpoint bounds the extra pass
+    # to the hot list it already reads.
     sides = {
         int(r["_cid"])
         for r in reassigned.select("_cid").distinct().collect()
@@ -911,41 +920,18 @@ def split_ivf_list(
             f"list _cid={cid} cannot be split: 2-means assigned "
             "every vector to one side"
         )
-    old = by_cid[int(cid)]
-    has_branch = "branch" in cent_rows[0].asDict()
-    rows = []
-    for r in cent_rows:
-        if int(r["cid"]) == int(cid):
-            continue
-        rows.append(
-            (int(r["cid"]), list(r["centroid"]))
-            + ((int(r["branch"]),) if has_branch else ())
-        )
-    extra = ((int(old["branch"]),) if has_branch else ())
-    rows.append((int(cid), subs[0]) + extra)
-    rows.append((new_cid, subs[1]) + extra)
-    schema = "cid BIGINT, centroid ARRAY<DOUBLE>" + (
-        ", branch BIGINT" if has_branch else "")
-    tmp = path + f"_centroids.tmp-{os.getpid()}"
-    spark.createDataFrame(sorted(rows), schema).coalesce(1).write.mode(
-        "overwrite").parquet(tmp)
+    branch = by_cid[int(cid)][2]
+    new_rows = sorted(
+        [r for r in rows if r[0] != int(cid)]
+        + [(int(cid), subs[0], branch), (new_cid, subs[1], branch)]
+    )
+    tmp = path + f".split-{os.getpid()}"
+    _write_codebook(spark, tmp, new_rows)
     old_dir = path + f"_centroids.old-{os.getpid()}"
     os.rename(path + "_centroids", old_dir)
-    os.rename(tmp, path + "_centroids")
+    os.rename(tmp + "_centroids", path + "_centroids")
     shutil.rmtree(old_dir, ignore_errors=True)
     return int(cid), new_cid
-
-
-def _pq_sidecar_exists(spark, path: str) -> bool:
-    """True when `path` is an IVF-PQ layout (a `<path>_pq` codebook
-    sidecar exists) — a FILESYSTEM existence probe, not a spark-job-
-    shaped read.parquet + AnalysisException (r13 verdict nit: the
-    exception form was control flow on a storage probe). Same
-    hadoop-FS idiom as ivf_topk_indexed's `_coarse` detection, so it
-    works on any configured filesystem, not just POSIX."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path + "_pq")
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jp))
 
 
 def ivf_index_stats(spark, path: str) -> DataFrame:
@@ -971,7 +957,7 @@ def maintain_ivf_index(
     max_splits: int = 64,
 ) -> dict:
     """WIRE the ~4x drift trigger `append_to_ivf_index` documents into
-    one idempotent maintenance operation (r12 verdict item 5): read
+    one idempotent maintenance operation: read
     `ivf_index_stats`, and while any inverted list holds more than
     `ratio` x the median list size, split the largest such list
     (`split_ivf_list` — local 2-means over the hot list only, never
@@ -1002,7 +988,7 @@ def maintain_ivf_index(
             for r in ivf_index_stats(spark, path).collect()
         }
 
-    if _pq_sidecar_exists(spark, path):
+    if _existing(spark, [path + "_pq"]):
         counts = _stats()
         med = sorted(counts.values())[len(counts) // 2]
         return {
@@ -1101,14 +1087,13 @@ def rebuild_ivf_index(
     vec_col: str = "embedding",
     max_per_level: int = 4096,
 ) -> dict:
-    """ACT on `maintain_ivf_index`'s `rebuild_recommended` flag (r13
-    verdict item 2 — the lifecycle previously ended one step short of
-    closed-loop): retrain the codebook from the LIVE corpus and swap
-    the index atomically, preserving every vector and id. A plain IVF
-    layout stores the original vectors in its inverted lists, so the
-    rebuild is self-contained: one read of the index (dropping the
-    derived `_cid`/`_nrm`), a fresh `write_ivf_index` at a staging
-    path — √N-sized by default, so a corpus that grew 100× since the
+    """ACT on `maintain_ivf_index`'s `rebuild_recommended` flag:
+    retrain the codebook from the LIVE corpus and swap the index
+    atomically, preserving every vector and id. A plain IVF layout
+    stores the original vectors in its inverted lists, so the rebuild
+    is self-contained: one read of the index (dropping the derived
+    `_cid`/`_nrm`), a fresh `write_ivf_index` at a staging path —
+    √N-sized by default, so a corpus that grew 100× since the
     original build gets the codebook that growth warrants — then
     `_swap_index_dirs` publishes it (per-directory atomic renames,
     the two-phase shape commit-log writers use). Cost is one full
@@ -1120,7 +1105,7 @@ def rebuild_ivf_index(
     "n_vectors"} for the rebuilt index."""
     import os
 
-    if _pq_sidecar_exists(spark, path):
+    if _existing(spark, [path + "_pq"]):
         raise ValueError(
             "rebuild_ivf_index: IVF-PQ layout (stored codes cannot "
             "re-train a codebook) — use rebuild_ivfpq_index with the "
@@ -1166,13 +1151,11 @@ def rebuild_ivfpq_index(
     import os
 
     if m_subs is None or n_codes is None:
-        pq_rows = spark.read.parquet(path + "_pq").collect()
-        subs = {int(r["sub"]) for r in pq_rows}
-        codes = {int(r["code"]) for r in pq_rows}
+        books = _read_pq(spark, path)
         if m_subs is None:
-            m_subs = len(subs)
+            m_subs = len(books)
         if n_codes is None:
-            n_codes = max(codes)
+            n_codes = max(len(b) for b in books)
     tmp = path + f".rebuild-{os.getpid()}"
     write_ivfpq_index(
         corpus, tmp, n_centroids, m_subs, n_codes, iters,
@@ -1183,188 +1166,86 @@ def rebuild_ivfpq_index(
     return {"n_lists": int(n_lists), "n_vectors": corpus.count()}
 
 
-def _probe_cids_hierarchical(
-    spark, path, probes, n_probe, n_probe_coarse, id_col, vec_col
-) -> DataFrame:
-    """Probe rows exploded to their `n_probe` candidate inverted-list
-    ids under the two-level layout: literal argsort over the (<=
-    max_per_level) COARSE centroids picks `n_probe_coarse` branches
-    per probe, a broadcast join delivers just those branches' leaf
-    arrays, and a per-probe window keeps the n_probe nearest leaves —
-    no plan ever carries the full codebook as literals and nothing
-    codebook-sized reaches the driver here (the coarse table is
-    branch-count sized)."""
-    coarse_rows = (
-        spark.read.parquet(path + "_coarse").orderBy("branch").collect()
-    )
-    coarse = [list(r["centroid"]) for r in coarse_rows]
-    # (dist, branch) structs via ONE transform over the single-literal
-    # coarse matrix (2-arg lambda gives the 0-based index) — struct
-    # natural order sorts by dist then branch, so the slice is the
-    # nb nearest branches deterministically
-    bd_structs = F.transform(
-        _lit_matrix(coarse),
-        lambda c, i: F.struct(
-            _dist2_col(F.col("probe_vec"), c).alias("d"),
-            (i + 1).cast("long").alias("_branch"),
-        ),
-    )
-    nb = min(n_probe_coarse, len(coarse))
-    p = (
-        probes.select(
-            F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
+def _candidate_lists(
+    spark, path, probes, n_probe, n_probe_coarse, id_col, vec_col, where=None
+) -> tuple[DataFrame, DataFrame | None]:
+    """The probe's list side, shared by both indexed probes → (p,
+    lists): `p` is the probe frame exploded to each probe's candidate
+    `_cid`s; `lists` scans only those inverted-list directories, or is
+    None when none of them exists.
+
+    Selection follows the layout. Flat: each probe's `n_probe` nearest
+    stored cids; when `n_probe` covers the codebook every cid is a
+    candidate, known statically, so the distinct-cid collect job is
+    skipped. Two-level: the `n_probe_coarse` nearest branches, then
+    the `n_probe` nearest leaves among them (a broadcast join delivers
+    just those branches' leaf arrays; no plan carries the codebook as
+    literals). That subtree has two consumers (the cid collect and
+    the join) and is probe-sized, so it is checkpointed.
+
+    The scan names candidate directories, never the index root:
+    listing every partition directory cost ~13 s per call at 4100
+    lists. basePath keeps `_cid` a partition column and the IN filter
+    keeps the pruning visible in the plan. `where` filters inside the
+    scan (parquet pushdown). A scan with fewer splits than
+    `defaultParallelism` is round-robin repartitioned: pair scoring
+    runs map-side on it, and a small index would otherwise serialize
+    scoring into one task (OPTIMIZATION_r15.md, item 1). A scan that
+    already has enough splits gets no exchange."""
+    rows, coarse = _read_codebook(spark, path, leaves=False)
+    p = _probe_frame(probes, id_col, vec_col)
+    known = None
+    if coarse is None:
+        cids = [r[0] for r in rows]
+        p = p.withColumn("_cid", F.explode(_nearest_ids(
+            F.col("probe_vec"), [r[1] for r in rows], cids, n_probe
+        )))
+        if n_probe >= len(cids):
+            known = cids
+    else:
+        branches = p.withColumn("_branch", F.explode(_nearest_ids(
+            F.col("probe_vec"), coarse, range(1, len(coarse) + 1),
+            n_probe_coarse,
+        )))
+        lt = (
+            spark.read.parquet(path + "_centroids")
+            .groupBy(F.col("branch").alias("_branch"))
+            .agg(F.collect_list(F.struct("cid", "centroid")).alias("_leaves"))
         )
-        .withColumn(
-            "_branch",
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(bd_structs), 1, nb),
-                    lambda s: s["_branch"],
-                )
-            ),
+        leaf_d = F.transform("_leaves", lambda s: F.struct(
+            _dist2_col(F.col("probe_vec"), s["centroid"]).alias("d"),
+            s["cid"].alias("cid"),
+        ))
+        w = Window.partitionBy("probe_id").orderBy(
+            F.col("_dc.d").asc(), F.col("_dc.cid").asc()
         )
-    )
-    lt = (
-        spark.read.parquet(path + "_centroids")
-        .groupBy(F.col("branch").alias("_branch"))
-        .agg(F.collect_list(F.struct("cid", "centroid")).alias("_leaves"))
-    )
-    cand = (
-        p.join(F.broadcast(lt), "_branch")
-        .select(
-            "probe_id",
-            "probe_vec",
-            F.explode(
-                F.transform(
-                    "_leaves",
-                    lambda s: F.struct(
-                        _dist2_col(F.col("probe_vec"), s["centroid"])
-                        .alias("d"),
-                        s["cid"].alias("cid"),
-                    ),
-                )
-            ).alias("_dc"),
+        p = (
+            branches.join(F.broadcast(lt), "_branch")
+            .select("probe_id", "probe_vec", "_pnrm",
+                    F.explode(leaf_d).alias("_dc"))
+            .withColumn("_lrn", F.row_number().over(w))
+            .filter(F.col("_lrn") <= n_probe)
+            .select("probe_id", "probe_vec", "_pnrm",
+                    F.col("_dc.cid").alias("_cid"))
+            .localCheckpoint(eager=True)
         )
+    if known is None:
+        known = [r["_cid"] for r in p.select("_cid").distinct().collect()]
+    dirs = _existing(spark, [f"{path}/_cid={c}" for c in known])
+    if not dirs:
+        return p, None
+    lists = (
+        spark.read.option("basePath", path).parquet(*dirs)
+        .filter(F.col("_cid").isin(known))
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("_dc.d").asc(), F.col("_dc.cid").asc()
-    )
-    return (
-        cand.withColumn("_lrn", F.row_number().over(w))
-        .filter(F.col("_lrn") <= n_probe)
-        .select("probe_id", "probe_vec", F.col("_dc.cid").alias("_cid"))
-    )
-
-
-def _probe_cids_flat(
-    spark, path, probes, n_probe, id_col, vec_col
-) -> tuple[DataFrame, list[int] | None]:
-    """Probe rows exploded to their n_probe candidate list ids under
-    the single-level layout: (dist, cid) structs via ONE transform
-    over the single-literal centroid matrix (the per-scalar F.lit
-    route costs one py4j round-trip per scalar — ~262k of them at a
-    4096 x 64 codebook, minutes of plan construction per probe call;
-    r11 review finding, same fix as the hierarchical branch path).
-    Struct natural order sorts by dist then cid, so the slice is the
-    n_probe nearest lists deterministically — identical selection to
-    the old literal-struct form.
-
-    Returns (probe frame, statically-known candidate cid list) — the
-    list is non-None exactly when the probe is exhaustive (n_probe
-    covers the codebook), letting the caller skip the distinct-cid
-    collect job that would re-derive what is already known."""
-    cents_rows = (
-        spark.read.parquet(path + "_centroids").orderBy("cid").collect()
-    )
-    base = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("probe_vec"),
-    )
-    if n_probe >= len(cents_rows):
-        # exhaustive probe (n_probe covers the whole codebook — the
-        # r15 small-corpus clamp makes this the normal tiny-index
-        # shape): every list is a candidate for every probe, so the
-        # centroid-distance argsort would compute distances only to
-        # throw the ordering away. Skip it — candidates are the
-        # literal cid set (identical rows to the argsort form, which
-        # slices ALL structs when n_probe >= n_lists).
-        cids = [int(r["cid"]) for r in cents_rows]
-        return base.withColumn(
-            "_cid",
-            F.explode(F.array(*[F.lit(c).cast("long") for c in cids])),
-        ), cids
-    cents = [list(r["centroid"]) for r in cents_rows]
-    pd_structs = F.transform(
-        _lit_matrix(cents),
-        lambda c, i: F.struct(
-            _dist2_col(F.col("probe_vec"), c).alias("d"),
-            (i + 1).cast("long").alias("cid"),
-        ),
-    )
-    return base.withColumn(
-        "_cid",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(pd_structs), 1, n_probe),
-                lambda s: s["cid"],
-            )
-        ),
-    ), None
-
-
-def _pruned_read(
-    spark, path: str, p: DataFrame, cand_cids: list[int] | None = None
-) -> DataFrame | None:
-    """Read ONLY the candidate inverted-list directories named by the
-    probe frame's distinct `_cid`s (collected driver-side — bounded by
-    the codebook, never probe count). Reading the index ROOT makes the
-    driver enumerate EVERY partition directory before pruning — at a
-    4100-list codebook that listing alone cost ~13 s per probe call
-    (r11 measurement), dwarfing the actual scan. basePath keeps `_cid`
-    a partition column; the isin filter stays as defense-in-depth (and
-    keeps the pruning visible in the plan); empty inverted lists have
-    no directory, so existence-check the candidate paths. Returns None
-    when no candidate directory exists. A statically-known candidate
-    set (the exhaustive-probe fast path) skips the distinct-cid
-    collect job."""
-    if cand_cids is None:
-        cand_cids = [
-            r["_cid"] for r in p.select("_cid").distinct().collect()
-        ]
-    hconf = spark._jsc.hadoopConfiguration()
-    jPath = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jPath(path).getFileSystem(hconf)
-    cand_dirs = [
-        d for c in cand_cids
-        if fs.exists(jPath(d := f"{path}/_cid={c}"))
-    ]
-    if not cand_dirs:
-        return None
-    return (
-        spark.read.option("basePath", path).parquet(*cand_dirs)
-        .filter(F.col("_cid").isin(cand_cids))
-    )
-
-
-def _parallelize_candidates(spark, corpus: DataFrame) -> DataFrame:
-    """Floor the candidate-scoring parallelism at the session's core
-    count. Pair scoring (one interpreted array-dot per candidate×probe
-    pair) runs map-side on the pruned list scan, so its task count is
-    whatever the FILE layout yields — and a small index (few lists,
-    tiny files packed into one split) serializes the entire scoring
-    loop into a single task (r15 measurement: the sf0.1 exhaustive
-    1-list probe ran 400k pair-dots in ONE task, 7-9 s wall vs ~0.3 s
-    of 32-way work; guide §2.6 stragglers/idle capacity). When the
-    scan already supplies >= defaultParallelism splits — the large-
-    index regime, where probed lists are many or multi-hundred-MB —
-    this is a no-op and no exchange is added; otherwise the
-    round-robin exchange moves only the bytes the probe must scan
-    anyway (bounded by the candidate scan itself, and the scoring it
-    unlocks costs ~10x more per byte than the shuffle)."""
+    if where is not None:
+        lists = lists.filter(
+            F.expr(where) if isinstance(where, str) else where
+        )
     par = spark.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() < par:
-        corpus = corpus.repartition(par)
-    return corpus
+    if lists.rdd.getNumPartitions() < par:
+        lists = lists.repartition(par)
+    return p, lists
 
 
 def _empty_topk(spark, path: str, probes: DataFrame, id_col: str):
@@ -1372,8 +1253,8 @@ def _empty_topk(spark, path: str, probes: DataFrame, id_col: str):
     neighbor_id typed from the INDEX files (root listing is acceptable
     on this rare path; falls back to the probe type when the index has
     no data at all), so the output schema does not flip between the
-    empty and non-empty paths when probe and corpus id types differ
-    (r11 review finding)."""
+    empty and non-empty paths when probe and corpus id types
+    differ."""
     pid_t = probes.schema[id_col].dataType.simpleString()
     try:
         nid_t = (
@@ -1402,7 +1283,8 @@ def ivf_topk_indexed(
     driver-side — bounded by n_centroids, NOT by probe count — and
     applied as a static `_cid IN (...)` filter, so partition pruning
     drops non-candidate inverted lists at the file level before the
-    bucket equi-join.
+    bucket equi-join; the probe side is broadcast into that join and
+    scored with the stored norms (`_candidate_lists`).
 
     Two-level layouts (a `<path>_coarse` sibling exists — codebooks
     past the per-level cap) probe hierarchically: `n_probe_coarse`
@@ -1433,65 +1315,15 @@ def ivf_topk_indexed(
         n_lists = spark.read.parquet(path + "_centroids").count()
         n_vec = spark.read.parquet(path).count()
         n_probe = scaled_n_probe(n_lists, n_vec)
-    # layout detection via the filesystem, not try/except around the
-    # whole hierarchical path (which would silently mask real failures
-    # inside it as "must be a flat layout")
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path + "_coarse")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        p = _probe_cids_hierarchical(
-            spark, path, probes, n_probe, n_probe_coarse, id_col, vec_col
-        )
-        # two consumers (the cid collect below + the bucket join) over
-        # a nontrivial subtree (leaf-table join + per-probe window) —
-        # checkpoint so it runs once; probe-sized by the probe
-        # contract, so the materialization is bounded. The flat branch
-        # below skips this: its probe subplan is a literal-struct
-        # projection, cheaper to evaluate twice than to materialize.
-        p = p.localCheckpoint(eager=True)
-        known_cids = None
-    else:  # single-level layout
-        p, known_cids = _probe_cids_flat(
-            spark, path, probes, n_probe, id_col, vec_col
-        )
-    corpus = _pruned_read(spark, path, p, known_cids)
-    if corpus is None:
+    p, lists = _candidate_lists(
+        spark, path, probes, n_probe, n_probe_coarse, id_col, vec_col, where
+    )
+    if lists is None:
         return _empty_topk(spark, path, probes, id_col)
-    if where is not None:
-        corpus = corpus.filter(
-            F.expr(where) if isinstance(where, str) else where
-        )
-    corpus = _parallelize_candidates(spark, corpus)
-    # probe norms once per probe row, MATERIALIZED by the broadcast
-    # exchange (not inlined past the join into the pair loop)
-    p = p.withColumn("_pnrm", vector.norm(F.col("probe_vec")))
-    j = corpus.join(F.broadcast(p), "_cid").filter(
+    j = lists.join(F.broadcast(p), "_cid").filter(
         F.col(id_col) != F.col("probe_id")
     )
-    if "_nrm" in corpus.columns:
-        # corpus norms precomputed at index-write time: with both
-        # factors hoisted, each candidate pair pays ONE interpreted
-        # array aggregate (the dot) instead of three — bit-identical
-        # to cosine(): same IEEE ops in the same order, the
-        # sqrt(dot(x,x)) factors are just evaluated once. (r15
-        # measured-and-rejected: unrolling the dot into a scalar
-        # element_at chain — the de_bruijn HOF-removal recipe — is
-        # 2.4-4x SLOWER per pair here; a 64-wide add chain codegens
-        # worse than the tight fold loop. Keep the fold.)
-        sim = F.round(
-            vector.dot(F.col(vec_col), F.col("probe_vec"))
-            / (F.col("_nrm") * F.col("_pnrm")),
-            5,
-        )
-    else:  # pre-r10 index layout without stored norms
-        sim = F.round(vector.cosine(F.col(vec_col), F.col("probe_vec")), 5)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        j.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "rn", "neighbor_id", "sim")
-    )
+    return _topk(j, k, id_col, _cos(vec_col))
 
 
 def near_duplicate_pairs(
@@ -1607,22 +1439,21 @@ def range_search_shuffle(
     work evenly regardless of data skew."""
     c = corpus.withColumn(
         "_blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-    ).withColumn(
-        "_blk",
-        F.explode(F.array(*[F.lit(i).cast("long") for i in range(n_blocks)])),
-    )
-    sim = F.round(
-        vector.cosine(F.col(vec_col), F.col("probe_vec")), sim_decimals
+    ).withColumn("_nrm", vector.norm(F.col(vec_col)))
+    p = _probe_frame(probes, id_col, vec_col).withColumn(
+        "_blk", F.explode(_id_array(range(n_blocks)))
     )
     return (
         c.join(p, "_blk")
         .filter(F.col(id_col) != F.col("probe_id"))
-        .select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+        .select(
+            "probe_id",
+            F.col(id_col).alias("neighbor_id"),
+            _cos(vec_col, sim_decimals).alias("sim"),
+        )
         .filter(F.col("sim") >= threshold)
     )
+
 
 
 def range_search_vectorized(
@@ -1654,8 +1485,8 @@ def range_search_vectorized(
     filter keeps round(sim, d) >= threshold, which admits raw sims
     down to threshold - 0.5*10^-d, so the pruner must reach at least
     that far below the threshold or boundary pairs get lost before
-    the verify stage (review finding — 1e-6 was INSIDE the rounding
-    quantum); the 1e-9 term covers fp64 summation-order error with
+    the verify stage (a 1e-6 slack is INSIDE the rounding quantum);
+    the 1e-9 term covers fp64 summation-order error with
     orders of magnitude to spare. A candidate short of the true
     threshold costs one wasted verify; a true pair cannot be pruned.
 
@@ -1687,7 +1518,7 @@ def range_search_vectorized(
     # collect means a nondeterministic probe plan (sample,
     # rand-filtered) cannot pass a separate count job yet materialize
     # more rows later — and bounded callers don't pay an extra
-    # distributed job (r09 ADVICE).
+    # distributed job.
     prows = (
         probes.select(id_col, vec_col)
         .limit(_RANGE_SEARCH_MAX_PROBES + 1)
@@ -1701,7 +1532,7 @@ def range_search_vectorized(
         )
     if not prows:
         # np.linalg.norm over a 0-row matrix raises; the correct
-        # result is simply the empty pair set (review finding).
+        # result is simply the empty pair set.
         return probes.sparkSession.createDataFrame(
             [], f"{cand_schema}, sim double"
         )
@@ -1797,48 +1628,19 @@ def write_ivfpq_index(
         )
     sub = dim // m_subs
     spark = corpus.sparkSession
+    assigned, rows, coarse = _train_assign(
+        corpus, n_centroids, iters, max_per_level, id_col, vec_col
+    )
     v = vector.to_double(F.col(vec_col))
-    if n_centroids > max_per_level:
-        coarse, leaves = kmeans_centroids_hierarchical(
-            corpus, n_centroids, iters, max_per_level, id_col, vec_col
+    books = [
+        kmeans_centroids(
+            corpus.select(id_col, F.slice(v, sub * s + 1, sub).alias("sub")),
+            n_codes, iters, id_col, vec_col="sub",
         )
-        assigned = assign_cids_hierarchical(corpus, coarse, leaves, vec_col)
-        cent_rows = [
-            (cid, c, b + 1) for b, ls in sorted(leaves.items())
-            for cid, c in ls
-        ]
-    else:
-        cents = kmeans_centroids(corpus, n_centroids, iters, id_col, vec_col)
-        assigned = assign_cids(corpus, cents, vec_col)
-        cent_rows = [(i + 1, c, None) for i, c in enumerate(cents)]
-    books = []
-    for s in range(m_subs):
-        sub_df = corpus.select(
-            id_col, F.slice(v, sub * s + 1, sub).alias("sub")
-        )
-        books.append(
-            kmeans_centroids(sub_df, n_codes, iters, id_col, vec_col="sub")
-        )
-    code_cols = []
-    for s in range(m_subs):
-        d = centroid_distances(F.slice(v, sub * s + 1, sub), books[s])
-        code_cols.append(
-            F.array_position(d, F.array_min(d)).cast("int")
-        )
-    assigned.select(
-        id_col,
-        F.array(*code_cols).alias("_codes"),
-        vector.norm(F.col(vec_col)).alias("_nrm"),
-        "_cid",
-    ).write.partitionBy("_cid").mode("overwrite").parquet(path)
-    spark.createDataFrame(
-        cent_rows, "cid BIGINT, centroid ARRAY<DOUBLE>, branch BIGINT"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "_centroids")
-    if n_centroids > max_per_level:
-        spark.createDataFrame(
-            [(i + 1, c) for i, c in enumerate(coarse)],
-            "branch BIGINT, centroid ARRAY<DOUBLE>",
-        ).coalesce(1).write.mode("overwrite").parquet(path + "_coarse")
+        for s in range(m_subs)
+    ]
+    _write_lists(assigned, path, "overwrite", id_col, vec_col, books)
+    _write_codebook(spark, path, rows, coarse)
     spark.createDataFrame(
         [(s, j + 1, c) for s, b in enumerate(books) for j, c in enumerate(b)],
         "sub INT, code INT, centroid ARRAY<DOUBLE>",
@@ -1859,11 +1661,11 @@ def ivfpq_topk_indexed(
 ) -> DataFrame:
     """IVF-PQ probe with asymmetric-distance pruning and EXACT
     re-rank: (1) each probe selects its n_probe nearest inverted
-    lists (same literal machinery and candidate-dir-only pruned read
-    as ivf_topk_indexed); (2) candidates rank by the ADC
-    approximation — per probe, a (m_subs x n_codes) lookup table of
-    squared subspace distances is computed ONCE against the PQ
-    codebooks and the candidate's distance is m_subs element_at
+    lists (the same list selection and candidate-dir-only pruned read
+    as ivf_topk_indexed, `_candidate_lists`); (2) candidates rank by
+    the ADC approximation — per probe, a (m_subs x n_codes) lookup
+    table of squared subspace distances is computed ONCE against the
+    PQ codebooks and the candidate's distance is m_subs element_at
     lookups over its stored codes, touching only the 4-byte codes,
     never vectors; (3) the k*refine ADC-best candidates per probe
     join back to `corpus` by id (broadcast, candidate-sized) for the
@@ -1878,56 +1680,29 @@ def ivfpq_topk_indexed(
     Two-level layouts (a `<path>_coarse` sibling — 4096+ lists) select
     candidate lists hierarchically, same as ivf_topk_indexed; the ADC
     and re-rank stages are layout-agnostic."""
-    pq_rows = (
-        spark.read.parquet(path + "_pq").orderBy("sub", "code").collect()
-    )
-    m_subs = 1 + max(r["sub"] for r in pq_rows)
-    n_codes = max(r["code"] for r in pq_rows)
-    books = [
-        [list(r["centroid"]) for r in pq_rows if r["sub"] == s]
-        for s in range(m_subs)
-    ]
+    books = _read_pq(spark, path)
+    n_codes = max(len(b) for b in books)
     sub = len(books[0][0])
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path + "_coarse")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        p = _probe_cids_hierarchical(
-            spark, path, probes, n_probe, n_probe_coarse, id_col, vec_col
-        ).localCheckpoint(eager=True)
-        known_cids = None
-    else:
-        p, known_cids = _probe_cids_flat(
-            spark, path, probes, n_probe, id_col, vec_col
-        )
-    lists = _pruned_read(spark, path, p, known_cids)
+    p, lists = _candidate_lists(
+        spark, path, probes, n_probe, n_probe_coarse, id_col, vec_col
+    )
     if lists is None:
         return _empty_topk(spark, path, probes, id_col)
     pv = vector.to_double(F.col("probe_vec"))
     # the LUT as ONE transform over the flattened (m_subs*n_codes)
     # codebook matrix: entry i belongs to subspace i div n_codes, so
     # the matching probe slice start is computed per element JVM-side
-    # (same py4j-cost fix as _probe_cids_flat; per-scalar lit() at
-    # 8 subs x 256 codes x 8 dims would be ~16k round-trips per call)
-    flat_books = [c for b in books for c in b]
     lut = F.transform(
-        _lit_matrix(flat_books),
+        _lit_matrix([c for b in books for c in b]),
         lambda c, i: _dist2_col(
-            F.slice(
-                pv,
-                (F.floor(i / n_codes).cast("int") * sub + 1),
-                sub,
-            ),
-            c,
+            F.slice(pv, F.floor(i / n_codes).cast("int") * sub + 1, sub), c
         ),
     )
-    p = p.withColumn("_lut", lut).withColumn(
-        "_pnrm", vector.norm(F.col("probe_vec"))
-    )
-    j = lists.join(F.broadcast(p), "_cid").filter(
+    j = lists.join(F.broadcast(p.withColumn("_lut", lut)), "_cid").filter(
         F.col(id_col) != F.col("probe_id")
     )
     adc = None
-    for s in range(m_subs):
+    for s in range(len(books)):
         term = F.element_at(
             "_lut", F.lit(s * n_codes) + F.element_at("_codes", s + 1)
         )
@@ -1950,15 +1725,4 @@ def ivfpq_topk_indexed(
     # broadcast the CANDIDATE-sized side into the corpus scan, never
     # the corpus; stored norms make the exact cosine one dot per pair
     rer = nv.join(F.broadcast(cand), "neighbor_id")
-    sim = F.round(
-        vector.dot(F.col("_nv"), F.col("probe_vec"))
-        / (F.col("_nrm") * F.col("_pnrm")),
-        5,
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        rer.select("probe_id", "neighbor_id", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "rn", "neighbor_id", "sim")
-    )
+    return _topk(rer, k, "neighbor_id", _cos("_nv"))

@@ -1846,6 +1846,44 @@ def test_crossdoc_span_scrub_semantics(spark):
     assert got[4] == ("x y x y x y x y x y", 10, 0)
 
 
+def test_ivf_probe_and_append_use_stored_cids(spark, tmp_path):
+    """List ids are whatever `<path>_centroids` stores, not positions.
+    An index whose list 4 is renumbered to 7 (its `_cid=` directory
+    and its codebook row) must probe exactly like its unrenumbered
+    twin at every n_probe, partial and exhaustive, and an append must
+    land in `_cid=7`, never in a position-derived `_cid=4`."""
+    import os
+    import shutil
+
+    emb = _clustered_emb(spark)
+    base = emb.filter(F.col("vec_id") % 5 != 0)
+    extra = emb.filter(F.col("vec_id") % 5 == 0)
+    probes = emb.filter(F.col("vec_id") % 10 == 0)
+    plain, renum = str(tmp_path / "plain"), str(tmp_path / "renum")
+    ann.write_ivf_index(base, plain, n_centroids=4, iters=2)
+    for sfx in ("", "_centroids"):
+        shutil.copytree(plain + sfx, renum + sfx)
+    os.rename(os.path.join(renum, "_cid=4"), os.path.join(renum, "_cid=7"))
+    cb = [
+        (7 if r["cid"] == 4 else r["cid"], list(r["centroid"]))
+        for r in spark.read.parquet(renum + "_centroids").collect()
+    ]
+    spark.createDataFrame(cb, "cid BIGINT, centroid ARRAY<DOUBLE>").coalesce(
+        1).write.mode("overwrite").parquet(renum + "_centroids")
+
+    def probe(path, n_probe):
+        return sorted(map(tuple, ann.ivf_topk_indexed(
+            spark, path, probes, k=5, n_probe=n_probe).collect()))
+
+    for n_probe in (1, 2, 3, 4):
+        assert probe(renum, n_probe) == probe(plain, n_probe), n_probe
+
+    for path in (plain, renum):
+        assert ann.append_to_ivf_index(extra, path) == extra.count()
+    assert not os.path.exists(os.path.join(renum, "_cid=4"))
+    assert probe(renum, 2) == probe(plain, 2)
+
+
 def test_ivfpq_incremental_append(spark, tmp_path):
     """append_to_ivf_index auto-detects the PQ layout (the _pq
     sidecar): appended vectors are product-quantized with the STORED

@@ -923,6 +923,46 @@ def test_ivf_indexed_probe_prunes_partitions(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_indexed_probes_floor_candidate_parallelism(spark, tmp_path):
+    """Both indexed probes read their candidate lists through one
+    shared scan, and pair scoring runs map-side on it. On a one-list
+    index written as a single file that scan has one split, fewer than
+    `defaultParallelism`, so for `ivf_topk_indexed` AND
+    `ivfpq_topk_indexed` the list scan must feed a round-robin
+    exchange; without it every candidate pair is scored in one
+    task."""
+    from pyspark.sql import functions as F
+
+    from sora_spark.llm import ann
+
+    par = spark.sparkContext.defaultParallelism
+    if par == 1:
+        pytest.skip("defaultParallelism == 1: no parallelism floor")
+    rows = [
+        (i, [float((i * 7 + d) % 11) - 5.5 for d in range(8)])
+        for i in range(64)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    ).coalesce(1)
+    probes = emb.filter(F.col("vec_id") < 4)
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    ann.write_ivf_index(emb, ivf, n_centroids=1, iters=1)
+    ann.write_ivfpq_index(emb, pq, n_centroids=1, m_subs=2, n_codes=4,
+                          iters=1)
+    for path in (ivf, pq):
+        assert spark.read.parquet(path).rdd.getNumPartitions() < par
+    for name, df in (
+        ("ivf", ann.ivf_topk_indexed(spark, ivf, probes, k=3, n_probe=1)),
+        ("ivfpq", ann.ivfpq_topk_indexed(
+            spark, pq, emb, probes, k=3, n_probe=1)),
+    ):
+        p = _plan_df(df, mode="simple")
+        subs = _tree_subtrees(p, "Exchange RoundRobinPartitioning")
+        assert any("FileScan parquet" in s and "_cid" in s for s in subs), (
+            f"{name}: list scan does not feed a round-robin exchange:\n{p}")
+
+
 def _tree_subtrees(plan: str, node: str) -> list[str]:
     """Every `node` occurrence in a simple-mode plan tree, with its
     full subtree. Spark's text tree indents every descendant strictly
