@@ -71,10 +71,6 @@ class Engine:
         """Co-occurrence overlap graph (the SORA-shaped entry point)."""
         return Graph(e_co(self._require_attached().lineitem))
 
-    def graph_seq(self) -> Graph:
-        return Graph(e_seq(self._require_attached().events).select("src", "dst")
-                     .withColumnRenamed("src", "s").withColumnRenamed("dst", "d"))
-
     def read_stream(self, name: str = "events", n_files: int = 4,
                     shuffled: bool = False) -> DataFrame:
         """Replay a fixture table as a micro-batched stream."""

@@ -33,14 +33,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, n)))
 
 
-def char_shingles(text: Column, k: int = 4) -> Column:
-    """Character k-grams; strict (empty for texts shorter than k)."""
-    idx = F.when(
-        F.length(text) >= k, F.sequence(F.lit(1), F.length(text) - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.substring(text, i, k))
-
-
 def minhash_one(shingles: Column) -> Column:
     """Single-permutation MinHash signature: min md5 over shingles."""
     return F.array_min(F.transform(shingles, F.md5))

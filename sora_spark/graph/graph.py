@@ -201,22 +201,14 @@ class Graph:
         SELF-JOIN — which materializes every 2-path row just to count
         it (the path stream can be orders of magnitude larger than the
         edge set at 100 TB) — collapses to ONE degree aggregation plus
-        a scalar sum. Equal to `two_hop_count_join`, null endpoints
-        included (a null mid vertex never matches the join key)."""
+        a scalar sum. Equal to the literal self-join count, null
+        endpoints included (a null mid vertex never matches the join
+        key); tests/test_graph.py pins the equivalence."""
         deg = self._in_out_degrees(self.edges)
         return deg.agg(
             F.coalesce(F.sum(F.col("ind") * F.col("outd")), F.lit(0))
             .cast("bigint")
             .alias("two_hop_count")
-        )
-
-    def two_hop_count_join(self) -> DataFrame:
-        """The literal self-join form of two_hop_count (reference shape
-        for the algebraic rewrite; exchange-reuse demo)."""
-        e1, e2 = self.edges.alias("e1"), self.edges.alias("e2")
-        return (
-            e1.join(e2, F.col("e1.d") == F.col("e2.s"))
-            .agg(F.count("*").alias("two_hop_count"))
         )
 
     @staticmethod

@@ -6260,7 +6260,7 @@ def qup32_small_file_compaction(spark, sf_dir):
     # threshold between the measured size classes: big = the three
     # ntile dirs, small = the four residue dirs (driver-side stat)
     commits = cl._read_state_commits(path)
-    live = cl._fold_live(commits)
+    live = cl._table_state(commits).live
 
     def nbytes(rel):
         tot = 0

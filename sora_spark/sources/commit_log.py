@@ -1,74 +1,92 @@
-"""Minimal snapshot-isolated table format: a JSON commit log over
-immutable parquet data directories (SURVEY §2.1/§2.9 upsert-sink
-family's missing lifecycle — r10 verdict "what's missing" item 4).
+"""Snapshot-isolated table format: a JSON commit log over immutable
+parquet data directories (the SURVEY §2.1/§2.9 upsert-sink family's
+table lifecycle, in the Delta/Iceberg shape).
 
-Why: the qup1–qup6 upsert sinks are atomic-swap parquet merges — the
-honest plain-parquet floor, but a swap destroys history and gives
-readers no isolation (a reader that resolved the directory mid-swap
-sees either version, and a long job can straddle both). This format is
-the smallest Delta/Iceberg-shaped core that fixes both:
+ON-DISK LAYOUT (paths relative to the table root):
 
-- DATA IS IMMUTABLE. Every commit writes its rows to a fresh
-  `data/v{N}-{uuid}` parquet directory; no data file is ever modified
-  or (by this module) deleted. Upserts DELIST old directories in the
-  log instead of removing them.
-- THE LOG IS THE TABLE. `_commits/%08d.json` entries carry
-  {version, operation, added, removed}; the live file set at version V
-  is the ordered fold of added/removed up to V. A snapshot is just
-  that resolved list — `read_table` resolves it ONCE at call time, so
-  the returned DataFrame keeps reading exactly those directories no
-  matter how many commits land afterwards (snapshot isolation), and
-  `version=` gives time travel for free.
-- COMMITS PUBLISH ATOMICALLY, SINGLE WRITER. The entry is fully
-  written to a temp name, then `os.link`ed to its final
-  `%08d.json` name — link is atomic and FAILS if the version already
-  exists, so two racing writers cannot both claim version N; the
-  loser gets ConcurrentWriteError and should re-read and retry. This
-  is optimistic concurrency for the LOCAL/POSIX filesystems this repo
-  targets; object stores need a conditional-put equivalent (S3
-  if-none-match / GCS generation-match), same protocol shape.
-- LOST RACES REBASE WHEN THE WINNER COMMUTES (r14, Delta's file-level
-  conflict rules). Appends always rebase in place (blind appends
-  commute; schema/CHECK re-gated). Data-changing writers (merge/
-  delete/update) classify each winner via `_publish_data_change`:
-  metadata changes, read-set rewrites, and deletion-vector winners
-  REFUSE descriptively (commit_with_retry then re-runs the whole
-  operation — the pre-r14 behavior, now reserved for true
-  conflicts); winners whose added rows are provably disjoint from
-  the operation's delta (recorded stats, else one delta-bounded
-  scan) rebase in place — the already-written output is renamed to
-  the re-claimed version, never re-read or re-written.
+- `_commits/%08d.json`: one commit per version. `_publish` writes it
+  under a temp name and hard-links it to the final name; the link is
+  atomic and fails if the version exists, so two writers can never
+  both claim a version (the loser gets ConcurrentWriteError). This is
+  optimistic concurrency for local/POSIX filesystems; an object store
+  needs a conditional put (S3 if-none-match, GCS generation-match).
+- `_commits/%08d.ckpt.json`: an optional log checkpoint
+  (`checkpoint_log`), the folded state at that version. Current-state
+  reads fold checkpoint + tail; history reads (time travel, history,
+  table_changes, vacuum, restore) read the per-commit files, which are
+  never deleted.
+- `data/v%08d-<hex>`: immutable parquet data directories, named for
+  the version that publishes them (a clustered compact registers its
+  `_bucket=i` subdirectories as separate relpaths). No data file is
+  modified or, outside `vacuum`, deleted: rewrites delist directories.
+- `dv/v%08d-<hex>`: deletion-vector sidecars, parquet of
+  (`_dv_file` table-relative file path, `_dv_row` row index in that
+  file). Every read anti-joins the live vectors; `compact` applies
+  them physically and delists them.
+- `cdc/v%08d-<hex>`: change-data-feed sidecars (table columns +
+  `_change_type`), listed by data-changing commits on CDF tables.
 
-Scale posture: the log is one tiny JSON per commit and the snapshot
-resolve is a driver-side directory listing bounded by commit count —
-data-size independent. Reads are ordinary parquet scans of the live
-directories (pushdown/pruning intact). MERGE is DATA-SKIPPED: commits
-record per-directory min/max/null stats for declared stats columns,
-and `merge_upsert` rewrites ONLY the live directories whose key
-ranges can overlap the batch — untouched directories stay listed, so
-the rewrite cost is proportional to the touched data, not the table
-(the Delta/Iceberg file-skipping shape). Directories without stats
-are conservatively treated as touched, so the pruning is always
-sound; a table written without stats degrades to the full rewrite.
-DELETE locates touched directories with one pushdown scan over
-`_metadata.file_path` and rewrites only those — or, with
-`deletion_vectors=True`, touches ZERO data directories: the matched
-rows' (file, row_index) positions land in a tiny `dv/` sidecar
-directory and the commit only lists it (`dv_added`); every read
-anti-joins the live deletion vectors (broadcast when their recorded
-row count is small), and `compact` reconciles them physically —
-rewrites the survivors and DELISTS the vectors — so a one-row delete
-on a 100 TB table costs one position scan + a sidecar write instead
-of a directory rewrite (the Delta deletion-vector shape). `compact`
-(OPTIMIZE) bin-packs the live directories into one without changing
-the data.
-`table_changes` is snapshot CDC. `txn_append`/`exactly_once_sink`
-give Structured Streaming foreachBatch an idempotent commit keyed by
-(app_id, epoch), the Delta txnAppId/txnVersion protocol shape.
+COMMIT KEYS. Every commit carries `version`, `operation`, `added`,
+`removed` (data relpaths) and `committed_at` (publish wall clock).
+Optional keys: `stats` ({relpath: {physical column: {min, max, nulls,
+allnull, bloom}}}, recorded by the commit that adds the directory),
+`dv_added` / `dv_removed` (vector relpaths), `dv_rows` (rows in the
+vectors the commit adds), `cdc`, `pruned_dirs`, `schema_evolved`,
+`merge_on_read`, `txn` ({app, version}), and per-operation provenance
+(`restored_version`, `cloned_from`, `clustered_by`, `zorder`,
+`renamed`, `dropped`, `small_only`, ...).
+
+THE FOLD. The table at version V is the ordered fold of commits 1..V
+(`_table_state`). Live directories and live vectors are the
+added-minus-removed lists; a directory's stats are those its adding
+commit recorded; `dv_rows` of the live vectors sums the count of every
+commit while at least one vector it added is live (exact for
+single-vector commits, an over-estimate for the multi-vector entries
+clone, restore and checkpoint write). Table metadata folds by the rule
+`_META` declares for each key:
+
+- latest commit carrying the key wins (an explicit null or empty
+  value resets): `check`, `column_map`, `defaults`, `exists_defaults`,
+  `generated`, `reserved_physical`;
+- latest non-empty `schema` wins, together with that commit's
+  `schema_json`;
+- union: `reader_features`; a reader refuses a table that needs a
+  feature outside `_KNOWN_READER_FEATURES`;
+- first commit: `cdf`.
+
+LOST RACES. Writers read the state, write new directories, and
+publish at state version + 1. On a lost claim:
+
+- appends (`append`, `txn_append`) rebase in place (`_publish_append`):
+  re-read the log, re-gate the schema, re-validate the written
+  directory when the CHECK/generated gate changed, rename it to the
+  re-claimed version (the version in a directory name is what
+  ExistsDefault backfill keys on) and publish again;
+- data-changing writers (merge, delete, update; both physical
+  strategies) classify every winner (`_publish_data_change`): changed
+  latest-wins metadata, a delisted directory this change read, added
+  deletion vectors, or added rows that overlap the change REFUSE with
+  ConcurrentWriteError; otherwise the entry rebases in place;
+- metadata commands (rename/drop column, add/drop CHECK) re-run their
+  validation under `commit_with_retry`;
+- `replace_where`, `compact`, `compact_small` and `restore_table`
+  publish once and raise ConcurrentWriteError.
+
+`commit_with_retry` re-runs a whole operation after a refusal.
+
+READS. `read_table` resolves the live list once, so the returned
+DataFrame stays pinned to its snapshot whatever commits land later.
+Reads are ordinary parquet scans of the live directories with the
+recorded schema applied (columns added by evolution read NULL in
+older files), projected from physical to logical names through the
+column map. MERGE, DELETE and UPDATE data-skip: recorded key-column
+stats (and bloom filters) prune directories the batch or predicate
+cannot touch, and directories without stats are treated as touched,
+so pruning is always sound.
 
 SEMANTIC NOTE on pruned MERGE: with pruning, rows in untouched
-directories pass through unchanged — standard MERGE INTO semantics.
-The pre-r11 behavior additionally deduplicated keys duplicated WITHIN
+directories pass through unchanged (standard MERGE INTO semantics).
+A full-table merge additionally deduplicates keys duplicated WITHIN
 the current table (possible only after overlapping raw `append`s);
 the two agree whenever the table is key-unique, which create+merge
 lifecycles guarantee. Pass `prune=False` for the full-table dedup.
@@ -76,9 +94,12 @@ lifecycles guarantee. Pass `prune=False` for the full-table dedup.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
+import re
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -86,12 +107,37 @@ _COMMITS = "_commits"
 _DATA = "data"
 _DV = "dv"
 _CDC = "cdc"
-# a data FILE's table-relative path (dir regexes elsewhere capture the
-# directory; deletion vectors address individual part-files)
-_FILE_RE = r"(data/v\d{8}-[0-9a-f]+(?:/_bucket=\d+)?/[^/]+)$"
+# a data DIRECTORY's table-relative relpath (a clustered compact's
+# _bucket= subdirectory is its own relpath), and a data FILE's
+_DIR_RE = r"(data/v\d{8}-[0-9a-f]+(?:/_bucket=\d+)?)"
+_FILE_RE = _DIR_RE[:-1] + r"/[^/]+)$"
 # below this many live deleted positions the anti-join side is
 # broadcast — a DV that outgrows it still works, it just shuffles
 _DV_BROADCAST_ROWS = 10_000_000
+# reader features this module honours (Delta's readerFeatures gate): a
+# table whose log demands any other must refuse to read, because
+# ignoring it returns wrong data silently (e.g. a reader that ignores
+# deletion vectors resurrects deleted rows)
+_KNOWN_READER_FEATURES = frozenset({"deletion_vectors", "column_mapping"})
+# every table-metadata key with its fold rule (module docstring) and
+# its value when no commit carries it
+_META = {
+    "check": ("latest", None),
+    "column_map": ("latest", {}),
+    "defaults": ("latest", {}),
+    "exists_defaults": ("latest", {}),
+    "generated": ("latest", {}),
+    "reserved_physical": ("latest", []),
+    "schema": ("schema", None),
+    "schema_json": ("schema", None),
+    "reader_features": ("union", []),
+    "cdf": ("first", False),
+}
+# the keys a data change's delta is computed under (a concurrent change
+# to any of them refuses its rebase) and that restore reverts
+_LATEST_WINS = tuple(
+    k for k, (rule, _empty) in _META.items() if rule in ("latest", "schema")
+)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -155,18 +201,12 @@ def _latest_checkpoint_version(path: str) -> int | None:
 
 
 def _read_state_commits(path: str) -> list[dict]:
-    """CURRENT-state commit list, checkpoint-accelerated: when a log
-    checkpoint exists, return [synthetic checkpoint commit] + the tail
-    commits after it — every state fold (_fold_live, _live_stats,
-    _latest_schema, _table_check, txn watermarks, dv_rows) then costs
-    O(tail), not O(history). The synthetic commit is shaped exactly
-    like a real one so no fold changes; `txn_watermarks` carries the
-    multi-app map (latest_txn_version understands it). HISTORICAL
-    paths — time travel, version_as_of, history(), table_changes,
-    vacuum's ever-added set, restore — keep reading the raw per-commit
-    files, which are never deleted; the checkpoint is pure read
-    acceleration, falling back to the full fold when absent or
-    unreadable."""
+    """CURRENT-state commit list, checkpoint-accelerated: with a log
+    checkpoint, [synthetic checkpoint commit] + the commits after it,
+    so every state fold costs O(tail), not O(history). The synthetic
+    commit is shaped like a real one (its `txn_watermarks` carries the
+    per-app map latest_txn_version reads). Falls back to the full log
+    when no checkpoint exists or it is unreadable."""
     cv = _latest_checkpoint_version(path)
     if cv is None:
         return _read_commits(path, None)
@@ -185,16 +225,13 @@ def _read_state_commits(path: str) -> list[dict]:
         "dv_added": state.get("live_dvs", []),
         "dv_removed": [],
     }
-    for k in ("schema", "schema_json", "check", "cdf", "stats",
-              "txn_watermarks", "committed_at", "column_map",
-              "reserved_physical", "reader_features", "defaults",
-              "exists_defaults", "generated"):
+    for k in (*_META, "stats", "txn_watermarks", "committed_at"):
         if state.get(k):
             synthetic[k] = state[k]
     if state.get("live_dvs"):
         synthetic["dv_rows"] = int(state.get("dv_rows") or 0)
-    # tail = only the commits AFTER the checkpoint — the whole point;
-    # table_versions is a single listdir, no per-commit file reads
+    # tail = only the commits AFTER the checkpoint; table_versions is a
+    # single listdir, no per-commit file reads
     tail = []
     for v in table_versions(path):
         if v > cv:
@@ -203,27 +240,79 @@ def _read_state_commits(path: str) -> list[dict]:
     return [synthetic] + tail
 
 
+class _State(NamedTuple):
+    """One fold of a commit list: the last version, the live data
+    directories and live vectors (listing order), each live
+    directory's recorded stats ({} when none), the recorded row count
+    of the live vectors (None when a contributing commit recorded
+    none), and every `_META` key folded by its rule."""
+
+    version: int
+    live: list
+    dvs: list
+    stats: dict
+    dv_rows: int | None
+    meta: dict
+
+
+def _dv_rows(commits: list[dict], vectors: set) -> int | None:
+    """Recorded rows of `vectors`: the `dv_rows` of every commit that
+    added at least one of them, or None when such a commit recorded
+    no count."""
+    counts = [
+        c.get("dv_rows") for c in commits
+        if not vectors.isdisjoint(c.get("dv_added", ()))
+    ]
+    return None if None in counts else sum(int(n) for n in counts)
+
+
+def _table_state(commits: list[dict]) -> _State:
+    """THE fold of an ordered commit list (rules in the module
+    docstring). Time travel passes a truncated list, so every fact
+    resolves as of that version."""
+    live: list[str] = []
+    dvs: list[str] = []
+    recorded: dict[str, dict] = {}
+    meta = {k: empty for k, (_rule, empty) in _META.items()}
+    for c in commits:
+        for r in c.get("removed", []):
+            live.remove(r)
+        live.extend(c.get("added", []))
+        for r in c.get("dv_removed", []):
+            dvs.remove(r)
+        dvs.extend(c.get("dv_added", []))
+        recorded.update(c.get("stats", {}))
+        for k, (rule, _empty) in _META.items():
+            if (rule == "latest" and k in c) or (
+                    rule == "schema" and c.get("schema")):
+                meta[k] = c.get(k)
+            elif rule == "union":
+                meta[k] = sorted(set(meta[k]).union(c.get(k, ())))
+    for k, (rule, empty) in _META.items():
+        if rule == "first":
+            meta[k] = commits[0].get(k, empty)
+    return _State(
+        version=int(commits[-1]["version"]),
+        live=live,
+        dvs=dvs,
+        stats={d: recorded.get(d, {}) for d in live},
+        dv_rows=_dv_rows(commits, set(dvs)),
+        meta=copy.deepcopy(meta),
+    )
+
+
 def checkpoint_log(path: str) -> int:
     """Write a LOG CHECKPOINT: the folded current state (live
     directories + their stats, live deletion vectors + row count,
-    schema, CHECK constraint, per-app txn watermarks) lands in
-    `_commits/%08d.ckpt.json`, and every subsequent snapshot resolve
-    reads checkpoint + tail instead of the whole history — Delta's
-    _last_checkpoint shape, the thing that keeps a table with years
-    of commits driver-cheap (O(tail) instead of O(history) per
-    operation). The per-commit JSONs are kept (provenance, time
-    travel, DESCRIBE HISTORY, vacuum's ever-set all still read them);
-    re-checkpointing after more commits supersedes by version. Write
-    is tmp+rename atomic; a torn file is ignored by readers (full
-    fold fallback). Returns the checkpointed version. Cadence is the
-    caller's (Delta defaults to every 10 commits)."""
+    every `_META` key, per-app txn watermarks) lands in
+    `_commits/%08d.ckpt.json`, and every later current-state resolve
+    reads checkpoint + tail instead of the whole history (Delta's
+    _last_checkpoint shape). The per-commit JSONs are kept;
+    re-checkpointing supersedes by version. The write is tmp+rename
+    atomic; a torn file is ignored by readers (full-fold fallback).
+    Returns the checkpointed version. Cadence is the caller's."""
     commits = _read_commits(path, None)
-    live = _fold_live(commits)
-    dvs = _fold_live_dvs(commits)
-    recorded: dict[str, dict] = {}
-    for c in commits:
-        for rel, st in c.get("stats", {}).items():
-            recorded[rel] = st
+    st = _table_state(commits)
     watermarks: dict[str, int] = {}
     for c in commits:
         t = c.get("txn")
@@ -231,43 +320,18 @@ def checkpoint_log(path: str) -> int:
             v = int(t["version"])
             if watermarks.get(t["app"], v - 1) < v:
                 watermarks[t["app"]] = v
+    # empty folds are omitted: the synthetic commit REPLACES all
+    # history at or before it, so "key absent" and "folded to empty"
+    # read back identically
     state = {
-        "version": commits[-1]["version"],
-        "live": live,
-        "live_dvs": dvs,
-        "dv_rows": sum(
-            int(c.get("dv_rows") or 0) for c in commits if c.get("dv_added")
-        ),
-        "stats": {d: recorded[d] for d in live if recorded.get(d)},
+        "version": st.version,
+        "live": st.live,
+        "live_dvs": st.dvs,
+        "dv_rows": st.dv_rows or 0,
+        "stats": {d: s for d, s in st.stats.items() if s},
         "committed_at": commits[-1].get("committed_at"),
+        **{k: v for k, v in st.meta.items() if v},
     }
-    if _latest_schema(commits):
-        state["schema"] = _latest_schema(commits)
-    for c in reversed(commits):
-        if c.get("schema_json"):
-            state["schema_json"] = c["schema_json"]
-            break
-    if _table_check(commits):
-        state["check"] = _table_check(commits)
-    if _table_cdf(commits):
-        state["cdf"] = True
-    # empty map/reservation folds may be omitted: the synthetic commit
-    # REPLACES all history at or before it, so "key absent" and
-    # "folded to empty" read back identically
-    if _column_map(commits):
-        state["column_map"] = _column_map(commits)
-    if _reserved_physical(commits):
-        state["reserved_physical"] = _reserved_physical(commits)
-    if _reader_features(commits):
-        state["reader_features"] = sorted(_reader_features(commits))
-    if _column_defaults(commits):
-        state["defaults"] = _column_defaults(commits)
-    if _exists_defaults(commits):
-        state["exists_defaults"] = {
-            k: [e, v] for k, (e, v) in _exists_defaults(commits).items()
-        }
-    if _generated_cols(commits):
-        state["generated"] = _generated_cols(commits)
     if watermarks:
         state["txn_watermarks"] = watermarks
     final = os.path.join(
@@ -283,32 +347,6 @@ def checkpoint_log(path: str) -> int:
     return state["version"]
 
 
-def _fold_live(commits: list[dict]) -> list[str]:
-    live: list[str] = []
-    for c in commits:
-        for r in c.get("removed", []):
-            live.remove(r)
-        live.extend(c.get("added", []))
-    return live
-
-
-def _live_dirs(path: str, upto: int | None) -> list[str]:
-    return _fold_live(_read_commits(path, upto))
-
-
-def _fold_live_dvs(commits: list[dict]) -> list[str]:
-    """The live DELETION-VECTOR relpaths at the last commit: added by
-    delete_where(deletion_vectors=True), delisted when a rewrite
-    physically applies them (compact always does; see each writer's
-    docstring for which vectors it reconciles)."""
-    live: list[str] = []
-    for c in commits:
-        for r in c.get("dv_removed", []):
-            live.remove(r)
-        live.extend(c.get("dv_added", []))
-    return live
-
-
 def _with_position(df: DataFrame) -> DataFrame:
     """Attach each row's physical address — table-relative file path
     (`_f`) and in-file row index (`_r`) — from the parquet scan's
@@ -320,18 +358,16 @@ def _with_position(df: DataFrame) -> DataFrame:
     ).withColumn("_r", F.col("_metadata.row_index"))
 
 
-def _dv_relation(spark: SparkSession, path: str, commits: list[dict]):
+def _dv_relation(spark: SparkSession, path: str, st: _State):
     """The union of live deletion-vector sidecars as (_dv_file,
-    _dv_row), broadcast while the commits' recorded row counts stay
+    _dv_row), broadcast while their recorded row count is known and
     under _DV_BROADCAST_ROWS."""
     from pyspark.sql import functions as F
 
-    dvs = _fold_live_dvs(commits)
     dv = spark.read.parquet(
-        *[os.path.join(path, d) for d in dvs]
+        *[os.path.join(path, d) for d in st.dvs]
     ).select("_dv_file", "_dv_row")
-    known = [c.get("dv_rows") for c in commits if c.get("dv_added")]
-    if all(n is not None for n in known) and sum(known) <= _DV_BROADCAST_ROWS:
+    if st.dv_rows is not None and st.dv_rows <= _DV_BROADCAST_ROWS:
         dv = F.broadcast(dv)
     return dv
 
@@ -339,33 +375,31 @@ def _dv_relation(spark: SparkSession, path: str, commits: list[dict]):
 def _read_live(
     spark: SparkSession,
     path: str,
-    commits: list[dict],
+    st: _State,
     dirs: list[str],
     schema,
     keep_position: bool = False,
 ) -> DataFrame:
     """DV-aware read of specific live directories, SPLIT by whether a
-    live deletion vector actually targets them: CLEAN directories scan
-    with no join in their subtree at all (at 100 TB, after a targeted
-    delete, that is almost the whole table — the read tax tracks the
-    DIRTY data, not the table), DIRTY directories anti-join the
-    vectors; one unionByName stitches the two. The dirty set comes
-    from one tiny distinct-directories job over the vector sidecars
-    (|live DV rows| in, |directories| out). With no live vectors this
-    is exactly a plain partitioned scan.
+    live deletion vector targets them: CLEAN directories scan with no
+    join in their subtree, DIRTY directories anti-join the vectors,
+    and one unionByName stitches the two, so the read tax tracks the
+    dirty data, not the table. The dirty set comes from one tiny
+    distinct-directories job over the vector sidecars. With no live
+    vectors this is a plain scan.
 
     COLUMN MAPPING: data files carry PHYSICAL names, so the scan uses
     the physical struct and one final projection aliases back to the
-    logical names — every caller (merge/delete/update/compact and
-    read_table itself) therefore sees logical frames and user
-    predicates/keys just work; with an empty map the projection is
-    the identity and is skipped."""
+    logical names — every caller sees logical frames. EXISTSDEFAULT:
+    rows from directories written before a backfilled column's intro
+    version read its frozen default instead of NULL (the version comes
+    from the directory name — a pure projection, no extra I/O)."""
     from pyspark.sql import functions as F
 
-    cmap = _column_map(commits)
+    cmap = st.meta["column_map"]
+    names = {f.name for f in schema.fields} if schema is not None else set()
     ed = {
-        c: (e, v) for c, (e, v) in _exists_defaults(commits).items()
-        if schema is not None and c in {f.name for f in schema.fields}
+        c: ev for c, ev in st.meta["exists_defaults"].items() if c in names
     }
 
     def _logical(df: DataFrame) -> DataFrame:
@@ -378,10 +412,6 @@ def _read_live(
                 *keep,
             )
         if ed:
-            # ExistsDefault backfill: rows from directories written
-            # BEFORE a defaulted column existed read the frozen
-            # default instead of NULL; the directory version comes
-            # from the file path — a pure projection, zero extra I/O
             types = {f.name: f.dataType for f in schema.fields}
             for c, (expr, ver) in ed.items():
                 df = df.withColumn(
@@ -405,20 +435,15 @@ def _read_live(
             )
         return df
 
-    _check_reader_features(commits)
+    _check_reader_features(st.meta["reader_features"], "table")
     pschema = _physical_struct(schema, cmap)
-    dvs = _fold_live_dvs(commits)
-    if not dvs or not dirs:
+    if not st.dvs or not dirs:
         df = _scan(dirs)
         return _logical(_with_position(df) if keep_position else df)
-    dv = _dv_relation(spark, path, commits)
+    dv = _dv_relation(spark, path, st)
     affected = {
         r[0]
-        for r in dv.select(
-            F.regexp_extract(
-                "_dv_file", r"(data/v\d{8}-[0-9a-f]+(?:/_bucket=\d+)?)", 1
-            ).alias("d")
-        )
+        for r in dv.select(F.regexp_extract("_dv_file", _DIR_RE, 1))
         .distinct()
         .collect()
     }
@@ -444,135 +469,53 @@ def _read_live(
     return _logical(out)
 
 
-def _latest_schema(commits: list[dict]) -> str | None:
-    """The table schema AT the last commit in `commits` — the most
-    recent entry that recorded one (create always does; schema-
-    evolving appends re-record). Time travel passes a truncated
-    commit list, so historical reads resolve the schema as of that
-    version, not today's."""
-    for c in reversed(commits):
-        s = c.get("schema")
-        if s:
-            return s
-    return None
-
-
-def _table_check(commits: list[dict]) -> str | None:
-    """The table's CHECK constraint expression — the LATEST commit
-    carrying the key wins (key presence: drop_check_constraint
-    records an explicit None), so constraints can be added and
-    dropped after create (add_check_constraint) and time travel
-    resolves the constraint as of its version. Pre-r12 tables carry
-    the key only on the create commit; the fold finds it the same
-    way."""
-    for c in reversed(commits):
-        if "check" in c:
-            return c["check"]
-    return None
-
-
-def _table_cdf(commits: list[dict]) -> bool:
-    """Whether the table records a Change Data Feed (create-time
-    property; the synthetic checkpoint commit re-carries it)."""
-    return bool(commits[0].get("cdf")) if commits else False
-
-
-# reader features THIS module knows how to honor — the protocol-
-# versioning gate (Delta's readerFeatures): a table whose log demands
-# a feature outside this set must REFUSE to read, because ignoring it
-# returns wrong data silently (e.g. a reader that doesn't understand
-# deletion vectors would resurrect deleted rows)
-_KNOWN_READER_FEATURES = frozenset(
-    {"deletion_vectors", "column_mapping"}
-)
-
-
-def _reader_features(commits: list[dict]) -> set[str]:
-    """Union of reader features any commit activated — conservative
-    (restore/compact never retire a feature; a reader that understands
-    it is still required to read history)."""
-    out: set[str] = set()
-    for c in commits:
-        out.update(c.get("reader_features", []))
-    return out
-
-
-def _check_reader_features(commits: list[dict]) -> None:
-    unknown = _reader_features(commits) - _KNOWN_READER_FEATURES
+def _check_reader_features(features, where: str) -> None:
+    """The protocol-versioning gate, shared by the batch reader and
+    the streaming source: refuse `features` outside
+    _KNOWN_READER_FEATURES. `where` names what demands them."""
+    unknown = set(features) - _KNOWN_READER_FEATURES
     if unknown:
         raise ValueError(
-            f"table requires reader feature(s) {sorted(unknown)} this "
+            f"{where} requires reader feature(s) {sorted(unknown)} this "
             "engine does not implement; refusing to read rather than "
             "return silently wrong data (protocol-versioning gate)"
         )
 
 
-def _column_map(commits: list[dict]) -> dict[str, str]:
-    """COLUMN MAPPING state: {logical name -> physical name} for the
-    columns whose on-disk (parquet) name differs from their current
-    logical name — Delta's column-mapping shape, what makes RENAME
-    COLUMN a metadata-only commit. Identity entries are never stored;
-    a missing key means logical == physical. The LATEST commit
-    carrying the key wins (key presence, not truthiness: renaming a
-    column back to its physical name legitimately empties the map),
-    so time travel resolves the mapping as of its version and the
-    checkpoint's synthetic commit re-carries it."""
-    for c in reversed(commits):
-        if "column_map" in c:
-            return dict(c["column_map"])
-    return {}
+def _struct(meta: dict):
+    """The table StructType from folded metadata, or None: the
+    lossless `schema_json` when recorded (it survives column names the
+    simpleString DDL cannot round-trip), else the DDL."""
+    from pyspark.sql.types import StructType
+
+    if meta["schema_json"]:
+        return StructType.fromJson(json.loads(meta["schema_json"]))
+    if meta["schema"]:
+        return StructType.fromDDL(meta["schema"])
+    return None
 
 
-def _column_defaults(commits: list[dict]) -> dict[str, str]:
-    """WRITE-TIME defaults (Delta's WriteDefault half of column
-    DEFAULT semantics): {logical column -> SQL literal/expression
-    text}. A writer whose batch OMITS a defaulted column gets it
-    filled at write time — the producers-upgrade-at-their-own-pace
-    contract behind additive schema evolution; rows written BEFORE
-    the column existed read NULL (qup13's recorded-schema semantics)
-    unless the evolution also passed backfill=True, which records
-    the ExistsDefault half (r13, _exists_defaults: per-directory
-    resolution from the version embedded in the directory NAME — no
-    per-file metadata needed after all). Latest commit carrying the
-    key wins; maps merge at each evolution."""
-    for c in reversed(commits):
-        if "defaults" in c:
-            return dict(c["defaults"])
-    return {}
-
-
-def _generated_cols(commits: list[dict]) -> dict[str, str]:
-    """GENERATED columns (Delta's GENERATED ALWAYS AS shape):
-    {logical column -> SQL expression over the other columns},
-    declared at create. Writers FILL a generated column the batch
-    omits (producers need not know the derivation) and VALIDATE one
-    the batch supplies — the equality conjunct rides the data
-    write's existing CHECK Observation (`_table_gate`), zero extra
-    passes — so the recorded invariant `c == expr` holds on every
-    committed row. With the column in stats_cols, predicates on the
-    GENERATED column data-skip like any other (the
-    partition-by-derived-date idiom without physical partitioning).
-    Latest commit carrying the key wins (create writes it; the
-    checkpoint's synthetic commit re-carries it)."""
-    for c in reversed(commits):
-        if "generated" in c:
-            return dict(c["generated"])
-    return {}
-
-
-def _fill_generated(df: DataFrame, commits: list[dict]) -> DataFrame:
-    """Compute any generated column the batch omits, CAST to the
-    recorded type; supplied columns pass through (the write gate
-    validates them)."""
+def _fill_generated(
+    df: DataFrame, meta: dict, keep: set | None = None
+) -> DataFrame:
+    """Derive every GENERATED column (Delta's GENERATED ALWAYS AS:
+    {column -> SQL expression over the other columns}, declared at
+    create) except those in `keep`, CAST to the recorded type. Writers
+    keep the batch's own columns (default) — the write gate validates
+    a supplied value, so `c == expr` holds on every committed row;
+    UPDATE keeps the columns it SETs, so a SET on a source column
+    re-derives its dependents and an explicit SET on the generated
+    column wins (and is validated)."""
     from pyspark.sql import functions as F
 
-    gen = _generated_cols(commits)
+    gen = meta["generated"]
     if not gen:
         return df
-    schema = _schema_struct(commits)
+    keep = set(df.columns) if keep is None else keep
+    schema = _struct(meta)
     types = {f.name: f.dataType for f in schema.fields} if schema else {}
     for c, expr_text in gen.items():
-        if c not in df.columns:
+        if c not in keep:
             col = F.expr(expr_text)
             if c in types:
                 col = col.cast(types[c])
@@ -580,95 +523,34 @@ def _fill_generated(df: DataFrame, commits: list[dict]) -> DataFrame:
     return df
 
 
-def _regen(df: DataFrame, commits: list[dict], set_exprs: dict) -> DataFrame:
-    """Recompute generated columns an UPDATE did not explicitly SET —
-    Delta's generated-column UPDATE semantics: a SET on a source
-    column re-derives the dependents (rows whose sources did not
-    change recompute to their existing value, a no-op); an explicit
-    SET on the generated column itself wins and the write gate then
-    validates it."""
-    from pyspark.sql import functions as F
-
-    gen = _generated_cols(commits)
-    if not gen:
-        return df
-    schema = _schema_struct(commits)
-    types = {f.name: f.dataType for f in schema.fields} if schema else {}
-    for c, e in gen.items():
-        if c in df.columns and c not in set_exprs:
-            col = F.expr(e)
-            if c in types:
-                col = col.cast(types[c])
-            df = df.withColumn(c, col)
-    return df
-
-
-def _table_gate(commits: list[dict]) -> str | None:
+def _table_gate(meta: dict) -> str | None:
     """The full write-time row gate: the table CHECK (if any) AND one
     null-safe equality conjunct per generated column — everything a
     committed row must satisfy, evaluated as ONE Observation riding
     the data write."""
     parts = []
-    check = _table_check(commits)
-    if check:
-        parts.append(f"({check})")
-    for c, expr_text in _generated_cols(commits).items():
+    if meta["check"]:
+        parts.append(f"({meta['check']})")
+    for c, expr_text in meta["generated"].items():
         parts.append(f"(`{c}` <=> ({expr_text}))")
     return " AND ".join(parts) if parts else None
 
 
-def _exists_defaults(commits: list[dict]) -> dict[str, tuple[str, int]]:
-    """READ-TIME default backfill state (Delta's ExistsDefault half,
-    closing the gap _column_defaults documents): {logical column ->
-    (SQL expression text, intro version)}. A row written BEFORE
-    `intro version` reads the (frozen) default wherever the recorded
-    schema would have served NULL — per-directory knowledge comes
-    FREE from the directory name (`data/v%08d-…`), so the backfill
-    is one pure projection on the scan, no per-file metadata and no
-    extra I/O (_read_live). The map is cumulative, latest commit
-    carrying the key wins (the _column_defaults pattern); rename
-    re-keys it, drop removes, checkpoint re-carries, and compact
-    MATERIALIZES the values (its rewrite reads through the
-    backfill), after which the new directory's version exceeds every
-    intro version and the projection is a no-op for it."""
-    for c in reversed(commits):
-        if "exists_defaults" in c:
-            return {
-                k: (v[0], int(v[1]))
-                for k, v in c["exists_defaults"].items()
-            }
-    return {}
-
-
-def _fill_defaults(df: DataFrame, commits: list[dict]) -> DataFrame:
-    """Add any missing defaulted columns to a batch, CAST to the
-    table's recorded type — after this the ordinary evolution gate
-    sees a complete batch."""
+def _fill_defaults(df: DataFrame, meta: dict) -> DataFrame:
+    """Add any missing WRITE-TIME defaulted column (`defaults`:
+    {column -> SQL expression}) to a batch, CAST to the table's
+    recorded type — after this the evolution gate sees a complete
+    batch."""
     from pyspark.sql import functions as F
 
-    defaults = _column_defaults(commits)
+    defaults = meta["defaults"]
     if not defaults:
         return df
-    types = {f.name: f.dataType for f in _schema_struct(commits).fields}
+    types = {f.name: f.dataType for f in _struct(meta).fields}
     for c, expr_text in defaults.items():
         if c not in df.columns and c in types:
             df = df.withColumn(c, F.expr(expr_text).cast(types[c]))
     return df
-
-
-def _reserved_physical(commits: list[dict]) -> list[str]:
-    """Physical column names DROPPED from the logical schema but still
-    present in live data files (drop_column is metadata-only — the
-    bytes stay until a compact rewrites them). Schema evolution must
-    refuse to ADD a column with one of these names: the physical
-    struct would otherwise bind the new logical column to the old
-    files' STALE bytes instead of NULLs. compact() clears the list —
-    it rewrites every live directory through the logical projection,
-    so the dropped physicals are really gone."""
-    for c in reversed(commits):
-        if "reserved_physical" in c:
-            return list(c["reserved_physical"])
-    return []
 
 
 def _physical_struct(schema, cmap: dict[str, str]):
@@ -688,12 +570,10 @@ def _physical_struct(schema, cmap: dict[str, str]):
 
 def _stats_cols_logical(live_stats: dict, cmap: dict[str, str]) -> list[str]:
     """LOGICAL names of every column the live directories carry stats
-    for. Recorded stats are keyed by PHYSICAL names; callers that
-    default their stats_cols from them must map BACK through the
-    inverse of the column map before handing the set to _write_data
-    (which translates logical->physical) — passing a physical name
-    through the LOGICAL map can shadow another column after chained
-    renames and silently drop its stats (r12 review finding)."""
+    for. Recorded stats are keyed by PHYSICAL names; mapping them back
+    through the inverse column map matters because passing a physical
+    name through the LOGICAL map can shadow another column after
+    chained renames and silently drop its stats."""
     inv = {p: l for l, p in cmap.items()}
     return sorted(
         {inv.get(c, c) for st in live_stats.values() for c in st}
@@ -702,10 +582,9 @@ def _stats_cols_logical(live_stats: dict, cmap: dict[str, str]) -> list[str]:
 
 def _bloom_cols_logical(live_stats: dict, cmap: dict[str, str]) -> list[str]:
     """LOGICAL names of every column some live directory carries a
-    bloom filter for — the inheritance rule rewrites use so a merge
-    or compact does not silently erode point-prunability (the same
-    preserve-on-rewrite discipline the r11 advisory established for
-    range stats)."""
+    bloom filter for — rewrites inherit them so a merge or compact
+    does not erode point-prunability (the same preserve-on-rewrite
+    rule as range stats)."""
     inv = {p: l for l, p in cmap.items()}
     return sorted({
         inv.get(c, c)
@@ -723,21 +602,20 @@ def _bloom_prune(
     cmap: dict[str, str],
     max_dirs: int = 64,
 ) -> tuple[list[str], list[str]]:
-    """POINT-LOOKUP pruning (r13): among range-stats-surviving
-    `touched` directories, probe each directory's per-key-column
-    bloom filters with the batch's keys in ONE batch-sized
-    aggregation (max of the per-row all-columns-hit flag per
-    directory — no distinct, no shuffle beyond the agg) and drop the
-    directories NO batch key can live in. Sound because blooms have
-    no false negatives: a directory containing a batch key always
-    hits. False positives only cost the scan the range stats would
-    have paid anyway. Returns (still_touched, newly_pruned).
-    Directories lacking a bloom on any key column stay touched;
-    above `max_dirs` candidates the phase is skipped outright (the
-    probe expression carries a 64-long literal array per
-    directory-column — bounded plan size beats marginal pruning;
-    at that directory count range stats or clustering are the right
-    lever first)."""
+    """POINT-LOOKUP pruning: among range-stats-surviving `touched`
+    directories, probe each directory's per-key-column bloom filters
+    with the batch's keys in ONE batch-sized aggregation (max of the
+    per-row all-columns-hit flag per directory — no distinct, no
+    shuffle beyond the agg) and drop the directories NO batch key can
+    live in. Sound because blooms have no false negatives: a directory
+    containing a batch key always hits. False positives only cost the
+    scan the range stats would have paid anyway. Returns
+    (still_touched, newly_pruned). Directories lacking a bloom on any
+    key column stay touched; above `max_dirs` candidates the phase is
+    skipped outright (the probe expression carries a 64-long literal
+    array per directory-column — bounded plan size beats marginal
+    pruning; at that directory count range stats or clustering are
+    the right lever first)."""
     from pyspark.sql import functions as F
 
     from sora_spark.operators import sketch
@@ -818,13 +696,12 @@ def _write_cdc(changes: DataFrame, path: str, version: int) -> str:
 
 
 def _emit_change_pairs(j: DataFrame, cols: list[str], same) -> DataFrame:
-    """Row-level change emission from a prefixed (_a_/_b_, _in_a/_in_b)
-    full-outer diff join: inserts carry b's image, deletes a's, and an
-    updated key explodes to the Delta-complete 'update_preimage' +
-    'update_postimage' PAIR. ONE shared implementation for the CDF
-    writer (_diff_frames) and snapshot CDC (table_changes
-    include_preimages) so the pair encoding can never diverge between
-    the persisted feed and the on-demand diff (r12 review finding)."""
+    """Row-level change emission from a `_diff_join`: inserts carry
+    b's image, deletes a's, and an updated key explodes to the
+    Delta-complete 'update_preimage' + 'update_postimage' PAIR. Shared
+    by the CDF writer (_diff_frames) and snapshot CDC (table_changes
+    include_preimages), so the persisted feed and the on-demand diff
+    encode pairs identically."""
     from pyspark.sql import functions as F
 
     pre = F.struct(*[F.col(f"_a_{c}").alias(c) for c in cols])
@@ -849,36 +726,37 @@ def _emit_change_pairs(j: DataFrame, cols: list[str], same) -> DataFrame:
     )
 
 
-def _diff_frames(
-    a: DataFrame, b: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Row-level diff a -> b on key columns (both key-unique, same
-    schema): (table columns + _change_type), one null-safe full-outer
-    join like table_changes but over in-flight frames instead of
-    committed versions — the CDF writer's core. Inserts carry b's
-    image, deletes a's, and an updated key emits the Delta-complete
-    PAIR: 'update_preimage' (a's row) + 'update_postimage' (b's) —
-    without the pre-image a downstream incremental consumer (MV
-    maintenance, replication) cannot retract the old contribution.
-    One pass: each joined row explodes to 0-2 typed entries."""
+def _diff_join(a: DataFrame, b: DataFrame, key_cols: list[str], fields):
+    """The row-level diff's one join: `a` and `b` projected onto
+    `fields` (a column a side lacks reads as a typed NULL — the
+    pre-image fill for batches and versions that evolved the schema),
+    prefixed `_a_`/`_b_` with `_in_a`/`_in_b` presence markers, and
+    null-safe full-outer joined on the key columns. Returns (joined,
+    same) where `same` holds when the non-key images are equal.
+    Requires key-unique sides."""
     import functools
     import operator
 
     from pyspark.sql import functions as F
 
-    cols = b.columns
-    nonkey = [c for c in cols if c not in key_cols]
-    A = a.select(
-        *[F.col(c).alias(f"_a_{c}") for c in cols], F.lit(1).alias("_in_a")
-    )
-    B = b.select(
-        *[F.col(c).alias(f"_b_{c}") for c in cols], F.lit(1).alias("_in_b")
-    )
+    def side(df: DataFrame, prefix: str, marker: str) -> DataFrame:
+        have = set(df.columns)
+        return df.select(
+            *[
+                (F.col(f.name) if f.name in have
+                 else F.lit(None).cast(f.dataType)).alias(prefix + f.name)
+                for f in fields
+            ],
+            F.lit(1).alias(marker),
+        )
+
+    nonkey = [f.name for f in fields if f.name not in key_cols]
     on = functools.reduce(
         operator.and_,
         [F.col(f"_a_{k}").eqNullSafe(F.col(f"_b_{k}")) for k in key_cols],
     )
-    j = A.join(B, on, "full_outer")
+    j = side(a, "_a_", "_in_a").join(side(b, "_b_", "_in_b"), on,
+                                     "full_outer")
     same = (
         F.struct(*[F.col(f"_a_{c}") for c in nonkey]).eqNullSafe(
             F.struct(*[F.col(f"_b_{c}") for c in nonkey])
@@ -886,23 +764,20 @@ def _diff_frames(
         if nonkey
         else F.lit(True)
     )
-    return _emit_change_pairs(j, cols, same)
+    return j, same
 
 
-def _schema_struct(commits: list[dict]):
-    """StructType of the table as of the last commit, or None. Prefers
-    the lossless JSON form (schema_json, parsed sessionlessly via
-    fromJson — survives column names simpleString cannot round-trip,
-    the r11 review finding); falls back to parsing the simpleString
-    DDL for pre-json commits."""
-    from pyspark.sql.types import StructType
-
-    for c in reversed(commits):
-        if c.get("schema_json"):
-            return StructType.fromJson(json.loads(c["schema_json"]))
-        if c.get("schema"):
-            return StructType.fromDDL(c["schema"])
-    return None
+def _diff_frames(
+    a: DataFrame, b: DataFrame, key_cols: list[str]
+) -> DataFrame:
+    """Row-level diff a -> b on key columns in b's shape (table columns
+    + _change_type) — the CDF writer's core: inserts carry b's image,
+    deletes a's, and an updated key emits the 'update_preimage' +
+    'update_postimage' pair (a downstream incremental consumer needs
+    the pre-image to retract the old contribution). Extra columns of
+    `a` are ignored and columns it lacks read NULL."""
+    j, same = _diff_join(a, b, key_cols, b.schema.fields)
+    return _emit_change_pairs(j, b.columns, same)
 
 
 def _stat_scalar(v):
@@ -925,8 +800,7 @@ def _stat_scalar(v):
 def _stat_agg_exprs(cols: list[str]) -> list:
     """The per-column (min, max, null-count) aggregate triple — the
     ONE encoding of directory stats, shared by _column_stats,
-    _bucket_stats, and the Observation riding _write_data (r13
-    review: three inline copies could drift)."""
+    _bucket_stats, and the Observation riding _write_data."""
     from pyspark.sql import functions as F
 
     aggs = []
@@ -1008,7 +882,7 @@ def _read_dirs(
     spark: SparkSession, path: str, dirs: list[str], schema
 ) -> DataFrame:
     """Read specific data directories WITH the table's recorded schema
-    (a StructType, from _schema_struct) applied — after a merge_schema
+    (a StructType, from _struct) applied — after a merge_schema
     evolution, pre-evolution files must surface NULLs in the added
     columns here exactly as read_table does, or rewrite paths
     (merge/delete/compact) would union-fail or silently re-commit the
@@ -1031,11 +905,9 @@ def _write_data(
 ) -> tuple[str | None, dict]:
     """Write df to a fresh data directory. The CHECK violation count
     AND the per-column min/max/null stats all ride the write itself
-    as ONE Observation — zero extra passes: before r13 the stats came
-    from re-reading the just-written parquet, a second full pass over
-    every written byte (at 100 TB, a doubled write path). On a CHECK
-    violation the directory is left UNPUBLISHED (the caller never
-    commits it) and ConstraintViolationError raises. SQL CHECK
+    as ONE Observation — zero extra passes over the written bytes. On
+    a CHECK violation the directory is left UNPUBLISHED (the caller
+    never commits it) and ConstraintViolationError raises. SQL CHECK
     semantics: NULL passes, only FALSE violates.
 
     `column_map` projects the LOGICAL df to its PHYSICAL names for
@@ -1043,28 +915,19 @@ def _write_data(
     on-disk schema. The CHECK expression and the stats aggregates
     bind BEFORE the projection — both reference LOGICAL names — and
     stats are recorded under PHYSICAL names (one keyspace across
-    renames; pruning sites translate their lookups), exactly the
-    pre-r13 encoding (_stat_scalar rules: all-null marker, unprunable
-    types omitted).
+    renames; pruning sites translate their lookups).
 
     `drop_if_empty=True` rides a row count on the same Observation:
     a zero-row write is REMOVED and (None, {}) returned, saving the
-    caller's separate isEmpty() pre-pass (one whole job per
-    merge/delete on the hot path).
+    caller a separate isEmpty() pass.
 
-    `bloom_cols` (r13) additionally records a per-directory BLOOM
-    FILTER (4096-bit/k=3, operators/sketch.bloom_bitmap — the
-    portable construction) under each named column's stats entry:
-    min/max ranges cannot prune POINT lookups on layouts whose key
-    ranges overlap (the interleaved-ingest shape), but a bloom can —
-    merge_upsert probes each candidate directory's filter with the
-    batch's keys and skips directories no batch key can be in
-    (no false negatives -> pruning is sound; false positives only
-    cost an extra scan). Cost: one column-pruned read-back of the
-    just-written directory per bloom column — opt-in, and the one
-    place the r13 stats-ride-the-write rule is traded back
-    (the bitmap needs a distinct-explode the Observation cannot
-    express); documented as the price of point-prunable stats."""
+    `bloom_cols` additionally records a per-directory BLOOM FILTER
+    (4096-bit/k=3, operators/sketch.bloom_bitmap) under each named
+    column's stats entry: min/max ranges cannot prune POINT lookups on
+    layouts whose key ranges overlap, but a bloom can (_bloom_prune).
+    Cost: one column-pruned read-back of the just-written directory
+    per bloom column — the bitmap needs a distinct-explode the
+    Observation cannot express."""
     from pyspark.sql import functions as F
     from pyspark.sql import Observation
 
@@ -1121,22 +984,56 @@ def _write_data(
     return rel, stats
 
 
-def _live_stats(
-    path: str,
-    upto: int | None = None,
-    commits: list[dict] | None = None,
-) -> dict:
-    """{relpath: stats} for the live directories at `upto` (stats as
-    recorded by the commit that ADDED each directory; dirs committed
-    without stats map to {}). Pass `commits` to reuse an
-    already-read log instead of re-reading it."""
-    if commits is None:
-        commits = _read_commits(path, upto)
-    recorded: dict[str, dict] = {}
-    for c in commits:
-        for rel, st in c.get("stats", {}).items():
-            recorded[rel] = st
-    return {d: recorded.get(d, {}) for d in _fold_live(commits)}
+def _write_dv(
+    positions: DataFrame, path: str, version: int
+) -> tuple[str | None, int]:
+    """THE deletion-vector writer: the `_f`/`_r` positions of
+    `positions` land in a fresh `dv/v…` sidecar as
+    (_dv_file, _dv_row), their count riding the write as an
+    Observation. Returns (relpath, rows); a sidecar that received no
+    rows is removed and (None, 0) returned, so a writer that matched
+    nothing publishes nothing."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    rel = os.path.join(_DV, f"v{version:08d}-{uuid.uuid4().hex[:12]}")
+    positions.select(
+        F.col("_f").alias("_dv_file"), F.col("_r").alias("_dv_row")
+    ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "error").parquet(os.path.join(path, rel))
+    n = int(obs.get["n"] or 0)
+    if n == 0:
+        import shutil
+
+        shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
+        return None, 0
+    return rel, n
+
+
+def _dv_entry(rel: str | None, rows: int) -> dict:
+    """The entry keys that list a written vector (none for None)."""
+    if rel is None:
+        return {}
+    return {"dv_added": [rel], "dv_rows": rows,
+            "reader_features": ["deletion_vectors"]}
+
+
+def _evolved_fields(schema) -> dict:
+    """The entry keys that re-record an evolved logical schema; the
+    `schema_evolved` flag stops a running stream at the commit."""
+    return {"schema": schema.simpleString(), "schema_json": schema.json(),
+            "schema_evolved": True}
+
+
+def _create_entry(schema, rel: str, stats: dict) -> dict:
+    """Version 1 of a table: one data directory and its schema."""
+    entry = {"version": 1, "operation": "create", "added": [rel],
+             "removed": [], "schema": schema.simpleString(),
+             "schema_json": schema.json()}
+    if stats:
+        entry["stats"] = {rel: stats}
+    return entry
 
 
 def _publish(path: str, entry: dict) -> int:
@@ -1188,68 +1085,53 @@ def create_table(
     validates its batch against it as an Observation riding the data
     write (no extra pass) and refuses to commit violations with
     ConstraintViolationError. NULL passes, FALSE violates (SQL
-    semantics).
+    semantics). `gen_cols` declares GENERATED columns (see
+    _fill_generated); the initial rows are filled and gated like any
+    later batch.
 
     `change_data_feed=True` (create-time property, Delta's CDF):
     every DATA-CHANGING writer additionally materializes its
     row-level changes into a `cdc/` sidecar listed on the commit —
     merge emits insert/update rows, DELETE (both modes) emits delete
-    rows, UPDATE emits post-image update rows — so a stream can read
-    the table's CHANGES (option readChangeFeed) instead of refusing
-    change commits. Appends need no sidecar (their added files ARE
-    the inserts). Cost rides the operation: the diff reuses frames
-    the writer already computed."""
-    write_gate = check
-    if gen_cols:
-        from pyspark.sql import functions as F
-
-        # fill omitted generated columns on the initial rows, then
-        # gate every present one exactly like later writers; the
-        # RECORDED check stays the user's own (gen conjuncts are
-        # re-derived by _table_gate from the generated map)
-        for c, expr_text in gen_cols.items():
-            if c not in df.columns:
-                df = df.withColumn(c, F.expr(expr_text))
-        gen_gate = " AND ".join(
-            f"(`{c}` <=> ({e}))" for c, e in gen_cols.items()
-        )
-        write_gate = f"({check}) AND {gen_gate}" if check else gen_gate
-    rel, stats = _write_data(df, path, 1, stats_cols, check=write_gate,
-                             bloom_cols=bloom_cols)
-    entry = {"version": 1, "operation": "create", "added": [rel],
-             "removed": [], "schema": df.schema.simpleString(),
-             "schema_json": df.schema.json()}
-    if gen_cols:
-        entry["generated"] = dict(gen_cols)
-    if check:
-        entry["check"] = check
+    rows, UPDATE emits pre/post-image pairs — so a stream can read
+    the table's CHANGES (option readChangeFeed). Appends need no
+    sidecar (their added files ARE the inserts). Cost rides the
+    operation: the diff reuses frames the writer already computed."""
+    # the metadata as the create commit records it, folded like any
+    # commit so the one fill and gate apply
+    meta = _table_state([{
+        "version": 1, "check": check, "generated": dict(gen_cols or {}),
+    }]).meta
+    df = _fill_generated(df, meta)
+    rel, stats = _write_data(df, path, 1, stats_cols,
+                             check=_table_gate(meta), bloom_cols=bloom_cols)
+    entry = _create_entry(df.schema, rel, stats)
+    entry.update({k: meta[k] for k in ("check", "generated") if meta[k]})
     if change_data_feed:
         entry["cdf"] = True
-    if stats:
-        entry["stats"] = {rel: stats}
     return _publish(path, entry)
 
 
 def _evolution_gate(
-    commits: list[dict], df: DataFrame, merge_schema: bool, op: str
+    meta: dict, df: DataFrame, merge_schema: bool, op: str
 ) -> bool:
-    """Shared schema gate for append/merge: returns True when the batch
-    legally EVOLVES the table (adds columns under merge_schema=True),
-    False when the schemas already match, and raises on any other
-    drift. The old-field map comes from _schema_struct — the lossless
-    schema_json-preferred reconstruction — not from re-parsing the
-    simpleString DDL, which cannot round-trip some legal column names
-    (r11 advisory)."""
-    want = _latest_schema(commits)
+    """Shared schema gate for append/merge/txn/replace: returns True
+    when the batch legally EVOLVES the table (adds columns under
+    merge_schema=True), False when the schemas already match, and
+    raises ValueError on any other drift. The old-field map comes
+    from the lossless `_struct`, not from re-parsing the simpleString
+    DDL."""
+    want = meta["schema"]
     got = df.schema.simpleString()
     if not want or got == want:
         return False
     if not merge_schema:
         raise ValueError(
             f"{op} schema {got} != table schema {want} "
-            "(pass merge_schema=True to add columns)"
+            "(append/merge_upsert with merge_schema=True may add "
+            "columns)"
         )
-    old = {f.name: f.dataType for f in _schema_struct(commits).fields}
+    old = {f.name: f.dataType for f in _struct(meta).fields}
     new = {f.name: f.dataType for f in df.schema.fields}
     missing = [c for c in old if c not in new]
     changed = [c for c, t in old.items() if c in new and new[c] != t]
@@ -1264,9 +1146,8 @@ def _evolution_gate(
     # RENAMED column still occupies on disk, nor with one a dropped
     # column left behind in live files — the physical struct would
     # bind the new column to stale bytes instead of NULLs
-    cmap = _column_map(commits)
-    taken = set(cmap.values())
-    reserved = set(_reserved_physical(commits))
+    taken = set(meta["column_map"].values())
+    reserved = set(meta["reserved_physical"])
     for c in new:
         if c in old:
             continue
@@ -1285,6 +1166,13 @@ def _evolution_gate(
     return True
 
 
+def _references(text: str, col: str) -> bool:
+    """Whether SQL `text` names column `col`: a case-insensitive word
+    match (Spark resolves identifiers case-insensitively), deliberately
+    conservative — a hit inside a string literal counts too."""
+    return bool(re.search(rf"\b{re.escape(col)}\b", text, re.IGNORECASE))
+
+
 def _revalidate_dir(
     spark: SparkSession,
     path: str,
@@ -1292,39 +1180,30 @@ def _revalidate_dir(
     check: str | None,
     commits: list[dict],
 ) -> None:
-    """Semantic conflict rule for rebasing appends (Delta's
-    metadata-change detection, resolved by re-validation instead of a
-    blanket refusal): a rebase claims the next version WITHOUT
-    rewriting its already-written directory, so when a concurrent
-    commit ADDED or CHANGED the table CHECK after this batch
-    validated itself, the batch must be re-validated against the new
-    expression — otherwise the append+ADD-CONSTRAINT race would
-    silently commit rows the just-added constraint forbids (an
-    unserializable schedule: no serial order produces it, because a
-    serial append-after-constraint refuses at write time). One
-    batch-sized early-exit scan; on violation the append refuses with
-    ConstraintViolationError and the orphan directory is left for
-    vacuum. A DROPPED constraint needs no scan (every row passes)."""
+    """Rebase re-validation of an already-written append directory:
+    a rebase claims the next version WITHOUT rewriting the directory,
+    so when a concurrent commit added or changed the table gate
+    (`check`, evaluated under `commits`) after this batch validated
+    itself, the directory is checked against it — otherwise an
+    append + ADD CONSTRAINT race would commit rows the constraint
+    forbids (no serial order produces that). One batch-sized
+    early-exit scan; a violation raises ConstraintViolationError and
+    leaves the orphan directory for vacuum. A gate that references a
+    column the directory does not carry (the batch predates a column
+    evolution) refuses the same way. A dropped gate needs no scan."""
     if check is None:
         return
-    import re
-
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(os.path.join(path, rel))
-    cmap = _column_map(commits)
-    schema = _schema_struct(commits)
+    meta = _table_state(commits).meta
+    cmap = meta["column_map"]
+    schema = _struct(meta)
     have = set(df.columns)
-    # a CHECK added concurrently may bind a column this batch's
-    # directory does not carry (the batch predates a column
-    # evolution): F.expr would raise AnalysisException mid-rebase —
-    # detect it first with the module's conservative word-match and
-    # refuse with a conflict error a caller can act on (r13 advice)
     missing = [
         f.name for f in schema.fields
-        if cmap.get(f.name, f.name) not in have and re.search(
-            rf"\b{re.escape(f.name)}\b", check, re.IGNORECASE
-        )
+        if cmap.get(f.name, f.name) not in have
+        and _references(check, f.name)
     ]
     if missing:
         raise ConstraintViolationError(
@@ -1351,6 +1230,75 @@ def _revalidate_dir(
         )
 
 
+def _rename_rebased_rels(path: str, entry: dict, new_version: int) -> None:
+    """Re-home every relpath a rebasing entry publishes (added data
+    dirs, cdc and dv sidecars) into the re-claimed version's name —
+    the version embedded in a directory name is load-bearing for
+    ExistsDefault backfill, and sidecar names stay consistent with
+    their entry. One atomic rename per directory, no data I/O; stats
+    keys follow their directory."""
+    for key in ("added", "cdc", "dv_added"):
+        rels = entry.get(key)
+        if not rels:
+            continue
+        out = []
+        for rel in rels:
+            head, _, base = rel.rpartition("/")
+            new_rel = f"{head}/v{new_version:08d}-" + base.split("-", 1)[1]
+            os.rename(os.path.join(path, rel), os.path.join(path, new_rel))
+            if rel in entry.get("stats", {}):
+                entry["stats"][new_rel] = entry["stats"].pop(rel)
+            out.append(new_rel)
+        entry[key] = out
+
+
+def _publish_append(
+    spark: SparkSession,
+    path: str,
+    commits: list[dict],
+    rel: str | None,
+    stats: dict,
+    fields,
+    gate: str | None,
+    skip=None,
+) -> int | None:
+    """THE publish loop of the blind appends (append, txn_append):
+    publish the written directory `rel` (None: a data-less entry) at
+    the next version; `fields(meta, version)` gates the batch's schema
+    against the folded metadata (raising on drift) and returns the
+    operation's own entry keys. A lost race REBASES IN PLACE (blind
+    appends commute): `skip()` may end the attempt (returns None),
+    else the log is re-read, `fields` re-gates the schema, the
+    directory is re-validated when the write gate changed
+    (_revalidate_dir), renamed to the re-claimed version, and
+    re-published — the batch is never re-read or re-written. The last
+    ConcurrentWriteError surfaces after 8 attempts."""
+    base = {"added": [rel] if rel else [], "removed": []}
+    if stats:
+        base["stats"] = {rel: stats}
+    version = commits[-1]["version"] + 1
+    entry = {**base, **fields(_table_state(commits).meta, version),
+             "version": version}
+    last: ConcurrentWriteError | None = None
+    for _ in range(8):
+        try:
+            return _publish(path, entry)
+        except ConcurrentWriteError as e:
+            last = e
+        if skip is not None and skip():
+            return None
+        commits = _read_state_commits(path)
+        meta = _table_state(commits).meta
+        version = commits[-1]["version"] + 1
+        extra = fields(meta, version)
+        if base["added"] and _table_gate(meta) != gate:
+            gate = _table_gate(meta)
+            _revalidate_dir(spark, path, base["added"][0], gate, commits)
+        _rename_rebased_rels(path, base, version)
+        entry = {**base, **extra, "version": version}
+    raise last
+
+
 def append(
     spark: SparkSession,
     path: str,
@@ -1372,28 +1320,23 @@ def append(
     refusing — old-shaped producers keep appending through an
     additive evolution (Delta's WriteDefault). By default,
     pre-evolution ROWS still read NULL; `backfill=True` additionally
-    records the ExistsDefault half (r13 — the gap the r12 docs
-    declared out of scope is now closed WITHOUT per-file metadata):
-    rows written before this commit read the default instead of
-    NULL, resolved per-directory from the version embedded in every
-    data directory's name — one pure projection on the scan
-    (_exists_defaults / _read_live), frozen at this evolution's
+    records the ExistsDefault half: rows written before this commit
+    read the default instead of NULL, resolved per-directory from the
+    version embedded in every data directory's name — one pure
+    projection on the scan (_read_live), frozen at this evolution's
     expression like Delta's ExistsDefault, materialized physically
     by the next compact.
 
     THE SMALL-FILES LEVERS (Delta's optimizeWrite/autoCompact shapes;
-    at 100 TB the failure mode is not data volume but file count —
-    every scan pays per-file open cost and the driver pays per-file
-    planning):
+    at scale the failure mode is file count, not data volume):
     - `optimize_write=N` bin-packs the BATCH before writing: one
       count pass over the batch (batch-sized, never the table) sizes
       `repartition(ceil(rows/N))`, so a 10k-partition upstream job
       appending 1k rows lands 1 file instead of 10k near-empty ones.
     - `auto_compact=K` triggers a post-commit compact() when the LIVE
-      directory count reaches K — streaming/micro-batch appends then
-      keep a bounded directory count without an external maintenance
-      job. The compact is its own commit (time travel sees both, like
-      Delta); it inherits stats columns so pruning survives.
+      directory count reaches K — micro-batch appends then keep a
+      bounded directory count without an external maintenance job.
+      The compact is its own commit; it inherits stats columns.
 
     `merge_schema=True` permits SCHEMA EVOLUTION with Delta's
     mergeSchema contract: the batch may ADD new columns (old files
@@ -1403,17 +1346,15 @@ def append(
     still refuse loudly. The evolved schema is re-recorded in this
     commit, so time travel before it keeps the old shape.
 
-    CONCURRENCY: a lost version race REBASES IN PLACE (Delta's
-    semantic conflict rule for blind appends — appends commute with
-    every concurrent commit that keeps the schema legal): the
-    already-written data directory is re-published under the next
-    version, so contention never re-reads or re-writes the batch.
-    The schema gate re-checks against each winner's log (a
-    concurrent evolution can legitimately flip the verdict);
-    ConcurrentWriteError surfaces only after the attempt cap."""
+    CONCURRENCY: a lost version race REBASES IN PLACE
+    (_publish_append): the already-written directory is re-published
+    under the next version after the schema gate re-checks against
+    the winner's log; ConcurrentWriteError surfaces only after the
+    attempt cap."""
     commits = _read_state_commits(path)
-    df = _fill_generated(_fill_defaults(df, commits), commits)
-    evolved = _evolution_gate(commits, df, merge_schema, "append")
+    st = _table_state(commits)
+    df = _fill_generated(_fill_defaults(df, st.meta), st.meta)
+    evolved = _evolution_gate(st.meta, df, merge_schema, "append")
     if defaults:
         if not (merge_schema and evolved):
             raise ValueError(
@@ -1431,10 +1372,9 @@ def append(
             "backfill=True records ExistsDefaults for an evolving "
             "append's defaults= columns; pass defaults= too"
         )
-    version = commits[-1]["version"] + 1
     if auto_compact is not None and auto_compact < 2:
         # validate BEFORE the commit: raising after _publish would
-        # make a durably-committed append look failed (r12 review)
+        # make a durably-committed append look failed
         raise ValueError("auto_compact threshold must be >= 2 dirs")
     if optimize_write is not None:
         if optimize_write < 1:
@@ -1443,70 +1383,32 @@ def append(
 
         n = df.count()
         df = df.repartition(max(1, math.ceil(n / optimize_write)))
-    check_seen = _table_gate(commits)
+    gate = _table_gate(st.meta)
+    cmap = st.meta["column_map"]
     if bloom_cols is None:
         # inherit: dirs this table already blooms keep point-pruning
-        bloom_cols = _bloom_cols_logical(
-            _live_stats(path, commits=commits), _column_map(commits))
+        bloom_cols = _bloom_cols_logical(st.stats, cmap)
     rel, stats = _write_data(
-        df, path, version, stats_cols, check=check_seen,
-        column_map=_column_map(commits), bloom_cols=bloom_cols)
-    last: ConcurrentWriteError | None = None
-    for _ in range(8):
-        entry = {"version": version, "operation": "append",
-                 "added": [rel], "removed": []}
-        if evolved:
-            entry["schema"] = df.schema.simpleString()
-            entry["schema_json"] = df.schema.json()
-            entry["schema_evolved"] = True
+        df, path, st.version + 1, stats_cols, check=gate,
+        column_map=cmap, bloom_cols=bloom_cols)
+
+    def fields(meta: dict, version: int) -> dict:
+        entry = {"operation": "append"}
+        if _evolution_gate(meta, df, merge_schema, "append"):
+            entry.update(_evolved_fields(df.schema))
             if defaults:
-                entry["defaults"] = {
-                    **_column_defaults(commits), **defaults
-                }
+                entry["defaults"] = {**meta["defaults"], **defaults}
                 if backfill:
                     entry["exists_defaults"] = {
-                        **{k: [e, v] for k, (e, v)
-                           in _exists_defaults(commits).items()},
+                        **meta["exists_defaults"],
                         **{c: [defaults[c], version] for c in defaults},
                     }
-        if stats:
-            entry["stats"] = {rel: stats}
-        try:
-            v = _publish(path, entry)
-            if auto_compact is not None:
-                _maybe_auto_compact(spark, path, auto_compact)
-            return v
-        except ConcurrentWriteError as e:
-            # rebase: someone else took this version — the data dir is
-            # already on disk; re-gate the schema against the winner's
-            # log and re-claim the next version (no data I/O unless
-            # the CHECK changed, below)
-            last = e
-            commits = _read_state_commits(path)
-            evolved = _evolution_gate(commits, df, merge_schema, "append")
-            new_check = _table_gate(commits)
-            if new_check != check_seen:
-                # the winner changed the table CHECK: re-validate the
-                # already-written batch before re-claiming (refuses on
-                # violation — the unserializable schedule is rejected,
-                # never silently merged)
-                _revalidate_dir(spark, path, rel, new_check, commits)
-                check_seen = new_check
-            version = commits[-1]["version"] + 1
-            # RENAME the written directory to the re-claimed version:
-            # the version embedded in a directory name is load-bearing
-            # (ExistsDefault backfill keys on it) — without this, a
-            # rebased backfill evolution records intro=version while
-            # its own directory keeps the lower pre-rebase number, and
-            # the batch's explicit NULLs would read the default
-            # (r13 review finding). One atomic rename, no data I/O.
-            new_rel = os.path.join(
-                _DATA, f"v{version:08d}-" + rel.rsplit("-", 1)[1]
-            )
-            os.rename(os.path.join(path, rel),
-                      os.path.join(path, new_rel))
-            rel = new_rel
-    raise last
+        return entry
+
+    v = _publish_append(spark, path, commits, rel, stats, fields, gate)
+    if auto_compact is not None:
+        _maybe_auto_compact(spark, path, auto_compact)
+    return v
 
 
 def _maybe_auto_compact(
@@ -1516,63 +1418,104 @@ def _maybe_auto_compact(
     only at `min_dirs` live DIRECTORIES — gated here, not inside
     compact(), whose own live-DV override would otherwise fire a
     full rewrite right after every DV delete regardless of the
-    threshold (r12 review). Best-effort by contract: ANY failure is
-    swallowed (the append already committed durably and must never
-    look failed; the next append re-triggers). The compact is the
-    full single-directory rewrite — right for the dimension/state
-    tables micro-batch appends target; fact tables should run
-    compact(target_partitions=live_bytes/128MB) on their own
-    cadence instead of auto_compact."""
+    threshold. Best-effort by contract: ANY failure is swallowed (the
+    append already committed durably and must never look failed; the
+    next append re-triggers). The compact is the full
+    single-directory rewrite — right for the dimension/state tables
+    micro-batch appends target; fact tables should run
+    compact(target_partitions=live_bytes/128MB) on their own cadence
+    instead."""
     try:
-        commits = _read_state_commits(path)
-        if len(_fold_live(commits)) < min_dirs:
+        st = _table_state(_read_state_commits(path))
+        if len(st.live) < min_dirs:
             return None
         return compact(spark, path, min_dirs=min_dirs)
     except Exception:
         return None
 
 
-def _mapping_entry(schema, cmap: dict) -> dict:
-    """Shared shape of a column-mapping commit: metadata-only (no
-    added/removed), re-records the logical schema, carries the full
-    map (key-present even when empty — renaming back to the physical
-    name legitimately empties it), and is flagged schema_evolved so
-    the streaming source stops at it exactly like at an evolution
-    (the stream's declared schema is fixed at startingVersion)."""
-    return {
-        "operation": None,  # caller fills
+def _refuse_referenced(
+    op: str, col: str, meta: dict, skip: str | None = None
+) -> None:
+    """The refusals shared by rename_column and drop_column: a
+    recorded expression that names `col` would dangle after the
+    change — the CHECK, a generated column (the column itself or its
+    derivation), or the default / ExistsDefault body of any column
+    but `skip`. A spurious refusal (see _references) is recoverable:
+    drop the constraint or compact, alter, re-add."""
+    check = meta["check"]
+    if check and _references(check, col):
+        raise ValueError(
+            f"{op}: the table CHECK ({check}) references {col!r}; "
+            "drop the constraint first"
+        )
+    for gc, ge in meta["generated"].items():
+        if col == gc or _references(ge, col):
+            raise ValueError(
+                f"{op}: generated column {gc!r} (= {ge}) involves "
+                f"{col!r}; generated derivations are fixed at create"
+            )
+    for dc, de in meta["defaults"].items():
+        if dc != skip and _references(de, col):
+            raise ValueError(
+                f"{op}: the default for column {dc!r} (= {de}) "
+                f"references {col!r}; default expressions are fixed at "
+                "declaration — compact() and re-evolve to change them"
+            )
+    for dc, (de, _iv) in meta["exists_defaults"].items():
+        if dc != skip and _references(de, col):
+            raise ValueError(
+                f"{op}: the ExistsDefault for column {dc!r} (= {de}) "
+                f"references {col!r}; backfill expressions are frozen "
+                "at their evolution — compact() to materialize them "
+                "first"
+            )
+
+
+def _mapping_entry(
+    st: _State, op: str, schema, cmap: dict, col: str,
+    new: str | None = None,
+) -> dict:
+    """A column-mapping commit (rename_column, drop_column):
+    metadata-only (no added/removed), re-records the logical schema,
+    carries the full map (key present even when empty — renaming
+    back to the physical name empties it), is flagged schema_evolved
+    so a stream stops at it, and re-keys `col` to `new` (drop: removes
+    it) in both default maps."""
+    entry = {
+        "version": st.version + 1, "operation": op,
         "added": [], "removed": [],
         "column_map": cmap,
-        "schema": schema.simpleString(),
-        "schema_json": schema.json(),
-        "schema_evolved": True,
+        **_evolved_fields(schema),
         "reader_features": ["column_mapping"],
     }
+    for key in ("defaults", "exists_defaults"):
+        m = dict(st.meta[key])
+        if col in m:
+            value = m.pop(col)
+            if new is not None:
+                m[new] = value
+            entry[key] = m
+    return entry
 
 
 def rename_column(spark: SparkSession, path: str, old: str, new: str) -> int:
     """ALTER TABLE ... RENAME COLUMN, metadata-only (Delta's column
     mapping): publishes a commit that re-records the logical schema
     with the new name and maps it to the column's unchanged PHYSICAL
-    name — zero data directories are read, written, or delisted, so
-    the cost is one tiny JSON no matter the table size. Everything
-    composes: reads project physical→logical (still one scan), time
-    travel before the rename shows the old name, writers translate
-    batches back to physical names (so stats pruning and the CHECK
-    constraint — which binds create-time physical names — keep
-    working), and RESTORE across a rename reverts the mapping.
-    Streaming reads stop at the rename like at a schema evolution
-    (restart with startingVersion past it to pick up the new name).
+    name — zero data directories are read, written, or delisted.
+    Reads project physical→logical (still one scan), time travel
+    before the rename shows the old name, writers translate batches
+    back to physical names (stats pruning keeps working), and RESTORE
+    across a rename reverts the mapping. Streaming reads stop at the
+    rename like at a schema evolution. Refuses when a recorded
+    expression names the column (_refuse_referenced). A lost race
+    re-runs the validation under commit_with_retry."""
+    from pyspark.sql.types import StructField, StructType
 
-    A lost version race rebases in place (metadata-only commits
-    commute with data commits; a concurrent schema change re-runs
-    the validation and may legitimately refuse)."""
-    import re
-
-    last: ConcurrentWriteError | None = None
-    for _ in range(8):
-        commits = _read_state_commits(path)
-        schema = _schema_struct(commits)
+    def attempt() -> int:
+        st = _table_state(_read_state_commits(path))
+        schema = _struct(st.meta)
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(
@@ -1584,81 +1527,21 @@ def rename_column(spark: SparkSession, path: str, old: str, new: str) -> int:
             raise ValueError(
                 f"rename_column: column {new!r} already exists"
             )
-        check = _table_check(commits)
-        # case-insensitive (Spark resolves identifiers that way) and
-        # deliberately conservative: a match inside a string literal
-        # also refuses — a spurious refusal is recoverable (drop the
-        # constraint, alter, re-add), a dangling reference blocks
-        # every subsequent write
-        if check and re.search(
-            rf"\b{re.escape(old)}\b", check, re.IGNORECASE
-        ):
-            raise ValueError(
-                f"rename_column: the table CHECK ({check}) references "
-                f"{old!r}; drop the constraint, rename, then re-add it"
-            )
-        # same conservative word-match guard for GENERATED columns:
-        # the column itself and any source its expression names are
-        # both load-bearing identifiers in the recorded derivation
-        gen = _generated_cols(commits)
-        for gc, ge in gen.items():
-            if old == gc or re.search(
-                rf"\b{re.escape(old)}\b", ge, re.IGNORECASE
-            ):
-                raise ValueError(
-                    f"rename_column: generated column {gc!r} "
-                    f"(= {ge}) involves {old!r}; generated "
-                    "derivations are fixed at create"
-                )
-        # same conservative word-match over DEFAULT / ExistsDefault
-        # expression BODIES (r13 advice): re-keying the maps below
-        # fixes the KEY, but an expression that references the renamed
-        # column dangles — later _fill_defaults / backfill projections
-        # would raise AnalysisException mid-scan or mid-write
-        for dc, de in _column_defaults(commits).items():
-            if re.search(rf"\b{re.escape(old)}\b", de, re.IGNORECASE):
-                raise ValueError(
-                    f"rename_column: the default for column {dc!r} "
-                    f"(= {de}) references {old!r}; default expressions "
-                    "are fixed at declaration — compact() and re-evolve "
-                    "to change them"
-                )
-        for dc, (de, _iv) in _exists_defaults(commits).items():
-            if re.search(rf"\b{re.escape(old)}\b", de, re.IGNORECASE):
-                raise ValueError(
-                    f"rename_column: the ExistsDefault for column "
-                    f"{dc!r} (= {de}) references {old!r}; backfill "
-                    "expressions are frozen at their evolution — "
-                    "compact() to materialize them first"
-                )
-        cmap = _column_map(commits)
+        _refuse_referenced("rename_column", old, st.meta)
+        cmap = dict(st.meta["column_map"])
         phys = cmap.pop(old, old)
         if new != phys:
             cmap[new] = phys
-        from pyspark.sql.types import StructField, StructType
-
         renamed = StructType([
             StructField(new if f.name == old else f.name,
                         f.dataType, f.nullable, f.metadata)
             for f in schema.fields
         ])
-        entry = _mapping_entry(renamed, cmap)
-        entry["operation"] = "rename_column"
+        entry = _mapping_entry(st, "rename_column", renamed, cmap, old, new)
         entry["renamed"] = {"from": old, "to": new}
-        dfl = _column_defaults(commits)
-        if old in dfl:
-            dfl[new] = dfl.pop(old)
-            entry["defaults"] = dfl
-        edl = {k: [e, v] for k, (e, v) in _exists_defaults(commits).items()}
-        if old in edl:
-            edl[new] = edl.pop(old)
-            entry["exists_defaults"] = edl
-        entry["version"] = commits[-1]["version"] + 1
-        try:
-            return _publish(path, entry)
-        except ConcurrentWriteError as e:
-            last = e
-    raise last
+        return _publish(path, entry)
+
+    return commit_with_retry(attempt)
 
 
 def drop_column(spark: SparkSession, path: str, col: str) -> int:
@@ -1669,15 +1552,15 @@ def drop_column(spark: SparkSession, path: str, col: str) -> int:
     columns) until a compact() rewrites them. The column's PHYSICAL
     name is recorded as RESERVED so schema evolution cannot re-add a
     column that would bind to the stale bytes; compact clears the
-    reservation. Refuses to drop the last column or a column the
-    table CHECK constraint references (new writes would no longer
-    carry it, so the constraint could never be evaluated)."""
-    import re
+    reservation. Refuses to drop the last column or a column a
+    recorded expression names (_refuse_referenced; the column's own
+    default leaves with it). A lost race re-runs the validation under
+    commit_with_retry."""
+    from pyspark.sql.types import StructType
 
-    last: ConcurrentWriteError | None = None
-    for _ in range(8):
-        commits = _read_state_commits(path)
-        schema = _schema_struct(commits)
+    def attempt() -> int:
+        st = _table_state(_read_state_commits(path))
+        schema = _struct(st.meta)
         names = [f.name for f in schema.fields]
         if col not in names:
             raise ValueError(
@@ -1685,73 +1568,18 @@ def drop_column(spark: SparkSession, path: str, col: str) -> int:
             )
         if len(names) == 1:
             raise ValueError("drop_column: cannot drop the only column")
-        cmap = _column_map(commits)
+        _refuse_referenced("drop_column", col, st.meta, skip=col)
+        cmap = dict(st.meta["column_map"])
         phys = cmap.pop(col, col)
-        check = _table_check(commits)
-        if check and re.search(
-            rf"\b{re.escape(col)}\b", check, re.IGNORECASE
-        ):
-            raise ValueError(
-                f"drop_column: the table CHECK ({check}) references "
-                f"{col!r}; drop the constraint first"
-            )
-        gen = _generated_cols(commits)
-        for gc, ge in gen.items():
-            if col == gc or re.search(
-                rf"\b{re.escape(col)}\b", ge, re.IGNORECASE
-            ):
-                raise ValueError(
-                    f"drop_column: generated column {gc!r} (= {ge}) "
-                    f"involves {col!r}; generated derivations are "
-                    "fixed at create"
-                )
-        # the dropped column's OWN default entry is popped below, but
-        # ANOTHER column's default/ExistsDefault expression that
-        # references it would dangle — same conservative word-match
-        # refusal as CHECK and generated expressions (r13 advice)
-        for dc, de in _column_defaults(commits).items():
-            if dc != col and re.search(
-                rf"\b{re.escape(col)}\b", de, re.IGNORECASE
-            ):
-                raise ValueError(
-                    f"drop_column: the default for column {dc!r} "
-                    f"(= {de}) references {col!r}; default expressions "
-                    "are fixed at declaration — compact() and re-evolve "
-                    "to change them"
-                )
-        for dc, (de, _iv) in _exists_defaults(commits).items():
-            if dc != col and re.search(
-                rf"\b{re.escape(col)}\b", de, re.IGNORECASE
-            ):
-                raise ValueError(
-                    f"drop_column: the ExistsDefault for column {dc!r} "
-                    f"(= {de}) references {col!r}; backfill "
-                    "expressions are frozen at their evolution — "
-                    "compact() to materialize them first"
-                )
-        from pyspark.sql.types import StructType
-
         shrunk = StructType([f for f in schema.fields if f.name != col])
-        entry = _mapping_entry(shrunk, cmap)
-        entry["operation"] = "drop_column"
+        entry = _mapping_entry(st, "drop_column", shrunk, cmap, col)
         entry["dropped"] = col
-        dfl = _column_defaults(commits)
-        if col in dfl:
-            dfl.pop(col)
-            entry["defaults"] = dfl
-        edl = {k: [e, v] for k, (e, v) in _exists_defaults(commits).items()}
-        if col in edl:
-            edl.pop(col)
-            entry["exists_defaults"] = edl
         entry["reserved_physical"] = sorted(
-            set(_reserved_physical(commits)) | {phys}
+            set(st.meta["reserved_physical"]) | {phys}
         )
-        entry["version"] = commits[-1]["version"] + 1
-        try:
-            return _publish(path, entry)
-        except ConcurrentWriteError as e:
-            last = e
-    raise last
+        return _publish(path, entry)
+
+    return commit_with_retry(attempt)
 
 
 def add_check_constraint(spark: SparkSession, path: str, expr: str) -> int:
@@ -1762,36 +1590,24 @@ def add_check_constraint(spark: SparkSession, path: str, expr: str) -> int:
     already breaks must never be recorded, or every subsequent
     rewrite would spuriously refuse. From this commit on, every
     writer validates its batch exactly like a create-time CHECK.
-    Single-constraint model: drop the existing one first (documented
-    trade — one expression slot, compose with AND). Constraints bind
-    LOGICAL column names; rename/drop of a referenced column
-    refuses."""
+    Single-constraint model: drop the existing one first (compose
+    with AND). Constraints bind LOGICAL column names; rename/drop of
+    a referenced column refuses.
+
+    A lost race re-runs the whole attempt under commit_with_retry,
+    scan included: the winner's rows were validated against the
+    still-absent constraint and must pass it too, or append + ADD
+    CONSTRAINT would have no serial equivalent (the appending side
+    closes the mirror-image window with _revalidate_dir)."""
     from pyspark.sql import functions as F
 
-    commits = _read_state_commits(path)
-    if _table_check(commits) is not None:
-        raise ValueError(
-            f"table already has a CHECK ({_table_check(commits)}); "
-            "drop_check_constraint first (single-constraint model — "
-            "compose with AND)"
-        )
-    # validation runs INSIDE the rebase loop: a lost race means some
-    # writer committed between our scan and our claim, and its rows
-    # were validated against the still-absent constraint — they must
-    # pass the new expression too, or the pair append+ADD CONSTRAINT
-    # has no serial equivalent (a serial constraint-then-append would
-    # have refused the batch). Re-scanning on each rebase keeps the
-    # recorded invariant true by construction; the appending side
-    # closes the mirror-image window with _revalidate_dir. Each scan
-    # is the early-exit pushdown read — per-rebase cost is acceptable
-    # for a metadata operation.
-    last: ConcurrentWriteError | None = None
-    for _ in range(8):
-        if _table_check(commits) is not None:
+    def attempt() -> int:
+        st = _table_state(_read_state_commits(path))
+        if st.meta["check"] is not None:
             raise ValueError(
-                f"table already has a CHECK "
-                f"({_table_check(commits)}); drop_check_constraint "
-                "first"
+                f"table already has a CHECK ({st.meta['check']}); "
+                "drop_check_constraint first (single-constraint model — "
+                "compose with AND)"
             )
         bad = (
             read_table(spark, path)
@@ -1802,45 +1618,39 @@ def add_check_constraint(spark: SparkSession, path: str, expr: str) -> int:
             raise ConstraintViolationError(
                 f"existing rows violate ({expr}); constraint not added"
             )
-        try:
-            return _publish(path, {
-                "version": commits[-1]["version"] + 1,
-                "operation": "add_constraint",
-                "added": [], "removed": [], "check": expr,
-            })
-        except ConcurrentWriteError as e:
-            last = e
-            commits = _read_state_commits(path)
-    raise last
+        return _publish(path, {
+            "version": st.version + 1,
+            "operation": "add_constraint",
+            "added": [], "removed": [], "check": expr,
+        })
+
+    return commit_with_retry(attempt)
 
 
 def drop_check_constraint(spark: SparkSession, path: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT: records an explicit
     check=None (key-present, so the fold stops at it); time travel
-    before the drop still enforces on historical rewrites."""
-    commits = _read_state_commits(path)
-    last: ConcurrentWriteError | None = None
-    for _ in range(8):
-        if _table_check(commits) is None:
+    before the drop still enforces on historical rewrites. A lost
+    race re-runs under commit_with_retry."""
+
+    def attempt() -> int:
+        st = _table_state(_read_state_commits(path))
+        if st.meta["check"] is None:
             raise ValueError("table has no CHECK constraint to drop")
-        try:
-            return _publish(path, {
-                "version": commits[-1]["version"] + 1,
-                "operation": "drop_constraint",
-                "added": [], "removed": [], "check": None,
-            })
-        except ConcurrentWriteError as e:
-            last = e
-            commits = _read_state_commits(path)
-    raise last
+        return _publish(path, {
+            "version": st.version + 1,
+            "operation": "drop_constraint",
+            "added": [], "removed": [], "check": None,
+        })
+
+    return commit_with_retry(attempt)
 
 
 def version_as_of(path: str, timestamp: float) -> int:
     """The newest version committed AT OR BEFORE the unix timestamp —
     Delta's AS OF TIMESTAMP resolution. Raises if the table did not
-    exist yet. Commits published before the committed_at stamp
-    existed (pre-r11 tables) sort as 0 and therefore always
-    qualify."""
+    exist yet. Commits without a committed_at stamp sort as 0 and
+    therefore always qualify."""
     best = None
     for c in _read_commits(path, None):
         if float(c.get("committed_at", 0.0)) <= timestamp:
@@ -1890,11 +1700,9 @@ def describe_detail(spark: SparkSession, path: str) -> DataFrame:
     presence. Driver-side fold (checkpoint-accelerated) plus one
     os.stat pass over the live files — bounded by file count, no
     Spark job."""
-    commits = _read_state_commits(path)
-    live = _fold_live(commits)
-    dvs = _fold_live_dvs(commits)
+    st = _table_state(_read_state_commits(path))
     n_files, n_bytes = 0, 0
-    for rel in live:
+    for rel in st.live:
         full = os.path.join(path, rel)
         for f in os.listdir(full) if os.path.isdir(full) else []:
             fp = os.path.join(full, f)
@@ -1913,27 +1721,25 @@ def describe_detail(spark: SparkSession, path: str) -> DataFrame:
         if c.get("operation") == "optimize":
             break
     n_cdc = sum(len(c.get("cdc", [])) for c in raw)
-    cmap = _column_map(commits)
+    cmap = st.meta["column_map"]
     row = (
-        int(commits[-1]["version"]),
-        len(live),
+        st.version,
+        len(st.live),
         n_files,
         n_bytes,
-        len(dvs),
-        sum(int(c.get("dv_rows") or 0) for c in commits
-            if c.get("dv_added")),
+        len(st.dvs),
+        st.dv_rows or 0,
         n_cdc,
-        _latest_schema(commits),
-        _table_check(commits),
-        _table_cdf(commits),
+        st.meta["schema"],
+        st.meta["check"],
+        bool(st.meta["cdf"]),
         clustered,
         zorder,
         _latest_checkpoint_version(path),
         (",".join(f"{l}->{p}" for l, p in sorted(cmap.items()))
          if cmap else None),
-        len(_reserved_physical(commits)),
-        (",".join(sorted(_reader_features(commits)))
-         if _reader_features(commits) else None),
+        len(st.meta["reserved_physical"]),
+        ",".join(st.meta["reader_features"]) or None,
     )
     return spark.createDataFrame(
         [row],
@@ -1965,54 +1771,19 @@ def read_table(
         version = version_as_of(path, timestamp)
     # current-version reads take the checkpoint-accelerated state
     # path; time travel reads the raw per-commit files (always kept)
-    commits = (
+    st = _table_state(
         _read_state_commits(path) if version is None
         else _read_commits(path, version)
     )
-    live = _fold_live(commits)
-    schema = _schema_struct(commits)
-    if not live:
-        _check_reader_features(commits)
+    schema = _struct(st.meta)
+    if not st.live:
+        _check_reader_features(st.meta["reader_features"], "table")
         if schema is not None:
             # a delete that matched every row leaves zero live dirs;
             # SQL/Delta semantics: the table is EMPTY, not unreadable
             return spark.createDataFrame([], schema)
         raise ValueError(f"table at {path} has no live data")
-    return _read_live(spark, path, commits, live, schema)
-
-
-def _rename_rebased_rels(path: str, entry: dict, new_version: int) -> None:
-    """Re-home every relpath a rebasing data-change entry publishes
-    (added data dirs, cdc and dv sidecars) into the re-claimed
-    version's name — the version embedded in a directory name is
-    load-bearing for ExistsDefault backfill (the append-rebase rule),
-    and keeping sidecar names consistent with their entry keeps the
-    layout auditable. One atomic rename per directory, no data I/O;
-    stats keys follow their directory."""
-    for key in ("added", "cdc", "dv_added"):
-        rels = entry.get(key)
-        if not rels:
-            continue
-        out = []
-        for rel in rels:
-            head, _, base = rel.rpartition("/")
-            new_rel = f"{head}/v{new_version:08d}-" + base.split("-", 1)[1]
-            os.rename(os.path.join(path, rel), os.path.join(path, new_rel))
-            if rel in entry.get("stats", {}):
-                entry["stats"][new_rel] = entry["stats"].pop(rel)
-            out.append(new_rel)
-        entry[key] = out
-
-
-_METADATA_FOLDS = (
-    ("schema", _latest_schema),
-    ("CHECK constraint", _table_check),
-    ("column mapping", _column_map),
-    ("column defaults", _column_defaults),
-    ("exists-defaults", _exists_defaults),
-    ("generated columns", _generated_cols),
-    ("reserved physical names", _reserved_physical),
-)
+    return _read_live(spark, path, st, st.live, schema)
 
 
 def _publish_data_change(
@@ -2028,16 +1799,13 @@ def _publish_data_change(
 ) -> int:
     """Publish a DATA-CHANGING commit (merge/delete/update, both
     physical strategies) with Delta-style FILE-LEVEL conflict
-    detection (r13 verdict item 3 — these writers previously resolved
-    every lost race by a full re-read-and-rewrite retry through
-    commit_with_retry). A lost version race re-reads the log and
-    classifies each winner:
+    detection. A lost version race re-reads the log and classifies
+    each winner:
 
-    - METADATA conflict (any fold in _METADATA_FOLDS differs between
-      our snapshot and now — schema evolution, CHECK, mapping,
-      defaults, generated, reservations): REFUSE. Our delta was
-      computed and validated under the old metadata; only a full
-      re-run can re-validate it.
+    - METADATA conflict (any `_LATEST_WINS` key differs between our
+      snapshot and now — schema, CHECK, mapping, defaults, generated,
+      reservations): REFUSE. Our delta was computed and validated
+      under the old metadata; only a full re-run can re-validate it.
     - READ-SET conflict (a winner REMOVED a directory we read —
       `read_dirs` — or delisted one we are delisting): REFUSE. Our
       pre-image is stale; rebasing would lose the winner's rewrite
@@ -2059,45 +1827,42 @@ def _publish_data_change(
       REFUSE (Delta's ConcurrentAppendException). Zero: the winner
       commutes with us.
 
-    On refusal a descriptive ConcurrentWriteError surfaces — under
-    commit_with_retry that triggers the pre-existing full re-run
-    against the winner's state, so semantics are unchanged, just
-    slower on true conflicts. When every winner commutes the entry
-    REBASES IN PLACE: directories rename into the re-claimed
-    version's namespace and the publish retries — the already-written
-    delta (batch-sized) is never re-read or re-written, which at
-    100 TB is the difference between a merge retry costing a batch
-    rename and costing the touched-directory rewrite again. Scale
-    posture: the checks are driver-side over the WINNERS' entries
-    (backlog-bounded, never the table) plus at most one scan of the
+    On refusal a descriptive ConcurrentWriteError surfaces; under
+    commit_with_retry that re-runs the whole operation against the
+    winner's state. When every winner commutes the entry REBASES IN
+    PLACE: its directories rename into the re-claimed version's
+    namespace and the publish retries — the already-written delta is
+    never re-read or re-written. The checks are driver-side over the
+    winners' entries (backlog-bounded) plus at most one scan of the
     winners' added directories (delta-bounded)."""
     try:
         return _publish(path, entry)
     except ConcurrentWriteError:
         pass
+    op = entry.get("operation")
+    then = _table_state(commits_then)
     last_msg = "lost the version race"
     for _ in range(max(int(attempts), 1)):
         commits_now = _read_state_commits(path)
-        base_v = int(commits_then[-1]["version"])
-        winners = [c for c in commits_now if int(c["version"]) > base_v]
-        for what, fold in _METADATA_FOLDS:
-            if fold(commits_then) != fold(commits_now):
-                raise ConcurrentWriteError(
-                    f"{entry.get('operation')} at {path!r}: a "
-                    f"concurrent commit changed the table {what} "
-                    "while this change was in flight; the delta must "
-                    "be recomputed against the new metadata (retry "
-                    "re-runs it — commit_with_retry does this "
-                    "automatically)"
-                )
+        now = _table_state(commits_now)
+        winners = [c for c in commits_now if int(c["version"]) > then.version]
+        changed = [k for k in _LATEST_WINS if then.meta[k] != now.meta[k]]
+        if changed:
+            raise ConcurrentWriteError(
+                f"{op} at {path!r}: a concurrent commit changed the "
+                f"table metadata ({', '.join(changed)}) while this "
+                "change was in flight; the delta must be recomputed "
+                "against the new metadata (retry re-runs it — "
+                "commit_with_retry does this automatically)"
+            )
         ours = set(read_dirs) | set(entry.get("removed", []))
-        cmap_now = _column_map(commits_now)
+        cmap_now = now.meta["column_map"]
         scan_rels: list[str] = []
         for w in winners:
             clash = set(w.get("removed", [])) & ours
             if clash:
                 raise ConcurrentWriteError(
-                    f"{entry.get('operation')} at {path!r}: concurrent "
+                    f"{op} at {path!r}: concurrent "
                     f"{w.get('operation')} (version {w['version']}) "
                     f"rewrote director{'ies' if len(clash) > 1 else 'y'} "
                     f"this change read ({sorted(clash)[:3]}...); the "
@@ -2105,7 +1870,7 @@ def _publish_data_change(
                 )
             if w.get("dv_added"):
                 raise ConcurrentWriteError(
-                    f"{entry.get('operation')} at {path!r}: concurrent "
+                    f"{op} at {path!r}: concurrent "
                     f"{w.get('operation')} (version {w['version']}) "
                     "added deletion vectors; row liveness changed at "
                     "sub-directory granularity — retry re-runs the "
@@ -2128,34 +1893,29 @@ def _publish_data_change(
         if scan_rels:
             if conflict_rows is None:
                 raise ConcurrentWriteError(
-                    f"{entry.get('operation')} at {path!r}: concurrent "
-                    f"commit(s) added director{'ies' if len(scan_rels) > 1 else 'y'} "
+                    f"{op} at {path!r}: concurrent commit(s) added "
+                    f"director{'ies' if len(scan_rels) > 1 else 'y'} "
                     "whose overlap with this change cannot be ruled "
                     "out; retry re-runs the change"
                 )
-            df = _read_live(
-                spark, path, commits_now, scan_rels,
-                _schema_struct(commits_now),
-            )
+            df = _read_live(spark, path, now, scan_rels, _struct(now.meta))
             if not conflict_rows(df).limit(1).isEmpty():
                 raise ConcurrentWriteError(
-                    f"{entry.get('operation')} at {path!r}: a "
-                    "concurrent commit added rows this change should "
-                    "have seen (overlapping keys / matching "
-                    "predicate); refusing the rebase — retry re-runs "
-                    "the change over them (Delta's "
+                    f"{op} at {path!r}: a concurrent commit added rows "
+                    "this change should have seen (overlapping keys / "
+                    "matching predicate); refusing the rebase — retry "
+                    "re-runs the change over them (Delta's "
                     "ConcurrentAppendException rule)"
                 )
-        new_version = int(commits_now[-1]["version"]) + 1
-        _rename_rebased_rels(path, entry, new_version)
-        entry["version"] = new_version
-        commits_then = commits_now
+        _rename_rebased_rels(path, entry, now.version + 1)
+        entry["version"] = now.version + 1
+        then = now
         try:
             return _publish(path, entry)
         except ConcurrentWriteError as e:
             last_msg = str(e)
     raise ConcurrentWriteError(
-        f"{entry.get('operation')} at {path!r}: {attempts} rebase "
+        f"{op} at {path!r}: {attempts} rebase "
         f"attempts exhausted ({last_msg})"
     )
 
@@ -2175,27 +1935,27 @@ def merge_upsert(
     merged rows to a NEW data directory, and commits it while
     DELISTING the rewritten directories — old versions stay readable
     (time travel), and a concurrent commit between the snapshot read
-    and the publish surfaces as ConcurrentWriteError instead of
-    silently losing one writer's rows (the atomic-swap sink's
-    failure mode).
+    and the publish is classified by _publish_data_change instead of
+    silently losing one writer's rows (the atomic-swap sink's failure
+    mode).
 
-    DATA SKIPPING (the 100 TB lever): with `prune=True`, a live
-    directory whose recorded key-column stats are provably disjoint
-    from the batch's key ranges is left LISTED and unread — only the
-    overlapping directories union with the batch, get deduplicated,
-    and are rewritten. Cost is then proportional to touched data.
-    Directories without stats (or incomparable/null-entangled ranges)
-    are conservatively rewritten, so pruning never changes which keys
-    the merge can see for a key-unique table (see the module-level
-    SEMANTIC NOTE for the overlapping-append caveat; `prune=False`
-    restores the full-table dedup unconditionally).
+    DATA SKIPPING: with `prune=True`, a live directory whose recorded
+    key-column stats are provably disjoint from the batch's key
+    ranges (or whose bloom filters no batch key hits) is left LISTED
+    and unread — only the overlapping directories union with the
+    batch, get deduplicated, and are rewritten. Directories without
+    stats are conservatively rewritten, so pruning never changes
+    which keys the merge can see for a key-unique table (see the
+    module-level SEMANTIC NOTE; `prune=False` restores the full-table
+    dedup unconditionally).
 
-    `merge_schema=True` composes MERGE with qup13's schema evolution
-    (Delta's autoMerge): a batch that ADDS columns evolves the table
-    schema in the SAME commit that merges it — untouched and
-    pass-through rows read back with NULLs in the added columns, and
-    time travel before this commit keeps the old shape. Drops/retypes
-    still refuse loudly (the append gate, shared).
+    `merge_schema=True` composes MERGE with schema evolution (Delta's
+    autoMerge): a batch that ADDS columns evolves the table schema in
+    the SAME commit that merges it — untouched and pass-through rows
+    read back with NULLs in the added columns. Drops/retypes still
+    refuse loudly (the shared evolution gate).
+
+    `merge_on_read=True` writes no rewrite: see _merge_on_read.
 
     Live DELETION VECTORS are reconciled on the touched-directory
     read, so a DV-deleted row can never resurrect by losing a merge
@@ -2206,62 +1966,50 @@ def merge_upsert(
     from pyspark.sql.window import Window
 
     commits = _read_state_commits(path)
-    batch_df = _fill_generated(_fill_defaults(batch_df, commits), commits)
-    # same gate as append: without it a type-drifting batch would
-    # be COERCED by unionByName and committed as a silently
-    # different table schema, wedging later appends against the
-    # stale recorded one (r11 review finding)
-    evolved = _evolution_gate(commits, batch_df, merge_schema,
+    st = _table_state(commits)
+    batch_df = _fill_generated(_fill_defaults(batch_df, st.meta), st.meta)
+    # without the gate a type-drifting batch would be COERCED by
+    # unionByName and committed as a silently different schema
+    evolved = _evolution_gate(st.meta, batch_df, merge_schema,
                               "merge_upsert batch")
-    version = commits[-1]["version"] + 1
-    live = _fold_live(commits)
-    live_stats = _live_stats(path, commits=commits)
+    version = st.version + 1
+    cmap = st.meta["column_map"]
     # the rewrite re-records stats for every column the live dirs
-    # already carry them for, not just the merge keys — otherwise each
-    # merge silently erodes pruning on non-key columns while
-    # delete/compact preserve it (r11 advisory)
+    # already carry them for, not just the merge keys, so a merge
+    # does not erode pruning on non-key columns
     stats_cols = sorted(
-        set(key_cols)
-        | set(_stats_cols_logical(live_stats, _column_map(commits)))
+        set(key_cols) | set(_stats_cols_logical(st.stats, cmap))
     )
 
-    touched, untouched = list(live), []
+    touched, untouched = list(st.live), []
     bstats = None
-    # compute batch stats ONLY when some live dir can actually be
-    # pruned — otherwise the pass over the batch is pure waste
-    # (r11 review finding). Recorded stats are keyed by PHYSICAL
-    # names; key_cols are logical — translate the lookup.
-    cmap = _column_map(commits)
-    if prune and any(live_stats.values()):
+    # batch stats only when some live dir can actually be pruned;
+    # recorded stats are keyed by PHYSICAL names, key_cols are logical
+    if prune and any(st.stats.values()):
         bstats = _column_stats(batch_df, key_cols)
         touched, untouched = [], []
-        for d in live:
+        for d in st.live:
             skip = any(
                 _disjoint_on(
-                    live_stats[d].get(cmap.get(k, k)), bstats.get(k)
+                    st.stats[d].get(cmap.get(k, k)), bstats.get(k)
                 )
                 for k in key_cols
             )
             (untouched if skip else touched).append(d)
-        # bloom phase (r13): point-prune the range survivors on
-        # layouts whose key ranges overlap — one batch-sized probe
         touched, bloom_pruned = _bloom_prune(
-            batch_df, key_cols, touched, live_stats, cmap)
+            batch_df, key_cols, touched, st.stats, cmap)
         untouched += bloom_pruned
 
     if merge_on_read:
         return _merge_on_read(
-            spark, path, commits, batch_df, key_cols, ts_col,
-            touched, len(untouched), version, stats_cols, cmap,
-            evolved=evolved,
-            bloom_cols=_bloom_cols_logical(live_stats, cmap),
-            batch_key_stats=bstats,
+            spark, path, commits, st, batch_df, key_cols, ts_col,
+            touched, len(untouched), stats_cols, evolved, bstats,
         )
 
     new = batch_df.withColumn("_src", F.lit(1))
     if touched:
         cur = _read_live(
-            spark, path, commits, touched, _schema_struct(commits)
+            spark, path, st, touched, _struct(st.meta)
         ).withColumn("_src", F.lit(0))
         # evolution: the current rows lack the batch's added columns —
         # allowMissingColumns fills them with NULLs (Delta autoMerge)
@@ -2278,39 +2026,23 @@ def merge_upsert(
         .drop("_rn", "_src")
     )
     rel, stats = _write_data(
-        merged, path, version, stats_cols, check=_table_gate(commits),
+        merged, path, version, stats_cols, check=_table_gate(st.meta),
         column_map=cmap,
-        bloom_cols=_bloom_cols_logical(live_stats, cmap))
+        bloom_cols=_bloom_cols_logical(st.stats, cmap))
     entry = {"version": version, "operation": "merge_upsert",
              "added": [rel], "removed": touched,
              "pruned_dirs": len(untouched)}
-    if _table_cdf(commits):
+    if st.meta["cdf"]:
         # CDF: diff the pre-image (touched rows only — pruned dirs
-        # pass through unchanged, so they contribute no change rows)
-        # against the merged output; rides as one extra join job
-        if touched:
-            pre = cur.drop("_src")
-            have = set(pre.columns)
-            pre = pre.select(*[
-                F.col(f.name) if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in merged.schema.fields
-            ])
-        else:
-            pre = spark.createDataFrame([], merged.schema)
+        # pass through unchanged) against the merged output
+        pre = cur if touched else spark.createDataFrame([], merged.schema)
         entry["cdc"] = [
             _write_cdc(_diff_frames(pre, merged, key_cols), path, version)
         ]
     if evolved:
-        entry["schema"] = merged.schema.simpleString()
-        entry["schema_json"] = merged.schema.json()
-        entry["schema_evolved"] = True
+        entry.update(_evolved_fields(merged.schema))
     if stats:
         entry["stats"] = {rel: stats}
-    # file-level conflict rules (r14): a lost race rebases in place
-    # when every winner is provably disjoint from this merge's keys
-    # and read set; true conflicts refuse descriptively and the
-    # commit_with_retry wrapper re-runs the whole merge as before
     bk_keys = batch_df.select(*key_cols).distinct()
     return _publish_data_change(
         spark, path, entry, commits, read_dirs=touched,
@@ -2318,6 +2050,56 @@ def merge_upsert(
             F.broadcast(bk_keys), key_cols, "left_semi"),
         key_cols=key_cols, batch_key_stats=bstats,
     )
+
+
+def _matched_dirs(full: DataFrame, cond, live: list[str]) -> list[str]:
+    """The live directories that CONTAIN a row `cond` matches: one
+    pushdown scan of the position-tagged `full` (_read_live
+    keep_position=True) collecting distinct directory prefixes of
+    `_f` — a driver result bounded by the live directory count,
+    never the row count."""
+    from pyspark.sql import functions as F
+
+    hit = {
+        r[0]
+        for r in full.filter(cond)
+        .select(F.regexp_extract(F.col("_f"), _DIR_RE, 1))
+        .distinct()
+        .collect()
+    }
+    return [d for d in live if d in hit]
+
+
+def _write_survivors(
+    spark: SparkSession,
+    path: str,
+    st: _State,
+    dirs: list[str],
+    cond,
+    version: int,
+    stats_cols: list[str],
+) -> tuple[str | None, dict]:
+    """Rewrite `dirs` without the rows `cond` matches (NULL keeps the
+    row, SQL semantics), inheriting bloom columns; (None, {}) when
+    nothing survives."""
+    from pyspark.sql import functions as F
+
+    cmap = st.meta["column_map"]
+    keep = _read_live(spark, path, st, dirs, _struct(st.meta)).filter(
+        ~F.coalesce(cond, F.lit(False)))
+    return _write_data(
+        keep, path, version, stats_cols, column_map=cmap,
+        drop_if_empty=True, bloom_cols=_bloom_cols_logical(st.stats, cmap))
+
+
+def _delete_images(full: DataFrame, cond) -> DataFrame:
+    """CDF delete images of the rows `cond` matches in a
+    position-tagged scan."""
+    from pyspark.sql import functions as F
+
+    cols = [c for c in full.columns if c not in ("_f", "_r")]
+    return full.filter(cond).select(
+        *cols, F.lit("delete").alias("_change_type"))
 
 
 def delete_where(
@@ -2328,25 +2110,23 @@ def delete_where(
     deletion_vectors: bool = False,
 ) -> int | None:
     """DELETE FROM table WHERE condition, as a commit. One pushdown
-    scan over `_metadata.file_path` finds the live directories that
-    actually CONTAIN matching rows (driver result bounded by the live
-    directory count, never row count); only those are rewritten with
-    the survivors — untouched directories stay listed unread, so the
-    rewrite cost tracks the matched data. Returns the new version, or
-    None when nothing matched (no commit published). NULL-safe: rows
-    where the condition is NULL are kept, like SQL DELETE.
+    scan over the row positions finds the live directories that
+    actually CONTAIN matching rows (_matched_dirs); only those are
+    rewritten with the survivors — untouched directories stay listed
+    unread, so the rewrite cost tracks the matched data. Returns the
+    new version, or None when nothing matched (no commit published).
+    NULL-safe: rows where the condition is NULL are kept, like SQL
+    DELETE.
 
-    `deletion_vectors=True` (the Delta DV shape, r11 verdict item 1)
-    touches ZERO data directories: the matched rows' (file, row_index)
-    positions are written to a `dv/` sidecar whose size tracks the
-    MATCHED rows, and the commit lists only it (`dv_added`). Reads
-    reconcile live vectors with a position anti-join (broadcast while
-    small — `_apply_dvs`); `compact` applies them physically and
-    delists them. At 100 TB this turns a selective DELETE from a
-    directory rewrite into a position scan + tiny write. Repeated
-    DV deletes stack (each scans live rows only, so positions are
-    never double-listed); both modes fold the already-live vectors
-    first, so neither can resurrect or re-match a dead row.
+    `deletion_vectors=True` (the Delta DV shape) touches ZERO data
+    directories: the matched rows' positions are written to a `dv/`
+    sidecar whose size tracks the MATCHED rows, and the commit lists
+    only it (`dv_added`). Reads reconcile live vectors with a
+    position anti-join; `compact` applies them physically and delists
+    them. Repeated DV deletes stack (each scans live rows only, so
+    positions are never double-listed); both modes fold the
+    already-live vectors first, so neither can resurrect or re-match
+    a dead row.
 
     `stats_cols` defaults to every column any live directory already
     has stats for, so data-skipping survives the rewrite. (DV deletes
@@ -2354,113 +2134,43 @@ def delete_where(
     the surviving rows, which keeps pruning sound, just looser until
     a compact tightens them.)"""
     from pyspark.sql import functions as F
-    from pyspark.sql import Observation
 
     cond = F.expr(condition) if isinstance(condition, str) else condition
     commits = _read_state_commits(path)
-    version = commits[-1]["version"] + 1
-    live = _fold_live(commits)
-    live_stats = _live_stats(path, commits=commits)
+    st = _table_state(commits)
+    version = st.version + 1
     if stats_cols is None:
-        stats_cols = _stats_cols_logical(live_stats, _column_map(commits))
-
-    schema = _schema_struct(commits)
+        stats_cols = _stats_cols_logical(st.stats, st.meta["column_map"])
     full = _read_live(
-        spark, path, commits, live, schema, keep_position=True
+        spark, path, st, st.live, _struct(st.meta), keep_position=True
     )
 
     if deletion_vectors:
-        # matched positions ride ONE filtered scan straight into the
-        # sidecar write; the count rides it as an Observation
-        obs = Observation()
-        matched = (
-            full.filter(cond)
-            .select(
-                F.col("_f").alias("_dv_file"),
-                F.col("_r").alias("_dv_row"),
-            )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        rel = os.path.join(
-            _DV, f"v{version:08d}-{uuid.uuid4().hex[:12]}"
-        )
-        matched.write.mode("error").parquet(os.path.join(path, rel))
-        n = int(obs.get["n"] or 0)
-        if n == 0:
-            # nothing matched: the just-written empty sidecar is an
-            # unpublished orphan (vacuum reclaims it); publish nothing
-            import shutil
-
-            shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
+        dv_rel, n = _write_dv(full.filter(cond), path, version)
+        if dv_rel is None:
             return None
-        entry = {
-            "version": version, "operation": "delete_dv",
-            "added": [], "removed": [],
-            "dv_added": [rel], "dv_rows": n,
-            "pruned_dirs": len(live),
-            "reader_features": ["deletion_vectors"],
-        }
-        if _table_cdf(commits):
-            tcols = [c for c in full.columns if c not in ("_f", "_r")]
-            entry["cdc"] = [_write_cdc(
-                full.filter(cond).select(
-                    *tcols, F.lit("delete").alias("_change_type")),
-                path, version,
-            )]
-        # read set = every live dir (the position scan saw them all);
-        # a lost race rebases over winners whose added rows the
-        # predicate provably never matches (r14 file-level rules)
-        return _publish_data_change(
-            spark, path, entry, commits, read_dirs=live,
-            conflict_rows=lambda df: df.filter(
-                F.coalesce(cond, F.lit(False))),
-        )
-
-    hit = {
-        r[0]
-        for r in full.filter(cond)
-        .select(
-            F.regexp_extract(
-                # _f is the table-relative FILE path (tagged by
-                # _read_live); its directory prefix is the relpath —
-                # clustered-compact dirs register their _bucket= hive
-                # subdir as the relpath, so capture it when present
-                F.col("_f"),
-                r"(data/v\d{8}-[0-9a-f]+(?:/_bucket=\d+)?)",
-                1,
-            ).alias("d")
-        )
-        .distinct()
-        .collect()
-    }
-    touched = [d for d in live if d in hit]
-    if not touched:
-        return None
-    keep = _read_live(spark, path, commits, touched, schema).filter(
-        ~F.coalesce(cond, F.lit(False)))
-    added, entry_stats = [], {}
-    rel, stats = _write_data(
-        keep, path, version, stats_cols,
-        column_map=_column_map(commits), drop_if_empty=True,
-        bloom_cols=_bloom_cols_logical(live_stats, _column_map(commits)))
-    if rel:
-        added = [rel]
+        entry = {"version": version, "operation": "delete_dv",
+                 "added": [], "removed": [],
+                 "pruned_dirs": len(st.live), **_dv_entry(dv_rel, n)}
+    else:
+        touched = _matched_dirs(full, cond, st.live)
+        if not touched:
+            return None
+        rel, stats = _write_survivors(
+            spark, path, st, touched, cond, version, stats_cols)
+        entry = {"version": version, "operation": "delete",
+                 "added": [rel] if rel else [], "removed": touched,
+                 "pruned_dirs": len(st.live) - len(touched)}
         if stats:
-            entry_stats = {rel: stats}
-    entry = {"version": version, "operation": "delete",
-             "added": added, "removed": touched,
-             "pruned_dirs": len(live) - len(touched)}
-    if _table_cdf(commits):
-        tcols = [c for c in full.columns if c not in ("_f", "_r")]
-        entry["cdc"] = [_write_cdc(
-            full.filter(cond).select(
-                *tcols, F.lit("delete").alias("_change_type")),
-            path, version,
-        )]
-    if entry_stats:
-        entry["stats"] = entry_stats
+            entry["stats"] = {rel: stats}
+    if st.meta["cdf"]:
+        entry["cdc"] = [
+            _write_cdc(_delete_images(full, cond), path, version)]
+    # read set = every live dir (the position scan saw them all); a
+    # lost race rebases over winners whose added rows the predicate
+    # provably never matches
     return _publish_data_change(
-        spark, path, entry, commits, read_dirs=live,
+        spark, path, entry, commits, read_dirs=st.live,
         conflict_rows=lambda df: df.filter(
             F.coalesce(cond, F.lit(False))),
     )
@@ -2470,17 +2180,15 @@ def _merge_on_read(
     spark: SparkSession,
     path: str,
     commits: list[dict],
+    st: _State,
     batch_df: DataFrame,
     key_cols: list[str],
     ts_col: str,
     touched: list[str],
     n_pruned: int,
-    version: int,
     stats_cols: list[str],
-    cmap: dict[str, str],
-    evolved: bool = False,
-    bloom_cols: list[str] | None = None,
-    batch_key_stats: dict | None = None,
+    evolved: bool,
+    batch_key_stats: dict | None,
 ) -> int:
     """MERGE-ON-READ (Iceberg's merge-on-read / Delta's DV MERGE —
     merge_upsert's merge_on_read=True): instead of rewriting the
@@ -2488,51 +2196,43 @@ def _merge_on_read(
     via a DELETION-VECTOR sidecar (position list, sized by the
     MATCHED rows) and the batch's winning rows land as one appended
     directory — the commit touches ZERO existing data directories,
-    so a 20k-row upsert into a 100 TB table costs the batch plus a
-    position scan of the key-overlapping directories (stats pruning
-    applies to the scan exactly as to the rewrite), deferring the
-    physical reconciliation to the next compact. The read-time tax
-    is the DV anti-join on the dirty directories only (_read_live's
-    clean/dirty split). Winner semantics are the rewrite's: latest
+    so an upsert costs the batch plus a position scan of the
+    key-overlapping directories (stats pruning applies to the scan
+    exactly as to the rewrite), deferring the physical reconciliation
+    to the next compact. Winner semantics are the rewrite's: latest
     ts_col per key, batch wins ties; batch rows older than the
     current row are dropped. Assumes a key-unique table (the
-    create+merge lifecycle guarantee; with duplicate current keys
-    the rewrite dedups, this path keeps the newer duplicate).
+    create+merge lifecycle guarantee; with duplicate current keys the
+    rewrite dedups, this path keeps the newer duplicate).
 
-    `evolved=True` (r12 verdict item 2 — replaces the refusal that
-    previously lived here): the batch legally ADDS columns
-    (merge_upsert's shared evolution gate already vetted it) and
-    this commit re-records the evolved schema: losers die via the
-    vector exactly as before (positions are shape-agnostic), winners
-    land in the NEW shape as the appended directory, and every old
-    directory keeps reading NULL in the added columns through
-    _read_live's explicit-schema scan (qup13's recorded-schema
-    semantics — no footer merge). Time travel before this commit
-    keeps the old shape. Column order of the recorded schema matches
-    the rewrite path's unionByName(allowMissingColumns=True): table
-    columns first, then the batch's added columns in batch order."""
-    from pyspark.sql import Observation
+    `evolved=True`: the batch legally ADDS columns (the shared
+    evolution gate vetted it) and this commit re-records the evolved
+    schema: losers die via the vector as before (positions are
+    shape-agnostic), winners land in the NEW shape, and old
+    directories read NULL in the added columns. The recorded column
+    order matches the rewrite path's unionByName: table columns
+    first, then the batch's added columns in batch order."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    version = st.version + 1
+    cmap = st.meta["column_map"]
     wb = Window.partitionBy(*key_cols).orderBy(F.col(ts_col).desc())
     b = (
         batch_df.withColumn("_rn", F.row_number().over(wb))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    schema = _schema_struct(commits)
-    cur = _read_live(
-        spark, path, commits, touched, schema, keep_position=True
-    ) if touched else None
+    schema = _struct(st.meta)
     dv_rel, n_dv = None, 0
     cur_wins = None
     losers = None
-    if cur is not None:
-        # the dedup window over the batch and the DV-aware touched-dir
-        # scan each feed several actions below (DV write, emptiness
-        # probe, data write, CDC) — materialize once, matched-rows /
-        # batch-rows sized respectively (r12 review)
+    if touched:
+        cur = _read_live(
+            spark, path, st, touched, schema, keep_position=True)
+        # the batch window and the DV-aware touched-dir scan each feed
+        # several actions below (DV write, data write, CDC):
+        # materialize once, batch-sized and matched-rows-sized
         b = b.localCheckpoint(eager=True)
         bk = b.select(*key_cols, F.col(ts_col).alias("_bts"))
         j = cur.join(F.broadcast(bk), key_cols, "inner").localCheckpoint(
@@ -2540,21 +2240,7 @@ def _merge_on_read(
         )
         # batch wins ties — the rewrite path's _src tiebreak
         losers = j.filter(F.col("_bts") >= F.col(ts_col))
-        obs = Observation()
-        dv = losers.select(
-            F.col("_f").alias("_dv_file"), F.col("_r").alias("_dv_row")
-        ).observe(obs, F.count(F.lit(1)).alias("n"))
-        rel_try = os.path.join(
-            _DV, f"v{version:08d}-{uuid.uuid4().hex[:12]}"
-        )
-        dv.write.mode("error").parquet(os.path.join(path, rel_try))
-        n_dv = int(obs.get["n"] or 0)
-        if n_dv:
-            dv_rel = rel_try
-        else:
-            import shutil
-
-            shutil.rmtree(os.path.join(path, rel_try), ignore_errors=True)
+        dv_rel, n_dv = _write_dv(losers, path, version)
         cur_wins = (
             j.filter(F.col("_bts") < F.col(ts_col))
             .select(*key_cols).distinct()
@@ -2562,71 +2248,38 @@ def _merge_on_read(
     ins = b
     if cur_wins is not None:
         ins = b.join(F.broadcast(cur_wins), key_cols, "left_anti")
-    out_schema = schema
     if evolved:
-        # evolved logical shape = table columns (table order) + the
-        # batch's added columns (batch order) — byte-identical column
-        # order to the rewrite path's unionByName, so both physical
-        # strategies record the same schema for the same merge
         old_names = [f.name for f in schema.fields]
-        ordered = old_names + [
-            f.name for f in b.schema.fields
-            if f.name not in set(old_names)
-        ]
-        ins = ins.select(*ordered)
-        out_schema = ins.schema
-    added, entry_stats = [], {}
+        ins = ins.select(*old_names, *[
+            f.name for f in b.schema.fields if f.name not in set(old_names)
+        ])
     rel, stats = _write_data(
         ins, path, version, stats_cols,
-        check=_table_gate(commits), column_map=cmap,
-        drop_if_empty=True, bloom_cols=bloom_cols,
+        check=_table_gate(st.meta), column_map=cmap,
+        drop_if_empty=True, bloom_cols=_bloom_cols_logical(st.stats, cmap),
     )
-    if rel:
-        added = [rel]
-        if stats:
-            entry_stats = {rel: stats}
     entry = {
         "version": version, "operation": "merge_upsert",
         "merge_on_read": True,
-        "added": added, "removed": [],
-        "pruned_dirs": n_pruned,
+        "added": [rel] if rel else [], "removed": [],
+        "pruned_dirs": n_pruned, **_dv_entry(dv_rel, n_dv),
     }
-    if dv_rel:
-        entry["dv_added"] = [dv_rel]
-        entry["dv_rows"] = n_dv
-        entry["reader_features"] = ["deletion_vectors"]
     if evolved:
-        entry["schema"] = out_schema.simpleString()
-        entry["schema_json"] = out_schema.json()
-        entry["schema_evolved"] = True
-    if entry_stats:
-        entry["stats"] = entry_stats
-    if _table_cdf(commits):
-        # the rewrite merge's exact emission semantics, via the same
-        # helper: keys only in the batch diff as inserts, superseded
-        # keys as pre/post pairs, and VALUE-IDENTICAL replacements as
-        # nothing — a replayed batch is a physical change (DV + new
-        # file) but a logical no-op, and the feed reports logical
-        # changes (r12 review: the hand-rolled version emitted
-        # spurious pairs the rewrite path suppresses). Under
-        # evolution the pre-images NULL-fill the added columns, the
-        # rewrite path's exact projection.
-        tcols = [f.name for f in out_schema.fields]
-        post = ins.select(*tcols)
-        if losers is not None:
-            have = set(losers.columns)
-            pre = losers.select(*[
-                F.col(f.name) if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in out_schema.fields
-            ])
-        else:
-            pre = spark.createDataFrame([], post.schema)
+        entry.update(_evolved_fields(ins.schema))
+    if stats:
+        entry["stats"] = {rel: stats}
+    if st.meta["cdf"]:
+        # the rewrite merge's emission semantics via the same diff:
+        # batch-only keys are inserts, superseded keys pre/post pairs,
+        # VALUE-IDENTICAL replacements nothing (a replayed batch is a
+        # physical change but a logical no-op)
+        pre = losers if losers is not None else spark.createDataFrame(
+            [], ins.schema)
         entry["cdc"] = [_write_cdc(
-            _diff_frames(pre, post, key_cols), path, version,
+            _diff_frames(pre, ins, key_cols), path, version,
         )]
     # read set = the key-overlapping dirs whose positions feed the
-    # vector; same file-level rebase rules as the rewrite path (r14)
+    # vector; same file-level rebase rules as the rewrite path
     return _publish_data_change(
         spark, path, entry, commits, read_dirs=touched,
         conflict_rows=lambda df: df.join(
@@ -2657,81 +2310,81 @@ def replace_where(
     Cost shape is DELETE's: one pushdown position scan finds the
     directories that CONTAIN matching rows; only those are rewritten
     (survivors), untouched directories stay listed unread, and the
-    batch lands as its own directory — so replacing one day of a
-    100 TB table costs that day's data, not the table. The table
-    CHECK constraint still validates the batch; live deletion
-    vectors are reconciled on the survivor read; CDF tables record
-    delete images of the replaced rows and insert images of the
-    batch in the same commit."""
+    batch lands as its own directory. The table CHECK constraint
+    still validates the batch; live deletion vectors are reconciled
+    on the survivor read; CDF tables record delete images of the
+    replaced rows and insert images of the batch in the same
+    commit. A lost race raises ConcurrentWriteError."""
     from pyspark.sql import functions as F
 
     if not isinstance(condition, str):
         raise ValueError("replace_where takes the predicate as SQL text")
     cond = F.expr(condition)
-    commits = _read_state_commits(path)
-    batch_df = _fill_generated(_fill_defaults(batch_df, commits), commits)
-    _evolution_gate(commits, batch_df, False, "replace_where batch")
-    version = commits[-1]["version"] + 1
-    live = _fold_live(commits)
-    live_stats = _live_stats(path, commits=commits)
+    st = _table_state(_read_state_commits(path))
+    batch_df = _fill_generated(_fill_defaults(batch_df, st.meta), st.meta)
+    _evolution_gate(st.meta, batch_df, False, "replace_where batch")
+    version = st.version + 1
+    cmap = st.meta["column_map"]
     if stats_cols is None:
-        stats_cols = _stats_cols_logical(live_stats, _column_map(commits))
-    cmap = _column_map(commits)
-    schema = _schema_struct(commits)
+        stats_cols = _stats_cols_logical(st.stats, cmap)
     full = _read_live(
-        spark, path, commits, live, schema, keep_position=True
+        spark, path, st, st.live, _struct(st.meta), keep_position=True
     )
     # the batch-scope gate rides the batch write itself: every row
     # must SATISFY the predicate (strictly — NULL is out of scope)
     scope = f"coalesce(({condition}), false)"
-    check = _table_gate(commits)
+    check = _table_gate(st.meta)
     gate = f"({scope}) AND ({check})" if check else scope
-    bcols = _bloom_cols_logical(live_stats, cmap)
     batch_rel, batch_stats = _write_data(
         batch_df, path, version, stats_cols, check=gate, column_map=cmap,
-        bloom_cols=bcols,
+        bloom_cols=_bloom_cols_logical(st.stats, cmap),
     )
-    hit = {
-        r[0]
-        for r in full.filter(cond)
-        .select(
-            F.regexp_extract(
-                F.col("_f"),
-                r"(data/v\d{8}-[0-9a-f]+(?:/_bucket=\d+)?)",
-                1,
-            ).alias("d")
-        )
-        .distinct()
-        .collect()
-    }
-    touched = [d for d in live if d in hit]
+    touched = _matched_dirs(full, cond, st.live)
     added, entry_stats = [batch_rel], {}
     if batch_stats:
         entry_stats[batch_rel] = batch_stats
     if touched:
-        keep = _read_live(spark, path, commits, touched, schema).filter(
-            ~F.coalesce(cond, F.lit(False)))
-        rel, stats = _write_data(
-            keep, path, version, stats_cols, column_map=cmap,
-            drop_if_empty=True, bloom_cols=bcols)
+        rel, stats = _write_survivors(
+            spark, path, st, touched, cond, version, stats_cols)
         if rel:
             added.append(rel)
             if stats:
                 entry_stats[rel] = stats
     entry = {"version": version, "operation": "replace_where",
              "added": added, "removed": touched,
-             "pruned_dirs": len(live) - len(touched)}
-    if _table_cdf(commits):
-        tcols = [c for c in full.columns if c not in ("_f", "_r")]
-        deletes = full.filter(cond).select(
-            *tcols, F.lit("delete").alias("_change_type"))
+             "pruned_dirs": len(st.live) - len(touched)}
+    if st.meta["cdf"]:
+        deletes = _delete_images(full, cond)
         inserts = batch_df.select(
-            *tcols, F.lit("insert").alias("_change_type"))
+            *deletes.columns[:-1], F.lit("insert").alias("_change_type"))
         entry["cdc"] = [_write_cdc(
             deletes.unionByName(inserts), path, version)]
     if entry_stats:
         entry["stats"] = entry_stats
     return _publish(path, entry)
+
+
+def _apply_set(
+    df: DataFrame, cols: list[str], cond, set_exprs: dict, meta: dict
+) -> DataFrame:
+    """UPDATE's SET projection of `df` onto `cols`: where `cond` holds
+    (NULL counts as false) each assigned column takes its expression
+    CAST back to the column's current type, every other value passes
+    through, and generated columns the UPDATE did not SET re-derive
+    (_fill_generated)."""
+    from pyspark.sql import functions as F
+
+    types = {f.name: f.dataType for f in df.schema.fields}
+    matched = F.coalesce(cond, F.lit(False))
+    out = []
+    for c in cols:
+        if c in set_exprs:
+            e = set_exprs[c]
+            e = (F.expr(e) if isinstance(e, str) else e).cast(types[c])
+            out.append(F.when(matched, e).otherwise(F.col(c)).alias(c))
+        else:
+            out.append(F.col(c))
+    return _fill_generated(df.select(*out), meta, keep=set(set_exprs))
 
 
 def update_where(
@@ -2752,20 +2405,13 @@ def update_where(
     condition leaves the row unchanged. Returns the new version, or
     None when nothing matched (no commit published).
 
-    `merge_on_read=True` (Delta's DV-based UPDATE — r12 verdict item
-    1, the last writer to get a zero-rewrite variant): instead of
-    rewriting the directories that contain matches, the matched rows'
-    positions die via a DELETION-VECTOR sidecar and their UPDATED
-    images land as ONE appended directory — the commit touches zero
-    existing data directories, so a one-row UPDATE into a 100 TB
-    table costs one position scan plus a one-row write, deferring
-    physical reconciliation to the next compact (which applies the
-    vectors and delists them). Read-time tax is the DV anti-join on
-    the dirty directories only (_read_live's clean/dirty split).
-    Semantics are EXACTLY the rewrite path's — same matched set, same
-    cast-back assignments, same CDC pre/post pairs — just a different
-    physical plan; qup29 pins the hash equality both DV-served and
-    post-compact.
+    `merge_on_read=True` (Delta's DV-based UPDATE, _update_on_read):
+    the matched rows' positions die via a DELETION-VECTOR sidecar and
+    their UPDATED images land as ONE appended directory — the commit
+    touches zero existing data directories. Semantics are EXACTLY the
+    rewrite path's — same matched set, same cast-back assignments,
+    same CDC pre/post pairs; qup29 pins the hash equality both
+    DV-served and post-compact.
 
     `set_exprs` maps column name -> SQL expression string or Column;
     expressions may reference any table column (e.g. {"price":
@@ -2781,15 +2427,14 @@ def update_where(
 
     cond = F.expr(condition) if isinstance(condition, str) else condition
     commits = _read_state_commits(path)
-    version = commits[-1]["version"] + 1
-    live = _fold_live(commits)
-    live_stats = _live_stats(path, commits=commits)
+    st = _table_state(commits)
+    version = st.version + 1
+    cmap = st.meta["column_map"]
     if stats_cols is None:
-        stats_cols = _stats_cols_logical(live_stats, _column_map(commits))
-
-    schema = _schema_struct(commits)
+        stats_cols = _stats_cols_logical(st.stats, cmap)
+    schema = _struct(st.meta)
     full = _read_live(
-        spark, path, commits, live, schema, keep_position=True
+        spark, path, st, st.live, schema, keep_position=True
     )
     bad = [c for c in set_exprs if c not in full.columns]
     if bad:
@@ -2797,62 +2442,33 @@ def update_where(
 
     if merge_on_read:
         return _update_on_read(
-            spark, path, commits, full, cond, set_exprs, live,
-            version, stats_cols,
-            bloom_cols=_bloom_cols_logical(
-                live_stats, _column_map(commits)),
-        )
-    hit = {
-        r[0]
-        for r in full.filter(cond)
-        .select(
-            F.regexp_extract(
-                F.col("_f"),
-                r"(data/v\d{8}-[0-9a-f]+(?:/_bucket=\d+)?)",
-                1,
-            ).alias("d")
-        )
-        .distinct()
-        .collect()
-    }
-    touched = [d for d in live if d in hit]
+            spark, path, commits, st, full, cond, set_exprs, stats_cols)
+    touched = _matched_dirs(full, cond, st.live)
     if not touched:
         return None
-    cur = _read_live(spark, path, commits, touched, schema)
-    types = {f.name: f.dataType for f in cur.schema.fields}
-    matched = F.coalesce(cond, F.lit(False))  # NULL cond -> unchanged
-    out_cols = []
-    for c in cur.columns:
-        if c in set_exprs:
-            e = set_exprs[c]
-            e = (F.expr(e) if isinstance(e, str) else e).cast(types[c])
-            out_cols.append(F.when(matched, e).otherwise(F.col(c)).alias(c))
-        else:
-            out_cols.append(F.col(c))
-    updated = _regen(cur.select(*out_cols), commits, set_exprs)
+    cur = _read_live(spark, path, st, touched, schema)
+    updated = _apply_set(cur, cur.columns, cond, set_exprs, st.meta)
     rel, stats = _write_data(
-        updated, path, version, stats_cols, check=_table_gate(commits),
-        column_map=_column_map(commits),
-        bloom_cols=_bloom_cols_logical(live_stats, _column_map(commits)))
+        updated, path, version, stats_cols, check=_table_gate(st.meta),
+        column_map=cmap, bloom_cols=_bloom_cols_logical(st.stats, cmap))
     entry = {"version": version, "operation": "update",
              "added": [rel], "removed": touched,
-             "pruned_dirs": len(live) - len(touched)}
-    if _table_cdf(commits):
+             "pruned_dirs": len(st.live) - len(touched)}
+    if st.meta["cdf"]:
         # the Delta-complete UPDATE pair: pre-images are the matched
         # rows' ORIGINAL values, post-images the transformation
         # applied to exactly those rows — both change-sized
-        hit_rows = cur.filter(matched)
+        hit_rows = cur.filter(F.coalesce(cond, F.lit(False)))
         pre = hit_rows.select(
             "*", F.lit("update_preimage").alias("_change_type"))
-        post = _regen(
-            hit_rows.select(*out_cols), commits, set_exprs
-        ).select(
-            "*", F.lit("update_postimage").alias("_change_type"))
+        post = _apply_set(
+            hit_rows, cur.columns, cond, set_exprs, st.meta
+        ).select("*", F.lit("update_postimage").alias("_change_type"))
         entry["cdc"] = [_write_cdc(pre.unionByName(post), path, version)]
     if stats:
         entry["stats"] = {rel: stats}
     return _publish_data_change(
-        spark, path, entry, commits, read_dirs=live,
+        spark, path, entry, commits, read_dirs=st.live,
         conflict_rows=lambda df: df.filter(
             F.coalesce(cond, F.lit(False))),
     )
@@ -2862,13 +2478,11 @@ def _update_on_read(
     spark: SparkSession,
     path: str,
     commits: list[dict],
+    st: _State,
     full: DataFrame,
     cond,
     set_exprs: dict,
-    live: list[str],
-    version: int,
     stats_cols: list[str],
-    bloom_cols: list[str] | None = None,
 ) -> int | None:
     """DV-mode UPDATE (update_where's merge_on_read=True): the matched
     rows' positions go to a deletion-vector sidecar, their updated
@@ -2876,43 +2490,30 @@ def _update_on_read(
     NOTHING — the Delta DV-UPDATE shape (vector the old rows, append
     the new images, reconcile at compact). The matched scan feeds
     three consumers (the vector, the image write, the CDC pair), so
-    it is materialized ONCE, matched-rows-sized."""
+    it is materialized ONCE, matched-rows-sized; the vector write
+    counts it."""
     from pyspark.sql import functions as F
 
-    matched = F.coalesce(cond, F.lit(False))  # NULL cond -> unchanged
-    hit_rows = full.filter(matched).localCheckpoint(eager=True)
-    n_dv = hit_rows.count()
-    if n_dv == 0:
+    version = st.version + 1
+    cmap = st.meta["column_map"]
+    hit_rows = full.filter(F.coalesce(cond, F.lit(False))).localCheckpoint(
+        eager=True)
+    dv_rel, n_dv = _write_dv(hit_rows, path, version)
+    if dv_rel is None:
         return None
-
     tcols = [c for c in full.columns if c not in ("_f", "_r")]
-    types = {f.name: f.dataType for f in full.schema.fields}
-    out_cols = []
-    for c in tcols:
-        if c in set_exprs:
-            e = set_exprs[c]
-            e = (F.expr(e) if isinstance(e, str) else e).cast(types[c])
-            out_cols.append(e.alias(c))
-        else:
-            out_cols.append(F.col(c))
-    updated = _regen(hit_rows.select(*out_cols), commits, set_exprs)
-
-    dv_rel = os.path.join(_DV, f"v{version:08d}-{uuid.uuid4().hex[:12]}")
-    hit_rows.select(
-        F.col("_f").alias("_dv_file"), F.col("_r").alias("_dv_row")
-    ).write.mode("error").parquet(os.path.join(path, dv_rel))
+    updated = _apply_set(hit_rows, tcols, cond, set_exprs, st.meta)
     rel, stats = _write_data(
-        updated, path, version, stats_cols, check=_table_gate(commits),
-        column_map=_column_map(commits), bloom_cols=bloom_cols)
+        updated, path, version, stats_cols, check=_table_gate(st.meta),
+        column_map=cmap, bloom_cols=_bloom_cols_logical(st.stats, cmap))
     entry = {
         "version": version, "operation": "update",
         "merge_on_read": True,
         "added": [rel], "removed": [],
-        "dv_added": [dv_rel], "dv_rows": n_dv,
-        "pruned_dirs": len(live),
-        "reader_features": ["deletion_vectors"],
+        "pruned_dirs": len(st.live),
+        **_dv_entry(dv_rel, n_dv),
     }
-    if _table_cdf(commits):
+    if st.meta["cdf"]:
         # identical emission to the rewrite path: change-sized
         # pre/post pairs from the same matched set
         pre = hit_rows.select(
@@ -2923,7 +2524,7 @@ def _update_on_read(
     if stats:
         entry["stats"] = {rel: stats}
     return _publish_data_change(
-        spark, path, entry, commits, read_dirs=live,
+        spark, path, entry, commits, read_dirs=st.live,
         conflict_rows=lambda df: df.filter(
             F.coalesce(cond, F.lit(False))),
     )
@@ -2940,10 +2541,14 @@ def compact(
     """OPTIMIZE: rewrite the live directories, as a commit — the data
     is logically unchanged, old versions stay time-travelable, and
     `vacuum` later reclaims the delisted small directories. A no-op
-    (returns None) below `min_dirs` live directories. Pick
+    (returns None) below `min_dirs` live directories, unless live
+    deletion vectors or `cluster_by` ask for the rewrite. Pick
     `target_partitions` by size (e.g. live bytes / 128 MB) for fact
     tables; the default 1 is the dimension-table setting. Stats
-    columns are inherited so data-skipping keeps working.
+    columns are inherited so data-skipping keeps working. The rewrite
+    reads through the live deletion vectors and the commit delists
+    them all; it also goes through the logical projection, so the
+    physical names drop_column reserved are cleared.
 
     CLUSTERED OPTIMIZE (`cluster_by=[cols]`, the liquid-clustering
     shape): instead of one directory, the table is range-partitioned
@@ -2952,63 +2557,45 @@ def compact(
     so subsequent merges and deletes keyed near those columns prune
     to a few directories no matter how the table was originally
     laid down. Uses repartitionByRange (sampled range boundaries —
-    the distributed shape; boundaries affect layout only, never the
-    data) and registers each range bucket as its own relpath inside
-    one write (a _bucket=i hive subdir; the bucket column itself is
-    not part of the table schema and disappears under read_table's
-    explicit schema).
+    boundaries affect layout only, never the data) and registers
+    each range bucket as its own relpath inside one write (a
+    _bucket=i hive subdir; the bucket column itself is not part of
+    the table schema and disappears under read_table's explicit
+    schema).
 
-    Z-ORDERED OPTIMIZE (`zorder=True`, exactly two cluster columns —
+    Z-ORDERED OPTIMIZE (`zorder=True`, two or more cluster columns —
     Delta's ZORDER BY): lexicographic range clustering gives tight
-    per-directory ranges on the FIRST cluster column only (every
-    directory spans the second's full range); the Z variant
-    range-partitions on the Morton interleave of the two columns
-    (operators/layout.py zvalue over width_bucket-normalized values —
-    normalization affects layout only, never data), so every
-    directory is a tight BOX in both dimensions and predicates on
-    EITHER column prune. The structural contrast (second-column
-    delete touches all lexicographic buckets but few Z buckets) is
-    pinned in test_capabilities.py::test_commit_log_zorder_compact."""
+    per-directory ranges on the FIRST cluster column only; the Z
+    variant range-partitions on the Morton interleave of the
+    normalized columns (operators/layout.py zvalue_n over
+    width_bucket-normalized values — layout only, never data), so
+    every directory is a tight BOX in all dimensions and predicates
+    on EITHER column prune. The structural contrast is pinned in
+    test_capabilities.py::test_commit_log_zorder_compact."""
     from pyspark.sql import functions as F
 
-    commits = _read_state_commits(path)
-    live = _fold_live(commits)
-    # compact is where deletion vectors are PHYSICALLY applied: the
-    # rewrite reads through them, so the output contains survivors
-    # only, and the commit delists every live vector — after this the
-    # read path's anti-join side is empty again
-    live_dvs = _fold_live_dvs(commits)
-    # min_dirs is the small-file heuristic for plain OPTIMIZE; an
-    # explicit cluster_by re-layout request is never silently ignored
-    # (r11 review finding: a single-directory interleaved table is
-    # exactly the retrofit case), and neither is a table with live
-    # deletion vectors — reconciling them is a reason to compact
-    if len(live) < min_dirs and not cluster_by and not live_dvs:
+    st = _table_state(_read_state_commits(path))
+    live = st.live
+    if len(live) < min_dirs and not cluster_by and not st.dvs:
         return None
-    version = commits[-1]["version"] + 1
-    live_stats = _live_stats(path, commits=commits)
-    cmap = _column_map(commits)
-    stats_cols = _stats_cols_logical(live_stats, cmap)
-    schema = _schema_struct(commits)
-    full = _read_live(spark, path, commits, live, schema)
+    version = st.version + 1
+    cmap = st.meta["column_map"]
+    stats_cols = _stats_cols_logical(st.stats, cmap)
+    schema = _struct(st.meta)
+    full = _read_live(spark, path, st, live, schema)
     n_out = max(int(target_partitions), 1)
-    # compact rewrites EVERY live directory through the logical
-    # projection, so physical names reserved by drop_column are
-    # really gone from the live files — clear the reservation (the
-    # name becomes addable again by schema evolution)
-    unreserve = bool(_reserved_physical(commits))
+    entry = {"version": version, "operation": "optimize",
+             "removed": live, "dv_removed": st.dvs}
+    if st.meta["reserved_physical"]:
+        entry["reserved_physical"] = []
 
     if not cluster_by:
         rel, stats = _write_data(
             full.repartition(n_out), path, version, stats_cols,
             column_map=cmap,
-            bloom_cols=_bloom_cols_logical(live_stats, cmap),
+            bloom_cols=_bloom_cols_logical(st.stats, cmap),
         )
-        entry = {"version": version, "operation": "optimize",
-                 "added": [rel], "removed": live,
-                 "dv_removed": live_dvs}
-        if unreserve:
-            entry["reserved_physical"] = []
+        entry["added"] = [rel]
         if stats:
             entry["stats"] = {rel: stats}
         return _publish(path, entry)
@@ -3026,9 +2613,7 @@ def compact(
 
         # normalize each dimension to 0..255 via width_bucket over its
         # observed range (one stats pass; layout-only, never the data);
-        # N dimensions interleave round-robin (zvalue_n — identical to
-        # the original 2-column layout when N=2), so every directory
-        # is a tight box in ALL cluster dimensions
+        # N dimensions interleave round-robin (zvalue_n)
         aggs = []
         for i, c in enumerate(cluster_by):
             aggs += [F.min(c).alias(f"lo{i}"), F.max(c).alias(f"hi{i}")]
@@ -3086,8 +2671,7 @@ def compact(
         if d.startswith("_bucket=")
     )
     # ONE grouped pass over the written data computes every bucket's
-    # stats (the hive read exposes _bucket as a partition column) —
-    # not a per-bucket driver loop of read jobs (r11 review finding)
+    # stats (the hive read exposes _bucket as a partition column)
     added, entry_stats = [], {}
     grouped = _bucket_stats(
         spark.read.parquet(os.path.join(path, base_rel)), stats_cols
@@ -3095,15 +2679,11 @@ def compact(
     for b in buckets:
         rel = os.path.join(base_rel, b)
         added.append(rel)
-        st = grouped.get(int(b.split("=", 1)[1]), {})
-        if st:
-            entry_stats[rel] = st
-    entry = {"version": version, "operation": "optimize",
-             "added": added, "removed": live,
-             "dv_removed": live_dvs,
-             "clustered_by": list(cluster_by)}
-    if unreserve:
-        entry["reserved_physical"] = []
+        bst = grouped.get(int(b.split("=", 1)[1]), {})
+        if bst:
+            entry_stats[rel] = bst
+    entry["added"] = added
+    entry["clustered_by"] = list(cluster_by)
     if zorder:
         entry["zorder"] = True
     if entry_stats:
@@ -3118,16 +2698,14 @@ def compact_small(
     target_partitions: int = 1,
     min_dirs: int = 2,
 ) -> int | None:
-    """Size-SELECTIVE OPTIMIZE (r13 — closing the r12 watch item
-    'auto-compact is full-table'): rewrite only the live directories
+    """Size-SELECTIVE OPTIMIZE: rewrite only the live directories
     whose data bytes are under `max_dir_bytes`, leaving the
     well-sized ones untouched and unread — the Delta OPTIMIZE
-    file-selection semantics, and the fact-table maintenance shape:
-    on a 100 TB table the cost tracks the SMALL files a micro-batch
-    ingest leaves behind, never the compacted bulk. A no-op
-    (returns None) below `min_dirs` qualifying directories. Sizes
-    come from a driver-side listing (stat calls bounded by the live
-    file count).
+    file-selection semantics and the fact-table maintenance shape:
+    the cost tracks the SMALL files a micro-batch ingest leaves
+    behind, never the compacted bulk. A no-op (returns None) below
+    `min_dirs` qualifying directories. Sizes come from a driver-side
+    listing (stat calls bounded by the live file count).
 
     Deletion vectors are handled surgically, not wholesale: the
     rewrite reads the selected directories THROUGH the live vectors
@@ -3141,13 +2719,8 @@ def compact_small(
     fresh stats."""
     from pyspark.sql import functions as F
 
-    commits = _read_state_commits(path)
-    live = _fold_live(commits)
-    cmap = _column_map(commits)
-    live_stats = _live_stats(path, commits=commits)
-    stats_cols = _stats_cols_logical(live_stats, cmap)
-    schema = _schema_struct(commits)
-    live_dvs = _fold_live_dvs(commits)
+    st = _table_state(_read_state_commits(path))
+    cmap = st.meta["column_map"]
 
     def _dir_bytes(rel: str) -> int:
         total = 0
@@ -3157,64 +2730,54 @@ def compact_small(
                     total += os.path.getsize(os.path.join(root, f))
         return total
 
-    small = [d for d in live if _dir_bytes(d) < int(max_dir_bytes)]
+    small = [d for d in st.live if _dir_bytes(d) < int(max_dir_bytes)]
     if len(small) < max(int(min_dirs), 2):
         return None
-    version = commits[-1]["version"] + 1
-    merged = _read_live(spark, path, commits, small, schema)
+    version = st.version + 1
+    merged = _read_live(spark, path, st, small, _struct(st.meta))
     rel, stats = _write_data(
         merged.repartition(max(int(target_partitions), 1)),
-        path, version, stats_cols, column_map=cmap, drop_if_empty=True,
-        bloom_cols=_bloom_cols_logical(live_stats, cmap),
+        path, version, _stats_cols_logical(st.stats, cmap),
+        column_map=cmap, drop_if_empty=True,
+        bloom_cols=_bloom_cols_logical(st.stats, cmap),
     )
     entry = {
         "version": version, "operation": "optimize",
         "small_only": True, "max_dir_bytes": int(max_dir_bytes),
         "added": [rel] if rel else [], "removed": small,
-        "pruned_dirs": len(live) - len(small),
+        "pruned_dirs": len(st.live) - len(small),
     }
-    if live_dvs:
+    if st.dvs:
         # vectors aimed at selected dirs were applied by the read;
         # the rest survive as one residual sidecar
         dv = spark.read.parquet(
-            *[os.path.join(path, d) for d in live_dvs]
-        ).select("_dv_file", "_dv_row")
-        dircol = F.regexp_extract(
-            "_dv_file", r"(data/v\d{8}-[0-9a-f]+(?:/_bucket=\d+)?)", 1
-        )
-        resid = dv.filter(~dircol.isin(small)).localCheckpoint(
-            eager=True)
-        n_resid = resid.count()
-        entry["dv_removed"] = live_dvs
-        if n_resid:
-            dv_rel = os.path.join(
-                _DV, f"v{version:08d}-{uuid.uuid4().hex[:12]}"
-            )
-            resid.write.mode("error").parquet(os.path.join(path, dv_rel))
-            entry["dv_added"] = [dv_rel]
-            entry["dv_rows"] = n_resid
-            entry["reader_features"] = ["deletion_vectors"]
-    if stats and rel:
+            *[os.path.join(path, d) for d in st.dvs]
+        ).select(F.col("_dv_file").alias("_f"), F.col("_dv_row").alias("_r"))
+        resid = dv.filter(~F.regexp_extract("_f", _DIR_RE, 1).isin(small))
+        entry["dv_removed"] = st.dvs
+        entry.update(_dv_entry(*_write_dv(resid, path, version)))
+    if stats:
         entry["stats"] = {rel: stats}
     return _publish(path, entry)
 
 
 def restore_table(spark: SparkSession, path: str, version: int) -> int:
     """RESTORE TABLE ... TO VERSION — Delta's rollback: publish a NEW
-    commit whose live file set (and live deletion vectors, and
-    schema) equal those of `version`, leaving all history intact —
-    the rollback is itself time-travelable and shows in DESCRIBE
-    HISTORY, nothing is deleted. Pure log manipulation: no data is
-    read or written, cost is the driver-side fold. Refuses if any
-    directory the target version needs was already reclaimed by
-    vacuum (Delta's restore has the same failure mode)."""
-    commits_now = _read_commits(path, None)
+    commit whose live file set, live deletion vectors and latest-wins
+    metadata (schema, CHECK, column mapping, defaults, generated,
+    reservations) equal those of `version`, leaving all history
+    intact — the rollback is itself time-travelable and shows in
+    DESCRIBE HISTORY, nothing is deleted. Pure log manipulation: no
+    data is read or written. Re-added directories and vectors carry
+    the stats and row counts their original commits recorded.
+    Refuses if any directory the target version needs was already
+    reclaimed by vacuum (Delta's restore has the same failure
+    mode)."""
     commits_then = _read_commits(path, version)
-    live_now, live_then = _fold_live(commits_now), _fold_live(commits_then)
-    dv_now = _fold_live_dvs(commits_now)
-    dv_then = _fold_live_dvs(commits_then)
+    now = _table_state(_read_commits(path, None))
+    then = _table_state(commits_then)
     missing = [
-        d for d in live_then + dv_then
+        d for d in then.live + then.dvs
         if not os.path.isdir(os.path.join(path, d))
     ]
     if missing:
@@ -3222,60 +2785,30 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
             f"cannot restore to version {version}: {len(missing)} "
             f"directories were vacuumed (e.g. {missing[0]})"
         )
-    new_version = commits_now[-1]["version"] + 1
     entry = {
-        "version": new_version, "operation": "restore",
+        "version": now.version + 1, "operation": "restore",
         "restored_version": int(version),
-        "removed": [d for d in live_now if d not in set(live_then)],
-        "added": [d for d in live_then if d not in set(live_now)],
-        "dv_removed": [d for d in dv_now if d not in set(dv_then)],
-        "dv_added": [d for d in dv_then if d not in set(dv_now)],
+        "removed": [d for d in now.live if d not in set(then.live)],
+        "added": [d for d in then.live if d not in set(now.live)],
+        "dv_removed": [d for d in now.dvs if d not in set(then.dvs)],
+        "dv_added": [d for d in then.dvs if d not in set(now.dvs)],
     }
-    # re-record the target's schema so post-evolution rollbacks read
-    # with the right shape; stats for re-added dirs are re-recorded
-    # from what their original commits carried
-    then_schema = _latest_schema(commits_then)
-    now_schema = _latest_schema(commits_now)
-    if then_schema and then_schema != now_schema:
-        entry["schema"] = then_schema
-        for c in reversed(commits_then):
-            if c.get("schema_json"):
-                entry["schema_json"] = c["schema_json"]
-                break
-        entry["schema_evolved"] = True
-    # restore across a rename/drop reverts the COLUMN MAPPING too —
-    # the schema string alone would leave reads projecting through
-    # the newer map (key-present records override the fold)
-    if _column_map(commits_then) != _column_map(commits_now):
-        entry["column_map"] = _column_map(commits_then)
-    if _reserved_physical(commits_then) != _reserved_physical(commits_now):
-        entry["reserved_physical"] = _reserved_physical(commits_then)
-    if _table_check(commits_then) != _table_check(commits_now):
-        entry["check"] = _table_check(commits_then)
-    # restore across a defaults-evolution reverts both default maps
-    # (a later re-evolution must not inherit a rolled-back backfill)
-    if _column_defaults(commits_then) != _column_defaults(commits_now):
-        entry["defaults"] = _column_defaults(commits_then)
-    if _exists_defaults(commits_then) != _exists_defaults(commits_now):
-        entry["exists_defaults"] = {
-            k: [e, v]
-            for k, (e, v) in _exists_defaults(commits_then).items()
-        }
-    then_stats = _live_stats(path, commits=commits_then)
+    for k in _LATEST_WINS:
+        if then.meta[k] != now.meta[k]:
+            entry[k] = then.meta[k]
+    if "schema" in entry or "schema_json" in entry:
+        # the schema pair is re-recorded together, flagged as an
+        # evolution so a running stream stops at it
+        entry.update(schema=then.meta["schema"],
+                     schema_json=then.meta["schema_json"],
+                     schema_evolved=True)
     readd_stats = {
-        d: then_stats[d] for d in entry["added"] if then_stats.get(d)
+        d: then.stats[d] for d in entry["added"] if then.stats.get(d)
     }
     if readd_stats:
         entry["stats"] = readd_stats
-    # dv_rows for re-added vectors: inherit the recorded counts so the
-    # broadcast decision stays informed
-    readd_rows = 0
-    for c in commits_then:
-        for d in c.get("dv_added", []):
-            if d in set(entry["dv_added"]):
-                readd_rows += int(c.get("dv_rows") or 0)
     if entry["dv_added"]:
-        entry["dv_rows"] = readd_rows
+        entry["dv_rows"] = _dv_rows(commits_then, set(entry["dv_added"])) or 0
     return _publish(path, entry)
 
 
@@ -3289,20 +2822,17 @@ def clone_table(spark: SparkSession, src: str, dst: str) -> int:
     shallow-clone shape). The clone's single commit is published AT
     THE SOURCE'S latest version number (not 1): cloned directories
     keep their source relpaths, and the version embedded in a
-    directory name is load-bearing for ExistsDefault backfill
-    (_exists_defaults) — restarting the clone's numbering would give
-    post-clone writes directory versions BELOW the inherited intro
-    versions and backfill their genuine NULLs (r13 review finding).
-    One version namespace, one invariant. The clone inherits schema,
-    CHECK constraint, per-directory stats, default maps, and live
-    DVs — reads of the clone are immediately identical to the source
-    snapshot. Cost is metadata-only (one link per file), measured in
+    directory name is load-bearing for ExistsDefault backfill —
+    restarting the clone's numbering would give post-clone writes
+    directory versions BELOW the inherited intro versions and
+    backfill their genuine NULLs. The clone carries every folded
+    metadata key, per-directory stats and live DVs — reads of the
+    clone are immediately identical to the source snapshot. Cost is
+    metadata-only (one link per file), measured in
     scripts/table_probe.py."""
-    commits = _read_state_commits(src)
-    live, dvs = _fold_live(commits), _fold_live_dvs(commits)
+    st = _table_state(_read_state_commits(src))
     if os.path.isdir(os.path.join(dst, _COMMITS)):
         raise ValueError(f"clone target {dst!r} already has a commit log")
-    live_stats = _live_stats(src, commits=commits)
 
     def _link_dir(rel: str) -> None:
         s_dir = os.path.join(src, rel)
@@ -3313,48 +2843,19 @@ def clone_table(spark: SparkSession, src: str, dst: str) -> int:
             if os.path.isfile(sf):
                 os.link(sf, os.path.join(d_dir, f))
 
-    for rel in live + dvs:
+    for rel in st.live + st.dvs:
         _link_dir(rel)
     entry = {
-        "version": commits[-1]["version"], "operation": "clone",
+        "version": st.version, "operation": "clone",
         "cloned_from": src,
-        "cloned_version": commits[-1]["version"],
-        "added": list(live), "removed": [],
+        "cloned_version": st.version,
+        "added": list(st.live), "removed": [],
+        **{k: v for k, v in st.meta.items() if v},
     }
-    if dvs:
-        entry["dv_added"] = list(dvs)
-        entry["dv_rows"] = sum(
-            int(c.get("dv_rows") or 0) for c in commits if c.get("dv_added")
-        )
-    schema = _latest_schema(commits)
-    if schema:
-        entry["schema"] = schema
-    for c in reversed(commits):
-        if c.get("schema_json"):
-            entry["schema_json"] = c["schema_json"]
-            break
-    check = _table_check(commits)
-    if check:
-        entry["check"] = check
-    if _table_cdf(commits):
-        entry["cdf"] = True  # the clone keeps recording change data
-    if _column_map(commits):
-        entry["column_map"] = _column_map(commits)
-    if _reserved_physical(commits):
-        entry["reserved_physical"] = _reserved_physical(commits)
-    if _reader_features(commits):
-        entry["reader_features"] = sorted(_reader_features(commits))
-    if _column_defaults(commits):
-        entry["defaults"] = _column_defaults(commits)
-    if _exists_defaults(commits):
-        # the cloned directories keep their source names (and so
-        # their embedded versions) — the intro versions stay valid
-        entry["exists_defaults"] = {
-            k: [e, v] for k, (e, v) in _exists_defaults(commits).items()
-        }
-    if _generated_cols(commits):
-        entry["generated"] = _generated_cols(commits)
-    stats = {d: s for d, s in live_stats.items() if s}
+    if st.dvs:
+        entry["dv_added"] = list(st.dvs)
+        entry["dv_rows"] = st.dv_rows or 0
+    stats = {d: s for d, s in st.stats.items() if s}
     if stats:
         entry["stats"] = stats
     return _publish(dst, entry)
@@ -3374,11 +2875,14 @@ def table_changes(
     as a DataFrame with the table's columns plus `_change_type` in
     ('insert', 'update', 'delete'). Inserts/updates carry the v_to
     image, deletes the v_from image. Computed as ONE null-safe
-    full-outer join on the key columns — no changelog is stored, so
-    this works across ANY version pair (including spans that contain
-    compactions, which diff to zero rows). Requires both snapshots to
-    be key-unique, which create/merge/delete lifecycles guarantee;
-    duplicate keys would multiply join matches.
+    full-outer join on the key columns (_diff_join) — no changelog
+    is stored, so this works across ANY version pair (including spans
+    that contain compactions, which diff to zero rows). Requires both
+    snapshots to be key-unique, which create/merge/delete lifecycles
+    guarantee; duplicate keys would multiply join matches. Schema
+    evolution only ADDS columns, so the older side reads NULL in the
+    columns the newer one added: a pre-evolution row diffs as an
+    UPDATE when the added column gained a value.
 
     `include_preimages=True` switches updates to the Delta-complete
     PAIR — 'update_preimage' (v_from image) + 'update_postimage'
@@ -3387,17 +2891,11 @@ def table_changes(
     default single post-image 'update' row is the compact display
     form.
 
-    `ts_from`/`ts_to` (r13 — Delta's startingTimestamp /
-    endingTimestamp CDF addressing): pass unix-seconds instants
-    instead of versions; each resolves to the newest version
-    committed AT OR BEFORE that instant (version_as_of — the same
-    rule AS OF TIMESTAMP time travel uses), so 'what changed between
-    yesterday's snapshot and now' needs no version bookkeeping.
-    Exactly one of (v_from, ts_from) and one of (v_to, ts_to) must
-    be given."""
-    import functools
-    import operator
-
+    `ts_from`/`ts_to` (Delta's startingTimestamp / endingTimestamp
+    CDF addressing): unix-seconds instants instead of versions; each
+    resolves to the newest version committed AT OR BEFORE that
+    instant (version_as_of). Exactly one of (v_from, ts_from) and one
+    of (v_to, ts_to) must be given."""
     from pyspark.sql import functions as F
 
     if key_cols is None:
@@ -3415,9 +2913,8 @@ def table_changes(
     # a rename between the versions would make the same physical
     # column look dropped-and-added (every row a spurious update) —
     # refuse rather than mislead; diff within one mapping epoch
-    if _column_map(_read_commits(path, v_from)) != _column_map(
-        _read_commits(path, v_to)
-    ):
+    if (_table_state(_read_commits(path, v_from)).meta["column_map"]
+            != _table_state(_read_commits(path, v_to)).meta["column_map"]):
         raise ValueError(
             "table_changes: the column mapping changed between "
             f"versions {v_from} and {v_to} (rename/drop is "
@@ -3432,42 +2929,9 @@ def table_changes(
             "metadata-only and would surface as spurious updates — "
             "diff within one mapping epoch instead"
         )
-    # schema evolution only ADDS columns, so align the older side to
-    # the newer shape with NULL fills: a pre-evolution row then diffs
-    # as an UPDATE against its post-evolution image when the added
-    # column gained a value — without this, the diff would silently
-    # drop the added columns from the comparison and the output
-    b_wider = len(b.columns) >= len(a.columns)
-    cols = b.columns if b_wider else a.columns
-    by_name = {
-        f.name: f.dataType for f in (b.schema if b_wider else a.schema)
-    }
-
-    def aligned(df, prefix, marker):
-        return df.select(
-            *[
-                (F.col(c) if c in df.columns
-                 else F.lit(None).cast(by_name[c])).alias(f"{prefix}{c}")
-                for c in cols
-            ],
-            F.lit(1).alias(marker),
-        )
-
-    nonkey = [c for c in cols if c not in key_cols]
-    A = aligned(a, "_a_", "_in_a")
-    B = aligned(b, "_b_", "_in_b")
-    on = functools.reduce(
-        operator.and_,
-        [F.col(f"_a_{k}").eqNullSafe(F.col(f"_b_{k}")) for k in key_cols],
-    )
-    j = A.join(B, on, "full_outer")
-    same = (
-        F.struct(*[F.col(f"_a_{c}") for c in nonkey]).eqNullSafe(
-            F.struct(*[F.col(f"_b_{c}") for c in nonkey])
-        )
-        if nonkey
-        else F.lit(True)
-    )
+    wider = b if len(b.columns) >= len(a.columns) else a
+    cols = wider.columns
+    j, same = _diff_join(a, b, key_cols, wider.schema.fields)
     if include_preimages:
         return _emit_change_pairs(j, cols, same)
     change = (
@@ -3497,10 +2961,11 @@ def commit_with_retry(fn, attempts: int = 8, backoff: float = 0.05):
     re-reads the log on entry, so the retry automatically rebases onto
     the winner's commit. Bounded at `attempts` tries (the last
     ConcurrentWriteError propagates), so sustained contention surfaces
-    instead of spinning. Returns whatever `fn` returns. This is the
-    helper every multi-writer caller should wrap commits in rather
-    than hand-rolling the re-read-and-retry loop (r11 verdict item 3);
-    the two-process race itself is exercised for real in
+    instead of spinning. Returns whatever `fn` returns. Every
+    multi-writer caller should wrap commits in it rather than
+    hand-roll the re-read-and-retry loop (the metadata commands run
+    their attempts through it); the two-process race itself is
+    exercised in
     tests/test_capabilities.py::test_commit_log_two_process_race."""
     import time
 
@@ -3550,103 +3015,48 @@ def txn_append(
     protocol that makes foreachBatch exactly-once: a replayed epoch
     re-offers the same txn_version and is refused without reading the
     data. The skip-check and the version claim are not one atomic
-    step, but the claim IS atomic (`_publish`), so a racing duplicate
-    loses the claim with ConcurrentWriteError, and its retry re-reads
-    the log and skips — no path double-commits an epoch. Empty
-    batches commit a data-less entry so the txn watermark still
-    advances. `create_ok` bootstraps the table on the first batch."""
+    step, but the claim IS atomic (`_publish`): a lost race rebases
+    in place like append (_publish_append), re-running the skip-check
+    first, so a race lost to this epoch's own duplicate skips and no
+    path double-commits an epoch. The batch must match the table
+    schema (no evolution), re-checked on every rebase. Empty batches
+    commit a data-less entry so the txn watermark still advances.
+    `create_ok` bootstraps the table on the first batch."""
+    txn = {"app": app_id, "version": int(txn_version)}
     if create_ok and not table_versions(path):
         try:
             rel, stats = _write_data(df, path, 1, stats_cols)
-            entry = {"version": 1, "operation": "create",
-                     "added": [rel], "removed": [],
-                     "schema": df.schema.simpleString(),
-                     "schema_json": df.schema.json(),
-                     "txn": {"app": app_id, "version": int(txn_version)}}
-            if stats:
-                entry["stats"] = {rel: stats}
-            return _publish(path, entry)
+            return _publish(path, {**_create_entry(df.schema, rel, stats),
+                                   "txn": txn})
         except ConcurrentWriteError:
             pass  # someone else created it: fall through to txn check
-    seen = latest_txn_version(path, app_id)
-    if seen is not None and seen >= int(txn_version):
+
+    def seen() -> bool:
+        v = latest_txn_version(path, app_id)
+        return v is not None and v >= int(txn_version)
+
+    if seen():
         return None
     commits = _read_state_commits(path)
-    df = _fill_generated(_fill_defaults(df, commits), commits)
-    want = _latest_schema(commits)
-    if want and df.schema.simpleString() != want:
-        raise ValueError(
-            f"txn_append schema {df.schema.simpleString()} != table "
-            f"schema {want}"
-        )
-    version = commits[-1]["version"] + 1
-    added, entry_stats = [], {}
-    check_seen = _table_gate(commits)
+    st = _table_state(commits)
+    df = _fill_generated(_fill_defaults(df, st.meta), st.meta)
+    _evolution_gate(st.meta, df, False, "txn_append")
+    gate = _table_gate(st.meta)
+    cmap = st.meta["column_map"]
     rel, stats = _write_data(
-        df, path, version, stats_cols, check=check_seen,
-        column_map=_column_map(commits), drop_if_empty=True,
-        bloom_cols=_bloom_cols_logical(
-            _live_stats(path, commits=commits), _column_map(commits)))
-    if rel:
-        added = [rel]
-        if stats:
-            entry_stats = {rel: stats}
-    entry = {"version": version, "operation": "txn_append",
-             "added": added, "removed": [],
-             "txn": {"app": app_id, "version": int(txn_version)}}
-    if entry_stats:
-        entry["stats"] = entry_stats
-    # lost races REBASE IN PLACE like append (blind appends commute):
-    # re-check the watermark each time — the winner might have been
-    # this very epoch's duplicate (then skip; the orphan directory is
-    # invisible and vacuum reclaims it) — and re-claim the next
-    # version without re-reading or re-writing the batch
-    last: ConcurrentWriteError | None = None
-    for _ in range(8):
-        try:
-            return _publish(path, entry)
-        except ConcurrentWriteError as e:
-            last = e
-            seen = latest_txn_version(path, app_id)
-            if seen is not None and seen >= int(txn_version):
-                return None
-            commits = _read_state_commits(path)
-            # schema re-gate (r13 second review): a concurrent
-            # evolution must not be bypassed by a blind rebase — the
-            # already-written batch has the OLD shape; refuse, and
-            # the foreachBatch retry re-runs txn_append fresh (new
-            # default fill, new write) against the evolved table
-            want = _latest_schema(commits)
-            if want and df.schema.simpleString() != want:
-                raise ValueError(
-                    "txn_append: table schema changed while this "
-                    f"batch was in flight ({df.schema.simpleString()} "
-                    f"!= {want}); refusing the rebase — retry the "
-                    "batch against the evolved table"
-                )
-            new_check = _table_gate(commits)
-            if added and new_check != check_seen:
-                # same rebase re-validation as append: a concurrently
-                # added CHECK must veto this batch, not be bypassed
-                _revalidate_dir(spark, path, added[0], new_check, commits)
-                check_seen = new_check
-            entry["version"] = commits[-1]["version"] + 1
-            if added:
-                # same rename as append's rebase: the directory-name
-                # version is load-bearing for ExistsDefault
-                new_rel = os.path.join(
-                    _DATA,
-                    f"v{entry['version']:08d}-"
-                    + added[0].rsplit("-", 1)[1],
-                )
-                os.rename(os.path.join(path, added[0]),
-                          os.path.join(path, new_rel))
-                if entry_stats:
-                    entry_stats = {new_rel: entry_stats[added[0]]}
-                    entry["stats"] = entry_stats
-                added = [new_rel]
-                entry["added"] = added
-    raise last
+        df, path, st.version + 1, stats_cols, check=gate,
+        column_map=cmap, drop_if_empty=True,
+        bloom_cols=_bloom_cols_logical(st.stats, cmap))
+
+    def fields(meta: dict, version: int) -> dict:
+        # a concurrent evolution must not be bypassed by a blind
+        # rebase: the written batch has the OLD shape; the caller's
+        # retry re-runs txn_append against the evolved table
+        _evolution_gate(meta, df, False, "txn_append")
+        return {"operation": "txn_append", "txn": txn}
+
+    return _publish_append(
+        spark, path, commits, rel, stats, fields, gate, skip=seen)
 
 
 def exactly_once_sink(
@@ -3660,13 +3070,13 @@ def exactly_once_sink(
     at-least-once contract) is skipped instead of duplicated —
     end-to-end exactly-once into the commit-log table. Retries the
     claim through `commit_with_retry` — bounded attempts with
-    exponential backoff, not an unthrottled spin (r11 advisory) — and
-    each retry's txn_append re-runs the latest_txn_version skip-check
-    BEFORE rewriting any data, so a race lost to this very epoch's
-    duplicate skips without re-materializing the batch; only races
-    lost to other writers' commits pay a rewrite, and only up to the
-    attempt cap (orphan directories from lost attempts are invisible
-    to readers and reclaimed by vacuum)."""
+    exponential backoff, not an unthrottled spin — and each retry's
+    txn_append re-runs the latest_txn_version skip-check BEFORE
+    rewriting any data, so a race lost to this very epoch's duplicate
+    skips without re-materializing the batch; only races lost to
+    other writers' commits pay a rewrite, and only up to the attempt
+    cap (orphan directories from lost attempts are invisible to
+    readers and reclaimed by vacuum)."""
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
         commit_with_retry(
@@ -3725,9 +3135,9 @@ def vacuum(
         keep = sorted(set(keep) | set(recent))
     reachable: set[str] = set()
     for v in keep:
-        commits_v = _read_commits(path, v)
-        reachable.update(_fold_live(commits_v))
-        reachable.update(_fold_live_dvs(commits_v))
+        st = _table_state(_read_commits(path, v))
+        reachable.update(st.live)
+        reachable.update(st.dvs)
     ever: set[str] = set()
     keep_set = set(keep)
     for c in _read_commits(path, None):
@@ -3764,11 +3174,11 @@ def vacuum(
     # clustered-write SHELLS: after every _bucket= relpath of a
     # clustered compact is reclaimed, the parent directory still holds
     # Spark's job markers (_SUCCESS, .crc) — rmdir alone fails and the
-    # shell's relpaths stay in `ever`, so it would leak forever (r11
-    # advisory). Sweep the data root: any top-level dir with no
-    # REACHABLE relpath at/under it whose remaining entries are all
-    # marker files gets the markers stripped and the dir removed —
-    # this also reclaims shells leaked by earlier vacuums.
+    # shell's relpaths stay in `ever`, so it would leak forever. Sweep
+    # the data root: any top-level dir with no REACHABLE relpath
+    # at/under it whose remaining entries are all marker files gets
+    # the markers stripped and the dir removed — this also reclaims
+    # shells leaked by earlier vacuums.
     data_root = os.path.join(path, _DATA)
     for d in (os.listdir(data_root) if os.path.isdir(data_root) else []):
         rel = os.path.join(_DATA, d)

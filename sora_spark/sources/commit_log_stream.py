@@ -69,7 +69,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from sora_spark.sources.commit_log import (
-    _KNOWN_READER_FEATURES,
+    _check_reader_features,
     _commit_path,
     table_versions,
 )
@@ -101,22 +101,6 @@ def _read_commit(table_path: str, version: int) -> dict:
     # layout knowledge lives in commit_log; this module only folds it
     with open(_commit_path(table_path, version)) as f:
         return json.load(f)
-
-
-def _gate_features(entry: dict, where: str) -> None:
-    """The protocol gate, stream-side: a commit demanding a reader
-    feature this engine does not implement must stop the stream —
-    ignoring it emits silently wrong rows (the exact failure
-    read_table's gate refuses). Checked per planned version (cheap:
-    the entry is already in hand) and over the pre-start history at
-    schema() time."""
-    unknown = set(entry.get("reader_features", [])) - _KNOWN_READER_FEATURES
-    if unknown:
-        raise ValueError(
-            f"commitlog source: {where} requires reader feature(s) "
-            f"{sorted(unknown)} this engine does not implement; "
-            "refusing to stream silently wrong data"
-        )
 
 
 def _resolve_start(options, path: str) -> int:
@@ -188,7 +172,7 @@ def _gate_clone(path: str, entry: dict, version: int,
     1. live DELETION VECTORS (`dv_added`): the added files still
        contain DV-deleted rows — streaming them raw resurrects
        deletions as inserts (plain AND readChangeFeed paths), the
-       exact silently-wrong-rows case `_gate_features` exists to
+       exact silently-wrong-rows case the reader-feature gate exists to
        refuse (deletion_vectors is a KNOWN reader feature, so that
        gate alone passes it).
     2. ExistsDefault backfill (`exists_defaults`): rows whose
@@ -391,7 +375,9 @@ class CommitLogStreamReader(DataSourceStreamReader):
                     "(and a fresh sink) to pick up the new columns"
                 )
             op = entry.get("operation")
-            _gate_features(entry, f"version {v}")
+            _check_reader_features(
+                entry.get("reader_features", []),
+                f"commitlog source: version {v}")
             if op == "clone":
                 # clone-specific replayability gates (live DVs /
                 # backfill / mixed-shape dirs) — both paths below
@@ -522,7 +508,9 @@ class CommitLogDataSource(DataSource):
             if v > start:
                 break
             c = _read_commit(path, v)
-            _gate_features(c, f"version {v} (before startingVersion)")
+            _check_reader_features(
+                c.get("reader_features", []),
+                f"commitlog source: version {v} (before startingVersion)")
             if c.get("schema_json") or c.get("schema"):
                 entry = c
         if entry is None:

@@ -2009,7 +2009,7 @@ def test_commit_log_merge_data_skipping(spark, tmp_path):
               stats_cols=["k"])                             # keys 10-11
     cl.append(spark, path, mk([(20, "t", 10), (21, "u", 10)]),
               stats_cols=["k"])                             # keys 20-21
-    dirs_before = cl._live_dirs(path, None)
+    dirs_before = cl._table_state(cl._read_commits(path, None)).live
     assert len(dirs_before) == 3
 
     # batch touches only the middle range (keys 10-12)
@@ -2019,7 +2019,7 @@ def test_commit_log_merge_data_skipping(spark, tmp_path):
         entry = json.load(f)
     assert entry["removed"] == [dirs_before[1]]   # only keys 10-11 dir
     assert entry["pruned_dirs"] == 2
-    live = cl._live_dirs(path, None)
+    live = cl._table_state(cl._read_commits(path, None)).live
     assert dirs_before[0] in live and dirs_before[2] in live
     got = sorted(map(tuple, cl.read_table(spark, path).collect()))
     assert got == [(1, "a", 10), (2, "b", 10), (10, "J", 20),
@@ -2074,7 +2074,7 @@ def test_commit_log_delete_compact(spark, tmp_path):
     cl.append(spark, path, mk([(10, "a", 10), (11, "c", 10)]),
               stats_cols=["k"])
     cl.append(spark, path, mk([(20, "d", 10)]), stats_cols=["k"])
-    dirs = cl._live_dirs(path, None)
+    dirs = cl._table_state(cl._read_commits(path, None)).live
 
     v = cl.delete_where(spark, path, "s = 'a'")   # hits dirs 1 and 2 only
     with open(os.path.join(path, "_commits", f"{v:08d}.json")) as f:
@@ -2095,12 +2095,12 @@ def test_commit_log_delete_compact(spark, tmp_path):
                     key=str)
     vc = cl.compact(spark, path)
     assert vc is not None
-    assert len(cl._live_dirs(path, None)) == 1
+    assert len(cl._table_state(cl._read_commits(path, None)).live) == 1
     after = sorted(map(tuple, cl.read_table(spark, path).collect()),
                    key=str)
     assert before == after
     # compacted dir inherits stats -> future merges still skip
-    st = cl._live_stats(path)
+    st = cl._table_state(cl._read_commits(path, None)).stats
     (only,) = st.values()
     assert "k" in only
     # idempotent-ish: a second compact on a single dir is a no-op
@@ -2547,7 +2547,7 @@ def test_commit_log_deletion_vectors(spark, tmp_path):
                     stats_cols=["k"])
     cl.append(spark, path, mk([(10, "a", 10), (11, None, 10)]),
               stats_cols=["k"])
-    dirs_before = cl._live_dirs(path, None)
+    dirs_before = cl._table_state(cl._read_commits(path, None)).live
 
     v = cl.delete_where(spark, path, "s = 'a'", deletion_vectors=True)
     with open(os.path.join(path, "_commits", f"{v:08d}.json")) as f:
@@ -2557,7 +2557,7 @@ def test_commit_log_deletion_vectors(spark, tmp_path):
     assert len(e["dv_added"]) == 1 and e["dv_added"][0].startswith("dv/")
     assert e["dv_rows"] == 2
     # zero data directories touched — the live set is unchanged
-    assert cl._live_dirs(path, None) == dirs_before
+    assert cl._table_state(cl._read_commits(path, None)).live == dirs_before
     got = sorted(map(tuple, cl.read_table(spark, path).collect()), key=str)
     assert got == sorted([(2, "b", 10), (11, None, 10)], key=str)
 
@@ -2576,7 +2576,7 @@ def test_commit_log_deletion_vectors(spark, tmp_path):
     # compact applies + delists; vacuum reclaims the dv sidecars
     vc = cl.compact(spark, path)
     assert vc is not None
-    assert cl._fold_live_dvs(cl._read_commits(path, None)) == []
+    assert cl._table_state(cl._read_commits(path, None)).dvs == []
     rows2 = {r[0]: r[1] for r in cl.read_table(spark, path).collect()}
     assert rows2 == rows
     doomed = cl.vacuum(path)
@@ -2671,7 +2671,8 @@ def test_commit_log_vacuum_shell_cleanup(spark, tmp_path):
     left = set(os.listdir(os.path.join(path, "data")))
     # ...and vacuum must remove the clustered write's shell entirely
     live = set(
-        d.split("/", 2)[1] for d in cl._live_dirs(path, None))
+        d.split("/", 2)[1]
+        for d in cl._table_state(cl._read_commits(path, None)).live)
     assert left == live, (left, live, shells)
     assert cl.read_table(spark, path).count() == 40
 
@@ -2851,7 +2852,7 @@ def test_bloom_dir_stats(spark, tmp_path):
     assert got[0] == -1.0 and got[9] == -1.0 and got[18] == -1.0
     assert got[1] == 1.0 and len(got) == 800
     # the merge's rewrite re-records blooms (no erosion)
-    st = cl._live_stats(path)
+    st = cl._table_state(cl._read_commits(path, None)).stats
     rewritten = e["added"][0]
     assert "bloom" in st[rewritten]["k"], st[rewritten]
     # all-new-keys batch: every dir bloom-misses -> pure insert
@@ -2865,7 +2866,7 @@ def test_bloom_dir_stats(spark, tmp_path):
     # compact inherits the bloom for the merged directory
     vc = cl.compact(spark, path)
     ec = cl._read_commits(path, vc)[-1]
-    st = cl._live_stats(path)
+    st = cl._table_state(cl._read_commits(path, None)).stats
     assert "bloom" in st[ec["added"][0]]["k"]
     assert cl.read_table(spark, path).count() == 801
 
@@ -2893,7 +2894,7 @@ def test_compact_small(spark, tmp_path):
     cl.delete_where(spark, path, "k IN (7, 5000)",
                     deletion_vectors=True)
     commits = cl._read_state_commits(path)
-    live_before = cl._fold_live(commits)
+    live_before = cl._table_state(commits).live
     big = live_before[:2]
     small = live_before[2:]
     want = sorted(
@@ -2902,7 +2903,7 @@ def test_compact_small(spark, tmp_path):
     v = cl.compact_small(spark, path, max_dir_bytes=6000)
     e = cl._read_commits(path, v)[-1]
     assert sorted(e["removed"]) == sorted(small), e
-    live_after = cl._fold_live(cl._read_state_commits(path))
+    live_after = cl._table_state(cl._read_state_commits(path)).live
     assert set(big) <= set(live_after)            # big dirs untouched
     assert e["pruned_dirs"] == 2
     # the old vector is delisted; the residual targets ONLY big dirs
@@ -2987,7 +2988,8 @@ def test_exists_default_backfill(spark, tmp_path):
     # restore across the evolution reverts the map with the schema
     v = cl.restore_table(spark, path, 2)
     assert cl.read_table(spark, path).columns == ["k", "s"]
-    assert cl._exists_defaults(cl._read_state_commits(path)) == {}
+    assert cl._table_state(
+        cl._read_state_commits(path)).meta["exists_defaults"] == {}
     assert v  # restored
     # drop removes the map (rebuild the evolved state first)
     path2 = str(tmp_path / "t2")
@@ -2995,9 +2997,11 @@ def test_exists_default_backfill(spark, tmp_path):
     cl.append(spark, path2,
               mk([(2, "b", 1.0)], "k bigint, s string, p double"),
               merge_schema=True, defaults={"p": "0.5"}, backfill=True)
-    assert cl._exists_defaults(cl._read_state_commits(path2))
+    assert cl._table_state(
+        cl._read_state_commits(path2)).meta["exists_defaults"]
     cl.drop_column(spark, path2, "p")
-    assert cl._exists_defaults(cl._read_state_commits(path2)) == {}
+    assert cl._table_state(
+        cl._read_state_commits(path2)).meta["exists_defaults"] == {}
 
 
 def test_commit_log_conflict_matrix(spark, tmp_path):
@@ -3171,7 +3175,7 @@ def test_commit_log_conflict_matrix(spark, tmp_path):
     a_ok, b_ok = outs["a"]["s3_ok"], outs["b"]["s3_ok"]
     assert a_ok != b_ok, (outs["a"], outs["b"])
     commits3 = cl._read_state_commits(t3)
-    check = cl._table_check(commits3)
+    check = cl._table_state(commits3).meta["check"]
     rows3 = sorted(map(tuple, cl.read_table(spark, t3).collect()))
     if b_ok:   # constraint won: recorded, and no violating row exists
         assert check == "v < 100" and rows3 == [(1, 5)], (check, rows3)
@@ -3243,7 +3247,8 @@ def test_append_rebase_revalidates_check(spark, tmp_path, monkeypatch):
     cl.append(spark, path, mk([(3, 50)]))
     assert sorted(map(tuple, cl.read_table(spark, path).collect())) \
         == [(1, 5), (3, 50)]
-    assert cl._table_check(cl._read_state_commits(path)) == "v < 100"
+    assert cl._table_state(
+        cl._read_state_commits(path)).meta["check"] == "v < 100"
 
 
 def test_append_rebase_check_missing_column(spark, tmp_path):
@@ -3410,8 +3415,8 @@ def test_rename_drop_guard_default_bodies(spark, tmp_path):
     cl.rename_column(spark, path, "v", "vv")
     cl.rename_column(spark, path, "w", "ww")
     commits = cl._read_state_commits(path)
-    assert "ww" in cl._column_defaults(commits)
-    assert "ww" in cl._exists_defaults(commits)
+    assert "ww" in cl._table_state(commits).meta["defaults"]
+    assert "ww" in cl._table_state(commits).meta["exists_defaults"]
     # write-default still fills through the re-keyed name
     cl.append(spark, path,
               spark.createDataFrame([(9, 9)], "k bigint, vv bigint"))
@@ -3526,7 +3531,7 @@ def test_commit_log_clone_independence(spark, tmp_path):
     cl.clone_table(spark, src, dst)
 
     # zero-copy: every cloned data file shares its inode with the source
-    for rel in cl._live_dirs(dst, None):
+    for rel in cl._table_state(cl._read_commits(dst, None)).live:
         for f in os.listdir(os.path.join(dst, rel)):
             s, d_ = os.path.join(src, rel, f), os.path.join(dst, rel, f)
             if os.path.isfile(d_) and os.path.exists(s):
@@ -3535,7 +3540,7 @@ def test_commit_log_clone_independence(spark, tmp_path):
     assert {r[0] for r in cl.read_table(spark, dst).collect()} == {2}
     with _pytest.raises(cl.ConstraintViolationError):
         cl.append(spark, dst, mk([(5, -1.0, 10)]))
-    assert any(cl._live_stats(dst).values())
+    assert any(cl._table_state(cl._read_commits(dst, None)).stats.values())
     # independence both ways: mutate + vacuum each side
     cl.merge_upsert(spark, src, mk([(7, 7.0, 20)]), ["k"], "ts")
     cl.vacuum(src)
@@ -3576,8 +3581,8 @@ def test_commit_log_checkpoint(spark, tmp_path):
     assert sorted(map(tuple, cl.read_table(spark, path).collect())) == pre
     # folds through the synthetic commit
     assert cl.latest_txn_version(path, "app") == 7
-    assert cl._table_check(sc) == "p >= 0"
-    assert any(cl._live_stats(path, commits=sc).values())
+    assert cl._table_state(sc).meta["check"] == "p >= 0"
+    assert any(cl._table_state(sc).stats.values())
     # writers proceed from the checkpointed state
     cl.merge_upsert(spark, path, mk([(1, 9.0, 20)]), ["k"], "ts")
     cl.update_where(spark, path, "k = 3", {"p": "33.0"})
@@ -3908,6 +3913,9 @@ def test_commit_log_describe_detail(spark, tmp_path):
     """DESCRIBE DETAIL (r12): the one-row current-state summary tracks
     version, live files/bytes, live DVs, cdc sidecars, schema/CHECK/
     CDF properties, clustering, and checkpoint presence."""
+    import json
+    import os
+
     from sora_spark.sources import commit_log as cl
 
     path = str(tmp_path / "t")
@@ -3926,6 +3934,10 @@ def test_commit_log_describe_detail(spark, tmp_path):
     cl.delete_where(spark, path, "k = 3", deletion_vectors=True)
     cl.compact(spark, path, target_partitions=2, cluster_by=["k", "p"],
                zorder=True)
+    # the compact delisted the only vector: no live deleted rows
+    # (checked before the checkpoint, whose fresh fold would hide an
+    # over-count)
+    assert cl.describe_detail(spark, path).collect()[0]["dv_rows"] == 0
     cl.checkpoint_log(path)
     d1 = cl.describe_detail(spark, path).collect()[0]
     assert d1["version"] == 3
@@ -3945,6 +3957,32 @@ def test_commit_log_describe_detail(spark, tmp_path):
     assert d2["n_reserved_physical"] == 1
     assert "column_mapping" in d2["reader_features"]
     assert "deletion_vectors" in d2["reader_features"]
+
+    # dv_rows counts only the LIVE vectors: a delisted vector's rows
+    # leave the count, in describe, the checkpoint and a clone
+    p2 = str(tmp_path / "t2")
+    cl.create_table(spark, p2, mk([(i, 1.0, 1) for i in range(50)]))
+    cl.append(spark, p2, mk([(i, 1.0, 1) for i in range(50, 100)]))
+    detail = lambda p: cl.describe_detail(spark, p).collect()[0]
+    cl.delete_where(spark, p2, "k < 10", deletion_vectors=True)
+    assert (detail(p2)["n_deletion_vectors"], detail(p2)["dv_rows"]) \
+        == (1, 10)
+    cl.compact(spark, p2)
+    assert (detail(p2)["n_deletion_vectors"], detail(p2)["dv_rows"]) \
+        == (0, 0)
+    cl.delete_where(spark, p2, "k >= 90", deletion_vectors=True)
+    assert (detail(p2)["n_deletion_vectors"], detail(p2)["dv_rows"]) \
+        == (1, 10)
+    v_ck = cl.checkpoint_log(p2)
+    with open(os.path.join(p2, "_commits", f"{v_ck:08d}.ckpt.json")) as f:
+        assert json.load(f)["dv_rows"] == 10
+    assert detail(p2)["dv_rows"] == 10
+    c2 = str(tmp_path / "c2")
+    v_c = cl.clone_table(spark, p2, c2)
+    assert cl._read_commits(c2, None)[-1]["version"] == v_c
+    assert cl._read_commits(c2, None)[-1]["dv_rows"] == 10
+    assert detail(c2)["dv_rows"] == 10
+    assert cl.read_table(spark, c2).count() == 80
 
 
 def test_commit_log_column_mapping(spark, tmp_path):
@@ -4101,20 +4139,23 @@ def test_commit_log_reader_feature_gate(spark, tmp_path):
         spark.createDataFrame([(1, "a"), (2, "b")], "k BIGINT, s STRING"))
     cl.delete_where(spark, path, "k = 2", deletion_vectors=True)
     cl.rename_column(spark, path, "s", "label")
-    feats = cl._reader_features(cl._read_commits(path, None))
+    feats = set(cl._table_state(
+        cl._read_commits(path, None)).meta["reader_features"])
     assert feats == {"deletion_vectors", "column_mapping"}
     assert cl.read_table(spark, path).count() == 1  # known: reads fine
 
     # checkpoint keeps demanding them; clone inherits the demand
     cl.checkpoint_log(path)
-    assert cl._reader_features(cl._read_state_commits(path)) == feats
+    assert set(cl._table_state(
+        cl._read_state_commits(path)).meta["reader_features"]) == feats
     dst = str(tmp_path / "c")
     cl.clone_table(spark, path, dst)
     # the clone's single commit sits AT the source's latest version
     # (one version namespace — the ExistsDefault invariant, r13)
     assert cl.table_versions(dst) == [
         cl.table_versions(path)[-1]]
-    assert cl._reader_features(cl._read_commits(dst, None)) == feats
+    assert set(cl._table_state(
+        cl._read_commits(dst, None)).meta["reader_features"]) == feats
 
     # a future feature this engine does not know -> loud refusal
     commits = cl._read_commits(path, None)
@@ -4223,7 +4264,7 @@ def test_commit_log_add_drop_constraint(spark, tmp_path):
     # existing data violates -> refused, nothing recorded
     with _pytest.raises(cl.ConstraintViolationError):
         cl.add_check_constraint(spark, path, "p < 9")
-    assert cl._table_check(cl._read_state_commits(path)) is None
+    assert cl._table_state(cl._read_state_commits(path)).meta["check"] is None
 
     v_add = cl.add_check_constraint(spark, path, "p < 100")
     with _pytest.raises(cl.ConstraintViolationError):
@@ -4247,12 +4288,14 @@ def test_commit_log_add_drop_constraint(spark, tmp_path):
 
     # restore to the constrained era brings the constraint back
     cl.restore_table(spark, path, v_add)
-    assert cl._table_check(cl._read_state_commits(path)) == "p < 100"
+    assert cl._table_state(
+        cl._read_state_commits(path)).meta["check"] == "p < 100"
     with _pytest.raises(cl.ConstraintViolationError):
         cl.append(spark, path, mk([(9, 1000.0)]))
     # checkpoint keeps the restored constraint
     cl.checkpoint_log(path)
-    assert cl._table_check(cl._read_state_commits(path)) == "p < 100"
+    assert cl._table_state(
+        cl._read_state_commits(path)).meta["check"] == "p < 100"
 
 
 def test_commit_log_optimize_write_auto_compact(spark, tmp_path):
@@ -4284,7 +4327,7 @@ def test_commit_log_optimize_write_auto_compact(spark, tmp_path):
                   spark.range(i * 10, i * 10 + 5).selectExpr("id AS k"),
                   auto_compact=4)
     commits = cl._read_state_commits(path2)
-    live = cl._fold_live(commits)
+    live = cl._table_state(commits).live
     assert len(live) < 4, live
     assert any(c.get("operation") == "optimize"
                for c in cl._read_commits(path2, None))
@@ -4384,7 +4427,7 @@ def test_update_on_read(spark, tmp_path):
     cl.compact(spark, p_dv)
     assert sorted(map(tuple, cl.read_table(spark, p_dv).collect())) \
         == want
-    assert cl._fold_live_dvs(cl._read_state_commits(p_dv)) == []
+    assert cl._table_state(cl._read_state_commits(p_dv)).dvs == []
     # nothing matched -> no commit published
     before = cl.table_versions(p_dv)[-1]
     assert cl.update_where(spark, p_dv, "k < 0", sets,
@@ -4444,7 +4487,7 @@ def test_mor_schema_evolution(spark, tmp_path):
     cl.compact(spark, p_mor)
     assert sorted(map(tuple, cl.read_table(spark, p_mor).collect())) \
         == want
-    assert cl._fold_live_dvs(cl._read_state_commits(p_mor)) == []
+    assert cl._table_state(cl._read_state_commits(p_mor)).dvs == []
 
 
 def test_commit_log_write_defaults(spark, tmp_path):
@@ -4475,16 +4518,16 @@ def test_commit_log_write_defaults(spark, tmp_path):
     assert got == {1: None, 2: "x", 3: "none", 4: "none"}, got
     # checkpoint keeps the map; rename re-keys it; drop removes it
     cl.checkpoint_log(path)
-    assert cl._column_defaults(cl._read_state_commits(path)) == {
+    assert cl._table_state(cl._read_state_commits(path)).meta["defaults"] == {
         "tag": "'none'"}
     cl.rename_column(spark, path, "tag", "label")
-    assert cl._column_defaults(cl._read_state_commits(path)) == {
+    assert cl._table_state(cl._read_state_commits(path)).meta["defaults"] == {
         "label": "'none'"}
     cl.append(spark, path, mk([(5, 5.0)]))
     assert cl.read_table(spark, path).filter("k = 5").collect()[0][
         "label"] == "none"
     cl.drop_column(spark, path, "label")
-    assert cl._column_defaults(cl._read_state_commits(path)) == {}
+    assert cl._table_state(cl._read_state_commits(path)).meta["defaults"] == {}
 
 
 def test_backfill_rebase_rename(spark, tmp_path, monkeypatch):
