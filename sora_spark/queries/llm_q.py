@@ -7,13 +7,18 @@ multimodal binary columns. Q-L1/L3/L5 live in bench_core.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sora_spark.catalog import tables
 from sora_spark.functions.text import minhash_one, word_shingles
-from sora_spark.llm import ann, dedup, multimodal, textstats
+from sora_spark.llm import (
+    ann, dedup, hybrid, multimodal, textindex, textstats,
+)
 from sora_spark.queries.registry import query
+from sora_spark.queries.relational import _fresh_dir
 
 # Shared oracle CTE: doc word-3-gram shingles + 1-perm minhash signature
 # (the exact Q-L2 spec: DuckDB range() is empty for docs under 3 words,
@@ -963,7 +968,7 @@ def qix1_inverted_index(spark, sf_dir):
     # per token first, collect only rank <= 20 (collect_list skips the
     # NULLs the when() leaves) — a hot token at corpus scale must
     # never gather its full posting list into one aggregation buffer
-    # before slicing (round-6 self-review fix). The window and the
+    # before slicing. The window and the
     # groupBy share the token key, so this is still ONE shuffle.
     rn = F.row_number().over(
         Window.partitionBy("tok").orderBy("doc_id")
@@ -1895,8 +1900,8 @@ def _bpe_round_sql(prev_s: str, i: int) -> str:
     INCLUSIVE — acc[:-2] drops exactly the last element. Every CTE is
     MATERIALIZED: s{i} references s{i-1} twice (directly and through
     t{i}), so DuckDB's default inlining re-evaluates the chain
-    EXPONENTIALLY in round count — 2^16 base-table scans at the r14
-    depth, which exhausts file descriptors before it exhausts time;
+    EXPONENTIALLY in round count — 2^16 base-table scans at 16
+    rounds, which exhausts file descriptors before it exhausts time;
     materialization makes each round evaluate once (linear), which is
     also what the engine's per-round checkpoint does."""
     return f"""
@@ -1951,9 +1956,9 @@ ORDER BY merge_rank"""
     "implement; a naive pairwise replace would diverge on 'aaa'). "
     "Each learned merge depends on all prior merges, so the "
     f"{_BPE_MERGES}-row result transitively certifies the whole "
-    "iterated pipeline (depth raised 4 -> 16, r13 verdict item 5 — "
-    "deeper rounds exercise merged-symbol-on-merged-symbol fusions "
-    "the toy depth never reached; PRODUCTION depth lives in "
+    "iterated pipeline (depth 16 — deep rounds exercise "
+    "merged-symbol-on-merged-symbol fusions a toy depth of 4 never "
+    "reaches; PRODUCTION depth lives in "
     "llm/bpe.py train_deep, the driver-loop twin pinned at 1000 "
     "merges against the Sennrich reference in tests/test_llm.py::"
     "test_bpe_train_deep). Scale: one corpus shuffle builds "
@@ -2092,7 +2097,7 @@ def qta20_bpe_encode(spark, sf_dir):
     from sora_spark.llm import bpe
 
     docs = tables(spark, sf_dir).documents
-    # lazy cut: train's first argmax collect materializes it (r14)
+    # lazy cut: train's first argmax collect materializes it
     wc = bpe.word_counts(docs).localCheckpoint(eager=False)
     merges, _ = bpe.train(wc, _BPE_ENC_MERGES)
     enc = bpe.encode_words(wc, merges)
@@ -2101,7 +2106,7 @@ def qta20_bpe_encode(spark, sf_dir):
         # infer `size(tokens) > 0` under the Generate and push it past
         # the projection, which re-evaluates the Arrow encode UDF a
         # second time per word (seen as two ArrowEvalPython nodes —
-        # 2x the Python cost; round-10 plan-pin finding). Outer explode
+        # 2x the Python cost, pinned in the plan tests). Outer explode
         # carries no inferred filter, and the outputs are identical:
         # every non-empty word encodes to >= 1 token, so there are no
         # empty arrays for outer to turn into NULL rows.
@@ -2181,7 +2186,7 @@ def qpipe5_tokenize_and_pack(spark, sf_dir):
     from sora_spark.llm import bpe, curate
 
     docs = tables(spark, sf_dir).documents
-    # lazy cut: train's first argmax collect materializes it (r14)
+    # lazy cut: train's first argmax collect materializes it
     wc = bpe.word_counts(docs).localCheckpoint(eager=False)
     merges, _ = bpe.train(wc, _BPE_ENC_MERGES)
     wtok = bpe.encode_words(wc, merges).select(
@@ -3190,10 +3195,10 @@ def qta23_encoding_repair(spark, sf_dir):
 # "OTHER" residual bucket per distribution — a valid drift monitor
 # (truncated+remainder distributions are still distributions, and a
 # source whose drift lives in the tail shows up as OTHER-mass drift).
-# The round-10 shape broadcast the FULL vocabulary into the grid;
-# under Heaps' law the distinct-token table of a 100 TB crawl is
-# billions of rows and that broadcast OOMs the driver (r10 verdict
-# item 2). K=16 is deliberately BELOW the fixture's 31-token
+# Broadcasting the FULL vocabulary into the grid is rejected: under
+# Heaps' law the distinct-token table of a 100 TB crawl is billions
+# of rows and that broadcast OOMs the driver. K=16 is deliberately
+# BELOW the fixture's 31-token
 # vocabulary so the truncation + OTHER-bucket semantics are
 # oracle-certified, not just written; production monitors would run
 # K in the tens of thousands — the grid stays K x sources either way.
@@ -3248,7 +3253,7 @@ FROM other ORDER BY source
     "template flood or language drift shows as a JS spike long "
     "before downstream evals move). Complements qdrift1 (numeric "
     "histogram L1): this one is over TEXT distributions. Shape "
-    "(r11, replacing the r10 full-vocab broadcast — a 100 TB "
+    "(no full-vocab broadcast — a 100 TB "
     "scale-killer under Heaps' law): one wordcount pass, then JS "
     "over the global TOP-K vocabulary (TakeOrderedAndProject — "
     "map-side partial top-K, never a full sort) plus an explicit "
@@ -3266,6 +3271,32 @@ FROM other ORDER BY source
 def qta24_source_divergence(spark, sf_dir):
     docs = tables(spark, sf_dir).documents
     return textstats.source_divergence(docs, top_k=_QTA24_TOP_K)
+
+
+# ---- set-up shared by the index-writing queries ------------------------
+
+
+def _probe_top3(spark, path, emb, n_probe, where=None):
+    """Top-3 neighbors of vectors 0..19 from the IVF index at `path`,
+    `n_probe` lists probed (every list: the brute-force answer)."""
+    probes = emb.filter(F.col("vec_id") < 20)
+    return ann.ivf_topk_indexed(
+        spark, path, probes, k=3, n_probe=n_probe, where=where
+    ).orderBy("probe_id", "rn")
+
+
+def _split_text_index(docs, name, positions=False):
+    """A postings index in the fresh directory `name`: built from the
+    doc_id % 4 != 0 documents with the other quarter appended, so
+    serving from it also certifies incremental ingest. Returns the
+    index path."""
+    path = os.path.join(_fresh_dir(name), "index")
+    textindex.write_text_index(
+        docs.filter(F.col("doc_id") % 4 != 0), path, n_buckets=16,
+        positions=positions)
+    textindex.append_to_text_index(
+        docs.filter(F.col("doc_id") % 4 == 0), path)
+    return path
 
 
 @query(
@@ -3302,13 +3333,9 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
     tags=("llm", "vector", "index", "pq", "ann"),
 )
 def qix5_ivfpq_exhaustive_probe(spark, sf_dir):
-    import os
-
-    from sora_spark.queries.relational import _roundtrip_dir
-
     emb = tables(spark, sf_dir).embeddings
     probes = emb.filter(F.col("vec_id") < 20)
-    path = os.path.join(_roundtrip_dir("ivfpq_emb"), "index")
+    path = os.path.join(_fresh_dir("ivfpq_emb"), "index")
     ann.write_ivfpq_index(
         emb, path, n_centroids=16, m_subs=4, n_codes=16, iters=2
     )
@@ -3349,24 +3376,13 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
     tags=("llm", "vector", "index", "ann", "ingest"),
 )
 def qix6_ivf_incremental_append(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-
     emb = tables(spark, sf_dir).embeddings
     base = emb.filter(F.col("vec_id") % 4 != 0)
     extra = emb.filter(F.col("vec_id") % 4 == 0)
-    path = os.path.join(_roundtrip_dir("ivf_append_emb"), "index")
-    # mode("append") accumulates across runs in one process: start clean
-    for p in (path, path + "_centroids", path + "_coarse"):
-        shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(_fresh_dir("ivf_append_emb"), "index")
     ann.write_ivf_index(base, path, n_centroids=16, iters=2)
     ann.append_to_ivf_index(extra, path)
-    probes = emb.filter(F.col("vec_id") < 20)
-    return ann.ivf_topk_indexed(
-        spark, path, probes, k=3, n_probe=16
-    ).orderBy("probe_id", "rn")
+    return _probe_top3(spark, path, emb, n_probe=16)
 
 
 @query(
@@ -3458,17 +3474,10 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
     tags=("llm", "vector", "index", "pq", "ann", "ingest"),
 )
 def qix7_ivfpq_incremental_append(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-
     emb = tables(spark, sf_dir).embeddings
     base = emb.filter(F.col("vec_id") % 4 != 0)
     extra = emb.filter(F.col("vec_id") % 4 == 0)
-    path = os.path.join(_roundtrip_dir("ivfpq_append_emb"), "index")
-    for p in (path, path + "_centroids", path + "_coarse", path + "_pq"):
-        shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(_fresh_dir("ivfpq_append_emb"), "index")
     ann.write_ivfpq_index(
         base, path, n_centroids=16, m_subs=4, n_codes=16, iters=2
     )
@@ -3670,22 +3679,14 @@ FROM scored GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20
     "any drift between build-time and query-time arithmetic is a "
     "hash mismatch. df comes from the vocabulary-sized _terms "
     "sidecar — written partitioned by the SAME term-hash bucket "
-    "(multi-task, and the lookup prunes to the query terms' buckets; "
-    "r12) — and the corpus constants from a single-row _consts "
+    "(multi-task, and the lookup prunes to the query terms' buckets) "
+    "— and the corpus constants from a single-row _consts "
     "sidecar.",
     tags=("llm", "text", "index", "ranking"),
 )
 def qix8_bm25_indexed(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.llm import textindex
-    from sora_spark.queries.relational import _roundtrip_dir
-
     docs = tables(spark, sf_dir).documents
-    path = os.path.join(_roundtrip_dir("text_index_docs"), "index")
-    for p in (path, path + "_terms", path + "_consts"):
-        shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(_fresh_dir("text_index_docs"), "index")
     textindex.write_text_index(docs, path, n_buckets=16)
     return textindex.bm25_topk_indexed(
         spark, path, ["spark", "vector", "window"], top_k=20
@@ -3732,20 +3733,8 @@ FROM scored GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20
     tags=("llm", "text", "index", "ranking", "ingest"),
 )
 def qix9_text_index_append(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.llm import textindex
-    from sora_spark.queries.relational import _roundtrip_dir
-
     docs = tables(spark, sf_dir).documents
-    path = os.path.join(_roundtrip_dir("text_index_append"), "index")
-    for p in (path, path + "_terms", path + "_consts"):
-        shutil.rmtree(p, ignore_errors=True)
-    textindex.write_text_index(
-        docs.filter(F.col("doc_id") % 4 != 0), path, n_buckets=16)
-    textindex.append_to_text_index(
-        docs.filter(F.col("doc_id") % 4 == 0), path)
+    path = _split_text_index(docs, "text_index_append")
     return textindex.bm25_topk_indexed(
         spark, path, ["spark", "vector", "window"], top_k=20
     )
@@ -3776,21 +3765,8 @@ ORDER BY doc_id
     tags=("llm", "text", "index", "phrase", "ingest"),
 )
 def qix10_phrase_from_index(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.llm import textindex
-    from sora_spark.queries.relational import _roundtrip_dir
-
     docs = tables(spark, sf_dir).documents
-    path = os.path.join(_roundtrip_dir("text_index_pos"), "index")
-    for p in (path, path + "_terms", path + "_consts"):
-        shutil.rmtree(p, ignore_errors=True)
-    textindex.write_text_index(
-        docs.filter(F.col("doc_id") % 4 != 0), path, n_buckets=16,
-        positions=True)
-    textindex.append_to_text_index(
-        docs.filter(F.col("doc_id") % 4 == 0), path)
+    path = _split_text_index(docs, "text_index_pos", positions=True)
     return textindex.phrase_docs_indexed(spark, path, ["the", "data"])
 
 
@@ -3817,8 +3793,8 @@ SELECT doc_id, round(sum(contrib), 6) AS score
 FROM scored GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20
 """,
     doc="qix11: DOCUMENT DELETION from the postings index "
-    "(textindex.delete_from_text_index — the GDPR-removal path, r11 "
-    "verdict item 4, and the qix9 ingest merge run in reverse): the "
+    "(textindex.delete_from_text_index — the GDPR-removal path, "
+    "the qix9 ingest merge run in reverse): the "
     "index is built over the FULL corpus, the doc_id%4=0 quarter is "
     "deleted — survivors-only rewrite of just the touched term-hash "
     "buckets via dynamic partition overwrite, plus EXACT integer "
@@ -3834,16 +3810,8 @@ FROM scored GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20
     tags=("llm", "text", "index", "ranking", "delete"),
 )
 def qix11_text_index_delete(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.llm import textindex
-    from sora_spark.queries.relational import _roundtrip_dir
-
     docs = tables(spark, sf_dir).documents
-    path = os.path.join(_roundtrip_dir("text_index_delete"), "index")
-    for p in (path, path + "_terms", path + "_consts"):
-        shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(_fresh_dir("text_index_delete"), "index")
     textindex.write_text_index(docs, path, n_buckets=16)
     textindex.delete_from_text_index(
         spark, path, docs.filter(F.col("doc_id") % 4 == 0).select("doc_id")
@@ -3870,7 +3838,7 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 """,
     doc="qix12: VECTOR DELETION from the on-disk IVF index "
     "(llm/ann.py delete_from_ivf_index — the removal twin of qix6's "
-    "append, r11 verdict item 4): the index is built over the full "
+    "append): the index is built over the full "
     "corpus, the vec_id%4=0 quarter is deleted — survivors-only "
     "rewrite of just the touched _cid inverted lists via dynamic "
     "partition overwrite, fully-emptied lists removed explicitly, "
@@ -3886,23 +3854,13 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
     tags=("llm", "vector", "index", "ann", "delete"),
 )
 def qix12_ivf_index_delete(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_roundtrip_dir("ivf_delete_emb"), "index")
-    for p in (path, path + "_centroids", path + "_coarse"):
-        shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(_fresh_dir("ivf_delete_emb"), "index")
     ann.write_ivf_index(emb, path, n_centroids=16, iters=2)
     ann.delete_from_ivf_index(
         spark, path, emb.filter(F.col("vec_id") % 4 == 0).select("vec_id")
     )
-    probes = emb.filter(F.col("vec_id") < 20)
-    return ann.ivf_topk_indexed(
-        spark, path, probes, k=3, n_probe=16
-    ).orderBy("probe_id", "rn")
+    return _probe_top3(spark, path, emb, n_probe=16)
 
 
 @query(
@@ -3941,15 +3899,8 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
     tags=("llm", "vector", "index", "ann", "maintenance"),
 )
 def qix13_ivf_list_split(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_roundtrip_dir("ivf_split_emb"), "index")
-    for p in (path, path + "_centroids", path + "_coarse"):
-        shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(_fresh_dir("ivf_split_emb"), "index")
     ann.write_ivf_index(emb, path, n_centroids=8, iters=2)
     stats = {
         int(r["_cid"]): int(r["n_vectors"])
@@ -3957,10 +3908,7 @@ def qix13_ivf_list_split(spark, sf_dir):
     }
     hot = max(stats, key=lambda c: (stats[c], -c))  # deterministic tie
     ann.split_ivf_list(spark, path, hot)
-    probes = emb.filter(F.col("vec_id") < 20)
-    return ann.ivf_topk_indexed(
-        spark, path, probes, k=3, n_probe=9
-    ).orderBy("probe_id", "rn")
+    return _probe_top3(spark, path, emb, n_probe=9)
 
 
 @query(
@@ -3985,7 +3933,7 @@ SELECT probe_id, CAST(rn AS INT) AS rn, neighbor_id, sim
 FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 """,
     doc="qix17: IVF MAINTENANCE POLICY (llm/ann.py "
-    "maintain_ivf_index — r12 verdict item 5, wiring qix13's manual "
+    "maintain_ivf_index — wiring qix13's manual "
     "split into the documented ~4x drift trigger as ONE idempotent "
     "operation): the index is built at 8 lists, then a genuinely "
     "DRIFTING ingest lands — every corpus vector abs-mapped into the "
@@ -4008,15 +3956,8 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
     tags=("llm", "vector", "index", "ann", "maintenance"),
 )
 def qix17_ivf_maintenance(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_roundtrip_dir("ivf_maintain_emb"), "index")
-    for p in (path, path + "_centroids", path + "_coarse"):
-        shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(_fresh_dir("ivf_maintain_emb"), "index")
     ann.write_ivf_index(emb, path, n_centroids=8, iters=2)
     drifted = emb.select(
         (F.col("vec_id") + 100000).alias("vec_id"),
@@ -4024,10 +3965,7 @@ def qix17_ivf_maintenance(spark, sf_dir):
     )
     ann.append_to_ivf_index(drifted, path)
     rep = ann.maintain_ivf_index(spark, path)
-    probes = emb.filter(F.col("vec_id") < 20)
-    return ann.ivf_topk_indexed(
-        spark, path, probes, k=3, n_probe=rep["n_lists"]
-    ).orderBy("probe_id", "rn")
+    return _probe_top3(spark, path, emb, n_probe=rep["n_lists"])
 
 
 @query(
@@ -4056,8 +3994,8 @@ SELECT probe_id, CAST(rn AS INT) AS rn, neighbor_id, sim
 FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 """,
     doc="qix18: CLOSED-LOOP REBUILD (llm/ann.py rebuild_ivf_index — "
-    "r13 verdict item 2: qix17's maintenance loop could FLAG "
-    "rebuild_recommended but nothing acted on it): the index is "
+    "acting on the rebuild_recommended flag qix17's maintenance "
+    "loop can only raise): the index is "
     "built at 8 lists, then a corpus-sized mass of IDENTICAL vectors "
     "(every one a copy of vec 0's embedding, ids 200000+) lands via "
     "append — the documented degenerate drift a split cannot fix "
@@ -4084,15 +4022,8 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
     tags=("llm", "vector", "index", "ann", "maintenance"),
 )
 def qix18_ivf_rebuild(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_roundtrip_dir("ivf_rebuild_emb"), "index")
-    for p in (path, path + "_centroids", path + "_coarse"):
-        shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(_fresh_dir("ivf_rebuild_emb"), "index")
     ann.write_ivf_index(emb, path, n_centroids=8, iters=2)
     n = emb.count()
     v0 = emb.filter(F.col("vec_id") == 0).select("embedding")
@@ -4107,10 +4038,7 @@ def qix18_ivf_rebuild(spark, sf_dir):
     n_lists = rep["n_lists"]
     if rep["rebuild_recommended"]:
         n_lists = ann.rebuild_ivf_index(spark, path)["n_lists"]
-    probes = emb.filter(F.col("vec_id") < 20)
-    return ann.ivf_topk_indexed(
-        spark, path, probes, k=3, n_probe=n_lists
-    ).orderBy("probe_id", "rn")
+    return _probe_top3(spark, path, emb, n_probe=n_lists)
 
 
 @query(
@@ -4235,19 +4163,10 @@ ORDER BY rrf DESC, id
     tags=("llm", "index", "ranking", "hybrid", "ann"),
 )
 def qix14_hybrid_rrf_fusion(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.llm import hybrid, textindex
-    from sora_spark.queries.relational import _roundtrip_dir
-
     t = tables(spark, sf_dir)
-    base = _roundtrip_dir("hybrid_rrf")
+    base = _fresh_dir("hybrid_rrf")
     tpath = os.path.join(base, "tindex")
     vpath = os.path.join(base, "vindex")
-    for p in (tpath, tpath + "_terms", tpath + "_consts",
-              vpath, vpath + "_centroids"):
-        shutil.rmtree(p, ignore_errors=True)
     textindex.write_text_index(t.documents, tpath, n_buckets=16)
     ann.write_ivf_index(t.embeddings, vpath, n_centroids=16, iters=2)
     text_hits = textindex.bm25_topk_indexed(
@@ -4296,18 +4215,11 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
     tags=("llm", "vector", "index", "ann", "filter"),
 )
 def qix15_filtered_knn(spark, sf_dir):
-    import os
-
-    from sora_spark.queries.relational import _roundtrip_dir
-
     emb = tables(spark, sf_dir).embeddings
-    probes = emb.filter(F.col("vec_id") < 20)
-    path = os.path.join(_roundtrip_dir("ivf_filtered"), "index")
+    path = os.path.join(_fresh_dir("ivf_filtered"), "index")
     ann.write_ivf_index(emb, path, n_centroids=16, iters=2)
-    return ann.ivf_topk_indexed(
-        spark, path, probes, k=3, n_probe=16,
-        where="label <> 7 AND vec_id % 2 = 0",
-    ).orderBy("probe_id", "rn")
+    return _probe_top3(
+        spark, path, emb, n_probe=16, where="label <> 7 AND vec_id % 2 = 0")
 
 
 @query(
@@ -4342,21 +4254,8 @@ FROM m ORDER BY doc_id
     tags=("llm", "text", "index", "snippet", "ingest"),
 )
 def qix16_kwic_snippets(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.llm import textindex
-    from sora_spark.queries.relational import _roundtrip_dir
-
     docs = tables(spark, sf_dir).documents
-    path = os.path.join(_roundtrip_dir("text_index_kwic"), "index")
-    for p in (path, path + "_terms", path + "_consts"):
-        shutil.rmtree(p, ignore_errors=True)
-    textindex.write_text_index(
-        docs.filter(F.col("doc_id") % 4 != 0), path, n_buckets=16,
-        positions=True)
-    textindex.append_to_text_index(
-        docs.filter(F.col("doc_id") % 4 == 0), path)
+    path = _split_text_index(docs, "text_index_kwic", positions=True)
     return textindex.kwic_snippets_indexed(
         spark, path, docs, "spark", window=2)
 
@@ -4423,8 +4322,8 @@ def qvq3_matryoshka_prefilter(spark, sf_dir):
     )
     # Stage A ranks on (pid, nid, s) ONLY — the corpus/probe vectors
     # are dropped before the window's pid-shuffle and re-attached to
-    # the 20-per-probe survivors by id afterward (r13 verdict nit:
-    # carrying cv+pv through the exchange shuffled ~16x more bytes
+    # the 20-per-probe survivors by id afterward (carrying cv+pv
+    # through the exchange would shuffle ~16x more bytes
     # than the rank needs; at 100 TB the funnel's cheap pass must
     # shuffle scores, not payloads — guide §2.3/§8). The probe slice
     # happens once on the broadcast side (same array value, so the

@@ -7,13 +7,154 @@ SCALE.md.
 
 from __future__ import annotations
 
+import os
+import time
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sora_spark.catalog import tables
 from sora_spark.llm import curate, dedup, textstats
+from sora_spark.operators import incremental as inc
 from sora_spark.operators.skew import salted_join
 from sora_spark.queries.registry import query
+from sora_spark.queries.relational import _fresh_dir
+from sora_spark.sources import commit_log as cl
+from sora_spark.sources import commit_log_stream as cls_
+from sora_spark.streaming.upsert import merge_batch
+
+# ---- set-up shared by the table-writing queries ------------------------
+
+
+def _kv(orders, m, r=0, ts=True):
+    """The orders rows with o_orderkey % m == r as (k, st, price[, ts]),
+    price rounded to cents: the rows a table-writing query lays down."""
+    cols = [
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderstatus").alias("st"),
+        F.round("o_totalprice", 2).alias("price"),
+    ]
+    if ts:
+        cols.append(F.col("o_orderdate").alias("ts"))
+    return orders.filter(F.col("o_orderkey") % m == r).select(*cols)
+
+
+def _batch(orders, m, bump=1000):
+    """The update/insert batch merged over a `_kv` snapshot: the orders
+    rows with o_orderkey % m == 0 at price + `bump` and one day later,
+    so every batch row is strictly newer and the merge's tiebreak
+    never decides."""
+    return orders.filter(F.col("o_orderkey") % m == 0).select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderstatus").alias("st"),
+        F.round(F.col("o_totalprice") + bump, 2).alias("price"),
+        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
+    )
+
+
+def _upper_batch(orders, snap):
+    """A key-narrow `_batch` (o_orderkey % 15 == 0, price + 500) cut to
+    the upper half of `snap`'s key range: a mix of updates and inserts
+    whose key range is disjoint from most of a key-range layout."""
+    maxk = snap.agg(F.max("k")).collect()[0][0]
+    return _batch(orders, 15, bump=500).filter(2 * F.col("k") >= maxk)
+
+
+def _split_batch(orders):
+    """The merge-on-read batch: the key%5 orders rows at price + 1000,
+    one day LATER for multiples of 60 and one day EARLIER otherwise, so
+    the keys it shares with a key%6 snapshot (the multiples of 30) fill
+    both the winning and the losing merge leg."""
+    return orders.filter(F.col("o_orderkey") % 5 == 0).select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderstatus").alias("st"),
+        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
+        (F.col("o_orderdate") + F.when(
+            F.col("o_orderkey") % 60 == 0, F.expr("INTERVAL 1 DAY")
+        ).otherwise(F.expr("INTERVAL -1 DAY"))).alias("ts"),
+    )
+
+
+def _cents(orders, m, days=0):
+    """The incremental-view queries' rows: o_orderkey % m == 0 as
+    (k, pri, cents, ts), the measure in integer cents so the delta
+    algebra is exact. `days` > 0 builds an update batch: price +
+    1000 * days, ts `days` later."""
+    price, ts = F.col("o_totalprice"), F.col("o_orderdate")
+    if days:
+        price = price + 1000 * days
+        ts = ts + F.expr(f"INTERVAL {days} DAY")
+    return orders.filter(F.col("o_orderkey") % m == 0).select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderpriority").alias("pri"),
+        F.round(price * 100).cast("bigint").alias("cents"),
+        ts.alias("ts"),
+    )
+
+
+def _tiled_table(spark, name, snap):
+    """A commit-log table in the fresh directory `name` holding `snap`
+    as three key-range directories (ntile(3) over k: a create and two
+    appends, each recording k stats). Returns the table path."""
+    path = os.path.join(_fresh_dir(name), "table")
+    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
+    cl.create_table(
+        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
+    for t in (2, 3):
+        cl.append(spark, path, tiled.filter(f"_t = {t}").drop("_t"),
+                  stats_cols=["k"])
+    return path
+
+
+def _signed_ops(feed):
+    """A change feed as the signed ops `inc.refresh` takes: inserts and
+    post-images add (I), deletes and pre-images retract (D)."""
+    return feed.select(
+        "pri", "cents",
+        F.when(
+            F.col("_change_type").isin("insert", "update_postimage"),
+            F.lit("I"),
+        ).otherwise(F.lit("D")).alias("op"),
+    )
+
+
+def _view_sink(spark, src, vw):
+    """Seed the per-priority view table `vw` from version 1 of the
+    commit-log table `src` and return the foreachBatch body that
+    refreshes it from each micro-batch of `src`'s change feed.
+
+    The view rows carry an EPOCH WATERMARK (the Delta txnVersion
+    pattern): a batch replayed after a crash between the view commit
+    and Spark's checkpoint write would otherwise recompute the refresh
+    FROM THE ALREADY-REFRESHED view and double-apply the delta, so a
+    batch at or below the recorded epoch is skipped. The skip, not
+    merge idempotence, makes the sink exactly-once."""
+    cl.create_table(
+        spark, vw,
+        inc.build_view(cl.read_table(spark, src, 1), ["pri"], ["cents"])
+        .withColumn("_e", F.lit(-1).cast("bigint")))
+
+    def maintain(feed, epoch_id):
+        sess = feed.sparkSession
+        cur = cl.read_table(sess, vw)
+        seen = cur.agg(F.max("_e")).collect()[0][0]
+        if seen is not None and int(seen) >= int(epoch_id):
+            return
+        refreshed = inc.refresh(
+            cur.drop("_e"), _signed_ops(feed), ["pri"], ["cents"]
+        ).withColumn("_e", F.lit(int(epoch_id)).cast("bigint"))
+        cl.merge_upsert(sess, vw, refreshed, ["pri"], "_e")
+
+    return maintain
+
+
+def _view_rows(view):
+    """A per-priority view as the incremental-view queries emit it."""
+    return view.select(
+        "pri",
+        F.col("n").cast("bigint").alias("n"),
+        F.col("sum_cents").cast("bigint").alias("sum_cents"),
+    ).orderBy("pri")
 
 
 @query(
@@ -640,27 +781,10 @@ FROM r WHERE rn = 1 ORDER BY k
     tags=("sink", "cdc", "upsert"),
 )
 def qup1_upsert_merge(spark, sf_dir):
-    import os
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.streaming.upsert import merge_batch
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    path = os.path.join(_roundtrip_dir("upsert_orders"), "table")
-    snap.write.mode("overwrite").parquet(path)
-    merge_batch(spark, path, batch, ["k"], "ts")
+    path = os.path.join(_fresh_dir("upsert_orders"), "table")
+    _kv(orders, 7).write.mode("overwrite").parquet(path)
+    merge_batch(spark, path, _batch(orders, 5), ["k"], "ts")
     return (
         spark.read.parquet(path)
         .select(
@@ -879,8 +1003,6 @@ FROM survivors GROUP BY o_orderpriority ORDER BY o_orderpriority
     tags=("pipeline", "cdc", "incremental"),
 )
 def qmv1_incremental_agg(spark, sf_dir):
-    from sora_spark.operators import incremental as inc
-
     orders = tables(spark, sf_dir).orders
     cutoff = F.lit("1997-01-01").cast("timestamp")
     base = orders.filter(F.col("o_orderdate") < cutoff)
@@ -3113,32 +3235,11 @@ FROM versions ORDER BY version, k
     tags=("sink", "cdc", "upsert", "acid"),
 )
 def qup7_commit_log_table(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_orders"), "table")
-    # the roundtrip dir is pid-scoped but create_table is
-    # version-exclusive — clear any previous run's log in this process
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(spark, path, snap)
+    path = os.path.join(_fresh_dir("commit_log_orders"), "table")
+    cl.create_table(spark, path, _kv(orders, 7))
     pinned_v1 = cl.read_table(spark, path)  # BEFORE the merge commits
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")
+    cl.merge_upsert(spark, path, _batch(orders, 5), ["k"], "ts")
     v2 = cl.read_table(spark, path)
 
     def shape(df, version):
@@ -3180,7 +3281,7 @@ FROM merged ORDER BY k
 """,
     doc="qup8: DATA-SKIPPED MERGE on the commit-log table "
     "(sources/commit_log.py merge_upsert prune=True — the fact-scale "
-    "form its r10 docstring promised): the snapshot is laid down as "
+    "form): the snapshot is laid down as "
     "THREE key-disjoint directories (ntile(3) over the key, each "
     "commit recording min/max/null stats for k), then a key-narrow "
     "batch (upper half of the key range, a mix of updates and "
@@ -3197,45 +3298,10 @@ FROM merged ORDER BY k
     tags=("sink", "upsert", "acid", "prune"),
 )
 def qup8_merge_pruned(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    tiled = snap.withColumn(
-        "_t", F.ntile(3).over(Window.orderBy("k"))
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_pruned"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
-
-    maxk = snap.agg(F.max("k")).collect()[0][0]
-    batch = (
-        orders.filter(
-            (F.col("o_orderkey") % 15 == 0)
-            & (2 * F.col("o_orderkey") >= F.lit(maxk))
-        )
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("st"),
-            F.round(F.col("o_totalprice") + 500, 2).alias("price"),
-            (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-        )
-    )
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")
+    snap = _kv(orders, 6)
+    path = _tiled_table(spark, "commit_log_pruned", snap)
+    cl.merge_upsert(spark, path, _upper_batch(orders, snap), ["k"], "ts")
     return (
         cl.read_table(spark, path)
         .select(
@@ -3284,30 +3350,11 @@ FROM diff ORDER BY k
     tags=("cdc", "acid"),
 )
 def qup9_table_changes(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_cdc"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(spark, path, snap, stats_cols=["k"])      # v1
-    cl.delete_where(spark, path, "k % 21 = 0")                # v2
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")          # v3
+    path = os.path.join(_fresh_dir("commit_log_cdc"), "table")
+    cl.create_table(spark, path, _kv(orders, 7), stats_cols=["k"])  # v1
+    cl.delete_where(spark, path, "k % 21 = 0")                      # v2
+    cl.merge_upsert(spark, path, _batch(orders, 5), ["k"], "ts")    # v3
     return (
         cl.table_changes(spark, path, 1, 3, ["k"])
         .select(
@@ -3346,27 +3393,9 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
     tags=("sink", "acid", "prune"),
 )
 def qup10_delete_compact(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_delopt"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
+    path = _tiled_table(
+        spark, "commit_log_delopt", _kv(orders, 6, ts=False))
     pre_delete = cl.table_versions(path)[-1]
     cl.delete_where(spark, path, "st = 'F'")
     cl.compact(spark, path)
@@ -3405,27 +3434,17 @@ FROM orders WHERE o_orderkey % 3 = 0 ORDER BY k
     tags=("sink", "streaming", "acid"),
 )
 def qup11_txn_exactly_once(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
 
-    def epoch(residue, poison=0):
-        return orders.filter(F.col("o_orderkey") % 9 == residue).select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("st"),
-            F.round(F.col("o_totalprice") + poison, 2).alias("price"),
-        )
+    def epoch(residue):
+        return _kv(orders, 9, residue, ts=False)
 
-    path = os.path.join(_roundtrip_dir("commit_log_txn"), "table")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_fresh_dir("commit_log_txn"), "table")
     sink = cl.exactly_once_sink(path, "qup11", stats_cols=["k"])
     sink(epoch(0), 0)
     sink(epoch(3), 1)
-    sink(epoch(3, poison=9999), 1)  # replayed epoch: must be skipped
+    poisoned = epoch(3).withColumn("price", F.col("price") + 9999)
+    sink(poisoned, 1)  # replayed epoch: must be skipped
     sink(epoch(6), 2)
     return cl.read_table(spark, path).orderBy("k")
 
@@ -3449,7 +3468,7 @@ FROM orders WHERE o_orderkey % 4 = 0 ORDER BY k
     "txn-watermark sink — table -> stream -> transform -> "
     "exactly-once sink -> table, the Delta-shaped CDC pipeline, "
     "availableNow-triggered so each run drains and stops. The source "
-    "runs with maxVersionsPerTrigger=1 (r12 admission control — "
+    "runs with maxVersionsPerTrigger=1 (admission control — "
     "Delta's knob, so a backlog never becomes one giant micro-batch): "
     "two runs over one checkpoint drain the two-version backlog one "
     "batch each, and the output still hashes against plain SQL over "
@@ -3463,33 +3482,15 @@ FROM orders WHERE o_orderkey % 4 = 0 ORDER BY k
     tags=("sink", "streaming", "acid", "cdc"),
 )
 def qup12_stream_table_to_table(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-    from sora_spark.sources import commit_log_stream as cls_
-
     cls_.register(spark)
     orders = tables(spark, sf_dir).orders
+    base = _fresh_dir("commit_log_loop")
+    src, dst, ck = (os.path.join(base, d) for d in ("src", "dst", "ck"))
+    cl.create_table(
+        spark, src, _kv(orders, 8, 0, ts=False), stats_cols=["k"])
+    cl.append(spark, src, _kv(orders, 8, 4, ts=False), stats_cols=["k"])
 
-    def epoch(residue):
-        return orders.filter(F.col("o_orderkey") % 8 == residue).select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("st"),
-            F.round("o_totalprice", 2).alias("price"),
-        )
-
-    base = _roundtrip_dir("commit_log_loop")
-    src = os.path.join(base, "src")
-    dst = os.path.join(base, "dst")
-    ck = os.path.join(base, "ck")
-    for p in (src, dst, ck):
-        shutil.rmtree(p, ignore_errors=True)
-    cl.create_table(spark, src, epoch(0), stats_cols=["k"])
-    cl.append(spark, src, epoch(4), stats_cols=["k"])
-
-    # maxVersionsPerTrigger=1 (r12 admission control): each run's
+    # maxVersionsPerTrigger=1 (admission control): each run's
     # batch admits ONE source version, so the two-version backlog
     # drains across two availableNow runs over the same checkpoint —
     # exactly-once composition (txn sink + capped source) means batch
@@ -3551,24 +3552,10 @@ ORDER BY k
     tags=("sink", "acid", "schema"),
 )
 def qup13_schema_evolution(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    v1 = orders.filter(F.col("o_orderkey") % 9 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-    )
-    v2 = orders.filter(F.col("o_orderkey") % 9 == 3).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_evo"), "table")
-    shutil.rmtree(path, ignore_errors=True)
+    v1 = _kv(orders, 9, 0, ts=False).drop("price")
+    v2 = _kv(orders, 9, 3, ts=False)
+    path = os.path.join(_fresh_dir("commit_log_evo"), "table")
     cl.create_table(spark, path, v1, stats_cols=["k"])
     cl.append(spark, path, v2, stats_cols=["k"], merge_schema=True)
     return cl.read_table(spark, path).orderBy("k")
@@ -3615,43 +3602,16 @@ FROM merged ORDER BY k
     tags=("sink", "acid", "prune", "layout"),
 )
 def qup14_clustered_optimize(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_cluster"), "table")
-    shutil.rmtree(path, ignore_errors=True)
+    snap = _kv(orders, 6)
+    path = os.path.join(_fresh_dir("commit_log_cluster"), "table")
     cl.create_table(
         spark, path, snap.filter(F.col("k") % 18 == 0), stats_cols=["k"])
-    cl.append(
-        spark, path, snap.filter(F.col("k") % 18 == 6), stats_cols=["k"])
-    cl.append(
-        spark, path, snap.filter(F.col("k") % 18 == 12), stats_cols=["k"])
+    for res in (6, 12):
+        cl.append(spark, path, snap.filter(F.col("k") % 18 == res),
+                  stats_cols=["k"])
     cl.compact(spark, path, target_partitions=4, cluster_by=["k"])
-
-    maxk = snap.agg(F.max("k")).collect()[0][0]
-    batch = (
-        orders.filter(
-            (F.col("o_orderkey") % 15 == 0)
-            & (2 * F.col("o_orderkey") >= F.lit(maxk))
-        )
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("st"),
-            F.round(F.col("o_totalprice") + 500, 2).alias("price"),
-            (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-        )
-    )
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")
+    cl.merge_upsert(spark, path, _upper_batch(orders, snap), ["k"], "ts")
     return (
         cl.read_table(spark, path)
         .select(
@@ -3694,28 +3654,17 @@ ORDER BY k
     tags=("sink", "acid", "constraint"),
 )
 def qup15_check_constraints(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
 
-    def sel(residue, negate=False):
-        price = F.round("o_totalprice", 2)
-        return orders.filter(F.col("o_orderkey") % 9 == residue).select(
-            F.col("o_orderkey").alias("k"),
-            (-price if negate else price).alias("price"),
-            F.col("o_orderdate").alias("ts"),
-        )
+    def sel(residue):
+        return _kv(orders, 9, residue).drop("st")
 
-    path = os.path.join(_roundtrip_dir("commit_log_check"), "table")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_fresh_dir("commit_log_check"), "table")
     cl.create_table(spark, path, sel(0), stats_cols=["k"],
                     check="price > 0")
     try:
-        cl.append(spark, path, sel(6, negate=True), stats_cols=["k"])
+        negated = sel(6).withColumn("price", -F.col("price"))
+        cl.append(spark, path, negated, stats_cols=["k"])
         raise AssertionError("CHECK constraint did not fire")
     except cl.ConstraintViolationError:
         pass
@@ -3877,7 +3826,7 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
 """,
     doc="qup16: DELETION VECTORS on the commit-log table "
     "(commit_log.delete_where deletion_vectors=True — the Delta DV "
-    "shape, r11 verdict item 1): the snapshot lands as three "
+    "shape): the snapshot lands as three "
     "key-range directories, then TWO stacked selective DELETEs "
     "(st='F', then k%4=0) each touch ZERO data directories — the "
     "matched (file, row_index) positions land in a tiny dv/ sidecar "
@@ -3896,27 +3845,8 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
     tags=("sink", "acid", "prune", "dv"),
 )
 def qup16_deletion_vectors(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_dv"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
+    path = _tiled_table(spark, "commit_log_dv", _kv(orders, 6, ts=False))
     pre_delete = cl.table_versions(path)[-1]
     cl.delete_where(spark, path, "st = 'F'", deletion_vectors=True)
     cl.delete_where(spark, path, "k % 4 = 0", deletion_vectors=True)
@@ -3960,8 +3890,8 @@ SELECT k, st, price, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s, src
 FROM merged ORDER BY k
 """,
     doc="qup17: MERGE composed with SCHEMA EVOLUTION "
-    "(commit_log.merge_upsert merge_schema=True — Delta's autoMerge, "
-    "r11 verdict item 6): the table lands as three key-range "
+    "(commit_log.merge_upsert merge_schema=True — Delta's autoMerge): "
+    "the table lands as three key-range "
     "directories with stats, then a key-narrow batch carrying a NEW "
     "src column evolves-and-merges in ONE commit. The output "
     "certifies all three row provenances at once: batch rows carry "
@@ -3978,43 +3908,10 @@ FROM merged ORDER BY k
     tags=("sink", "acid", "upsert", "schema"),
 )
 def qup17_merge_schema_evolution(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_automerge"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
-
-    maxk = snap.agg(F.max("k")).collect()[0][0]
-    batch = (
-        orders.filter(
-            (F.col("o_orderkey") % 15 == 0)
-            & (2 * F.col("o_orderkey") >= F.lit(maxk))
-        )
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("st"),
-            F.round(F.col("o_totalprice") + 500, 2).alias("price"),
-            (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-            F.lit("batch").alias("src"),
-        )
-    )
+    snap = _kv(orders, 6)
+    path = _tiled_table(spark, "commit_log_automerge", snap)
+    batch = _upper_batch(orders, snap).withColumn("src", F.lit("batch"))
     cl.merge_upsert(spark, path, batch, ["k"], "ts", merge_schema=True)
     return (
         cl.read_table(spark, path)
@@ -4058,27 +3955,9 @@ FROM snap ORDER BY k
     tags=("sink", "acid", "update"),
 )
 def qup18_update_where(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_update"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
+    path = _tiled_table(
+        spark, "commit_log_update", _kv(orders, 6, ts=False))
     cl.update_where(
         spark, path, "st = 'F'",
         {"st": "'U'", "price": "round(price + 100, 2)"},
@@ -4125,32 +4004,13 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
     tags=("acid", "restore", "cdc"),
 )
 def qup19_restore_table(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_restore"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(spark, path, snap, stats_cols=["k"])      # v1
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")          # v2
-    cl.delete_where(spark, path, "k % 3 = 0")                 # v3
+    path = os.path.join(_fresh_dir("commit_log_restore"), "table")
+    cl.create_table(spark, path, _kv(orders, 7), stats_cols=["k"])  # v1
+    cl.merge_upsert(spark, path, _batch(orders, 5), ["k"], "ts")    # v2
+    cl.delete_where(spark, path, "k % 3 = 0")                       # v3
     mutated = cl.read_table(spark, path)
-    cl.restore_table(spark, path, 1)                          # v4
+    cl.restore_table(spark, path, 1)                                # v4
     restored = cl.read_table(spark, path)
 
     def shape(df, stage):
@@ -4201,34 +4061,14 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
     tags=("acid", "clone", "dv"),
 )
 def qup20_shallow_clone(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    base = _roundtrip_dir("commit_log_clone")
-    src = os.path.join(base, "src")
-    dst = os.path.join(base, "dst")
-    for p in (src, dst):
-        shutil.rmtree(p, ignore_errors=True)
-    cl.create_table(spark, src, snap, stats_cols=["k"])
+    base = _fresh_dir("commit_log_clone")
+    src, dst = (os.path.join(base, d) for d in ("src", "dst"))
+    cl.create_table(spark, src, _kv(orders, 7), stats_cols=["k"])
     cl.delete_where(spark, src, "st = 'F'", deletion_vectors=True)
     cl.clone_table(spark, src, dst)
-    cl.merge_upsert(spark, src, batch, ["k"], "ts")  # mutate SOURCE only
+    # mutate SOURCE only
+    cl.merge_upsert(spark, src, _batch(orders, 5), ["k"], "ts")
     # the strongest isolation proof: the source VACUUMS its delisted
     # files — the clone still reads them through its hard links
     # (refcounted inodes), so 'a_clone' below certifies true
@@ -4285,37 +4125,12 @@ FROM merged ORDER BY k
     tags=("acid", "checkpoint", "prune"),
 )
 def qup21_log_checkpoint(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 15 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_ckpt"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
+    path = _tiled_table(spark, "commit_log_ckpt", _kv(orders, 6))
     cl.delete_where(spark, path, "st = 'F'", deletion_vectors=True)
     cl.checkpoint_log(path)
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")  # through the ckpt
+    # through the checkpoint
+    cl.merge_upsert(spark, path, _batch(orders, 15), ["k"], "ts")
     return (
         cl.read_table(spark, path)
         .select(
@@ -4358,12 +4173,6 @@ ORDER BY k, doy
     tags=("acid", "layout", "prune"),
 )
 def qup22_zorder_optimize(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
     snap = orders.filter(F.col("o_orderkey") % 4 == 0).select(
         F.col("o_orderkey").alias("k"),
@@ -4371,8 +4180,7 @@ def qup22_zorder_optimize(spark, sf_dir):
         F.col("o_orderstatus").alias("st"),
         F.round("o_totalprice", 2).alias("price"),
     )
-    path = os.path.join(_roundtrip_dir("commit_log_zorder"), "table")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_fresh_dir("commit_log_zorder"), "table")
     cl.create_table(spark, path, snap, stats_cols=["k", "doy"])
     cl.compact(spark, path, target_partitions=8,
                cluster_by=["k", "doy"], zorder=True)
@@ -4549,7 +4357,7 @@ FROM feed ORDER BY v, k, change
     "sink, and the feed must hash-match the SQL replay of all five "
     "stages: any wrong diff, misattributed version, duplicated or "
     "lost change row is a mismatch. Updates emit the Delta-complete "
-    "'update_preimage'+'update_postimage' pair (r12) — without the "
+    "'update_preimage'+'update_postimage' pair — without the "
     "pre-image a downstream incremental consumer cannot RETRACT the "
     "old contribution (qmv2 exercises exactly that). Batch prices "
     "are +1000 so merge updates can never be silent no-ops; the "
@@ -4560,42 +4368,14 @@ FROM feed ORDER BY v, k, change
     tags=("cdc", "streaming", "acid", "sink"),
 )
 def qup23_change_data_feed(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-    from sora_spark.sources import commit_log_stream as cls_
-
     cls_.register(spark)
     orders = tables(spark, sf_dir).orders
-
-    def slice_(pred):
-        return orders.filter(pred).select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("st"),
-            F.round("o_totalprice", 2).alias("price"),
-            F.col("o_orderdate").alias("ts"),
-        )
-
-    base = _roundtrip_dir("commit_log_cdf")
-    path = os.path.join(base, "table")
-    out = os.path.join(base, "feed")
-    ck = os.path.join(base, "ck")
-    for p in (path, out, ck):
-        shutil.rmtree(p, ignore_errors=True)
-
-    cl.create_table(                                            # v1
-        spark, path, slice_(F.col("o_orderkey") % 7 == 0),
-        change_data_feed=True)
-    cl.append(spark, path, slice_(F.col("o_orderkey") % 7 == 1))  # v2
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")            # v3
+    base = _fresh_dir("commit_log_cdf")
+    path, out, ck = (os.path.join(base, d) for d in ("table", "feed", "ck"))
+    cl.create_table(spark, path, _kv(orders, 7),                # v1
+                    change_data_feed=True)
+    cl.append(spark, path, _kv(orders, 7, 1))                   # v2
+    cl.merge_upsert(spark, path, _batch(orders, 5), ["k"], "ts")  # v3
     cl.delete_where(spark, path, "k % 3 = 0",                   # v4
                     deletion_vectors=True)
     cl.update_where(spark, path, "st = 'O'",                    # v5
@@ -4639,7 +4419,7 @@ SELECT stage, k, status FROM stages ORDER BY stage, k
 """,
     doc="qup24: COLUMN MAPPING on the commit-log table "
     "(commit_log.rename_column / drop_column — Delta's column-mapping "
-    "shape, r12): RENAME COLUMN and DROP COLUMN are METADATA-ONLY "
+    "shape): RENAME COLUMN and DROP COLUMN are METADATA-ONLY "
     "commits (added=[], removed=[], pinned in test_capabilities.py::"
     "test_commit_log_column_mapping) — data files keep their PHYSICAL "
     "names forever, reads stay one scan with a final physical->"
@@ -4661,27 +4441,9 @@ SELECT stage, k, status FROM stages ORDER BY stage, k
     tags=("sink", "acid", "ddl", "mapping"),
 )
 def qup24_column_mapping(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_colmap"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
+    path = _tiled_table(
+        spark, "commit_log_colmap", _kv(orders, 6, ts=False))
     pre_rename = cl.table_versions(path)[-1]
     cl.rename_column(spark, path, "st", "status")
     v_updated = cl.update_where(
@@ -4802,7 +4564,7 @@ SELECT pri, CAST(count(*) AS BIGINT) AS n,
 FROM v3_table GROUP BY pri ORDER BY pri
 """,
     doc="qmv2: incremental MV refresh DRIVEN BY THE TABLE'S OWN "
-    "CHANGE FEED — the composition the r12 CDF upgrades exist for: "
+    "CHANGE FEED — the composition the CDF pre-images exist for: "
     "a per-priority count+sum view is materialized from the "
     "commit-log table at v1; the table then takes a MERGE "
     "(inserts + updates) and a deletion-vector DELETE; the refresh "
@@ -4823,51 +4585,20 @@ FROM v3_table GROUP BY pri ORDER BY pri
     tags=("cdc", "incremental", "pipeline", "acid"),
 )
 def qmv2_cdf_incremental_refresh(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.operators import incremental as inc
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round((F.col("o_totalprice") + 1000) * 100)
-        .cast("bigint").alias("cents"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_mv"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(spark, path, snap, stats_cols=["k"])        # v1
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")            # v2
-    v3 = cl.delete_where(spark, path, "k % 3 = 0",              # v3
+    path = os.path.join(_fresh_dir("commit_log_mv"), "table")
+    cl.create_table(spark, path, _cents(orders, 7), stats_cols=["k"])  # v1
+    cl.merge_upsert(                                                  # v2
+        spark, path, _cents(orders, 5, days=1), ["k"], "ts")
+    v3 = cl.delete_where(spark, path, "k % 3 = 0",                    # v3
                          deletion_vectors=True)
 
     view = inc.build_view(
         cl.read_table(spark, path, 1), ["pri"], ["cents"])
     feed = cl.table_changes(
         spark, path, 1, v3, ["k"], include_preimages=True)
-    cdc = feed.select(
-        "pri", "cents",
-        F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit("I"),
-        ).otherwise(F.lit("D")).alias("op"),
-    )
-    refreshed = inc.refresh(view, cdc, ["pri"], ["cents"])
-    return refreshed.select(
-        "pri",
-        F.col("n").cast("bigint").alias("n"),
-        F.col("sum_cents").cast("bigint").alias("sum_cents"),
-    ).orderBy("pri")
+    return _view_rows(
+        inc.refresh(view, _signed_ops(feed), ["pri"], ["cents"]))
 
 
 @query(
@@ -4903,7 +4634,7 @@ FROM v4_table GROUP BY pri ORDER BY pri
     "UPDATE; its persisted CHANGE FEED streams via readChangeFeed "
     "(startingVersion=2 — v1 is the view's seed) into foreachBatch, "
     "where each micro-batch's change rows map to signed ops "
-    "(update_preimage retracts — the r12 pre-image pair is load-"
+    "(update_preimage retracts — the pre-image pair is load-"
     "bearing here exactly as in qmv2), delta-aggregate, and "
     "MERGE INTO the view, itself a commit-log table keyed by group. "
     "Replay safety is an EPOCH WATERMARK carried in the view rows "
@@ -4920,74 +4651,20 @@ FROM v4_table GROUP BY pri ORDER BY pri
     tags=("cdc", "incremental", "streaming", "pipeline", "acid"),
 )
 def qmv3_streaming_mv_maintenance(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.operators import incremental as inc
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-    from sora_spark.sources import commit_log_stream as cls_
-
     cls_.register(spark)
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round((F.col("o_totalprice") + 1000) * 100)
-        .cast("bigint").alias("cents"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    base = _roundtrip_dir("commit_log_stream_mv")
-    src = os.path.join(base, "source")
-    vw = os.path.join(base, "view")
-    ck = os.path.join(base, "ck")
-    for p in (src, vw, ck):
-        shutil.rmtree(p, ignore_errors=True)
-
-    cl.create_table(spark, src, snap, stats_cols=["k"],         # v1
+    base = _fresh_dir("commit_log_stream_mv")
+    src, vw, ck = (os.path.join(base, d) for d in ("source", "view", "ck"))
+    cl.create_table(spark, src, _cents(orders, 7), stats_cols=["k"],  # v1
                     change_data_feed=True)
-    cl.merge_upsert(spark, src, batch, ["k"], "ts")             # v2
-    cl.delete_where(spark, src, "k % 3 = 0",                    # v3
+    cl.merge_upsert(                                                 # v2
+        spark, src, _cents(orders, 5, days=1), ["k"], "ts")
+    cl.delete_where(spark, src, "k % 3 = 0",                         # v3
                     deletion_vectors=True)
-    cl.update_where(spark, src, "k % 11 = 0",                   # v4
+    cl.update_where(spark, src, "k % 11 = 0",                        # v4
                     {"cents": "cents + 12345"})
 
-    # seed the view from the v1 snapshot
-    cl.create_table(
-        spark, vw,
-        inc.build_view(cl.read_table(spark, src, 1), ["pri"], ["cents"])
-        .withColumn("_e", F.lit(-1).cast("bigint")))
-
-    def maintain(feed, epoch_id):
-        sess = feed.sparkSession
-        cur = cl.read_table(sess, vw)
-        # EPOCH WATERMARK precondition (the Delta txnVersion pattern,
-        # carried in the view rows): a batch replayed after a crash
-        # between the view commit and Spark's checkpoint write would
-        # otherwise recompute the refresh FROM THE ALREADY-REFRESHED
-        # view and double-apply the delta — the skip below is what
-        # makes the sink exactly-once, not merge idempotence
-        seen = cur.agg(F.max("_e")).collect()[0][0]
-        if seen is not None and int(seen) >= int(epoch_id):
-            return
-        ops = feed.select(
-            "pri", "cents",
-            F.when(
-                F.col("_change_type").isin("insert", "update_postimage"),
-                F.lit("I"),
-            ).otherwise(F.lit("D")).alias("op"),
-        )
-        refreshed = inc.refresh(
-            cur.drop("_e"), ops, ["pri"], ["cents"]
-        ).withColumn("_e", F.lit(int(epoch_id)).cast("bigint"))
-        cl.merge_upsert(sess, vw, refreshed, ["pri"], "_e")
-
+    maintain = _view_sink(spark, src, vw)
     q = (
         spark.readStream.format("commitlog").option("path", src)
         .option("readChangeFeed", "true").option("startingVersion", 2)
@@ -4997,15 +4674,7 @@ def qmv3_streaming_mv_maintenance(spark, sf_dir):
         .trigger(availableNow=True).start()
     )
     q.awaitTermination(300)
-    return (
-        cl.read_table(spark, vw)
-        .select(
-            "pri",
-            F.col("n").cast("bigint").alias("n"),
-            F.col("sum_cents").cast("bigint").alias("sum_cents"),
-        )
-        .orderBy("pri")
-    )
+    return _view_rows(cl.read_table(spark, vw))
 
 
 @query(
@@ -5044,27 +4713,9 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
     tags=("sink", "acid", "prune", "backfill"),
 )
 def qup25_replace_where(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_rw"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
+    snap = _kv(orders, 6, ts=False)
+    path = _tiled_table(spark, "commit_log_rw", snap)
     pre = cl.table_versions(path)[-1]
     batch = snap.filter(F.col("st") == "F").withColumn(
         "price", F.round(F.col("price") + 777, 2))
@@ -5256,21 +4907,9 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
     tags=("sink", "acid", "ddl", "constraint"),
 )
 def qup26_constraint_lifecycle(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_constraint"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(spark, path, snap, stats_cols=["k"])
+    path = os.path.join(_fresh_dir("commit_log_constraint"), "table")
+    cl.create_table(spark, path, _kv(orders, 6, ts=False), stats_cols=["k"])
     cl.update_where(spark, path, "price > 450000", {"price": "450000.0"})
     cl.add_check_constraint(spark, path, "price <= 450000")
     enforced = cl.read_table(spark, path)
@@ -5404,8 +5043,8 @@ SELECT stage, k, st, price, ts_s FROM stages ORDER BY stage, k
     "multiples of 60 arrive newer and WIN, the other multiples of 30 "
     "arrive older and LOSE — their rows must NOT replace the newer "
     "current ones, the half of merge semantics a naive delete+append "
-    "gets wrong (an earlier k%2 split made every matched key a "
-    "winner, r12 review) — plus brand-new keys as plain inserts. "
+    "gets wrong (a k%2 split would make every matched key a "
+    "winner) — plus brand-new keys as plain inserts. "
     "'a_mor' reads THROUGH the vectors; 'b_compacted' after "
     "OPTIMIZE physically applied them — both must hash-match the "
     "rewrite-merge SQL truth exactly, so DV-served merge semantics "
@@ -5413,37 +5052,10 @@ SELECT stage, k, st, price, ts_s FROM stages ORDER BY stage, k
     tags=("sink", "acid", "dv", "merge"),
 )
 def qup27_merge_on_read(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.when(
-            F.col("o_orderkey") % 60 == 0, F.expr("INTERVAL 1 DAY")
-        ).otherwise(F.expr("INTERVAL -1 DAY"))).alias("ts"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_mor"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
-    cl.merge_upsert(spark, path, batch, ["k"], "ts", merge_on_read=True)
+    path = _tiled_table(spark, "commit_log_mor", _kv(orders, 6))
+    cl.merge_upsert(spark, path, _split_batch(orders), ["k"], "ts",
+                    merge_on_read=True)
     a = cl.read_table(spark, path)           # through the vectors
     cl.compact(spark, path)
     b = cl.read_table(spark, path)           # physically reconciled
@@ -5698,25 +5310,15 @@ SELECT k, price, src FROM final ORDER BY k
     tags=("sink", "acid", "ddl", "evolution"),
 )
 def qup28_write_defaults(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
 
     def slc(rem, with_src=None):
-        out = orders.filter(F.col("o_orderkey") % 6 == rem).select(
-            F.col("o_orderkey").alias("k"),
-            F.round("o_totalprice", 2).alias("price"),
-        )
+        out = _kv(orders, 6, rem, ts=False).drop("st")
         if with_src is not None:
             out = out.withColumn("src", F.lit(with_src))
         return out
 
-    path = os.path.join(_roundtrip_dir("commit_log_defaults"), "table")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_fresh_dir("commit_log_defaults"), "table")
     cl.create_table(spark, path, slc(0))                     # v1
     cl.append(spark, path, slc(2, "batch2024"),              # v2 evolves
               merge_schema=True, defaults={"src": "'legacy'"})
@@ -5802,7 +5404,7 @@ stages AS (
 SELECT stage, k, st, price FROM stages ORDER BY stage, k
 """,
     doc="qup29: DV-MODE UPDATE (update_where merge_on_read=True — "
-    "Delta's deletion-vector UPDATE, r12 verdict item 1, completing "
+    "Delta's deletion-vector UPDATE, completing "
     "the zero-rewrite conversion: DELETE got vectors in qup16, MERGE "
     "in qup27, UPDATE here): the matched rows' positions die via a "
     "deletion-vector sidecar and their UPDATED images land as ONE "
@@ -5821,27 +5423,9 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
     tags=("sink", "acid", "update", "dv"),
 )
 def qup29_update_on_read(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_update_mor"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
+    path = _tiled_table(
+        spark, "commit_log_update_mor", _kv(orders, 6, ts=False))
     cl.update_where(
         spark, path, "st = 'F'",
         {"st": "'U'", "price": "round(price + 100, 2)"},
@@ -5891,8 +5475,7 @@ stages AS (
          strftime(ts, '%Y-%m-%d %H:%M:%S') FROM merged)
 SELECT stage, k, st, price, src2, ts_s FROM stages ORDER BY stage, k
 """,
-    doc="qup30: MERGE-ON-READ x SCHEMA EVOLUTION (r12 verdict item 2 "
-    "— the composition the explicit raise previously refused): one "
+    doc="qup30: MERGE-ON-READ x SCHEMA EVOLUTION: one "
     "merge_upsert(merge_schema=True, merge_on_read=True) commit "
     "whose batch ADDS a column (src2) evolves the recorded schema, "
     "vectors the superseded current rows (positions are "
@@ -5911,40 +5494,11 @@ SELECT stage, k, st, price, src2, ts_s FROM stages ORDER BY stage, k
     tags=("sink", "acid", "dv", "merge", "schema-evolution"),
 )
 def qup30_mor_schema_evolution(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.when(
-            F.col("o_orderkey") % 60 == 0, F.expr("INTERVAL 1 DAY")
-        ).otherwise(F.expr("INTERVAL -1 DAY"))).alias("ts"),
-        F.lit("mor").alias("src2"),
-    )
-    tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_mor_evolve"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 2").drop("_t"), stats_cols=["k"])
-    cl.append(
-        spark, path, tiled.filter("_t = 3").drop("_t"), stats_cols=["k"])
+    path = _tiled_table(spark, "commit_log_mor_evolve", _kv(orders, 6))
     cl.merge_upsert(
-        spark, path, batch, ["k"], "ts",
-        merge_schema=True, merge_on_read=True,
+        spark, path, _split_batch(orders).withColumn("src2", F.lit("mor")),
+        ["k"], "ts", merge_schema=True, merge_on_read=True,
     )
     a = cl.read_table(spark, path)           # through the vectors
     cl.compact(spark, path)
@@ -5999,7 +5553,7 @@ SELECT pri, CAST(count(*) AS BIGINT) AS n,
 FROM v5_t GROUP BY pri ORDER BY pri
 """,
     doc="qmv4: RATE-LIMITED CDF STREAM feeding the MV maintenance "
-    "loop (r12 verdict item 6 — qup23's change feed + qup12's "
+    "loop (qup23's change feed + qup12's "
     "admission control + qmv3's refresh, composed): the source table "
     "takes FOUR change commits — a rewrite MERGE, a DV DELETE, the "
     "new DV-MODE UPDATE (qup29's writer, proving its CDC pairs ride "
@@ -6019,76 +5573,22 @@ FROM v5_t GROUP BY pri ORDER BY pri
     tags=("cdc", "incremental", "streaming", "pipeline", "acid"),
 )
 def qmv4_rate_limited_cdf_mv(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.operators import incremental as inc
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-    from sora_spark.sources import commit_log_stream as cls_
-
     cls_.register(spark)
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    b1 = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round((F.col("o_totalprice") + 1000) * 100)
-        .cast("bigint").alias("cents"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    b2 = orders.filter(F.col("o_orderkey") % 4 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round((F.col("o_totalprice") + 2000) * 100)
-        .cast("bigint").alias("cents"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 2 DAY")).alias("ts"),
-    )
-    base = _roundtrip_dir("commit_log_ratelimited_mv")
-    src = os.path.join(base, "source")
-    vw = os.path.join(base, "view")
-    ck = os.path.join(base, "ck")
-    for p in (src, vw, ck):
-        shutil.rmtree(p, ignore_errors=True)
-
-    cl.create_table(spark, src, snap, stats_cols=["k"],         # v1
+    base = _fresh_dir("commit_log_ratelimited_mv")
+    src, vw, ck = (os.path.join(base, d) for d in ("source", "view", "ck"))
+    cl.create_table(spark, src, _cents(orders, 7), stats_cols=["k"],  # v1
                     change_data_feed=True)
-    cl.merge_upsert(spark, src, b1, ["k"], "ts")                # v2
-    cl.delete_where(spark, src, "k % 3 = 0",                    # v3
+    cl.merge_upsert(                                                 # v2
+        spark, src, _cents(orders, 5, days=1), ["k"], "ts")
+    cl.delete_where(spark, src, "k % 3 = 0",                         # v3
                     deletion_vectors=True)
-    cl.update_where(spark, src, "k % 11 = 0",                   # v4
+    cl.update_where(spark, src, "k % 11 = 0",                        # v4
                     {"cents": "cents + 12345"}, merge_on_read=True)
-    cl.merge_upsert(spark, src, b2, ["k"], "ts",                # v5
-                    merge_on_read=True)
+    cl.merge_upsert(spark, src, _cents(orders, 4, days=2), ["k"], "ts",
+                    merge_on_read=True)                              # v5
 
-    cl.create_table(
-        spark, vw,
-        inc.build_view(cl.read_table(spark, src, 1), ["pri"], ["cents"])
-        .withColumn("_e", F.lit(-1).cast("bigint")))
-
-    def maintain(feed, epoch_id):
-        sess = feed.sparkSession
-        cur = cl.read_table(sess, vw)
-        seen = cur.agg(F.max("_e")).collect()[0][0]
-        if seen is not None and int(seen) >= int(epoch_id):
-            return
-        ops = feed.select(
-            "pri", "cents",
-            F.when(
-                F.col("_change_type").isin("insert", "update_postimage"),
-                F.lit("I"),
-            ).otherwise(F.lit("D")).alias("op"),
-        )
-        refreshed = inc.refresh(
-            cur.drop("_e"), ops, ["pri"], ["cents"]
-        ).withColumn("_e", F.lit(int(epoch_id)).cast("bigint"))
-        cl.merge_upsert(sess, vw, refreshed, ["pri"], "_e")
-
+    maintain = _view_sink(spark, src, vw)
     # the Python DataSource falls back to single-batch execution under
     # availableNow (Spark logs it), so the capped stream is DRAINED
     # the qup12 way: one run per admitted version over the SAME
@@ -6107,15 +5607,7 @@ def qmv4_rate_limited_cdf_mv(spark, sf_dir):
             .trigger(availableNow=True).start()
         )
         q.awaitTermination(300)
-    return (
-        cl.read_table(spark, vw)
-        .select(
-            "pri",
-            F.col("n").cast("bigint").alias("n"),
-            F.col("sum_cents").cast("bigint").alias("sum_cents"),
-        )
-        .orderBy("pri")
-    )
+    return _view_rows(cl.read_table(spark, vw))
 
 
 @query(
@@ -6132,9 +5624,8 @@ stages AS (
 SELECT stage, k, st, price FROM stages ORDER BY stage, k
 """,
     doc="qup31: EXISTS-DEFAULT read-time backfill (append backfill="
-    "True — closing the r12 verdict's residual gap 4, which the docs "
-    "had scoped out as 'needs per-file default metadata': it does "
-    "not — every data directory's NAME embeds the version that "
+    "True — no per-file default metadata is needed: "
+    "every data directory's NAME embeds the version that "
     "committed it, so 'was this row written before the column "
     "existed' is one regexp over the scan's file path, a pure "
     "projection with zero extra I/O). Two pre-evolution directories "
@@ -6155,37 +5646,18 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
     tags=("sink", "acid", "schema-evolution", "defaults"),
 )
 def qup31_exists_default_backfill(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
 
-    def shaped(res, with_price):
-        base = orders.filter(F.col("o_orderkey") % 9 == res).select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("st"),
-        )
-        if with_price:
-            base = base.join(
-                orders.select(
-                    F.col("o_orderkey").alias("k"),
-                    F.round("o_totalprice", 2).alias("price"),
-                ),
-                "k",
-            )
-        return base
+    def old(res):  # the pre-evolution shape (k, st)
+        return _kv(orders, 9, res, ts=False).drop("price")
 
-    path = os.path.join(_roundtrip_dir("commit_log_backfill"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(spark, path, shaped(0, False), stats_cols=["k"])
-    cl.append(spark, path, shaped(3, False), stats_cols=["k"])
-    cl.append(spark, path, shaped(6, True), stats_cols=["k"],
+    path = os.path.join(_fresh_dir("commit_log_backfill"), "table")
+    cl.create_table(spark, path, old(0), stats_cols=["k"])
+    cl.append(spark, path, old(3), stats_cols=["k"])
+    cl.append(spark, path, _kv(orders, 9, 6, ts=False), stats_cols=["k"],
               merge_schema=True, defaults={"price": "-1.23"},
               backfill=True)
-    cl.append(spark, path, shaped(1, False), stats_cols=["k"])
+    cl.append(spark, path, old(1), stats_cols=["k"])
     a = cl.read_table(spark, path)           # backfill projection
     cl.compact(spark, path)
     b = cl.read_table(spark, path)           # physically materialized
@@ -6210,7 +5682,7 @@ WITH t AS (
 SELECT k, st, price FROM t WHERE k % 6 <> 0 ORDER BY k
 """,
     doc="qup32: SIZE-SELECTIVE OPTIMIZE (commit_log.compact_small — "
-    "r13, closing the r12 watch item 'auto-compact is full-table'): "
+    "an auto-compact that is not full-table): "
     "three well-sized directories (thirds of the even keys) plus "
     "four tiny ones (k%1000 residue slices — the micro-batch-ingest "
     "debris shape) and a live deletion vector (DV DELETE of k%6=0, "
@@ -6230,30 +5702,10 @@ SELECT k, st, price FROM t WHERE k % 6 <> 0 ORDER BY k
     tags=("sink", "acid", "optimize", "small-files"),
 )
 def qup32_small_file_compaction(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-    )
-    evens = snap.filter(F.col("k") % 2 == 0)
-    tiled = evens.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
-    path = os.path.join(_roundtrip_dir("commit_log_small"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(
-        spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
-    for t in (2, 3):
-        cl.append(spark, path, tiled.filter(f"_t = {t}").drop("_t"),
-                  stats_cols=["k"])
+    path = _tiled_table(spark, "commit_log_small", _kv(orders, 2, ts=False))
     for res in (1, 3, 5, 7):
-        cl.append(spark, path,
-                  snap.filter(F.col("k") % 1000 == res),
+        cl.append(spark, path, _kv(orders, 1000, res, ts=False),
                   stats_cols=["k"])
     cl.delete_where(spark, path, "k % 6 = 0", deletion_vectors=True)
 
@@ -6295,7 +5747,7 @@ SELECT k, st, price, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
 FROM merged ORDER BY k
 """,
     doc="qup33: BLOOM-PRUNED MERGE (per-directory bloom filters in "
-    "the commit stats — r13; the Delta bloom-filter-index / Iceberg "
+    "the commit stats — the Delta bloom-filter-index / Iceberg "
     "bloom shape rendered portably via operators/sketch's "
     "4096-bit/k=3 Kirsch-Mitzenmacher construction): the table is "
     "laid down INTERLEAVED on k%8 — every directory spans the full "
@@ -6316,12 +5768,6 @@ FROM merged ORDER BY k
     tags=("sink", "acid", "merge", "bloom", "pruning"),
 )
 def qup33_bloom_pruned_merge(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
     snap = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -6329,8 +5775,7 @@ def qup33_bloom_pruned_merge(spark, sf_dir):
         F.round("o_totalprice", 2).alias("price"),
         F.col("o_orderdate").alias("ts"),
     )
-    path = os.path.join(_roundtrip_dir("commit_log_bloom"), "table")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_fresh_dir("commit_log_bloom"), "table")
     cl.create_table(spark, path, snap.filter(F.col("k") % 8 == 0),
                     stats_cols=["k"], bloom_cols=["k"])
     for res in range(1, 8):
@@ -6374,7 +5819,7 @@ ch AS (
 SELECT k, st, price, ts_s, _change_type FROM ch ORDER BY k
 """,
     doc="qup34: CDF ADDRESSED BY TIMESTAMP (table_changes ts_from/"
-    "ts_to — Delta's startingTimestamp/endingTimestamp, r13): the "
+    "ts_to — Delta's startingTimestamp/endingTimestamp): the "
     "caller asks 'what changed between this instant and that one' "
     "and each instant resolves to the newest version committed at "
     "or before it (the version_as_of rule AS OF TIMESTAMP time "
@@ -6390,33 +5835,13 @@ SELECT k, st, price, ts_s, _change_type FROM ch ORDER BY k
     tags=("cdc", "acid", "timetravel"),
 )
 def qup34_cdf_by_timestamp(spark, sf_dir):
-    import os
-    import shutil
-    import time
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-    snap = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderdate").alias("ts"),
-    )
-    batch = orders.filter(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.round(F.col("o_totalprice") + 1000, 2).alias("price"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-    )
-    path = os.path.join(_roundtrip_dir("commit_log_ts_cdf"), "table")
-    shutil.rmtree(path, ignore_errors=True)
-    cl.create_table(spark, path, snap, stats_cols=["k"])        # v1
+    path = os.path.join(_fresh_dir("commit_log_ts_cdf"), "table")
+    cl.create_table(spark, path, _kv(orders, 7), stats_cols=["k"])  # v1
     time.sleep(0.05)
     t_mid = time.time()
     time.sleep(0.05)
-    cl.merge_upsert(spark, path, batch, ["k"], "ts")            # v2
+    cl.merge_upsert(spark, path, _batch(orders, 5), ["k"], "ts")    # v2
     t_end = time.time()
     return (
         cl.table_changes(
@@ -6452,7 +5877,7 @@ SELECT k, st, price,
 FROM merged ORDER BY k
 """,
     doc="qup35: GENERATED COLUMNS (create_table gen_cols= — Delta's "
-    "GENERATED ALWAYS AS, r13): `day` is declared as CAST(ts AS "
+    "GENERATED ALWAYS AS): `day` is declared as CAST(ts AS "
     "DATE) at create and NO writer ever supplies it — create fills "
     "the initial rows, append fills its batch, merge fills both its "
     "matched and inserted rows (including the merged rows' NEW ts: "
@@ -6473,38 +5898,14 @@ FROM merged ORDER BY k
     tags=("sink", "acid", "generated", "schema"),
 )
 def qup35_generated_columns(spark, sf_dir):
-    import os
-    import shutil
-
-    from sora_spark.queries.relational import _roundtrip_dir
-    from sora_spark.sources import commit_log as cl
-
     orders = tables(spark, sf_dir).orders
-
-    def shaped(pred, bump=False):
-        df = orders.filter(pred).select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("st"),
-            F.round(
-                F.col("o_totalprice") + (1000 if bump else 0), 2
-            ).alias("price"),
-            (F.col("o_orderdate")
-             + F.expr(f"INTERVAL {1 if bump else 0} DAY")).alias("ts"),
-        )
-        return df
-
-    path = os.path.join(_roundtrip_dir("commit_log_gen"), "table")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_fresh_dir("commit_log_gen"), "table")
     cl.create_table(
-        spark, path, shaped(F.col("o_orderkey") % 4 == 0),
-        stats_cols=["k", "day"],
+        spark, path, _kv(orders, 4), stats_cols=["k", "day"],
         gen_cols={"day": "CAST(ts AS DATE)"})
-    cl.append(spark, path, shaped(F.col("o_orderkey") % 4 == 1),
-              stats_cols=["k", "day"])
-    cl.merge_upsert(
-        spark, path,
-        shaped((F.col("o_orderkey") % 4).isin(0, 2), bump=True),
-        ["k"], "ts")
+    cl.append(spark, path, _kv(orders, 4, 1), stats_cols=["k", "day"])
+    # the even keys: o_orderkey % 4 IN (0, 2)
+    cl.merge_upsert(spark, path, _batch(orders, 2), ["k"], "ts")
     return (
         cl.read_table(spark, path)
         .select(

@@ -5,6 +5,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 from functools import reduce
 
 from pyspark.sql import functions as F
@@ -101,6 +102,17 @@ _SCRATCH = "/root/repo/.scratch"
 def _roundtrip_dir(name: str) -> str:
     d = os.path.join(_SCRATCH, "roundtrip", f"{name}-{os.getpid()}")
     os.makedirs(os.path.dirname(d), exist_ok=True)
+    return d
+
+
+def _fresh_dir(name: str) -> str:
+    """`_roundtrip_dir(name)`, emptied: a query that creates a table or
+    index, appends, or keeps a stream checkpoint starts from nothing on
+    every run in the process. Keep every path the query writes (index
+    sidecars included) inside it."""
+    d = _roundtrip_dir(name)
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
     return d
 
 
@@ -1129,8 +1141,6 @@ def qsrc5_bucketed_join(spark, sf_dir):
         # fresh session sees no table but saveAsTable refuses the
         # orphaned location (LOCATION_ALREADY_EXISTS) — clear stale
         # locations for tables this session does not know
-        import shutil
-
         wh = spark.conf.get(
             "spark.sql.warehouse.dir", "spark-warehouse"
         ).removeprefix("file:")

@@ -156,6 +156,11 @@ def _commit_path(path: str, version: int) -> str:
     return os.path.join(path, _COMMITS, f"{version:08d}.json")
 
 
+def _load_commit(path: str, version: int) -> dict:
+    with open(_commit_path(path, version)) as f:
+        return json.load(f)
+
+
 def table_versions(path: str) -> list[int]:
     """Committed versions, ascending. Non-commit files (tmp leftovers
     from a crashed publish) are ignored — an unpublished commit and
@@ -180,11 +185,7 @@ def _read_commits(path: str, upto: int | None) -> list[dict]:
                 f"version {upto} not in table (have {versions})"
             )
         versions = [v for v in versions if v <= upto]
-    commits = []
-    for v in versions:
-        with open(_commit_path(path, v)) as f:
-            commits.append(json.load(f))
-    return commits
+    return [_load_commit(path, v) for v in versions]
 
 
 def _latest_checkpoint_version(path: str) -> int | None:
@@ -232,12 +233,8 @@ def _read_state_commits(path: str) -> list[dict]:
         synthetic["dv_rows"] = int(state.get("dv_rows") or 0)
     # tail = only the commits AFTER the checkpoint; table_versions is a
     # single listdir, no per-commit file reads
-    tail = []
-    for v in table_versions(path):
-        if v > cv:
-            with open(_commit_path(path, v)) as f:
-                tail.append(json.load(f))
-    return [synthetic] + tail
+    return [synthetic] + [
+        _load_commit(path, v) for v in table_versions(path) if v > cv]
 
 
 class _State(NamedTuple):
@@ -1843,9 +1840,15 @@ def _publish_data_change(
     then = _table_state(commits_then)
     last_msg = "lost the version race"
     for _ in range(max(int(attempts), 1)):
-        commits_now = _read_state_commits(path)
-        now = _table_state(commits_now)
-        winners = [c for c in commits_now if int(c["version"]) > then.version]
+        now = _table_state(_read_state_commits(path))
+        # the winners are the commit files after our snapshot, which
+        # are never deleted: a log checkpoint written since is no
+        # winner, though its synthetic commit lists every live
+        # directory and vector as added
+        winners = [
+            _load_commit(path, v) for v in table_versions(path)
+            if then.version < v <= now.version
+        ]
         changed = [k for k in _LATEST_WINS if then.meta[k] != now.meta[k]]
         if changed:
             raise ConcurrentWriteError(

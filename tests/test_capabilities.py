@@ -999,6 +999,14 @@ def test_cli_list_and_inventory():
 
     ncols = ncells(rows[0])
     assert all(ncells(r) == ncols for r in rows[2:]), "pipe-escape broken"
+    # the committed inventory is the generated one, byte for byte
+    queries_md = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "QUERIES.md")
+    with open(queries_md, encoding="utf-8") as fh:
+        assert inv.stdout == fh.read(), (
+            "QUERIES.md is stale: regenerate it with "
+            "`python -m sora_spark inventory > QUERIES.md`")
 
     bad = subprocess.run(
         [sys.executable, "-m", "sora_spark", "run", "no_such_query"],
@@ -3301,7 +3309,9 @@ def test_data_change_file_conflict_rules(spark, tmp_path, monkeypatch):
       commit_with_retry's full re-run then produces the serial
       result;
     - winner added deletion vectors: REFUSE (sub-directory liveness);
-    - winner changed metadata (CHECK): REFUSE."""
+    - winner changed metadata (CHECK): REFUSE;
+    - a log checkpoint written during the race is no winner: the op
+      still rebases over the real commits after its snapshot."""
     import pytest as _pytest
 
     from sora_spark.sources import commit_log as cl
@@ -3384,6 +3394,21 @@ def test_data_change_file_conflict_rules(spark, tmp_path, monkeypatch):
         spark, path, "ts < 1000")
     with _pytest.raises(cl.ConcurrentWriteError, match="metadata"):
         cl.merge_upsert(spark, path, mk([(9001, "q", 50)]), ["k"], "ts")
+
+    # 6) the winner is a disjoint append followed by a log checkpoint,
+    #    whose synthetic commit lists every live directory and the
+    #    live vector from 4): the merge rebases over the append alone
+    def append_then_checkpoint():
+        cl.append(spark, path, mk([(i, "c", 10) for i in range(2000, 2006)]),
+                  stats_cols=["k"])
+        cl.checkpoint_log(path)
+
+    state["inject"] = append_then_checkpoint
+    v = cl.merge_upsert(spark, path, mk([(1, "C", 60)]), ["k"], "ts")
+    assert state["inject"] is None  # the race really fired
+    assert v == cl.table_versions(path)[-1]
+    rows = {r["k"]: r["v"] for r in cl.read_table(spark, path).collect()}
+    assert rows[1] == "C" and rows[2000] == "c"
 
 
 def test_rename_drop_guard_default_bodies(spark, tmp_path):

@@ -36,6 +36,20 @@ def test_declared_query(name, spark, duck, sf_dir):
         compare(df, duck, q.oracle, name=name)
 
 
+@pytest.mark.parametrize("name", [
+    "qup8_merge_pruned", "qup21_log_checkpoint", "qix9_text_index_append",
+])
+def test_table_writing_query_reruns(name, spark, sf_dir):
+    """A table- or index-writing query starts from an emptied scratch
+    directory, so a second run in the same process returns the rows of
+    the first (an append or a version-exclusive create would otherwise
+    meet the first run's files)."""
+    fn = REGISTRY[name].spark_fn
+    first = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    second = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert first and first == second
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as e
 
