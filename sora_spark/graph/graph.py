@@ -117,12 +117,10 @@ class Graph:
     # ---- basic structure -------------------------------------------------
 
     def vertex_ids(self) -> DataFrame:
-        # one scan (r14): explode both ends of each edge instead of a
-        # union of two selects — the union form derived the WHOLE
-        # upstream edge subplan once per branch (no ReusedExchange when
-        # the derivation carries lambda/Generate stages — the qg1 plan
-        # finding). Same vertex set: each edge contributes s and d
-        # either way, nulls included, before the distinct.
+        # one scan: each edge contributes s and d, nulls included,
+        # before the distinct. Rejected: a union of two selects, which
+        # derives the upstream edge subplan once per branch (see
+        # OPTIMIZATION_r14.md).
         return (
             self.edges.select(
                 F.explode(F.array(F.col("s"), F.col("d"))).alias("v")
@@ -131,12 +129,10 @@ class Graph:
         )
 
     def _sym_edges(self) -> DataFrame:
-        """Both orientations of every edge in ONE pass (r14): the
-        union-of-two-selects form re-derived the whole upstream edge
-        subplan once per branch (exchange reuse never fires across the
-        derivations' lambda-bearing aggregates — the qg1/qg4 plan
-        finding); exploding each edge into (s,d) + (d,s) emits the
-        identical row multiset over one derivation."""
+        """Both orientations of every edge, (s,d) + (d,s), in ONE pass
+        over one derivation of the upstream edge subplan. Rejected: a
+        union of two selects (one derivation per branch, see
+        OPTIMIZATION_r14.md)."""
         return self.edges.select(
             F.explode(
                 F.array(
@@ -149,11 +145,9 @@ class Graph:
     def degrees(self) -> DataFrame:
         """Total degree per vertex for canonical undirected edges.
 
-        One scan (r14): the old union-of-two-selects form ran the full
-        upstream edge derivation once per branch (two lineitem scans +
-        two pair expansions in the qg1 plan); exploding both ends
-        counts the identical (v) multiset — nulls included — over ONE
-        derivation and one exchange."""
+        Both ends are exploded and counted, nulls included, over ONE
+        derivation and one exchange. Rejected: a union of two selects
+        (one derivation per branch, see OPTIMIZATION_r14.md)."""
         ends = self.edges.select(
             F.explode(F.array(F.col("s"), F.col("d"))).alias("v")
         )
@@ -304,34 +298,24 @@ class Graph:
         """Dead-end vertices: degree-1 vertices whose sole neighbor has
         degree >= hub_degree (assembly tip-trimming shape).
 
-        Single-aggregation shape (r14): a degree-1 vertex appears in
-        the (v, nbr) end list exactly once, so min(nbr) over its group
-        IS its sole neighbor — one groupBy over the exploded ends
-        yields degree AND neighbor together. The old form derived the
-        ends union twice (once for degrees, once to look the neighbor
-        back up) and shuffled the full end list a second time through
-        the d1⋈ends join: per trim round that was 4 edge-block reads
-        and an ends-sized join exchange; now it is 2 reads, one
-        exchange, and two vertex-sized (broadcast-able) filters. Tip
-        set identical: degree and sole-neighbor are computed over the
-        same multiset the join consumed.
+        One aggregation: a degree-1 vertex appears in the (v, nbr) end
+        list exactly once, so min(nbr) over its group IS its sole
+        neighbor, and one groupBy over the exploded ends yields degree
+        and neighbor together: 2 edge-block reads, one exchange and two
+        vertex-sized (broadcast-able) filters per trim round. Rejected:
+        deriving the ends twice and joining the neighbor back (see
+        OPTIMIZATION_r14.md).
 
-        The explicit null filter is load-bearing twice over: it
-        reproduces the old form's null semantics exactly (its inner
-        join on v dropped null-v rows, its semi join dropped null-nbr
-        rows — aggregate filters alone would keep a null-v group),
-        and it keeps the aggregate's two consumers' pushed predicates
-        identical. Even so, COLUMN PRUNING diverges the two subtrees
-        (the hub side drops min(nbr)), so Catalyst/AQE never reuse the
-        exchange — the vertex-sized aggregate is therefore cut with a
-        lazy checkpoint: the caller's first action over the tip set
-        materializes it once and both consumers read the same blocks
-        (O(V) block traffic replacing a second O(E) ends
-        derivation+exchange)."""
-        # (v, nbr) ends are _sym_edges renamed — ONE derivation of the
-        # upstream edge subplan instead of one per union branch (r14;
-        # in the reduce/assembly loops the edges are checkpointed, so
-        # this also halves the per-round block re-reads)
+        Null v and null nbr rows never form tips; the explicit null
+        filter drops them before the aggregate (an aggregate filter
+        alone would keep a null-v group) and keeps both consumers'
+        pushed predicates identical. Column pruning still diverges the
+        two subtrees (the hub side drops min(nbr)), so Catalyst/AQE
+        never reuse the exchange: the vertex-sized aggregate is cut
+        with a lazy checkpoint, materialized by the caller's first
+        action over the tip set and read by both consumers."""
+        # (v, nbr) ends are _sym_edges renamed: one derivation of the
+        # upstream edge subplan
         ends = self._sym_edges().select(
             F.col("s").alias("v"), F.col("d").alias("nbr")
         ).filter(F.col("v").isNotNull() & F.col("nbr").isNotNull())
@@ -351,7 +335,7 @@ class Graph:
         One-shot op (the loops use _bubble_removals): the edge frame is
         lazily cut first so the 2-path self-join's two sides read one
         materialized edge set instead of re-deriving the upstream
-        subplan per side (r14, the triangle_count treatment)."""
+        subplan per side."""
         e = self.edges.transform(self._cp_lazy)
         e1, e2 = e.alias("e1"), e.alias("e2")
         two_paths = (
@@ -710,25 +694,19 @@ class Graph:
         so callers can materialize it to TEST for convergence before
         paying the edge-set anti-join (the assembly loop does).
 
-        Single-derivation shape (r14, the tips()/band-keys finding):
-        the 2-path stream — the round's dominant cost — is derived
-        ONCE and aggregated straight to the doomed-mid set via
-        collect_set: per (u, w), mids = the distinct x set, keep =
-        array_min(mids), doomed = explode(mids \\ keep). The old form
-        aggregated tp to (u, w, keep) and then RE-DERIVED tp to probe
-        it against that table — the Σ in(v)·out(v) join ran once per
-        consumer (the aggregation plus each union branch; only the
-        input exchanges get reused). Per-row memory is one distinct-
-        mid set per bubble pair — linear in min(out(u), in(w)), the
-        same bound the old countDistinct paid inside its aggregation
-        buffer, never the k²/2 pair expansion rejected for qd5. The
-        doomed set is lazily cut (bubble-bounded, tiny) so the union's
-        two branches read blocks instead of re-aggregating.
+        One derivation: the 2-path stream (the round's dominant cost)
+        is derived ONCE and aggregated straight to the doomed-mid set
+        via collect_set: per (u, w), mids = the distinct x set, keep =
+        array_min(mids), doomed = explode(mids \\ keep). Per-row memory
+        is one distinct-mid set per bubble pair, linear in
+        min(out(u), in(w)), never the k²/2 pair expansion rejected for
+        qd5. The doomed set is lazily cut (bubble-bounded, tiny) so
+        the union's two branches read blocks instead of re-aggregating.
+        Rejected: aggregating to (u, w, keep) and re-deriving the
+        2-paths to probe it (see OPTIMIZATION_r14.md).
 
-        The explicit null filter reproduces the old tp⋈bub probe
-        join's key semantics bit-exactly: a null u or w never matched
-        the (u, w) join key, so those 2-paths produced no removals;
-        x is a join key (e1.d = e2.s) and can never be null."""
+        A 2-path with a null u or w removes nothing (the explicit null
+        filter); x is a join key (e1.d = e2.s) and can never be null."""
         e1, e2 = self.edges.alias("e1"), self.edges.alias("e2")
         doomed = (
             e1.join(e2, F.col("e1.d") == F.col("e2.s"))
@@ -1184,8 +1162,7 @@ class Graph:
         (the ranks checkpoint) — no separate driver-side scalar job."""
         # checkpoint the edge set and degree table once so the per-round
         # action never re-evaluates the full edge derivation; verts come
-        # from the CHECKPOINTED blocks (one upstream derivation total —
-        # the old vertex_ids()-first order paid a second one, r14)
+        # from the CHECKPOINTED blocks (one upstream derivation total)
         edges = self.edges.select("s", "d").transform(self._cp)
         verts = (
             edges.select(F.explode(F.array("s", "d")).alias("v"))
@@ -1239,7 +1216,7 @@ class Graph:
                 "personalized_pagerank: seeds must be non-empty"
             )
         # edges first, verts from the CHECKPOINTED blocks — one
-        # upstream derivation instead of two (r14, the pagerank order)
+        # upstream derivation total, as in pagerank
         edges = self.edges.select("s", "d").transform(self._cp)
         verts = (
             edges.select(F.explode(F.array("s", "d")).alias("v"))
@@ -1382,19 +1359,16 @@ class Graph:
                 )
                 .transform(self._cp_lazy)
             )
-            # the convergence agg materializes the lazy cut — one job
-            # per doubling round instead of two (r14). Cap-based test
-            # (r14, saves the confirm round the old sum-compare always
-            # paid): after k rounds dist = min(chain length from v,
-            # 2^k) (induction: a capped row's successor contributes
+            # the convergence agg materializes the lazy cut: one job
+            # per doubling round. Cap-based test: after k rounds
+            # dist = min(chain length from v, 2^k) (induction: a
+            # capped row's successor contributes
             # min(L - 2^(k-1), 2^(k-1))), so max(dist) < 2^k means no
             # row hit the cap — every chain already reached its end
-            # and the NEXT round would be the identity the old form
-            # ran just to see the total repeat. A cycle (in/out degree
-            # 1 everywhere, no chain end) pins max(dist) == 2^k
-            # forever and runs to max_iter, exactly like the old
-            # always-growing total; cycle rows drop at the `starts`
-            # semi-join either way.
+            # and the next round would be the identity. A cycle
+            # (in/out degree 1 everywhere, no chain end) pins
+            # max(dist) == 2^k forever and runs to max_iter; cycle
+            # rows drop at the `starts` semi-join.
             mx = p.agg(F.max("dist")).collect()[0][0]
             if mx is None or mx < (1 << rounds):
                 break
@@ -1449,10 +1423,8 @@ class Graph:
         """
         from pyspark.sql.window import Window
 
-        # one derivation (r14): _sym_edges + labels drawn from the
-        # CHECKPOINTED sym blocks (every vertex appears as sym.s) —
-        # the old union + vertex_ids() pair ran the upstream edge
-        # derivation four times before round 1 (the qg4 finding)
+        # one derivation: _sym_edges + labels drawn from the
+        # CHECKPOINTED sym blocks (every vertex appears as sym.s)
         sym = (
             self._sym_edges()
             .distinct()

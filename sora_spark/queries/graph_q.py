@@ -50,10 +50,9 @@ from sora_spark.queries.registry import query
 # calibration extended to sf0.1; full suite green there.
 _CALIBRATED_MAX_SF = 0.1
 
-# The calibration escape is a SCOPED in-process flag, not an env var
-# (r10 ADVICE: SORA_UNCALIBRATED_SF_OK=1 was process-wide and its
-# safety rested on a comment; an env leak into a hash-gated run could
-# certify truncated-unroll oracles beyond the proven sf). Bench/scale
+# The calibration escape is a SCOPED in-process flag, not an env var:
+# a process-wide env var could leak into a hash-gated run and certify
+# truncated-unroll oracles beyond the proven sf. Bench/scale
 # entrypoints — which never consult oracles — wrap their runs in
 # `allow_uncalibrated_sf()`; everything else hits the guard.
 _UNCALIBRATED_OK = False
@@ -89,9 +88,9 @@ def _require_calibrated_sf(sf_dir: str, what: str) -> None:
         hint = ""
         if os.environ.get("SORA_UNCALIBRATED_SF_OK") == "1":
             hint = (
-                " (the SORA_UNCALIBRATED_SF_OK env escape was removed "
-                "in r11 — bench/scale entrypoints now scope the bypass "
-                "via graph_q.allow_uncalibrated_sf())"
+                " (the SORA_UNCALIBRATED_SF_OK env escape was removed: "
+                "bench/scale entrypoints scope the bypass via "
+                "graph_q.allow_uncalibrated_sf())"
             )
         raise ValueError(
             f"{what}: unrolled-fixpoint oracle calibrated for "
@@ -226,9 +225,8 @@ FROM deg GROUP BY out_degree, in_degree ORDER BY out_degree, in_degree
 def qg1b_directed_degrees(spark, sf_dir):
     ev = tables(spark, sf_dir).events
     e = e_seq(ev).select("src", "dst")
-    # one pass (r14, the chain_edges trick): the union form derived the
-    # e_seq window subplan once per branch; exploding each edge into
-    # (v=src, out) + (v=dst, in) counts both directions in one pass
+    # one pass over one e_seq window derivation: each edge explodes
+    # into (v=src, out) + (v=dst, in), counting both directions
     ends = e.select(
         F.explode(
             F.array(
@@ -319,7 +317,7 @@ FROM d GROUP BY hop ORDER BY hop
 )
 def qg9_bfs_hops(spark, sf_dir):
     li = tables(spark, sf_dir).lineitem
-    # lazy cut (r14): the source argmin and bfs_hops' sym derivation
+    # lazy cut: the source argmin and bfs_hops' sym derivation
     # would otherwise each run the full e_co_small derivation
     g = Graph(e_co_small(li).localCheckpoint(eager=False))
     src = g.edges.agg(F.min("s").alias("v"))
@@ -351,7 +349,7 @@ SELECT
 )
 def qg5_transitive_reduction(spark, sf_dir):
     li = tables(spark, sf_dir).lineitem
-    # lazy cut (r14): transitive_edges consumes the edge frame three
+    # lazy cut: transitive_edges consumes the edge frame three
     # times (2-path sides + semi target) and transitive_reduction_round
     # re-derives the removal set plus the anti side — SEVEN full
     # e_co_small derivations in one query without the cut (the loops
@@ -2151,7 +2149,7 @@ def qg44_debruijn_graph(spark, sf_dir):
 
     docs = tables(spark, sf_dir).documents
     # lazy cut: the first downstream action (chain/unitig compute)
-    # materializes the edge blocks — one fewer full pass (r14)
+    # materializes the edge blocks, which every later pass reads
     e = de_bruijn_edges(docs).localCheckpoint(eager=False)
     g = Graph(e)
     ce = g.chain_edges()
@@ -2206,7 +2204,7 @@ def qg45_debruijn_unitigs(spark, sf_dir):
 
     docs = tables(spark, sf_dir).documents
     # lazy cut: the first downstream action (chain/unitig compute)
-    # materializes the edge blocks — one fewer full pass (r14)
+    # materializes the edge blocks, which every later pass reads
     e = de_bruijn_edges(docs).localCheckpoint(eager=False)
     ce = Graph(e).chain_edges()
     return (

@@ -18,7 +18,7 @@ from sora_spark.llm import (
     ann, dedup, hybrid, multimodal, textindex, textstats,
 )
 from sora_spark.queries.registry import query
-from sora_spark.queries.relational import _fresh_dir
+from sora_spark.scratch import fresh_dir
 
 # Shared oracle CTE: doc word-3-gram shingles + 1-perm minhash signature
 # (the exact Q-L2 spec: DuckDB range() is empty for docs under 3 words,
@@ -3290,7 +3290,7 @@ def _split_text_index(docs, name, positions=False):
     doc_id % 4 != 0 documents with the other quarter appended, so
     serving from it also certifies incremental ingest. Returns the
     index path."""
-    path = os.path.join(_fresh_dir(name), "index")
+    path = os.path.join(fresh_dir(name), "index")
     textindex.write_text_index(
         docs.filter(F.col("doc_id") % 4 != 0), path, n_buckets=16,
         positions=positions)
@@ -3335,7 +3335,7 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 def qix5_ivfpq_exhaustive_probe(spark, sf_dir):
     emb = tables(spark, sf_dir).embeddings
     probes = emb.filter(F.col("vec_id") < 20)
-    path = os.path.join(_fresh_dir("ivfpq_emb"), "index")
+    path = os.path.join(fresh_dir("ivfpq_emb"), "index")
     ann.write_ivfpq_index(
         emb, path, n_centroids=16, m_subs=4, n_codes=16, iters=2
     )
@@ -3379,7 +3379,7 @@ def qix6_ivf_incremental_append(spark, sf_dir):
     emb = tables(spark, sf_dir).embeddings
     base = emb.filter(F.col("vec_id") % 4 != 0)
     extra = emb.filter(F.col("vec_id") % 4 == 0)
-    path = os.path.join(_fresh_dir("ivf_append_emb"), "index")
+    path = os.path.join(fresh_dir("ivf_append_emb"), "index")
     ann.write_ivf_index(base, path, n_centroids=16, iters=2)
     ann.append_to_ivf_index(extra, path)
     return _probe_top3(spark, path, emb, n_probe=16)
@@ -3477,7 +3477,7 @@ def qix7_ivfpq_incremental_append(spark, sf_dir):
     emb = tables(spark, sf_dir).embeddings
     base = emb.filter(F.col("vec_id") % 4 != 0)
     extra = emb.filter(F.col("vec_id") % 4 == 0)
-    path = os.path.join(_fresh_dir("ivfpq_append_emb"), "index")
+    path = os.path.join(fresh_dir("ivfpq_append_emb"), "index")
     ann.write_ivfpq_index(
         base, path, n_centroids=16, m_subs=4, n_codes=16, iters=2
     )
@@ -3686,7 +3686,7 @@ FROM scored GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20
 )
 def qix8_bm25_indexed(spark, sf_dir):
     docs = tables(spark, sf_dir).documents
-    path = os.path.join(_fresh_dir("text_index_docs"), "index")
+    path = os.path.join(fresh_dir("text_index_docs"), "index")
     textindex.write_text_index(docs, path, n_buckets=16)
     return textindex.bm25_topk_indexed(
         spark, path, ["spark", "vector", "window"], top_k=20
@@ -3811,7 +3811,7 @@ FROM scored GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20
 )
 def qix11_text_index_delete(spark, sf_dir):
     docs = tables(spark, sf_dir).documents
-    path = os.path.join(_fresh_dir("text_index_delete"), "index")
+    path = os.path.join(fresh_dir("text_index_delete"), "index")
     textindex.write_text_index(docs, path, n_buckets=16)
     textindex.delete_from_text_index(
         spark, path, docs.filter(F.col("doc_id") % 4 == 0).select("doc_id")
@@ -3855,7 +3855,7 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 )
 def qix12_ivf_index_delete(spark, sf_dir):
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_fresh_dir("ivf_delete_emb"), "index")
+    path = os.path.join(fresh_dir("ivf_delete_emb"), "index")
     ann.write_ivf_index(emb, path, n_centroids=16, iters=2)
     ann.delete_from_ivf_index(
         spark, path, emb.filter(F.col("vec_id") % 4 == 0).select("vec_id")
@@ -3900,7 +3900,7 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 )
 def qix13_ivf_list_split(spark, sf_dir):
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_fresh_dir("ivf_split_emb"), "index")
+    path = os.path.join(fresh_dir("ivf_split_emb"), "index")
     ann.write_ivf_index(emb, path, n_centroids=8, iters=2)
     stats = {
         int(r["_cid"]): int(r["n_vectors"])
@@ -3957,7 +3957,7 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 )
 def qix17_ivf_maintenance(spark, sf_dir):
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_fresh_dir("ivf_maintain_emb"), "index")
+    path = os.path.join(fresh_dir("ivf_maintain_emb"), "index")
     ann.write_ivf_index(emb, path, n_centroids=8, iters=2)
     drifted = emb.select(
         (F.col("vec_id") + 100000).alias("vec_id"),
@@ -4023,7 +4023,7 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 )
 def qix18_ivf_rebuild(spark, sf_dir):
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_fresh_dir("ivf_rebuild_emb"), "index")
+    path = os.path.join(fresh_dir("ivf_rebuild_emb"), "index")
     ann.write_ivf_index(emb, path, n_centroids=8, iters=2)
     n = emb.count()
     v0 = emb.filter(F.col("vec_id") == 0).select("embedding")
@@ -4164,7 +4164,7 @@ ORDER BY rrf DESC, id
 )
 def qix14_hybrid_rrf_fusion(spark, sf_dir):
     t = tables(spark, sf_dir)
-    base = _fresh_dir("hybrid_rrf")
+    base = fresh_dir("hybrid_rrf")
     tpath = os.path.join(base, "tindex")
     vpath = os.path.join(base, "vindex")
     textindex.write_text_index(t.documents, tpath, n_buckets=16)
@@ -4216,7 +4216,7 @@ FROM r WHERE rn <= 3 ORDER BY probe_id, rn
 )
 def qix15_filtered_knn(spark, sf_dir):
     emb = tables(spark, sf_dir).embeddings
-    path = os.path.join(_fresh_dir("ivf_filtered"), "index")
+    path = os.path.join(fresh_dir("ivf_filtered"), "index")
     ann.write_ivf_index(emb, path, n_centroids=16, iters=2)
     return _probe_top3(
         spark, path, emb, n_probe=16, where="label <> 7 AND vec_id % 2 = 0")

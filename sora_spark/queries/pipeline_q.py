@@ -18,7 +18,7 @@ from sora_spark.llm import curate, dedup, textstats
 from sora_spark.operators import incremental as inc
 from sora_spark.operators.skew import salted_join
 from sora_spark.queries.registry import query
-from sora_spark.queries.relational import _fresh_dir
+from sora_spark.scratch import fresh_dir
 from sora_spark.sources import commit_log as cl
 from sora_spark.sources import commit_log_stream as cls_
 from sora_spark.streaming.upsert import merge_batch
@@ -96,7 +96,7 @@ def _tiled_table(spark, name, snap):
     """A commit-log table in the fresh directory `name` holding `snap`
     as three key-range directories (ntile(3) over k: a create and two
     appends, each recording k stats). Returns the table path."""
-    path = os.path.join(_fresh_dir(name), "table")
+    path = os.path.join(fresh_dir(name), "table")
     tiled = snap.withColumn("_t", F.ntile(3).over(Window.orderBy("k")))
     cl.create_table(
         spark, path, tiled.filter("_t = 1").drop("_t"), stats_cols=["k"])
@@ -782,7 +782,7 @@ FROM r WHERE rn = 1 ORDER BY k
 )
 def qup1_upsert_merge(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = os.path.join(_fresh_dir("upsert_orders"), "table")
+    path = os.path.join(fresh_dir("upsert_orders"), "table")
     _kv(orders, 7).write.mode("overwrite").parquet(path)
     merge_batch(spark, path, _batch(orders, 5), ["k"], "ts")
     return (
@@ -3236,7 +3236,7 @@ FROM versions ORDER BY version, k
 )
 def qup7_commit_log_table(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = os.path.join(_fresh_dir("commit_log_orders"), "table")
+    path = os.path.join(fresh_dir("commit_log_orders"), "table")
     cl.create_table(spark, path, _kv(orders, 7))
     pinned_v1 = cl.read_table(spark, path)  # BEFORE the merge commits
     cl.merge_upsert(spark, path, _batch(orders, 5), ["k"], "ts")
@@ -3351,7 +3351,7 @@ FROM diff ORDER BY k
 )
 def qup9_table_changes(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = os.path.join(_fresh_dir("commit_log_cdc"), "table")
+    path = os.path.join(fresh_dir("commit_log_cdc"), "table")
     cl.create_table(spark, path, _kv(orders, 7), stats_cols=["k"])  # v1
     cl.delete_where(spark, path, "k % 21 = 0")                      # v2
     cl.merge_upsert(spark, path, _batch(orders, 5), ["k"], "ts")    # v3
@@ -3439,7 +3439,7 @@ def qup11_txn_exactly_once(spark, sf_dir):
     def epoch(residue):
         return _kv(orders, 9, residue, ts=False)
 
-    path = os.path.join(_fresh_dir("commit_log_txn"), "table")
+    path = os.path.join(fresh_dir("commit_log_txn"), "table")
     sink = cl.exactly_once_sink(path, "qup11", stats_cols=["k"])
     sink(epoch(0), 0)
     sink(epoch(3), 1)
@@ -3484,7 +3484,7 @@ FROM orders WHERE o_orderkey % 4 = 0 ORDER BY k
 def qup12_stream_table_to_table(spark, sf_dir):
     cls_.register(spark)
     orders = tables(spark, sf_dir).orders
-    base = _fresh_dir("commit_log_loop")
+    base = fresh_dir("commit_log_loop")
     src, dst, ck = (os.path.join(base, d) for d in ("src", "dst", "ck"))
     cl.create_table(
         spark, src, _kv(orders, 8, 0, ts=False), stats_cols=["k"])
@@ -3555,7 +3555,7 @@ def qup13_schema_evolution(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
     v1 = _kv(orders, 9, 0, ts=False).drop("price")
     v2 = _kv(orders, 9, 3, ts=False)
-    path = os.path.join(_fresh_dir("commit_log_evo"), "table")
+    path = os.path.join(fresh_dir("commit_log_evo"), "table")
     cl.create_table(spark, path, v1, stats_cols=["k"])
     cl.append(spark, path, v2, stats_cols=["k"], merge_schema=True)
     return cl.read_table(spark, path).orderBy("k")
@@ -3604,7 +3604,7 @@ FROM merged ORDER BY k
 def qup14_clustered_optimize(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
     snap = _kv(orders, 6)
-    path = os.path.join(_fresh_dir("commit_log_cluster"), "table")
+    path = os.path.join(fresh_dir("commit_log_cluster"), "table")
     cl.create_table(
         spark, path, snap.filter(F.col("k") % 18 == 0), stats_cols=["k"])
     for res in (6, 12):
@@ -3659,7 +3659,7 @@ def qup15_check_constraints(spark, sf_dir):
     def sel(residue):
         return _kv(orders, 9, residue).drop("st")
 
-    path = os.path.join(_fresh_dir("commit_log_check"), "table")
+    path = os.path.join(fresh_dir("commit_log_check"), "table")
     cl.create_table(spark, path, sel(0), stats_cols=["k"],
                     check="price > 0")
     try:
@@ -4005,7 +4005,7 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
 )
 def qup19_restore_table(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = os.path.join(_fresh_dir("commit_log_restore"), "table")
+    path = os.path.join(fresh_dir("commit_log_restore"), "table")
     cl.create_table(spark, path, _kv(orders, 7), stats_cols=["k"])  # v1
     cl.merge_upsert(spark, path, _batch(orders, 5), ["k"], "ts")    # v2
     cl.delete_where(spark, path, "k % 3 = 0")                       # v3
@@ -4062,7 +4062,7 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
 )
 def qup20_shallow_clone(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    base = _fresh_dir("commit_log_clone")
+    base = fresh_dir("commit_log_clone")
     src, dst = (os.path.join(base, d) for d in ("src", "dst"))
     cl.create_table(spark, src, _kv(orders, 7), stats_cols=["k"])
     cl.delete_where(spark, src, "st = 'F'", deletion_vectors=True)
@@ -4180,7 +4180,7 @@ def qup22_zorder_optimize(spark, sf_dir):
         F.col("o_orderstatus").alias("st"),
         F.round("o_totalprice", 2).alias("price"),
     )
-    path = os.path.join(_fresh_dir("commit_log_zorder"), "table")
+    path = os.path.join(fresh_dir("commit_log_zorder"), "table")
     cl.create_table(spark, path, snap, stats_cols=["k", "doy"])
     cl.compact(spark, path, target_partitions=8,
                cluster_by=["k", "doy"], zorder=True)
@@ -4370,7 +4370,7 @@ FROM feed ORDER BY v, k, change
 def qup23_change_data_feed(spark, sf_dir):
     cls_.register(spark)
     orders = tables(spark, sf_dir).orders
-    base = _fresh_dir("commit_log_cdf")
+    base = fresh_dir("commit_log_cdf")
     path, out, ck = (os.path.join(base, d) for d in ("table", "feed", "ck"))
     cl.create_table(spark, path, _kv(orders, 7),                # v1
                     change_data_feed=True)
@@ -4586,7 +4586,7 @@ FROM v3_table GROUP BY pri ORDER BY pri
 )
 def qmv2_cdf_incremental_refresh(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = os.path.join(_fresh_dir("commit_log_mv"), "table")
+    path = os.path.join(fresh_dir("commit_log_mv"), "table")
     cl.create_table(spark, path, _cents(orders, 7), stats_cols=["k"])  # v1
     cl.merge_upsert(                                                  # v2
         spark, path, _cents(orders, 5, days=1), ["k"], "ts")
@@ -4653,7 +4653,7 @@ FROM v4_table GROUP BY pri ORDER BY pri
 def qmv3_streaming_mv_maintenance(spark, sf_dir):
     cls_.register(spark)
     orders = tables(spark, sf_dir).orders
-    base = _fresh_dir("commit_log_stream_mv")
+    base = fresh_dir("commit_log_stream_mv")
     src, vw, ck = (os.path.join(base, d) for d in ("source", "view", "ck"))
     cl.create_table(spark, src, _cents(orders, 7), stats_cols=["k"],  # v1
                     change_data_feed=True)
@@ -4908,7 +4908,7 @@ SELECT stage, k, st, price FROM stages ORDER BY stage, k
 )
 def qup26_constraint_lifecycle(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = os.path.join(_fresh_dir("commit_log_constraint"), "table")
+    path = os.path.join(fresh_dir("commit_log_constraint"), "table")
     cl.create_table(spark, path, _kv(orders, 6, ts=False), stats_cols=["k"])
     cl.update_where(spark, path, "price > 450000", {"price": "450000.0"})
     cl.add_check_constraint(spark, path, "price <= 450000")
@@ -5301,9 +5301,9 @@ SELECT k, price, src FROM final ORDER BY k
     "write, while the evolving batch's own values pass through and "
     "rows written BEFORE the column existed still read NULL — the "
     "exact three-way split (NULL / explicit / default) the oracle "
-    "replays. The ExistsDefault half (backfilling old rows at read) "
-    "needs per-file metadata and is documented out of scope rather "
-    "than half-implemented. Scale: the fill is a withColumn literal "
+    "replays. The ExistsDefault half (pre-evolution rows read the "
+    "default, append(backfill=True)) is declared by "
+    "qup31_exists_default_backfill. Scale: the fill is a withColumn literal "
     "on the batch — zero reads of the table; the defaults map rides "
     "the log fold (checkpoint/clone/rename/drop keep it "
     "consistent).",
@@ -5318,7 +5318,7 @@ def qup28_write_defaults(spark, sf_dir):
             out = out.withColumn("src", F.lit(with_src))
         return out
 
-    path = os.path.join(_fresh_dir("commit_log_defaults"), "table")
+    path = os.path.join(fresh_dir("commit_log_defaults"), "table")
     cl.create_table(spark, path, slc(0))                     # v1
     cl.append(spark, path, slc(2, "batch2024"),              # v2 evolves
               merge_schema=True, defaults={"src": "'legacy'"})
@@ -5575,7 +5575,7 @@ FROM v5_t GROUP BY pri ORDER BY pri
 def qmv4_rate_limited_cdf_mv(spark, sf_dir):
     cls_.register(spark)
     orders = tables(spark, sf_dir).orders
-    base = _fresh_dir("commit_log_ratelimited_mv")
+    base = fresh_dir("commit_log_ratelimited_mv")
     src, vw, ck = (os.path.join(base, d) for d in ("source", "view", "ck"))
     cl.create_table(spark, src, _cents(orders, 7), stats_cols=["k"],  # v1
                     change_data_feed=True)
@@ -5651,7 +5651,7 @@ def qup31_exists_default_backfill(spark, sf_dir):
     def old(res):  # the pre-evolution shape (k, st)
         return _kv(orders, 9, res, ts=False).drop("price")
 
-    path = os.path.join(_fresh_dir("commit_log_backfill"), "table")
+    path = os.path.join(fresh_dir("commit_log_backfill"), "table")
     cl.create_table(spark, path, old(0), stats_cols=["k"])
     cl.append(spark, path, old(3), stats_cols=["k"])
     cl.append(spark, path, _kv(orders, 9, 6, ts=False), stats_cols=["k"],
@@ -5775,7 +5775,7 @@ def qup33_bloom_pruned_merge(spark, sf_dir):
         F.round("o_totalprice", 2).alias("price"),
         F.col("o_orderdate").alias("ts"),
     )
-    path = os.path.join(_fresh_dir("commit_log_bloom"), "table")
+    path = os.path.join(fresh_dir("commit_log_bloom"), "table")
     cl.create_table(spark, path, snap.filter(F.col("k") % 8 == 0),
                     stats_cols=["k"], bloom_cols=["k"])
     for res in range(1, 8):
@@ -5836,7 +5836,7 @@ SELECT k, st, price, ts_s, _change_type FROM ch ORDER BY k
 )
 def qup34_cdf_by_timestamp(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = os.path.join(_fresh_dir("commit_log_ts_cdf"), "table")
+    path = os.path.join(fresh_dir("commit_log_ts_cdf"), "table")
     cl.create_table(spark, path, _kv(orders, 7), stats_cols=["k"])  # v1
     time.sleep(0.05)
     t_mid = time.time()
@@ -5899,7 +5899,7 @@ FROM merged ORDER BY k
 )
 def qup35_generated_columns(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = os.path.join(_fresh_dir("commit_log_gen"), "table")
+    path = os.path.join(fresh_dir("commit_log_gen"), "table")
     cl.create_table(
         spark, path, _kv(orders, 4), stats_cols=["k", "day"],
         gen_cols={"day": "CAST(ts AS DATE)"})

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from sora_spark.catalog import TABLE_NAMES, tables
 from sora_spark.queries.registry import query
+from sora_spark.scratch import scratch_dir
 
 # Spark-reported schema of every fixture table (probed; FIXTURES.md is
 # the parquet-footer view, this is the engine's type surface for it).
@@ -96,26 +97,6 @@ def qp2_schema_check(spark, sf_dir):
 
 # ---- Q-C: sink→source roundtrips ---------------------------------------
 
-_SCRATCH = "/root/repo/.scratch"
-
-
-def _roundtrip_dir(name: str) -> str:
-    d = os.path.join(_SCRATCH, "roundtrip", f"{name}-{os.getpid()}")
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
-
-
-def _fresh_dir(name: str) -> str:
-    """`_roundtrip_dir(name)`, emptied: a query that creates a table or
-    index, appends, or keeps a stream checkpoint starts from nothing on
-    every run in the process. Keep every path the query writes (index
-    sidecars included) inside it."""
-    d = _roundtrip_dir(name)
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    return d
-
-
 @query(
     "qc1_csv_roundtrip",
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
@@ -125,7 +106,7 @@ def _fresh_dir(name: str) -> str:
 )
 def qc1_csv_roundtrip(spark, sf_dir):
     nation = tables(spark, sf_dir).nation
-    path = _roundtrip_dir("csv_nation")
+    path = scratch_dir("csv_nation")
     nation.write.mode("overwrite").option("header", "true").csv(path)
     return (
         spark.read.schema(nation.schema).option("header", "true").csv(path)
@@ -142,7 +123,7 @@ def qc1_csv_roundtrip(spark, sf_dir):
 )
 def qc2_json_roundtrip(spark, sf_dir):
     region = tables(spark, sf_dir).region
-    path = _roundtrip_dir("json_region")
+    path = scratch_dir("json_region")
     region.write.mode("overwrite").json(path)
     return spark.read.schema(region.schema).json(path).orderBy("r_regionkey")
 
@@ -452,7 +433,7 @@ GROUP BY o_orderstatus ORDER BY o_orderstatus
 )
 def qc3_orc_roundtrip(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = _roundtrip_dir("orc_orders")
+    path = scratch_dir("orc_orders")
     orders.filter(F.col("o_orderpriority") == "1-URGENT").write.mode(
         "overwrite"
     ).orc(path)
@@ -489,7 +470,7 @@ def qsrc1_fasta_roundtrip(spark, sf_dir):
     from sora_spark.sources.text import write_fasta
 
     docs = tables(spark, sf_dir).documents
-    path = _roundtrip_dir("fasta_documents")
+    path = scratch_dir("fasta_documents")
     write_fasta(docs, path, "doc_id", "text", wrap=60)
     register(spark)
     return (
@@ -529,7 +510,7 @@ def qsrc2_partitioned_write(spark, sf_dir):
     from sora_spark.sources.parquet import read_table
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = _roundtrip_dir(f"events_partitioned-{sf_tag}")
+    path = scratch_dir(f"events_partitioned-{sf_tag}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ev = read_table(spark, sf_dir, "events")
         ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -572,7 +553,7 @@ FROM (
 )
 def qsrc3_schema_evolution(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = _roundtrip_dir("schema_evo")
+    path = scratch_dir("schema_evo")
     even = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     )
@@ -612,7 +593,7 @@ FROM orders ORDER BY o_orderkey LIMIT 500
 )
 def qc5_zstd_roundtrip(spark, sf_dir):
     orders = tables(spark, sf_dir).orders
-    path = _roundtrip_dir("zstd_orders")
+    path = scratch_dir("zstd_orders")
     orders.write.mode("overwrite").option("compression", "zstd").parquet(
         path
     )
@@ -857,12 +838,11 @@ def qc7_corrupt_record_handling(spark, sf_dir):
     from pyspark.sql.types import StringType, StructField, StructType
 
     nation = tables(spark, sf_dir).nation
-    path = _roundtrip_dir("csv_poisoned")
+    path = scratch_dir("csv_poisoned")
     # the poisoned file is written by PLAIN python, not a Spark sink:
     # appending to a Spark-written part file trips the Hadoop local-FS
     # .crc sidecar (ChecksumException) — and a 25-row dimension
     # collect is the cheap, honest way to stage a hand-corrupted file
-    os.makedirs(path, exist_ok=True)
     rows = nation.orderBy("n_nationkey").collect()
     with open(os.path.join(path, "data.csv"), "w") as f:
         for r in rows:
@@ -943,7 +923,7 @@ def qsrc4_fasta_datasource_write(spark, sf_dir):
 
     register(spark)
     docs = tables(spark, sf_dir).documents
-    path = _roundtrip_dir("fasta_dsw")
+    path = scratch_dir("fasta_dsw")
     (
         docs.select(
             F.col("doc_id").cast("string").alias("header"),
@@ -990,8 +970,7 @@ def qc8_json_corrupt_records(spark, sf_dir):
     from pyspark.sql.types import StringType, StructField, StructType
 
     region = tables(spark, sf_dir).region
-    path = _roundtrip_dir("json_poisoned")
-    os.makedirs(path, exist_ok=True)
+    path = scratch_dir("json_poisoned")
     rows = region.orderBy("r_regionkey").collect()
     with open(os.path.join(path, "data.json"), "w") as f:
         for r in rows:
@@ -1070,7 +1049,7 @@ def qsrc4_fastq_roundtrip(spark, sf_dir):
         ),
         "",
     )
-    path = _roundtrip_dir("fastq_documents")
+    path = scratch_dir("fastq_documents")
     register(spark)
     (
         docs.select(
@@ -1199,7 +1178,7 @@ def qc9_xml_roundtrip(spark, sf_dir):
     n = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    path = _roundtrip_dir("xml_nation")
+    path = scratch_dir("xml_nation")
     (
         n.write.mode("overwrite")
         .option("rootTag", "nations")

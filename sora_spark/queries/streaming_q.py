@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from sora_spark.catalog import tables
 from sora_spark.queries.registry import query
+from sora_spark.scratch import fresh_dir
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -426,7 +427,7 @@ def qs6_checkpoint_recovery(spark, sf_dir):
     from sora_spark.streaming import ops, replay
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    base = replay.scratch_dir(f"qs6-{sf_tag}")
+    base = fresh_dir(f"qs6-{sf_tag}")
     src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
     os.makedirs(src)
     ev = read_table(spark, sf_dir, "events")
@@ -496,7 +497,7 @@ def qup2_streaming_upsert_sink(spark, sf_dir):
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
     d = replay.materialize_replay_dir(spark, sf_dir, "qup2", n_files=4)
-    base = replay.scratch_dir(f"qup2-sink-{sf_tag}")
+    base = fresh_dir(f"qup2-sink-{sf_tag}")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
     q = upsert_sink(
         replay.events_stream(spark, d),
@@ -711,7 +712,7 @@ def qup3_cdc_deletes(spark, sf_dir):
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
     d = replay.materialize_replay_dir(spark, sf_dir, "qup3", n_files=4)
-    base = replay.scratch_dir(f"qup3-sink-{sf_tag}")
+    base = fresh_dir(f"qup3-sink-{sf_tag}")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
     ev = replay.events_stream(spark, d).withColumn(
         "op",
@@ -1078,8 +1079,8 @@ def qs11_parquet_file_sink(spark, sf_dir):
     # fresh scratch copy — append_sentinel below must never pollute
     # the reused keyed staging dir (review finding, the qs5c lesson)
     d = replay.stage_run_dir(spark, sf_dir, "qs11")
-    out = replay.scratch_dir("qs11-out")
-    ckpt = replay.scratch_dir("qs11-ckpt")
+    out = fresh_dir("qs11-out")
+    ckpt = fresh_dir("qs11-ckpt")
     ev = replay.events_stream(spark, d).withWatermark("ts", "40 days")
     hourly = ev.groupBy(
         F.window("ts", "1 hour").alias("w"), "event_type"

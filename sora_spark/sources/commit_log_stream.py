@@ -1,7 +1,7 @@
 """Streaming SOURCE over the commit-log table (Python DataSource API,
 Spark 4): `spark.readStream.format("commitlog").load(path)` turns the
 table's append history into micro-batches — the Delta-streaming-source
-shape, completing the loop the r11 sink opened (commit_log.
+shape, closing the loop with the exactly-once sink (commit_log.
 exactly_once_sink): table → readStream → transform → exactly-once sink
 → table is an end-to-end exactly-once pipeline over this format.
 
@@ -20,7 +20,7 @@ appropriate for append-mostly fact streams where merges are
 compactions of history the stream already saw). `option(
 "startingVersion", N)` begins at version N instead of 1.
 
-ADMISSION CONTROL (Delta's knobs, r11 verdict item 5): a large
+ADMISSION CONTROL (Delta's knobs): a large
 backlog must not become one giant micro-batch. `option(
 "maxVersionsPerTrigger", N)` admits at most N table versions per
 batch; `option("maxBytesPerTrigger", B)` admits versions until their
@@ -38,7 +38,7 @@ sizes come from a driver-side listing of the candidate versions'
 added directories only (bounded by the backlog's file count, never
 the table).
 
-CHANGE DATA FEED (`option("readChangeFeed", "true")`, r12): instead
+CHANGE DATA FEED (`option("readChangeFeed", "true")`): instead
 of rows, the stream emits row-level CHANGES — appends flagged
 'insert' straight from their data files, merge/delete/update commits
 served from the cdc/ sidecars their writers materialized (tables
@@ -78,7 +78,7 @@ _APPEND_OPS = {"create", "append", "txn_append", "clone"}
 # "clone" is create-shaped for a STREAM: the clone commit is the
 # destination table's first commit and its added directories ARE the
 # initial rows (clone_table publishes at the source's version number,
-# so the clamped default start lands exactly on it — r13).
+# so the clamped default start lands exactly on it).
 # commits that change NO rows (added=[] and no cdc by construction):
 # constraint management and — when a stream legitimately spans them
 # (startingVersion lands ON a mapping commit) — column-mapping DDL.
@@ -164,10 +164,9 @@ def _mapping_asof(table_path: str, start: int):
 def _gate_clone(path: str, entry: dict, version: int,
                 logical: list[str], cmap: dict) -> None:
     """Refuse clone commits a FILE-LEVEL stream cannot replay
-    faithfully (r13 advice, both findings). A clone folds the source's
-    whole history into one commit, so three read-time projections the
-    batch reader applies can be BAKED INTO its added list with no
-    stream-side equivalent:
+    faithfully. A clone folds the source's whole history into one
+    commit, so three read-time projections the batch reader applies
+    can be BAKED INTO its added list with no stream-side equivalent:
 
     1. live DELETION VECTORS (`dv_added`): the added files still
        contain DV-deleted rows — streaming them raw resurrects
@@ -267,7 +266,7 @@ class CommitLogStreamReader(DataSourceStreamReader):
         # committed — the base the admission caps count from AND the
         # duplicate-emission floor for partitions(). Seeded at
         # startingVersion-1 because Spark calls latestOffset before
-        # initialOffset on a fresh stream (measured, r12): without the
+        # initialOffset on a fresh stream (measured): without the
         # seed the first backlog batch would be uncapped — exactly the
         # batch the caps exist for.
         self._seen: int = self.starting_version - 1
@@ -290,7 +289,7 @@ class CommitLogStreamReader(DataSourceStreamReader):
             # for append-type commits, the cdc sidecar for change
             # commits (their `added` rewrites are never read here —
             # counting them would let one rewritten version eat the
-            # whole byte budget; r12 review)
+            # whole byte budget)
             op = entry.get("operation")
             if op in _APPEND_OPS or op == "clone":
                 rels = list(entry.get("added", []))
@@ -387,7 +386,7 @@ class CommitLogStreamReader(DataSourceStreamReader):
             if op in _METADATA_OPS:
                 continue  # changes no rows; never an error to span
             if self.read_changes:
-                # CHANGE DATA FEED (Delta CDF, r12): appends stream
+                # CHANGE DATA FEED (Delta CDF): appends stream
                 # their added files flagged 'insert'; data-changing
                 # commits stream the row-level cdc/ sidecar their
                 # writer materialized; layout-only commits (optimize)
@@ -498,10 +497,9 @@ class CommitLogDataSource(DataSource):
         # the schema AS OF the resolved start (startingVersion OR
         # startingTimestamp — the SAME resolver the reader uses, so
         # the declared schema and the emitted batches can never
-        # disagree about which mapping epoch they live in; r13
-        # second-review finding): every version the stream can emit
-        # conforms to it, because a later schema_evolved commit stops
-        # the stream (see partitions()).
+        # disagree about which mapping epoch they live in): every
+        # version the stream can emit conforms to it, because a later
+        # schema_evolved commit stops the stream (see partitions()).
         start = _resolve_start(self.options, path)
         entry = None
         for v in vs:

@@ -10,48 +10,14 @@ simulate out-of-order arrival for watermark tests.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sora_spark.scratch import fresh_dir, scratch_dir
 from sora_spark.sources.parquet import read_table
-
-_SCRATCH = "/root/repo/.scratch/stream"
-_CREATED: set[str] = set()
-
-
-def _cleanup_scratch() -> None:
-    for path in _CREATED:
-        shutil.rmtree(path, ignore_errors=True)
-
-
-atexit.register(_cleanup_scratch)
-
-
-def _sweep_dead_pid_dirs() -> None:
-    """Remove scratch dirs left by crashed processes (atexit never ran):
-    any '<...>-pid<N>' dir whose pid is not alive is garbage."""
-    try:
-        entries = os.listdir(_SCRATCH)
-    except OSError:
-        return
-    for entry in entries:
-        pid_part = entry.rsplit("-pid", 1)
-        if len(pid_part) != 2 or not pid_part[1].isdigit():
-            continue
-        pid = int(pid_part[1])
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            shutil.rmtree(os.path.join(_SCRATCH, entry), ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another user — leave it
-
 
 # Far-future flush event: appending it to a replay dir advances the
 # watermark past all real data, so append-mode state (sessions) emits.
@@ -70,15 +36,11 @@ def materialize_replay_dir(
     (time-ranged when ordered, md5-scattered when shuffled).
 
     The dir is keyed by (name, source sf, layout, fixture content
-    stamp, pid) and reused when it already holds a completed write —
-    repeated invocations in one process skip the rewrite — and every
-    dir this process created is removed at exit, so runs don't
-    accumulate fixture copies on disk (ADVICE r04). The content stamp
-    (source mtime+size) means a regenerated fixture can never replay
-    stale data even if a crashed run's dir survives into a recycled
-    pid; dirs belonging to dead pids are swept opportunistically.
+    stamp) and reused when it already holds a completed write, so
+    repeated invocations in one process skip the rewrite. The content
+    stamp (source mtime+size) means a regenerated fixture never replays
+    stale data; an unknowable stamp is random, so the dir is rewritten.
     """
-    _sweep_dead_pid_dirs()
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
     layout = f"shuf{n_files}" if shuffled else f"ord{n_files}"
     if sorted_within:
@@ -88,13 +50,8 @@ def materialize_replay_dir(
         st = os.stat(src)
         stamp = f"{st.st_mtime_ns:x}.{st.st_size:x}"
     except OSError:
-        # content unknowable — never reuse a pre-existing dir keyed by a
-        # content-free stamp; always rewrite (ADVICE r05)
         stamp = f"nosrc{os.urandom(4).hex()}"
-    path = os.path.join(
-        _SCRATCH, f"{name}-{sf_tag}-{layout}-{stamp}-pid{os.getpid()}"
-    )
-    _CREATED.add(path)
+    path = scratch_dir(f"{name}-{sf_tag}-{layout}-{stamp}")
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
     ev = read_table(spark, sf_dir, "events")
@@ -126,17 +83,6 @@ def events_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
     )
 
 
-def scratch_dir(name: str) -> str:
-    """Fresh per-process scratch dir under the stream scratch root:
-    wiped if a previous invocation left one, registered for atexit
-    cleanup (same lifecycle as replay dirs)."""
-    path = os.path.join(_SCRATCH, f"{name}-pid{os.getpid()}")
-    _CREATED.add(path)
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    return path
-
-
 def append_sentinel(spark: SparkSession, replay_dir: str) -> None:
     """Append one far-future event (SENTINEL_USER, year 2030): the next
     micro-batch advances the watermark past all real data, flushing
@@ -162,7 +108,7 @@ def stage_run_dir(
     so the 1-file-per-trigger source replays sentinels last."""
     staged = materialize_replay_dir(spark, sf_dir, key, n_files=n_files)
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    d = scratch_dir(f"{key}-run-{sf_tag}")
+    d = fresh_dir(f"{key}-run-{sf_tag}")
     for f in os.listdir(staged):
         if f.startswith("part-") and f.endswith(".parquet"):
             shutil.copy(os.path.join(staged, f), os.path.join(d, f))
@@ -195,9 +141,9 @@ def append_flush_sentinel_pairs(spark: SparkSession, run_dir: str) -> None:
         # EXPLICIT mtime ordering: a sentinel written in the same
         # filesystem-timestamp tick as the part copies can TIE and be
         # replayed FIRST, jumping the watermark past the real events
-        # (the qs7 round-6 finding, seen again as a same-session
-        # qs5d flake). Force every sentinel strictly after the data
-        # files, and the second strictly after the first.
+        # (seen as qs7 and qs5d flakes). Force every sentinel strictly
+        # after the data files, and the second strictly after the
+        # first.
         for f in set(os.listdir(run_dir)) - before:
             path = os.path.join(run_dir, f)
             os.utime(path, (base + 10.0 + i, base + 10.0 + i))
@@ -236,13 +182,10 @@ def _replay_sequential(spark: SparkSession, staged_dir: str, start_query):
     reliance on the file source's mtime tie-breaking. Without this, a
     4-file dir written in one commit has tied mtimes and the source
     may pick a LATE file first, jumping the watermark past the older
-    files' events (they would then be dropped as late — the qs7
-    round-6 finding). `start_query(stream_df)` starts and returns the
-    StreamingQuery."""
-    seq_dir = staged_dir + "-seq"
-    _CREATED.add(seq_dir)
-    shutil.rmtree(seq_dir, ignore_errors=True)  # stale reruns
-    os.makedirs(seq_dir)
+    files' events (they would then be dropped as late). The watched
+    dir is emptied per call: replays in one process run one at a time.
+    `start_query(stream_df)` starts and returns the StreamingQuery."""
+    seq_dir = fresh_dir("replay-seq")
     q = start_query(events_stream(spark, seq_dir))
     try:
         parts = sorted(
@@ -315,7 +258,7 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFram
 
     Memory-sink tables are session-global; a fixed `name` is dropped
     before restart so repeated invocations replace rather than leak
-    catalog entries + driver memory (ADVICE r04)."""
+    catalog entries + driver memory."""
     spark = stream_df.sparkSession
     spark.catalog.dropTempView(name)
     q = (

@@ -18,56 +18,6 @@ SF_DIR = os.environ.get("SORA_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    # drop scratch leftovers without racing CONCURRENT suites (a
-    # blanket rmtree here deleted another pytest process's in-flight
-    # roundtrip dirs — observed qsrc3 flake). Three namespaces:
-    # - pid-owned dirs: '-pid<N>' anywhere; bare '-<N>' only under
-    #   roundtrip/ (relational.py), where the suffix IS a pid — a bare
-    #   all-digit suffix elsewhere may be a random hex tag that
-    #   happens to be numeric, NOT a pid (round-9 review finding);
-    # - everything else (hex/uuid-tagged dirs AND plain files, e.g.
-    #   fasta-*.txt): not pid-attributable, so age out after 6 h —
-    #   far beyond any suite's runtime, so never a live run's state.
-    # .scratch/stream has its own dead-pid sweep (replay.py).
-    import re
-    import shutil
-    import time
-
-    scratch = "/root/repo/.scratch"
-    now = time.time()
-    stale_s = 6 * 3600
-    for root, dirs, files in os.walk(scratch):
-        if root == scratch and "stream" in dirs:
-            dirs.remove("stream")
-        for d in list(dirs):
-            full = os.path.join(root, d)
-            m = re.search(r"-pid(\d+)$", d)
-            if m is None and os.path.basename(root) == "roundtrip":
-                m = re.search(r"-(\d+)$", d)
-            try:
-                if m is not None:
-                    pid = int(m.group(1))
-                    if pid != os.getpid() and not os.path.exists(
-                        f"/proc/{pid}"
-                    ):
-                        shutil.rmtree(full, ignore_errors=True)
-                    # never descend into pid-owned dirs: either just
-                    # removed, or owned by a LIVE run (ours included)
-                    # whose early-created scratch files must not age
-                    # out underneath a >6h suite (r09 ADVICE)
-                    dirs.remove(d)
-                elif now - os.path.getmtime(full) > stale_s:
-                    shutil.rmtree(full, ignore_errors=True)
-                    dirs.remove(d)
-            except OSError:
-                pass
-        for f in files:
-            full = os.path.join(root, f)
-            try:
-                if now - os.path.getmtime(full) > stale_s:
-                    os.remove(full)
-            except OSError:
-                pass
     s = build_session(
         app_name="sora-tests",
         master=os.environ.get("SORA_TEST_MASTER", "local[4]"),

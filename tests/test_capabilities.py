@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import math
 import os
-import uuid
 from typing import Iterator
 
 import pandas as pd
@@ -92,9 +91,8 @@ def test_python_udtf(spark):
     ]
 
 
-def test_fasta_source(spark):
-    path = f"/root/repo/.scratch/fasta-{uuid.uuid4().hex[:6]}.txt"
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+def test_fasta_source(spark, tmp_path):
+    path = str(tmp_path / "fasta.txt")
     with open(path, "w") as f:
         f.write(">read1 desc\nACGT\nTTAA\n>read2\nGGCC\n")
     recs = {
@@ -103,7 +101,7 @@ def test_fasta_source(spark):
     assert recs == {"read1 desc": "ACGTTTAA", "read2": "GGCC"}
 
 
-def test_partitioned_parquet_sink_and_pruning(spark, sf_dir):
+def test_partitioned_parquet_sink_and_pruning(spark, sf_dir, tmp_path):
     """Hive-partitioned parquet write + partition pruning on read —
     the layout SCALE.md prescribes for 100 TB date-keyed facts."""
     import contextlib
@@ -112,7 +110,7 @@ def test_partitioned_parquet_sink_and_pruning(spark, sf_dir):
     from sora_spark.catalog import tables as _tables
 
     li = _tables(spark, sf_dir).lineitem
-    path = f"/root/repo/.scratch/part-{uuid.uuid4().hex[:6]}"
+    path = str(tmp_path / "part")
     li.write.partitionBy("l_returnflag").mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     assert back.count() == li.count()
@@ -191,13 +189,13 @@ def test_asof_join_operator(spark):
     assert rows[(2, 15, 102)] == (None, "buy")
 
 
-def test_compact_parquet_small_files(spark, sf_dir):
+def test_compact_parquet_small_files(spark, sf_dir, tmp_path):
     """200 tiny files -> a handful of target-sized files with identical
     content — the small-file maintenance op streaming ingestion needs."""
     from sora_spark.sources.maintenance import compact_parquet
 
     li = tables(spark, sf_dir).lineitem
-    path = f"/root/repo/.scratch/compact-{uuid.uuid4().hex[:6]}"
+    path = str(tmp_path / "compact")
     li.repartition(200).write.mode("overwrite").parquet(path)
     before_rows = spark.read.parquet(path).count()
     stats = compact_parquet(spark, path, target_file_bytes=512 * 1024)
@@ -208,7 +206,7 @@ def test_compact_parquet_small_files(spark, sf_dir):
     assert sorted(back.columns) == sorted(li.columns)
 
 
-def test_streaming_upsert_sink_latest_per_key(spark, sf_dir):
+def test_streaming_upsert_sink_latest_per_key(spark, sf_dir, tmp_path):
     """foreachBatch merge sink: after draining the replay, the table
     holds exactly the latest event per (user_id, event_type)."""
     import os
@@ -218,7 +216,7 @@ def test_streaming_upsert_sink_latest_per_key(spark, sf_dir):
     from sora_spark.streaming import replay, upsert
 
     d = replay.materialize_replay_dir(spark, sf_dir, "ups", n_files=4)
-    base = f"/root/repo/.scratch/upsert-{uuid.uuid4().hex[:6]}"
+    base = str(tmp_path / "upsert")
     table, ckpt = f"{base}/table", f"{base}/ckpt"
     os.makedirs(base, exist_ok=True)
     q = upsert.upsert_sink(
@@ -334,14 +332,13 @@ def test_count_min_sketch_frequent_items(spark, sf_dir):
     assert set(top) <= set(fi), "freqItems must contain the true top-5"
 
 
-def test_corrupt_json_ingestion_modes(spark):
+def test_corrupt_json_ingestion_modes(spark, tmp_path):
     """Real-world ingestion robustness: PERMISSIVE mode quarantines bad
     JSON lines in _corrupt_record; DROPMALFORMED silently drops them;
     FAILFAST raises. All three contracts pinned."""
     import pytest
 
-    path = f"/root/repo/.scratch/badjson-{uuid.uuid4().hex[:6]}.jsonl"
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = str(tmp_path / "badjson.jsonl")
     with open(path, "w") as f:
         f.write('{"k": 1, "v": "a"}\n')
         f.write('NOT JSON AT ALL\n')
@@ -383,11 +380,11 @@ def test_stratified_sampling(spark, sf_dir):
         assert abs(n - exp) <= 4 * sigma, (k, n, exp)
 
 
-def test_parquet_schema_evolution_merge(spark):
+def test_parquet_schema_evolution_merge(spark, tmp_path):
     """mergeSchema: files written with different column sets read as a
     unioned schema with NULLs for absent columns — the additive schema
     evolution contract partitioned long-lived tables rely on."""
-    path = f"/root/repo/.scratch/evolve-{uuid.uuid4().hex[:6]}"
+    path = str(tmp_path / "evolve")
     spark.createDataFrame([(1, "a")], "id LONG, v1 STRING").write.parquet(
         path + "/p=1"
     )
@@ -530,13 +527,13 @@ def test_explode_outer_and_inline(spark):
     assert sorted(map(tuple, sdf.collect())) == [(1, "x"), (2, "y")]
 
 
-def test_fasta_custom_datasource(spark):
+def test_fasta_custom_datasource(spark, tmp_path):
     """The Python DataSource API form of the FASTA reader: one input
     partition per file (reads parallelize across files), same records
     as the DataFrame-parse path."""
     from sora_spark.sources.fasta_datasource import register
 
-    d = f"/root/repo/.scratch/fastads-{uuid.uuid4().hex[:6]}"
+    d = str(tmp_path / "fastads")
     os.makedirs(d, exist_ok=True)
     with open(os.path.join(d, "a.fa"), "w") as f:
         f.write(">r1 first\nACGT\nTT\n>r2\nGG\n")
@@ -754,11 +751,10 @@ def test_pandas_udf_array_in_array_out(spark, sf_dir):
     assert all(r["n"] == 1.0 for r in norms.collect())
 
 
-def test_csv_dialect_robustness(spark):
+def test_csv_dialect_robustness(spark, tmp_path):
     """Quoted fields with embedded delimiters/newlines, custom escape,
     and dateFormat parsing — the ingestion dialect surface."""
-    path = f"/root/repo/.scratch/csvdialect-{uuid.uuid4().hex[:6]}.csv"
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = str(tmp_path / "csvdialect.csv")
     with open(path, "w") as f:
         f.write('id|name|when\n')
         f.write('1|"has|pipe"|2024-01-15\n')
@@ -778,12 +774,12 @@ def test_csv_dialect_robustness(spark):
     }
 
 
-def test_max_records_per_file(spark, sf_dir):
+def test_max_records_per_file(spark, sf_dir, tmp_path):
     """maxRecordsPerFile caps output file size by row count — the
     writer knob that bounds downstream task granularity."""
     li = tables(spark, sf_dir).lineitem
     n = li.count()
-    path = f"/root/repo/.scratch/maxrec-{uuid.uuid4().hex[:6]}"
+    path = str(tmp_path / "maxrec")
     li.coalesce(1).write.option("maxRecordsPerFile", 1000).mode(
         "overwrite"
     ).parquet(path)
@@ -970,9 +966,10 @@ def test_cli_list_and_inventory():
     import subprocess
     import sys
 
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
         [sys.executable, "-m", "sora_spark", "list"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=root, timeout=120,
     )
     assert out.returncode == 0
     lines = out.stdout.strip().splitlines()
@@ -981,7 +978,7 @@ def test_cli_list_and_inventory():
 
     inv = subprocess.run(
         [sys.executable, "-m", "sora_spark", "inventory"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=root, timeout=120,
     )
     assert inv.returncode == 0
     all_lines = inv.stdout.strip().splitlines()
@@ -1000,22 +997,19 @@ def test_cli_list_and_inventory():
     ncols = ncells(rows[0])
     assert all(ncells(r) == ncols for r in rows[2:]), "pipe-escape broken"
     # the committed inventory is the generated one, byte for byte
-    queries_md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "QUERIES.md")
-    with open(queries_md, encoding="utf-8") as fh:
+    with open(os.path.join(root, "QUERIES.md"), encoding="utf-8") as fh:
         assert inv.stdout == fh.read(), (
             "QUERIES.md is stale: regenerate it with "
             "`python -m sora_spark inventory > QUERIES.md`")
 
     bad = subprocess.run(
         [sys.executable, "-m", "sora_spark", "run", "no_such_query"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=root, timeout=120,
     )
     assert bad.returncode == 2
 
 
-def test_compact_parquet_crash_recovery(spark, sf_dir):
+def test_compact_parquet_crash_recovery(spark, sf_dir, tmp_path):
     """A crash between the two swap renames leaves data at _old and
     nothing at the table path; the next compaction must restore and
     proceed — and stale _tmp dirs must not break it."""
@@ -1024,7 +1018,7 @@ def test_compact_parquet_crash_recovery(spark, sf_dir):
     from sora_spark.sources.maintenance import compact_parquet
 
     nation = tables(spark, sf_dir).nation
-    path = f"/root/repo/.scratch/crashrec-{uuid.uuid4().hex[:6]}"
+    path = str(tmp_path / "crashrec")
     nation.repartition(5).write.mode("overwrite").parquet(path)
     n = spark.read.parquet(path).count()
 
@@ -1304,7 +1298,7 @@ def test_time_rollup_null_ts_stays_data_row(spark):
     assert rows[(None, None, "day")] == 1  # day subtotal of the null-ts group
 
 
-def test_zorder_layout_skips_files(spark, sf_dir):
+def test_zorder_layout_skips_files(spark, sf_dir, tmp_path):
     """write_zordered must yield parquet files whose min/max boxes are
     selective in BOTH dimensions: a filter on the SECOND key (y) must
     be able to skip files, whereas an x-sorted layout puts every y in
@@ -1332,9 +1326,9 @@ def test_zorder_layout_skips_files(spark, sf_dir):
                 hit += 1
         return hit, len(fs)
 
-    zpath = f"/root/repo/.scratch/zord-{uuid.uuid4().hex[:6]}"
+    zpath = str(tmp_path / "zord")
     write_zordered(cust, zpath, "x", "y", n_files=8, bits=4)
-    xpath = f"/root/repo/.scratch/xsort-{uuid.uuid4().hex[:6]}"
+    xpath = str(tmp_path / "xsort")
     (
         cust.repartitionByRange(8, "x")
         .sortWithinPartitions("x")
@@ -1386,19 +1380,15 @@ def test_asof_join_forward_direction(spark):
     assert rows == {100: 95.0, 101: None, 102: None}  # 40-15 > 10 nulled
 
 
-def test_zstd_write_actually_zstd(spark, sf_dir):
+def test_zstd_write_actually_zstd(spark, sf_dir, tmp_path):
     """qc5's write must really produce ZSTD-compressed column chunks
     (a silently-ignored option would still roundtrip)."""
-    import glob
-
     import pyarrow.parquet as pq
-
-    from sora_spark.queries.relational import _roundtrip_dir
 
     tables(spark, sf_dir).orders.write.mode("overwrite").option(
         "compression", "zstd"
-    ).parquet(_roundtrip_dir("zstd_check"))
-    f = sorted(glob.glob(_roundtrip_dir("zstd_check") + "/part-*.parquet"))[0]
+    ).parquet(str(tmp_path / "zstd"))
+    f = sorted((tmp_path / "zstd").glob("part-*.parquet"))[0]
     meta = pq.ParquetFile(f).metadata
     codecs = {
         meta.row_group(0).column(i).compression
@@ -1481,12 +1471,12 @@ def test_fasta_writer_commit_protocol(spark, tmp_path):
     ], os.listdir(path)
 
 
-def test_fastq_custom_datasource_roundtrip(spark):
+def test_fastq_custom_datasource_roundtrip(spark, tmp_path):
     """FASTQ Python DataSource: 4-line records with quality channel,
     one partition per file; sink write -> source read roundtrips."""
     from sora_spark.sources.fastq_datasource import register
 
-    d = f"/root/repo/.scratch/fastqds-{uuid.uuid4().hex[:6]}"
+    d = str(tmp_path / "fastqds")
     os.makedirs(d, exist_ok=True)
     with open(os.path.join(d, "a.fq"), "w") as f:
         f.write("@r1 lane1\nACGT\n+\nIIII\n@r2\nGG\n+anything\n!~\n")
@@ -1504,7 +1494,7 @@ def test_fastq_custom_datasource_roundtrip(spark):
     }
     assert df.rdd.getNumPartitions() == 2, "one partition per file"
     # sink -> source roundtrip through the writer's two-phase commit
-    out = f"/root/repo/.scratch/fastqw-{uuid.uuid4().hex[:6]}"
+    out = str(tmp_path / "fastqw")
     (
         df.selectExpr("header", "sequence", "quality")
         .write.format("fastq")
@@ -1521,7 +1511,7 @@ def test_fastq_custom_datasource_roundtrip(spark):
     ), "committed dir must hold no staging temps"
 
 
-def test_fastq_datasource_rejects_malformed(spark):
+def test_fastq_datasource_rejects_malformed(spark, tmp_path):
     """Truncated/misframed FASTQ must fail loudly at read, not feed
     misaligned phred scores downstream."""
     import pytest as _pytest
@@ -1530,14 +1520,14 @@ def test_fastq_datasource_rejects_malformed(spark):
 
     register(spark)
     # quality shorter than sequence (truncated final record)
-    d1 = f"/root/repo/.scratch/fastqbad-{uuid.uuid4().hex[:6]}"
+    d1 = str(tmp_path / "fastqbad1")
     os.makedirs(d1, exist_ok=True)
     with open(os.path.join(d1, "t.fq"), "w") as f:
         f.write("@r1\nACGT\n+\nII\n")
     with _pytest.raises(Exception, match="quality length"):
         spark.read.format("fastq").load(d1).collect()
     # missing '+' separator
-    d2 = f"/root/repo/.scratch/fastqbad-{uuid.uuid4().hex[:6]}"
+    d2 = str(tmp_path / "fastqbad2")
     os.makedirs(d2, exist_ok=True)
     with open(os.path.join(d2, "t.fq"), "w") as f:
         f.write("@r1\nACGT\nIIII\n@r2\n")
@@ -1628,7 +1618,7 @@ def test_quantile_summary_exact_when_m_exceeds_n(spark):
     assert got == {0.1: 1.0, 0.5: 5.0, 1.0: 10.0}
 
 
-def test_fastq_overwrite_replaces_directory_contents(spark):
+def test_fastq_overwrite_replaces_directory_contents(spark, tmp_path):
     """mode('overwrite') must mean read-back == this write, exactly —
     the reader lists EVERY non-temp file in the directory, so the
     overwrite sweep has to remove foreign files too (a pattern-
@@ -1640,7 +1630,7 @@ def test_fastq_overwrite_replaces_directory_contents(spark):
     from sora_spark.sources.fastq_datasource import register
 
     register(spark)
-    out = f"/root/repo/.scratch/fastqow-{uuid.uuid4().hex[:6]}"
+    out = str(tmp_path / "fastqow")
     os.makedirs(out, exist_ok=True)
     with open(os.path.join(out, "legacy.fq"), "w") as f:
         f.write("@old\nAA\n+\nII\n")

@@ -13,11 +13,10 @@ from sora_spark.queries import REGISTRY
 from tests.oracle_utils import compare
 
 if os.environ.get("SORA_UNCALIBRATED_SF_OK") == "1":
-    # the env escape was removed in r11 (the bypass is now scoped
-    # inside bench/scale entrypoints); a leftover export in a
-    # hash-gated run is exactly the leak the r10 ADVICE warned about —
-    # fail the whole module loudly instead of running with a stale
-    # assumption
+    # the env escape was removed (the bypass is now scoped inside
+    # bench/scale entrypoints); a leftover export in a hash-gated run
+    # would certify truncated-unroll oracles — fail the whole module
+    # loudly instead of running with a stale assumption
     raise RuntimeError(
         "SORA_UNCALIBRATED_SF_OK is set: unset it — oracle runs must "
         "never bypass the sf-calibration guard (bench.py/scale_probe.py "

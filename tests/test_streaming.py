@@ -219,12 +219,12 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
     assert len(got_pairs) == want, "duplicate join results emitted"
 
 
-def test_stream_dedup_matches_batch_keys(spark, sf_dir):
+def test_stream_dedup_matches_batch_keys(spark, sf_dir, tmp_path):
     # single sorted file -> arrival order == event-time order
     from sora_spark.sources.parquet import read_table
     import os
 
-    d = replay._SCRATCH + f"/dedup-{uuid.uuid4().hex[:6]}"
+    d = str(tmp_path / "dedup")
     (
         read_table(spark, sf_dir, "events")
         .orderBy("ts", "event_id")
@@ -265,15 +265,16 @@ def test_dedup_within_watermark_matches_unbounded(spark, sf_dir):
     )
 
 
-def test_checkpointed_file_sink_exactly_once_across_restart(spark, sf_dir):
+def test_checkpointed_file_sink_exactly_once_across_restart(
+    spark, sf_dir, tmp_path
+):
     """Stop a checkpointed parquet-sink stream mid-input, deliver more
     files, restart from the SAME checkpoint: the sink must hold every
     input row exactly once (no replays, no loss) — the file-sink
     exactly-once contract that makes streaming ingestion safe at scale."""
     import os
-    import uuid
 
-    base = f"/root/repo/.scratch/eos-{uuid.uuid4().hex[:8]}"
+    base = str(tmp_path / "eos")
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     ev = replay.read_table(spark, sf_dir, "events")
     first, second = (
@@ -404,15 +405,14 @@ def test_stream_stream_left_outer_join(spark, sf_dir):
     )
 
 
-def test_stateful_agg_checkpoint_restart(spark, sf_dir):
+def test_stateful_agg_checkpoint_restart(spark, sf_dir, tmp_path):
     """Windowed-count state survives a stop/restart from the same
     checkpoint: after delivering the second half of the input to the
     restarted query, counts equal the batch aggregate — stateful
     exactly-once across restarts, not just sink idempotence."""
     import os
-    import uuid
 
-    base = f"/root/repo/.scratch/ckptagg-{uuid.uuid4().hex[:8]}"
+    base = str(tmp_path / "ckptagg")
     src, ckpt = f"{base}/src", f"{base}/ckpt"
     os.makedirs(src, exist_ok=True)
     ev = replay.read_table(spark, sf_dir, "events")
@@ -988,10 +988,10 @@ def test_qmv4_admits_one_version_per_batch(spark, sf_dir):
     import os
 
     from sora_spark.queries.registry import REGISTRY
-    from sora_spark.queries.relational import _roundtrip_dir
+    from sora_spark.scratch import scratch_dir
 
     REGISTRY["qmv4_rate_limited_cdf_mv"].spark_fn(spark, sf_dir)
-    ck = os.path.join(_roundtrip_dir("commit_log_ratelimited_mv"), "ck")
+    ck = os.path.join(scratch_dir("commit_log_ratelimited_mv"), "ck")
     offsets_dir = os.path.join(ck, "offsets")
     batch_ids = sorted(
         int(f) for f in os.listdir(offsets_dir) if f.isdigit())
