@@ -20,10 +20,14 @@ bound is part of their contract (`reduce_pipeline`,
 `assembly_pipeline`, `compact_chains`, `bfs_hops`, `pagerank`,
 `label_propagation`) return once that bound is reached.
 
-Scale posture: edges are repartitioned on `s` once up front so the
-iterated self-joins reuse one partitioning; convergence checks are
-single aggregate actions (one job per iteration, the unavoidable
-synchronization barrier of label propagation).
+Scale posture: connected components picks its regime from the edge
+count — a driver union-find up to `DRIVER_CC_EDGE_LIMIT` edges, where
+job count and not data sets the wall time, distributed min-label
+propagation above it. Convergence checks are single aggregate actions
+(one job per iteration, the synchronization barrier of label
+propagation). A checkpointed edge set keeps no hash partitioning under
+AQE, so each round's join shuffles the edges again; repartitioning
+them before the cut buys nothing.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ from __future__ import annotations
 import gc
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -245,6 +251,12 @@ class Graph:
     # iterative callers are already paying for convergence checks.
     BROADCAST_EDGE_LIMIT = 8_000_000
 
+    # Edge sets up to this row count resolve connected components on
+    # the driver (16 B per long edge, ~80 MB at the bound); above it
+    # the edge list stops being a driver-sized object and
+    # `connected_components` runs distributed min-label propagation.
+    DRIVER_CC_EDGE_LIMIT = 5_000_000
+
     def _bc(self, broadcast_edges: bool | None) -> bool:
         if broadcast_edges is None:
             # cache per Graph instance: callers invoking several
@@ -417,30 +429,72 @@ class Graph:
     def connected_components(
         self, max_iter: int = 50, stats: dict | None = None
     ) -> DataFrame:
-        """Min-label propagation to fixpoint → (v, component) with
-        component = min vertex id in the component (order-free, hence
-        deterministic). O(diameter) rounds, and raises FixpointError
+        """(v, component) with component = min vertex id in the
+        component (order-free, hence deterministic): one row per
+        non-null endpoint, plus one (NULL, NULL) row when an edge has a
+        null endpoint. `stats` records {"regime": "driver" |
+        "distributed", "rounds": k}.
+
+        The (s, d) frame is cut lazily, and the edge count that picks
+        the regime materializes the cut. Up to `DRIVER_CC_EDGE_LIMIT`
+        edges: an Arrow collect and a driver union-find, zero rounds.
+        Above it: min-label propagation over both orientations, with
+        labels drawn from the checkpointed sym blocks (every vertex
+        appears as sym.s); O(diameter) rounds, raising FixpointError
         when `max_iter` rounds do not reach the fixpoint — see
         `connected_components_twophase` for the O(log n) contraction
-        variant. `stats` records {"rounds": k}.
-
-        The edge subplan is derived exactly once: `_sym_edges` builds
-        both orientations in one pass, and labels come from the
-        checkpointed sym blocks (every vertex appears as sym.s), so the
-        labels distinct reuses sym's hashpartitioning(s)."""
-        sym = self._sym_edges().repartition("s").transform(self._cp_lazy)
-        labels = (
-            sym.select(F.col("s").alias("v"))
-            .distinct()
-            .select(F.col("v"), F.col("v").alias("component"))
-            .transform(self._cp_lazy)
-        )
-        labels, rounds = self._min_label(
-            sym, labels, max_iter, "connected_components"
-        )
+        variant."""
+        e = self.edges.select("s", "d").transform(self._cp_lazy)
+        if e.count() <= self.DRIVER_CC_EDGE_LIMIT:
+            labels, rounds, regime = self._union_find(e), 0, "driver"
+        else:
+            sym = Graph(e)._sym_edges().transform(self._cp_lazy)
+            labels = (
+                sym.select(F.col("s").alias("v"))
+                .distinct()
+                .select(F.col("v"), F.col("v").alias("component"))
+                .transform(self._cp_lazy)
+            )
+            labels, rounds = self._min_label(
+                sym, labels, max_iter, "connected_components"
+            )
+            regime = "distributed"
         if stats is not None:
-            stats["rounds"] = rounds
+            stats.update(regime=regime, rounds=rounds)
         return labels
+
+    @staticmethod
+    def _union_find(e: DataFrame) -> DataFrame:
+        """`connected_components`' driver regime over the collected
+        (s, d) rows. Ids are coded by rank among the distinct non-null
+        ids, and each link hangs the larger root under the smaller, so
+        every root is its component's min id, for ids of any orderable
+        type. An edge with a null endpoint links nothing. `array(s, d)`
+        widens s and d to one id type, as min-label's sym edges do."""
+        sd = e.select(F.array("s", "d").alias("sd"))
+        ends = pc.list_flatten(sd.toArrow()["sd"])
+        ids = pc.unique(ends).drop_null().sort()
+        code = pc.index_in(ends, value_set=ids).fill_null(-1).to_numpy()
+        parent = list(range(len(ids)))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = x = parent[parent[x]]
+            return x
+
+        for a, b in zip(code[0::2].tolist(), code[1::2].tolist()):
+            if a >= 0 and b >= 0:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+        roots = pa.array(map(find, range(len(ids))), pa.int64())
+        v, comp = ids, ids.take(roots)
+        if ends.null_count:
+            v, comp = (pa.concat_arrays([a, pa.nulls(1, a.type)])
+                       for a in (v, comp))
+        ty = sd.schema["sd"].dataType.elementType.simpleString()
+        return e.sparkSession.createDataFrame(
+            pa.table({"v": v, "component": comp}), f"v {ty}, component {ty}"
+        )
 
     def connected_components_twophase(
         self, max_iter: int = 30, stats: dict | None = None
@@ -1425,12 +1479,7 @@ class Graph:
 
         # one derivation: _sym_edges + labels drawn from the
         # CHECKPOINTED sym blocks (every vertex appears as sym.s)
-        sym = (
-            self._sym_edges()
-            .distinct()
-            .repartition("d")
-            .transform(self._cp)
-        )
+        sym = self._sym_edges().distinct().transform(self._cp)
         labels = (
             sym.select(F.col("s").alias("v"))
             .distinct()

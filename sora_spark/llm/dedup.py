@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sora_spark.functions.text import minhash_salted, tokens, word_shingles
+from sora_spark.graph import Graph
 
 
 def exact_fingerprint(text: Column, normalize: bool = True) -> Column:
@@ -146,10 +147,10 @@ def lsh_candidate_pairs(
     band_keys = (
         _band_keys(df, text_col, id_col, num_perm, bands)
         # lazy cut: without it the WHOLE shingle→minhash→band
-        # derivation runs once per self-join side (no ReusedExchange —
-        # the broadcast join shares nothing; r14 plan finding). The
-        # broadcast-build job materializes the blocks, the probe side
-        # reads them back — one derivation instead of two, no extra job.
+        # derivation runs once per self-join side (the broadcast join
+        # reuses no exchange). The broadcast-build job materializes
+        # the blocks, the probe side reads them back — one derivation
+        # instead of two, no extra job.
         .localCheckpoint(eager=False)
     )
     a, b = band_keys.alias("a"), band_keys.alias("b")
@@ -381,45 +382,19 @@ def near_dup_clusters(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Near-duplicate CLUSTERING: LSH candidate pairs become edges of a
-    similarity graph; connected components give cluster ids; canonical
-    doc = min id per cluster → (doc_id, cluster_id, is_canonical).
+    """Near-duplicate CLUSTERING → (doc_id, cluster_id, is_canonical):
+    docs sharing a MinHash band bucket are connected, cluster_id is the
+    min id of the doc's connected component (`Graph.connected_components`
+    picks the regime), and the canonical doc is that min id. Pairs alone
+    under-merge: a≈b, b≈c collapse to ONE cluster even when a and c
+    never share a bucket. Docs with no near-dup are their own singleton
+    cluster (cluster_id = doc_id).
 
-    This is the composed fuzzy-dedup operator a curation pipeline
-    actually wants (pairs alone under-merge: a≈b, b≈c must collapse to
-    ONE cluster even when a,c never share a bucket). The pair set is
-    CHECKPOINTED before cluster resolution — the component loop runs
-    one action per round, and without the cut each round would re-run
-    the whole shingle→minhash→band derivation (the B12 bench row
-    guards this). Resolution
-    is _resolve_components: a driver-side union-find over the
-    collected pair list up to its 5M-pair bound (zero Spark rounds —
-    the pair graph is radically smaller than the corpus), with
-    distributed min-label propagation above the bound; LSH components
-    are bucket-bounded with tiny diameter BY CONSTRUCTION (every
-    member pair shares a band bucket), so the fallback converges in
-    ~2 rounds where the O(log n) contraction pays its per-round
-    constant for nothing. A fallback propagation that does not converge
-    within `connected_components`' default round budget raises
-    `FixpointError` instead of returning partial cluster ids. Docs with
-    no near-dup are their own singleton cluster (cluster_id = doc_id).
-
-    EDGES ARE STARS, NOT CLIQUES (the hot-bucket skew bound, solved
-    structurally instead of by salting): connected components
-    only need each band bucket CONNECTED, and a bucket of k docs is
-    exactly as connected by its k-1 (min-id -> member) star edges as
-    by the k(k-1)/2 candidate pairs `lsh_candidate_pairs` emits —
-    components, hence cluster ids and canonicals, are provably
-    identical (pinned by test_near_dup_clusters_star_equivalence).
-    The quadratic hot-bucket blowup (one boilerplate bucket of 1M
-    docs = 5*10^11 pairs under the pair join, unsalvageable by any
-    salt) becomes linear: one hash exchange of the band-key rows and
-    at most bands*n_docs edges, which also keeps the driver-side
-    union-find under its 5M bound at corpora where the pair form
-    overflowed it. The corpus-sized broadcast the pair self-join
-    leaned on is gone too (an 8 GB-cap liability at 100 TB).
-    `lsh_candidate_pairs` keeps full pair semantics for its own
-    declared consumers (qd4)."""
+    EDGES ARE STARS, NOT CLIQUES: a bucket of k docs is exactly as
+    connected by its k-1 (min-id -> member) edges as by the k(k-1)/2
+    pairs `lsh_candidate_pairs` emits, so clusters are identical
+    (pinned by test_near_dup_clusters_star_equivalence) while a hot
+    bucket costs linear, not quadratic, edges: at most bands*n_docs."""
     w_b = Window.partitionBy("band", "bkey")
     pairs = (
         _band_keys(df, text_col, id_col, num_perm, bands)
@@ -427,13 +402,8 @@ def near_dup_clusters(
         .filter(F.col("id") != F.col("root"))
         .select(F.col("root").alias("s"), F.col("id").alias("d"))
         .distinct()
-        # lazy cut: _resolve_components' count() is the very next
-        # action — it materializes the checkpoint blocks as it counts,
-        # one job instead of a materialize pass plus a count pass;
-        # every later consumer reads the same blocks
-        .localCheckpoint(eager=False)
     )
-    comp = _resolve_components(pairs)
+    comp = Graph(pairs).connected_components()
     ids = df.select(F.col(id_col).alias("v"))
     labeled = (
         ids.join(comp, "v", "left")
@@ -445,72 +415,6 @@ def near_dup_clusters(
     w = Window.partitionBy("cluster_id").orderBy(id_col)
     return labeled.withColumn(
         "is_canonical", F.row_number().over(w) == 1
-    )
-
-
-# Above this many candidate pairs the edge list stops being a
-# driver-sized object (16 B/pair -> ~80 MB at the bound) and component
-# resolution falls back to the distributed propagation loop.
-_DRIVER_UF_MAX_PAIRS = 5_000_000
-
-
-def _resolve_components(pairs: DataFrame) -> DataFrame:
-    """(v, component=min id) for the LSH candidate-pair graph.
-
-    The pair graph is radically smaller than the corpus (pairs exist
-    only where near-duplicates do), so up to `_DRIVER_UF_MAX_PAIRS`
-    the cheapest CORRECT plan is a driver-side union-find over the
-    collected edge list + a broadcast mapping join back — zero
-    iterative Spark rounds, which on bucket-sized components were
-    pure fixed overhead (the B12 bench finding). Beyond the bound it
-    falls back to the distributed min-label propagation, which is the
-    same answer in O(diameter) rounds. Both paths emit rows only for
-    vertices that appear in a pair; callers coalesce singletons."""
-    n_pairs = pairs.count()  # materializes the caller's lazy checkpoint
-    if n_pairs > _DRIVER_UF_MAX_PAIRS:
-        from sora_spark.graph import Graph
-
-        return Graph(pairs).connected_components()
-    import pandas as pd
-
-    # Arrow transfer + factorized ids: numpy code arrays and a flat
-    # parent list — tens of MB at the 5M bound (a Row-object collect
-    # + python id dict would be GBs there, review finding). The
-    # union-find loop is python-speed over <=5M pairs (~seconds).
-    pdf = pairs.toPandas()
-    codes, uniques = pd.factorize(
-        pd.concat([pdf["s"], pdf["d"]], ignore_index=True), sort=False
-    )
-    # numpy scalars -> python scalars: createDataFrame rejects
-    # numpy.int64 field values
-    uniques = [u.item() if hasattr(u, "item") else u for u in uniques]
-    n = len(uniques)
-    cs, cd = codes[: len(pdf)], codes[len(pdf):]
-    parent = list(range(n))
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    # component label = min ORIGINAL id; a per-root representative
-    # keeps exact semantics for ids of any orderable type
-    best = list(uniques)
-    for a, b in zip(cs, cd):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            parent[rb] = ra
-            if best[rb] < best[ra]:
-                best[ra] = best[rb]
-    mapping = [(uniques[i], best[find(i)]) for i in range(n)]
-    # schema follows the edge column type — ids are not always ints
-    # (the Graph fallback supports string-labelled graphs; so do we)
-    s_type = pairs.schema["s"].dataType.simpleString()
-    return pairs.sparkSession.createDataFrame(
-        mapping, f"v {s_type}, component {s_type}"
     )
 
 

@@ -154,10 +154,12 @@ sizes AS (SELECT component, count(*) AS component_size FROM comp GROUP BY compon
 SELECT component_size, count(*) AS n_components
 FROM sizes GROUP BY component_size ORDER BY component_size
 """,
-    doc="Q-G4: connected components via min-label propagation to "
-    "fixpoint (labels = min vertex id ⇒ order-free); output the "
-    "component-size histogram. Oracle: recursive-CTE reachability "
-    "closure + min per vertex on the bounded subgraph.",
+    doc="Q-G4: connected components, size-gated regime (driver "
+    "union-find up to Graph.DRIVER_CC_EDGE_LIMIT edges, min-label "
+    "propagation to fixpoint above it; labels = min vertex id ⇒ "
+    "order-free); output the component-size histogram. Oracle: "
+    "recursive-CTE reachability closure + min per vertex on the "
+    "bounded subgraph.",
     tags=("graph", "fixpoint"),
 )
 def qg4_connected_components(spark, sf_dir):
@@ -1564,7 +1566,8 @@ def _msf_oracle_sql(rounds: int = 10) -> str:
     doc="qg33: minimum spanning forest of the weighted bounded "
     "co-occurrence graph (Graph.minimum_spanning_forest, Borůvka "
     "rounds — per round every component takes its (w, s, d)-minimal "
-    "outgoing edge, O(log V) rounds, no global sort, no union-find). "
+    "outgoing edge, O(log V) rounds, no global sort; each round merges "
+    "components with Graph.connected_components). "
     "Summary row: forest edge count, total weight, tree count "
     "(vertices - forest edges). Same weights as qg15 (1+(s+d)%3).",
     tags=("graph", "mst", "fixpoint"),

@@ -571,10 +571,10 @@ SELECT doc_id, cluster_id,
 FROM comp ORDER BY doc_id
 """,
     doc="qd5: END-TO-END fuzzy dedup — MinHash banding (4 perms, 2 "
-    "bands) -> candidate-pair similarity graph -> two-phase connected "
-    "components -> canonical per cluster. The transitive a~b~c merge "
-    "that pair lists under-deliver, hash-checked whole: the oracle "
-    "rebuilds the same bands and closes the pair graph with a "
+    "bands) -> star-edge similarity graph -> connected components "
+    "(size-gated regime) -> canonical per cluster. The transitive "
+    "a~b~c merge that pair lists under-deliver, hash-checked whole: "
+    "the oracle rebuilds the same bands and closes the pair graph with a "
     "recursive CTE (bounded: closure is per-component, components "
     "are LSH-bucket-sized).",
     tags=("llm", "dedup", "graph", "pipeline"),
@@ -1506,8 +1506,8 @@ FROM comp ORDER BY p_name
     "graph -> connected components -> min-name canonical) over part "
     "names. 24 fuzzy pairs fold 64 distinct names into 40 entities at "
     "sf0.01, non-degenerate both ways. Same bucket-bounded shape as "
-    "qfz1 + the O(rounds) CC loop on STRING vertex ids; never "
-    "all-pairs.",
+    "qfz1 + size-gated connected components on STRING vertex ids; "
+    "never all-pairs.",
     tags=("pipeline", "fuzzy", "entity"),
 )
 def qer1_entity_resolution(spark, sf_dir):

@@ -5,7 +5,6 @@
 from __future__ import annotations
 
 import os
-import shutil
 from functools import reduce
 
 from pyspark.sql import functions as F
@@ -1116,35 +1115,23 @@ def qsrc5_bucketed_join(spark, sf_dir):
     if not (
         spark.catalog.tableExists(to) and spark.catalog.tableExists(tl)
     ):
-        # the warehouse DIRECTORY outlives the in-memory catalog: a
-        # fresh session sees no table but saveAsTable refuses the
-        # orphaned location (LOCATION_ALREADY_EXISTS) — clear stale
-        # locations for tables this session does not know
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        for t in (to, tl):
-            loc = os.path.join(wh, t)
-            if not spark.catalog.tableExists(t) and os.path.exists(loc):
-                shutil.rmtree(loc, ignore_errors=True)
-        (
-            read_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .write.bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(to)
-        )
-        (
-            read_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_quantity")
-            .write.bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tl)
-        )
+        # external tables in this process's scratch directory, never in
+        # the warehouse directory under the working directory
+        path = scratch_dir("qsrc5")
+        for t, src, key, col in (
+            (to, "orders", "o_orderkey", "o_orderpriority"),
+            (tl, "lineitem", "l_orderkey", "l_quantity"),
+        ):
+            (
+                read_table(spark, sf_dir, src)
+                .select(key, col)
+                .write.bucketBy(8, key)
+                .sortBy(key)
+                .mode("overwrite")
+                .format("parquet")
+                .option("path", os.path.join(path, t))
+                .saveAsTable(t)
+            )
     o, li = spark.table(to), spark.table(tl)
     return (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])

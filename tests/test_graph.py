@@ -356,35 +356,162 @@ _CHAIN = [(i, i + 1, float(i)) for i in range(9)]
         ),
     ],
 )
-def test_fixpoint_raises_on_exhausted_iterations(spark, loop, edges, run):
+def test_fixpoint_raises_on_exhausted_iterations(
+    spark, monkeypatch, loop, edges, run
+):
     """Every loop whose answer is a fixpoint reports exhaustion the same
     way — FixpointError naming the loop and its budget — on a graph
-    needing >= 2 rounds, never silently-wrong partial state."""
+    needing >= 2 rounds, never silently-wrong partial state.
+    connected_components' driver regime (the default bound) runs no
+    rounds and answers; a bound of 0 forces its min-label loop."""
     g = Graph(spark.createDataFrame(edges, "s long, d long, w double"))
+    if loop == "connected_components":
+        assert {r["component"] for r in run(g, spark).collect()} == {0}
+        monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", 0)
     with pytest.raises(
         FixpointError, match=rf"{loop}: no fixpoint within max_iter=\d+"
     ):
         run(g, spark)
 
 
-def test_minlabel_cc_raises_instead_of_partial_labels(spark):
-    """An 80-vertex chain has diameter 79: min-label CC's default 50
-    rounds cannot reach the fixpoint, so it raises instead of returning
-    partial labels; with 100 rounds every label is 0. MSF's contraction
-    CC sizes its own budget: on an 80-vertex path with increasing
-    weights, round 1 chooses all 79 edges (a merge graph of diameter
-    79), and the forest is still the whole path."""
+def test_minlabel_cc_raises_instead_of_partial_labels(spark, monkeypatch):
+    """An 80-vertex chain has diameter 79. Under the default edge bound
+    connected_components answers with the driver union-find; with the
+    bound at 0, min-label CC's default 50 rounds cannot reach the
+    fixpoint, so it raises instead of returning partial labels, and
+    with 100 rounds every label is 0. MSF's contraction CC sizes its
+    own budget: on an 80-vertex path with increasing weights, round 1
+    chooses all 79 edges (a merge graph of diameter 79), and the
+    forest is still the whole path in both regimes."""
     path = [(i, i + 1, float(i)) for i in range(79)]
     g = Graph(spark.createDataFrame(path, "s long, d long, w double"))
+    chain = {v: 0 for v in range(80)}
+    stats = {}
+    labels = {
+        r["v"]: r["component"]
+        for r in g.connected_components(stats=stats).collect()
+    }
+    assert labels == chain and stats == {"regime": "driver", "rounds": 0}
+    msf = sorted(map(tuple, g.minimum_spanning_forest().collect()))
+    assert msf == path
+    monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", 0)
     with pytest.raises(FixpointError, match="connected_components"):
         g.connected_components()
     labels = {
         r["v"]: r["component"]
         for r in g.connected_components(max_iter=100).collect()
     }
-    assert labels == {v: 0 for v in range(80)}
+    assert labels == chain
     msf = sorted(map(tuple, g.minimum_spanning_forest().collect()))
     assert msf == path
+
+
+def _sorted(rows):
+    return sorted(map(tuple, rows), key=lambda r: (r[0] is None, r))
+
+
+def _cc_rows(g, bound, monkeypatch, stats=None):
+    monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", bound)
+    return _sorted(g.connected_components(stats=stats).collect())
+
+
+@pytest.mark.parametrize(
+    "schema, edges, want, id_type",
+    [
+        pytest.param(
+            "s long, d long",
+            [(1, 2), (2, None), (None, 3), (4, 5)],
+            [(1, 1), (2, 1), (3, 3), (4, 4), (5, 4), (None, None)],
+            "bigint",
+            id="null_endpoints_long",
+        ),
+        pytest.param(
+            "s string, d string",
+            [("b", "c"), ("c", None), (None, "e"), ("x", "a")],
+            [("a", "a"), ("b", "b"), ("c", "b"), ("e", "e"), ("x", "a"),
+             (None, None)],
+            "string",
+            id="null_endpoints_string",
+        ),
+        pytest.param(
+            "s string, d string",
+            [("urlB", "urlA"), ("urlC", "urlB"), ("q", "q"), ("m", "n"),
+             ("Z", "a")],
+            [("Z", "Z"), ("a", "Z"), ("m", "m"), ("n", "m"), ("q", "q"),
+             ("urlA", "urlA"), ("urlB", "urlA"), ("urlC", "urlA")],
+            "string",
+            id="string_ids_self_loop_isolated_edges",
+        ),
+        pytest.param(
+            "s int, d int",
+            [(7, 7), (3, 9), (9, 3), (5, 6), (-2, 6)],
+            [(-2, -2), (3, 3), (5, -2), (6, -2), (7, 7), (9, 3)],
+            "int",
+            id="int_ids_self_loop_reverse_duplicate",
+        ),
+        pytest.param(
+            "s int, d long", [(1, 2), (2, 3), (5, 5)],
+            [(1, 1), (2, 1), (3, 1), (5, 5)], "bigint",
+            id="mixed_id_types_widen",
+        ),
+        pytest.param(
+            "s long, d long", [], [], "bigint", id="empty_edge_set"
+        ),
+    ],
+)
+def test_union_find_matches_minlabel(
+    spark, monkeypatch, schema, edges, want, id_type
+):
+    """The driver union-find returns min-label's exact rows and schema:
+    a non-null endpoint of a null-bearing edge is a vertex of its own,
+    one (NULL, NULL) row stands for the null endpoints, ids of any
+    orderable type label by their own minimum, s and d widen to one id
+    type, and no id column turns into floats on the way through the
+    driver."""
+    g = Graph(spark.createDataFrame(edges, schema))
+    for bound in (Graph.DRIVER_CC_EDGE_LIMIT, 0):
+        monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", bound)
+        cc = g.connected_components()
+        assert cc.schema.simpleString() == (
+            f"struct<v:{id_type},component:{id_type}>"
+        ), f"bound {bound}"
+        assert _sorted(cc.collect()) == want, f"bound {bound}"
+    assert _sorted(g.connected_components_twophase().collect()) == want
+
+
+def test_cc_regime_bound(spark, monkeypatch):
+    """The regime gate at its bound: n edges resolve on the driver with
+    the bound at n and by min-label with the bound at n - 1 (n is then
+    bound+1), and `stats` names the regime that fired."""
+    edges = [(1, 2), (2, 3), (4, 5), (6, 6)]
+    g = Graph(spark.createDataFrame(edges, "s long, d long"))
+    at, over = {}, {}
+    a = _cc_rows(g, len(edges), monkeypatch, at)
+    b = _cc_rows(g, len(edges) - 1, monkeypatch, over)
+    assert at == {"regime": "driver", "rounds": 0}
+    assert over["regime"] == "distributed" and over["rounds"] >= 1
+    assert a == b == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "qg4_connected_components",
+        "qer1_entity_resolution",
+        "qg33_minimum_spanning_forest",
+        "qd5_neardup_clusters",
+    ],
+)
+def test_cc_regimes_agree_on_declared_queries(spark, sf_dir, monkeypatch, name):
+    """The declared queries built on connected_components give the same
+    rows whichever regime resolves their components."""
+    from sora_spark.queries import REGISTRY
+
+    fn = REGISTRY[name].spark_fn
+    driver = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", 0)
+    distributed = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert driver == distributed and driver
 
 
 def test_scc_string_ids(spark):
@@ -403,15 +530,13 @@ def test_scc_string_ids(spark):
     }
 
 
-def test_twophase_matches_minlabel(spark, sf_dir):
-    from sora_spark.catalog import tables
-    from sora_spark.graph import Graph
+def test_twophase_matches_minlabel(spark, sf_dir, monkeypatch):
     from sora_spark.graph.derive import e_co_small
 
     g = Graph(e_co_small(tables(spark, sf_dir).lineitem))
-    a = sorted(map(tuple, g.connected_components().collect()))
     b = sorted(map(tuple, g.connected_components_twophase().collect()))
-    assert a == b
+    for bound in (Graph.DRIVER_CC_EDGE_LIMIT, 0):
+        assert _cc_rows(g, bound, monkeypatch) == b, f"bound {bound}"
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):
@@ -779,7 +904,7 @@ def test_bwt_known_value(spark):
     assert original == "banana\x01"
 
 
-def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
+def test_reliable_checkpoint_mode_matches_local(spark, tmp_path, monkeypatch):
     """Graph(reliable_checkpoint_dir=...) swaps every per-round
     localCheckpoint for a reliable checkpoint() against a real
     directory (r10 verdict item 4 — local checkpoint blocks die with
@@ -797,7 +922,9 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
     def run(**kw):
         g = Graph(spark.createDataFrame(edges, "s long, d long"), **kw)
         return {
-            "cc": sorted(map(tuple, g.connected_components().collect())),
+            # both regimes: the default bound and a bound of 0
+            "cc": [_cc_rows(g, b, monkeypatch)
+                   for b in (Graph.DRIVER_CC_EDGE_LIMIT, 0)],
             "cc2": sorted(map(tuple,
                               g.connected_components_twophase().collect())),
             "pr": sorted(

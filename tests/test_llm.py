@@ -1041,18 +1041,19 @@ def test_neardup_clusters_string_ids(spark):
 
 
 def test_neardup_distributed_fallback_equivalence(spark, sf_dir, monkeypatch):
-    """The hybrid's both branches, one answer (VERDICT r08 watch item):
-    forcing `_DRIVER_UF_MAX_PAIRS` to 0 routes every pair set through
-    the distributed min-label-propagation fallback, which must produce
-    the exact (doc_id, cluster_id, is_canonical) set the driver
-    union-find produces on the real corpus. This is the correctness
-    certificate for the >5M-pair regime that no test-scale corpus can
-    reach by size alone."""
+    """Both connected-components regimes, one answer: forcing
+    `Graph.DRIVER_CC_EDGE_LIMIT` to 0 routes every pair set through
+    the distributed min-label propagation, which must produce the exact
+    (doc_id, cluster_id, is_canonical) set the driver union-find
+    produces on the real corpus. This is the correctness certificate
+    for the >5M-pair regime that no test-scale corpus can reach by
+    size alone."""
+    from sora_spark.graph import Graph
     from sora_spark.llm import dedup
 
     docs = tables(spark, sf_dir).documents
     uf = set(map(tuple, dedup.near_dup_clusters(docs).collect()))
-    monkeypatch.setattr(dedup, "_DRIVER_UF_MAX_PAIRS", 0)
+    monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", 0)
     dist = set(map(tuple, dedup.near_dup_clusters(docs).collect()))
     assert uf == dist
     # the corpus actually has near-dup structure: some non-singleton

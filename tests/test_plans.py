@@ -669,6 +669,32 @@ def test_ktruss_rounds_and_edge_monotonicity(spark, sf_dir):
     assert e6 <= e5, "(k+1)-truss must be contained in the k-truss"
 
 
+def test_cc_and_lpa_edge_cuts_never_repartition(spark, monkeypatch):
+    """Under AQE a checkpoint keeps no hash partitioning, so a
+    repartition before a loop's edge cut is a full edge shuffle that
+    buys nothing: no frame cut by connected_components' min-label
+    regime or by label_propagation plans a RepartitionByExpression."""
+    from sora_spark.graph.graph import Graph
+
+    cut_plans = []
+    cut = Graph._cut
+
+    def spy(self, df, eager):
+        cut_plans.append(_plan_df(df, "extended"))
+        return cut(self, df, eager)
+
+    monkeypatch.setattr(Graph, "_cut", spy)
+    monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", 0)
+    edges = [(1, 2), (2, 3), (4, 5)]
+    g = Graph(spark.createDataFrame(edges, "s long, d long"))
+    assert g.connected_components().count() == 5
+    n_cc = len(cut_plans)
+    assert g.label_propagation().count() == 5
+    assert 0 < n_cc < len(cut_plans)
+    for p in cut_plans:
+        assert "RepartitionByExpression" not in p, p
+
+
 def test_global_row_index_no_single_partition_window(spark, sf_dir):
     """qt3's whole point: the contiguous global index must NOT plan a
     single-partition window (the `row_number() OVER (ORDER BY ...)`

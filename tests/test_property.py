@@ -665,7 +665,7 @@ def _py_tips(edges, hub_degree=3):
     }
 
 
-def test_graph_property_family(spark):
+def test_graph_property_family(spark, monkeypatch):
     from sora_spark.graph import Graph
 
     examples = []
@@ -687,13 +687,20 @@ def test_graph_property_family(spark):
         assert got_deg == _py_degrees(edges), f"degrees: {edges}"
 
         want_cc = _py_components(edges)
-        for variant in ("connected_components",
-                        "connected_components_twophase"):
+        # connected_components under both regimes: the default edge
+        # bound (driver union-find) and a bound of 0 (min-label)
+        for variant, bound in (
+            ("connected_components", Graph.DRIVER_CC_EDGE_LIMIT),
+            ("connected_components", 0),
+            ("connected_components_twophase", None),
+        ):
+            if bound is not None:
+                monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", bound)
             got_cc = {
                 r["v"]: r["component"]
                 for r in getattr(g, variant)().collect()
             }
-            assert got_cc == want_cc, f"{variant}: {edges}"
+            assert got_cc == want_cc, f"{variant} (bound {bound}): {edges}"
 
         got_tr = sorted(
             (r["s"], r["d"])

@@ -56,3 +56,25 @@ def test_first_request_sweeps_dead_pids_once(tmp_path, monkeypatch):
     assert scratch.fresh_dir("b") == kept
     assert os.listdir(kept) == []
     assert (tmp_path / f"c-pid{dead}").is_dir()
+
+
+def test_bucketed_tables_stay_in_scratch(tmp_path, sf_dir):
+    """qsrc5's bucketed tables are external tables in its scratch
+    directory: a run from another working directory writes no table
+    into the warehouse directory there (Spark's catalog still creates
+    that directory, empty, as the default database location), and the
+    tables go with the process's scratch directory at exit."""
+    env = dict(os.environ, PYTHONPATH=_CHECKOUT, SPARK_GRAFT_CPUS="2")
+    child = subprocess.Popen(
+        [sys.executable, "-m", "sora_spark", "run", "qsrc5_bucketed_join",
+         "--sf", sf_dir],
+        cwd=tmp_path, env=env, stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL, text=True,
+    )
+    out, _ = child.communicate(timeout=300)
+    assert child.returncode == 0 and "1-URGENT" in out, out
+    warehouse = tmp_path / "spark-warehouse"
+    assert not warehouse.exists() or not os.listdir(warehouse)
+    assert not os.path.exists(
+        os.path.join(scratch.ROOT, f"qsrc5-pid{child.pid}")
+    )
