@@ -35,6 +35,7 @@ from __future__ import annotations
 import gc
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -134,12 +135,13 @@ class Graph:
             .distinct()
         )
 
-    def _sym_edges(self) -> DataFrame:
+    @staticmethod
+    def _sym_edges(edges: DataFrame) -> DataFrame:
         """Both orientations of every edge, (s,d) + (d,s), in ONE pass
         over one derivation of the upstream edge subplan. Rejected: a
         union of two selects (one derivation per branch, see
         OPTIMIZATION_r14.md)."""
-        return self.edges.select(
+        return edges.select(
             F.explode(
                 F.array(
                     F.struct(F.col("s").alias("s"), F.col("d").alias("d")),
@@ -252,9 +254,13 @@ class Graph:
     BROADCAST_EDGE_LIMIT = 8_000_000
 
     # Edge sets up to this row count resolve connected components on
-    # the driver (16 B per long edge, ~80 MB at the bound); above it
-    # the edge list stops being a driver-sized object and
-    # `connected_components` runs distributed min-label propagation.
+    # the driver; above it `connected_components` runs distributed
+    # min-label propagation. Driver memory is what the bound caps, not
+    # time: on a 4-core host (local[4], scripts/cc_bound_probe.py, a
+    # random graph of 5M long edges over 4.3M vertices) the driver
+    # regime takes 11 s warm with a 0.69 GB Python peak RSS (0.14 GB
+    # before the call), min-label 456 s (40 rounds); at 1M edges,
+    # 4.7 s and 0.27 GB against 85 s (34 rounds).
     DRIVER_CC_EDGE_LIMIT = 5_000_000
 
     def _bc(self, broadcast_edges: bool | None) -> bool:
@@ -328,7 +334,7 @@ class Graph:
         action over the tip set and read by both consumers."""
         # (v, nbr) ends are _sym_edges renamed: one derivation of the
         # upstream edge subplan
-        ends = self._sym_edges().select(
+        ends = self._sym_edges(self.edges).select(
             F.col("s").alias("v"), F.col("d").alias("nbr")
         ).filter(F.col("v").isNotNull() & F.col("nbr").isNotNull())
         deg_nbr = ends.groupBy("v").agg(
@@ -438,9 +444,9 @@ class Graph:
         The (s, d) frame is cut lazily, and the edge count that picks
         the regime materializes the cut. Up to `DRIVER_CC_EDGE_LIMIT`
         edges: an Arrow collect and a driver union-find, zero rounds.
-        Above it: min-label propagation over both orientations, with
-        labels drawn from the checkpointed sym blocks (every vertex
-        appears as sym.s); O(diameter) rounds, raising FixpointError
+        Above it: min-label propagation over both orientations of the
+        cut edges, with labels drawn from them (every vertex appears
+        as sym.s); O(diameter) rounds, raising FixpointError
         when `max_iter` rounds do not reach the fixpoint — see
         `connected_components_twophase` for the O(log n) contraction
         variant."""
@@ -448,7 +454,7 @@ class Graph:
         if e.count() <= self.DRIVER_CC_EDGE_LIMIT:
             labels, rounds, regime = self._union_find(e), 0, "driver"
         else:
-            sym = Graph(e)._sym_edges().transform(self._cp_lazy)
+            sym = self._sym_edges(e)
             labels = (
                 sym.select(F.col("s").alias("v"))
                 .distinct()
@@ -466,34 +472,39 @@ class Graph:
     @staticmethod
     def _union_find(e: DataFrame) -> DataFrame:
         """`connected_components`' driver regime over the collected
-        (s, d) rows. Ids are coded by rank among the distinct non-null
-        ids, and each link hangs the larger root under the smaller, so
-        every root is its component's min id, for ids of any orderable
-        type. An edge with a null endpoint links nothing. `array(s, d)`
-        widens s and d to one id type, as min-label's sym edges do."""
+        (s, d) rows. Ids are coded by dense rank among the ends (the
+        null rank, if any, is the last), for ids of any orderable type;
+        an edge with a null endpoint links nothing. Vectorised
+        union-find: each round hooks every root that has an edge to
+        another tree onto the least such neighbouring root, then
+        shortcuts every vertex to its root, so a root is always its
+        tree's least code, i.e. its component's min id, and the tree
+        count of an unfinished component halves within two rounds.
+        `array(s, d)` widens s and d to one id type, as min-label's sym
+        edges do."""
         sd = e.select(F.array("s", "d").alias("sd"))
-        ends = pc.list_flatten(sd.toArrow()["sd"])
-        ids = pc.unique(ends).drop_null().sort()
-        code = pc.index_in(ends, value_set=ids).fill_null(-1).to_numpy()
-        parent = list(range(len(ids)))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = x = parent[parent[x]]
-            return x
-
-        for a, b in zip(code[0::2].tolist(), code[1::2].tolist()):
-            if a >= 0 and b >= 0:
-                ra, rb = find(a), find(b)
-                parent[max(ra, rb)] = min(ra, rb)
-        roots = pa.array(map(find, range(len(ids))), pa.int64())
-        v, comp = ids, ids.take(roots)
-        if ends.null_count:
-            v, comp = (pa.concat_arrays([a, pa.nulls(1, a.type)])
-                       for a in (v, comp))
+        ends = pc.list_flatten(sd.toArrow()["sd"]).combine_chunks()
+        code = pc.rank(ends, null_placement="at_end", tiebreaker="dense")
+        code = code.to_numpy().astype(np.int64) - 1
+        first = np.zeros(code.max(initial=-1) + 1, np.int64)
+        first[code] = np.arange(len(code))
+        ids = ends.take(first)
+        n = len(ids) - (ends.null_count > 0)
+        pairs = code.reshape(-1, 2)
+        s, d = pairs[(pairs < n).all(axis=1)].T
+        root = np.arange(n)
+        while True:
+            rs, rd = root[s], root[d]
+            if (rs == rd).all():
+                break
+            np.minimum.at(root, np.maximum(rs, rd), np.minimum(rs, rd))
+            up = root[root]
+            while (up != root).any():
+                root, up = up, up[up]
+        comp = ids.take(np.append(root, np.arange(n, len(ids))))
         ty = sd.schema["sd"].dataType.elementType.simpleString()
         return e.sparkSession.createDataFrame(
-            pa.table({"v": v, "component": comp}), f"v {ty}, component {ty}"
+            pa.table({"v": ids, "component": comp}), f"v {ty}, component {ty}"
         )
 
     def connected_components_twophase(
@@ -602,7 +613,7 @@ class Graph:
         hop = min #edges from any source (≤ max_hops). Frontier
         iteration: each round is one join + one anti-join, frontier
         checkpointed to cut lineage; rounds = graph diameter."""
-        sym = self._sym_edges().transform(self._cp)
+        sym = self._sym_edges(self.edges).transform(self._cp)
         dist = sources.select(F.col("v"), F.lit(0).alias("hop")).transform(self._cp)
         frontier = dist.select("v")
         for h in range(1, max_hops + 1):
@@ -871,7 +882,7 @@ class Graph:
         shrinking edge set; rounds bounded by peeling depth. Raises
         FixpointError when `max_iter` rounds are still peeling (a
         partial peel is NOT a k-core)."""
-        e = self._sym_edges().distinct().transform(self._cp)
+        e = self._sym_edges(self.edges).distinct().transform(self._cp)
         for _ in range(max_iter):
             deg = e.groupBy("s").agg(F.count("*").alias("_deg"))
             # change-set-first convergence (SCALE.md): peel only when
@@ -1449,6 +1460,10 @@ class Graph:
     def component_size_histogram(
         self, max_iter: int = 50, method: str = "minlabel"
     ) -> DataFrame:
+        """(component_size, n_components). "minlabel" runs
+        `connected_components`, whose regime is size-gated (driver
+        union-find up to `DRIVER_CC_EDGE_LIMIT` edges, min-label
+        above); "twophase" runs `connected_components_twophase`."""
         if method == "twophase":
             comp = self.connected_components_twophase(max_iter=max_iter)
         elif method == "minlabel":
@@ -1479,7 +1494,7 @@ class Graph:
 
         # one derivation: _sym_edges + labels drawn from the
         # CHECKPOINTED sym blocks (every vertex appears as sym.s)
-        sym = self._sym_edges().distinct().transform(self._cp)
+        sym = self._sym_edges(self.edges).distinct().transform(self._cp)
         labels = (
             sym.select(F.col("s").alias("v"))
             .distinct()
@@ -1642,10 +1657,12 @@ class Graph:
         edges join the forest, and touched components contract.
         O(log V) rounds since components at least halve; per round two
         comp-label joins + one min_by aggregation, with the
-        contraction itself a component-GRAPH-sized CC (second-order
-        small). The standard scalable MST: no global edge sort, no
-        union-find, every step a join or aggregation. Raises
-        FixpointError when `max_iter` rounds still choose edges."""
+        contraction itself a component-GRAPH-sized
+        `connected_components` call (second-order small; the driver
+        union-find up to `DRIVER_CC_EDGE_LIMIT` merge edges, min-label
+        above). No global edge sort: every other step is a join or
+        aggregation. Raises FixpointError when `max_iter` rounds still
+        choose edges."""
         e = self.edges.select(
             F.least("s", "d").alias("s"),
             F.greatest("s", "d").alias("d"),

@@ -493,6 +493,35 @@ def test_cc_regime_bound(spark, monkeypatch):
     assert a == b == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)]
 
 
+def test_union_find_shuffled_ids_match_reference(spark):
+    """A path over shuffled ids and a sparse random graph take the
+    driver union-find through several hook-and-shortcut rounds; every
+    vertex still labels by its component's min id."""
+    import random
+
+    rnd = random.Random(7)
+    ids = list(range(3000))
+    rnd.shuffle(ids)
+    edges = list(zip(ids[:1000], ids[1:1001]))
+    edges += [(rnd.randrange(1000, 3000), rnd.randrange(1000, 3000))
+              for _ in range(1500)]
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    stats = {}
+    g = Graph(spark.createDataFrame(edges, "s long, d long"))
+    got = _sorted(g.connected_components(stats=stats).collect())
+    assert stats == {"regime": "driver", "rounds": 0}
+    assert got == sorted((v, find(v)) for v in parent)
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -918,13 +947,14 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path, monkeypatch):
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (2, 6),
              (7, 8), (8, 9), (7, 9), (10, 11)]
     ckpt = str(tmp_path / "reliable_ckpt")
+    default = Graph.DRIVER_CC_EDGE_LIMIT
 
     def run(**kw):
         g = Graph(spark.createDataFrame(edges, "s long, d long"), **kw)
         return {
             # both regimes: the default bound and a bound of 0
-            "cc": [_cc_rows(g, b, monkeypatch)
-                   for b in (Graph.DRIVER_CC_EDGE_LIMIT, 0)],
+            "cc": [(_cc_rows(g, b, monkeypatch, st), st["regime"])
+                   for b, st in ((default, {}), (0, {}))],
             "cc2": sorted(map(tuple,
                               g.connected_components_twophase().collect())),
             "pr": sorted(
@@ -937,6 +967,7 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path, monkeypatch):
     local = run()
     reliable = run(reliable_checkpoint_dir=ckpt)
     assert reliable == local
+    assert [regime for _, regime in local["cc"]] == ["driver", "distributed"]
     written = [
         os.path.join(dp, f)
         for dp, _, fs in os.walk(ckpt) for f in fs
@@ -990,7 +1021,7 @@ def test_one_pass_end_forms_match_union_references(spark):
             key=key,
         )
         got = sorted(
-            ((r["s"], r["d"]) for r in g._sym_edges().collect()), key=key
+            ((r["s"], r["d"]) for r in g._sym_edges(g.edges).collect()), key=key
         )
         assert got == sym_ref
 

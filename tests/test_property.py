@@ -679,6 +679,7 @@ def test_graph_property_family(spark, monkeypatch):
 
     _collect()
 
+    default = Graph.DRIVER_CC_EDGE_LIMIT
     for edges in examples:
         df = spark.createDataFrame(edges, "s BIGINT, d BIGINT")
         g = Graph(df)
@@ -689,18 +690,20 @@ def test_graph_property_family(spark, monkeypatch):
         want_cc = _py_components(edges)
         # connected_components under both regimes: the default edge
         # bound (driver union-find) and a bound of 0 (min-label)
-        for variant, bound in (
-            ("connected_components", Graph.DRIVER_CC_EDGE_LIMIT),
-            ("connected_components", 0),
-            ("connected_components_twophase", None),
-        ):
-            if bound is not None:
-                monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", bound)
+        for bound, regime in ((default, "driver"), (0, "distributed")):
+            monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", bound)
+            stats = {}
             got_cc = {
                 r["v"]: r["component"]
-                for r in getattr(g, variant)().collect()
+                for r in g.connected_components(stats=stats).collect()
             }
-            assert got_cc == want_cc, f"{variant} (bound {bound}): {edges}"
+            assert (got_cc, stats["regime"]) == (want_cc, regime), \
+                f"connected_components (bound {bound}): {edges}"
+        got_cc = {
+            r["v"]: r["component"]
+            for r in g.connected_components_twophase().collect()
+        }
+        assert got_cc == want_cc, f"connected_components_twophase: {edges}"
 
         got_tr = sorted(
             (r["s"], r["d"])
