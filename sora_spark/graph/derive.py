@@ -37,7 +37,7 @@ def e_co(lineitem: DataFrame) -> DataFrame:
     oracle keeps the join formulation).
 
     Expansion is explode-FIRST over 1-based index sequences with
-    scalar element_at lookups (r14, the de_bruijn_edges finding):
+    scalar element_at lookups (measurements: OPTIMIZATION_r14.md):
     the old nested transform/slice lambdas evaluated on the
     interpreted expression path outside whole-stage codegen AND
     allocated the full nested pair-struct array per order before

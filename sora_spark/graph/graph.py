@@ -20,12 +20,15 @@ bound is part of their contract (`reduce_pipeline`,
 `assembly_pipeline`, `compact_chains`, `bfs_hops`, `pagerank`,
 `label_propagation`) return once that bound is reached.
 
-Scale posture: connected components picks its regime from the edge
-count — a driver union-find up to `DRIVER_CC_EDGE_LIMIT` edges, where
-job count and not data sets the wall time, distributed min-label
-propagation above it. Convergence checks are single aggregate actions
-(one job per iteration, the synchronization barrier of label
-propagation). A checkpointed edge set keeps no hash partitioning under
+Scale posture: both size gates read one edge count per `Graph`,
+counted at most once (`_n_edges`) and seeded by every loop that
+already holds it. Under `BROADCAST_EDGE_LIMIT` edges the reduction
+joins broadcast their small side, above it they shuffle. Connected
+components runs a driver union-find up to `DRIVER_CC_EDGE_LIMIT`
+edges, where job count and not data sets the wall time, distributed
+min-label propagation above it. Convergence checks are single
+aggregate actions (one job per iteration, the synchronization barrier
+of label propagation). A checkpointed edge set keeps no hash partitioning under
 AQE, so each round's join shuffles the edges again; repartitioning
 them before the cut buys nothing.
 """
@@ -33,7 +36,7 @@ them before the cut buys nothing.
 from __future__ import annotations
 
 import gc
-from dataclasses import dataclass
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 import pyarrow as pa
@@ -91,6 +94,23 @@ class Graph:
     edges: DataFrame  # columns: s, d (+ attrs)
     vertices: DataFrame | None = None
     reliable_checkpoint_dir: str | None = None
+    _edge_count: int | None = field(default=None, init=False, repr=False)
+
+    def _n_edges(self, rows: DataFrame | None = None) -> int:
+        """The edge count both size gates read, counted at most once per
+        Graph: over `rows` when given (a cut of the same edges, which the
+        count then materializes), else over `edges`."""
+        if self._edge_count is None:
+            self._edge_count = (self.edges if rows is None else rows).count()
+        return self._edge_count
+
+    def _sub(self, edges: DataFrame, n: int | None = None) -> Graph:
+        """A Graph over `edges` (no vertex frame) in this one's checkpoint
+        mode, seeded with their count `n` when the caller already holds
+        it."""
+        g = replace(self, edges=edges, vertices=None)
+        g._edge_count = n
+        return g
 
     def _cut(self, df: DataFrame, eager: bool) -> DataFrame:
         if self.reliable_checkpoint_dir is None:
@@ -249,8 +269,8 @@ class Graph:
     # Edge sets under this row count get broadcast hints in the
     # reduction joins (~128 MB of (long, long) pairs — comfortably
     # inside executor memory); above it the same plan falls back to
-    # shuffled joins. The size test is a driver-side count the
-    # iterative callers are already paying for convergence checks.
+    # shuffled joins. The size test reads `_n_edges`, which the
+    # iterative callers seed with their convergence counts.
     BROADCAST_EDGE_LIMIT = 8_000_000
 
     # Edge sets up to this row count resolve connected components on
@@ -263,18 +283,10 @@ class Graph:
     # 4.7 s and 0.27 GB against 85 s (34 rounds).
     DRIVER_CC_EDGE_LIMIT = 5_000_000
 
-    def _bc(self, broadcast_edges: bool | None) -> bool:
-        if broadcast_edges is None:
-            # cache per Graph instance: callers invoking several
-            # reduction ops on one (possibly un-checkpointed) edge
-            # plan must not pay a full re-materializing count() each
-            # time (review finding, round 2)
-            n = getattr(self, "_n_edges", None)
-            if n is None:
-                n = self.edges.count()
-                object.__setattr__(self, "_n_edges", n)
-            return n < self.BROADCAST_EDGE_LIMIT
-        return broadcast_edges
+    def _bc(self) -> bool:
+        """The broadcast gate: the edge set is under
+        `BROADCAST_EDGE_LIMIT` rows."""
+        return self._n_edges() < self.BROADCAST_EDGE_LIMIT
 
     def _two_paths(self) -> DataFrame:
         e1, e2 = self.edges.alias("e1"), self.edges.alias("e2")
@@ -283,7 +295,7 @@ class Graph:
             .select(F.col("e1.s").alias("s"), F.col("e2.d").alias("d"))
         )
 
-    def transitive_edges(self, broadcast_edges: bool | None = None) -> DataFrame:
+    def transitive_edges(self) -> DataFrame:
         """Edges (a, c) for which a 2-path a→b→c also exists — the
         removal set of one transitive-reduction round.
 
@@ -294,22 +306,19 @@ class Graph:
         measured 3-6× faster at sf0.1 than the shuffle-the-paths plan.
         """
         e = self.edges
-        tgt = F.broadcast(e) if self._bc(broadcast_edges) else e
+        tgt = F.broadcast(e) if self._bc() else e
         return (
             self._two_paths().join(tgt, ["s", "d"], "left_semi").distinct()
         )
 
-    def transitive_reduction_round(
-        self, broadcast_edges: bool | None = None
-    ) -> DataFrame:
+    def transitive_reduction_round(self) -> DataFrame:
         """Surviving edges after removing one round of transitive edges.
         Two-step shape: removal = 2-paths ∩ edges (bounded by |E|),
         then a cheap anti-join of edges against the removal set — the
         huge 2-path stream is never the shuffle payload (see
         `transitive_edges`)."""
-        bc = self._bc(broadcast_edges)
-        removal = self.transitive_edges(broadcast_edges=bc)
-        rem = F.broadcast(removal) if bc else removal
+        removal = self.transitive_edges()
+        rem = F.broadcast(removal) if self._bc() else removal
         return self.edges.join(rem, ["s", "d"], "left_anti")
 
     def tips(self, hub_degree: int = 3) -> DataFrame:
@@ -441,17 +450,18 @@ class Graph:
         null endpoint. `stats` records {"regime": "driver" |
         "distributed", "rounds": k}.
 
-        The (s, d) frame is cut lazily, and the edge count that picks
-        the regime materializes the cut. Up to `DRIVER_CC_EDGE_LIMIT`
-        edges: an Arrow collect and a driver union-find, zero rounds.
-        Above it: min-label propagation over both orientations of the
-        cut edges, with labels drawn from them (every vertex appears
-        as sym.s); O(diameter) rounds, raising FixpointError
-        when `max_iter` rounds do not reach the fixpoint — see
-        `connected_components_twophase` for the O(log n) contraction
-        variant."""
+        The (s, d) frame is cut lazily; the edge count that picks the
+        regime materializes the cut, or, when the Graph already holds
+        its count, the regime's first action does. Up to
+        `DRIVER_CC_EDGE_LIMIT` edges: an Arrow collect and a driver
+        union-find, zero rounds. Above it: min-label propagation over
+        both orientations of the cut edges, with labels drawn from them
+        (every vertex appears as sym.s); O(diameter) rounds, raising
+        FixpointError when `max_iter` rounds do not reach the fixpoint
+        — see `connected_components_twophase` for the O(log n)
+        contraction variant."""
         e = self.edges.select("s", "d").transform(self._cp_lazy)
-        if e.count() <= self.DRIVER_CC_EDGE_LIMIT:
+        if self._n_edges(e) <= self.DRIVER_CC_EDGE_LIMIT:
             labels, rounds, regime = self._union_find(e), 0, "driver"
         else:
             sym = self._sym_edges(e)
@@ -643,7 +653,9 @@ class Graph:
         Returns the surviving edge set. Each round = two bounded join
         passes + a checkpoint; the convergence count() is the
         per-round barrier (SURVEY §3.4). `stats` (if given) records
-        {"rounds": k, "edge_counts": [n0, n1, ...]}.
+        {"rounds": k, "edge_counts": [n0, n1, ...], "broadcast": [b1,
+        ...]}, one broadcast-gate side per round, read from the
+        round's input edge count.
 
         The 2-path transitive-removal join — the loop's dominant cost —
         runs ONLY in round 1: removal can destroy 2-paths but never
@@ -658,18 +670,16 @@ class Graph:
         unrolled reduction rounds (qg11). Measurements: see
         OPTIMIZATION_r14.md."""
         edges = self.edges.transform(self._cp_lazy)
-        prev = edges.count()
+        prev = self._n_edges(edges)
         # rejected: flooring the edge blocks at the core count — every
         # extra task re-deserializes the edge-sized broadcast, so task
         # CPU doubled (see OPTIMIZATION_r15.md)
         counts = [prev]
+        sides = []
         rounds = 0
         for it in range(max_iter):
-            g = Graph(edges, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
-            # seed the broadcast gate with the count the loop already
-            # paid for — a fresh Graph would otherwise re-count the
-            # checkpointed edge set (one redundant job per round)
-            object.__setattr__(g, "_n_edges", prev)
+            g = self._sub(edges, prev)
+            sides.append(g._bc())
             if it == 0:
                 # checkpoint the reduced edges BEFORE the tip trim: the
                 # trim plan references this subplan several times (edge
@@ -690,8 +700,7 @@ class Graph:
             # confirm round is needed; `rounds`/`edge_counts` stop at
             # the detection round.
             tips = (
-                Graph(reduced,
-                      reliable_checkpoint_dir=self.reliable_checkpoint_dir)
+                self._sub(reduced)
                 .tips(hub_degree=hub_degree)
                 .transform(self._cp_lazy)
             )
@@ -701,7 +710,7 @@ class Graph:
                 counts.append(edges.count() if it == 0 else prev)
                 break
             edges = self._trim_with_tips(
-                reduced, tips, g._bc(None)
+                reduced, tips, sides[-1]
             ).transform(self._cp_lazy)
             n = edges.count()
             # nudge the driver GC so py4j refs to the PREVIOUS round's
@@ -714,8 +723,7 @@ class Graph:
                 break
             prev = n
         if stats is not None:
-            stats["rounds"] = rounds
-            stats["edge_counts"] = counts
+            stats.update(rounds=rounds, edge_counts=counts, broadcast=sides)
         return edges
 
     @staticmethod
@@ -732,9 +740,7 @@ class Graph:
             .select("s", "d")
         )
 
-    def pop_bubbles_round(
-        self, min_mids: int = 2, broadcast_edges: bool | None = None
-    ) -> DataFrame:
+    def pop_bubbles_round(self, min_mids: int = 2) -> DataFrame:
         """One bubble-pop round: for every bubble pair (u, w) joined by
         >= min_mids distinct internal vertices x via 2-paths u→x→w,
         keep the path through the MINIMUM mid (order-free, hence
@@ -748,9 +754,8 @@ class Graph:
         the doomed-mid set (see `_bubble_removals`), the removal set
         is bounded by bubble-pair count << |E| and is broadcast into
         the final anti-join, so the edge set itself never shuffles."""
-        bc = self._bc(broadcast_edges)
         removal = self._bubble_removals(min_mids)
-        rem = F.broadcast(removal) if bc else removal
+        rem = F.broadcast(removal) if self._bc() else removal
         return self.edges.join(rem, ["s", "d"], "left_anti")
 
     def _bubble_removals(self, min_mids: int) -> DataFrame:
@@ -815,19 +820,19 @@ class Graph:
         oracle with unroll >= rounds-to-fixpoint is exactly the
         fixpoint (qg11b argument, extended). Each bubble round is
         checkpointed and ends in the count() convergence barrier;
-        `stats` records reduce/bubble round counts and edge counts."""
+        `stats` records reduce/bubble round counts, edge counts and the
+        broadcast-gate side of every round (reduce rounds first)."""
         rstats: dict = {}
         edges = self.reduce_pipeline(
             max_iter=max_iter, hub_degree=hub_degree, stats=rstats
         )
         prev = rstats["edge_counts"][-1]
         counts = list(rstats["edge_counts"])
+        sides = list(rstats["broadcast"])
         bubble_rounds = 0
         for _ in range(max_iter):
-            g = Graph(edges, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
-            # seed the broadcast gate (see reduce_pipeline) — `prev`
-            # is exactly this round's edge count
-            object.__setattr__(g, "_n_edges", prev)
+            g = self._sub(edges, prev)
+            sides.append(g._bc())
             # removal-first convergence (same trick as the tips-first
             # reduce loop): the removal set is bubble-bounded — when
             # empty, skip the anti-join + full-edge checkpoint AND the
@@ -838,7 +843,7 @@ class Graph:
                 counts.append(prev)
                 break
             edges = edges.join(
-                F.broadcast(removal) if g._bc(None) else removal,
+                F.broadcast(removal) if sides[-1] else removal,
                 ["s", "d"],
                 "left_anti",
             ).transform(self._cp_lazy)
@@ -852,6 +857,7 @@ class Graph:
             stats["reduce_rounds"] = rstats["rounds"]
             stats["bubble_rounds"] = bubble_rounds
             stats["edge_counts"] = counts
+            stats["broadcast"] = sides
         return edges
 
     def chain_edges(self) -> DataFrame:
@@ -1525,11 +1531,11 @@ class Graph:
             )
         return labels
 
+    # peels between checkpoints of topological_levels' two big frames
+    _PEEL_BLOCK = 4
+
     def topological_levels(
-        self,
-        max_iter: int = 200,
-        stats: dict | None = None,
-        block: int = 4,
+        self, max_iter: int = 200, stats: dict | None = None
     ) -> DataFrame:
         """Kahn-peel topological levels over a DIRECTED ACYCLIC edge
         set → (v, level), level = LONGEST path from any source (a
@@ -1543,15 +1549,14 @@ class Graph:
         Per peel, the zero-in-degree frame is consumed three times
         (emit, edge anti-join, vertex anti-join) so it IS checkpointed
         every peel; the two big frames (remaining edges / unemitted
-        vertices) are only checkpointed every `block` peels — their
-        within-block lineage is a short anti-join chain over already-
-        materialized zero frames, so nothing recomputes. This split
-        beats both the checkpoint-everything form (driver-job bound)
-        and the fully-lazy form (which recomputed each peel's
-        anti-join three times). Peels past
-        exhaustion inside a block emit empty frames — harmless, and
-        the block boundary re-checks convergence/cycle exactly as
-        before."""
+        vertices) are only checkpointed every `_PEEL_BLOCK` peels —
+        their within-block lineage is a short anti-join chain over
+        already-materialized zero frames, so nothing recomputes. This
+        split beats both the checkpoint-everything form (driver-job
+        bound) and the fully-lazy form (which recomputed each peel's
+        anti-join three times). Peels past exhaustion inside a block
+        emit empty frames — harmless, and the block boundary re-checks
+        convergence/cycle exactly as before."""
         remaining = self.edges.select("s", "d").transform(self._cp)
         # verts from the CHECKPOINTED blocks (remaining is the
         # unfiltered edge set, so its endpoints ARE the vertex set) —
@@ -1565,7 +1570,7 @@ class Graph:
         level = 0
         while level < max_iter:
             block_out: DataFrame | None = None
-            for _ in range(min(block, max_iter - level)):
+            for _ in range(min(self._PEEL_BLOCK, max_iter - level)):
                 targets = remaining.select(F.col("d").alias("v")).distinct()
                 zero = verts.join(targets, "v", "left_anti").transform(self._cp)
                 lv = zero.select("v", F.lit(level).alias("level"))
@@ -1617,7 +1622,6 @@ class Graph:
         # otherwise each re-derive the full upstream edge subplan;
         # with the cut everything reads one materialized edge set
         e = self.edges.transform(self._cp_lazy)
-        g = Graph(e, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
         per_v = (
             self._triangles(e).select(
                 F.explode(F.array("a", "b", "c")).alias("v")
@@ -1626,7 +1630,7 @@ class Graph:
             .agg(F.count("*").alias("t"))
         )
         return (
-            g.degrees()
+            self._sub(e).degrees()
             .join(per_v, "v", "left")
             .select(
                 "v",
@@ -1713,12 +1717,11 @@ class Graph:
             # contract: CC over the (cs, cd) merge graph — component-
             # count sized, shrinks >= 2x per round. Its n_chosen edges
             # bound its diameter, so n_chosen + 1 min-label rounds
-            # (the last one confirming) always reach the fixpoint
-            merge = Graph(
-                chosen.select(
-                    F.col("cs").alias("s"), F.col("cd").alias("d")
-                ),
-                reliable_checkpoint_dir=self.reliable_checkpoint_dir,
+            # (the last one confirming) always reach the fixpoint.
+            # Seeded with n_chosen, its regime gate counts nothing.
+            merge = self._sub(
+                chosen.select(F.col("cs").alias("s"), F.col("cd").alias("d")),
+                n_chosen,
             ).connected_components(max_iter=n_chosen + 1)
             comp = (
                 comp.join(

@@ -243,8 +243,8 @@ def kmer_spectrum(df, text_col: str = "text", k: int = 8):
     shorter than k contribute nothing (explicit filter — Spark's
     `sequence(1, 0)` would DESCEND, not return empty).
     """
-    # explode-first + scalar substring (r14): same k-mer multiset as
-    # the old transform(...) lambda form, but fully codegen — see
+    # explode-first + scalar substring: same k-mer multiset as the
+    # old transform(...) lambda form, but fully codegen — see
     # de_bruijn_edges for the HOF-interpretation rationale.
     kmers = (
         df.filter(F.length(text_col) >= k)
@@ -401,10 +401,10 @@ def de_bruijn_edges(documents: DataFrame, k: int = DEBRUIJN_K) -> DataFrame:
     and s/d are derived map-side AFTER the dedup. Same distinct edge
     set, ~45% less shuffle payload and half the substr work in the
     expansion (measured 4.4 s -> 2.9 s warm at sf0.1, round-9)."""
-    # explode-FIRST with a scalar substr (r14): the old
-    # transform(sequence, i -> substr) lambda built a per-doc window
-    # ARRAY through the interpreted higher-order-function path (HOF
-    # lambdas don't enter whole-stage codegen — the B12 finding);
+    # explode-FIRST with a scalar substr (OPTIMIZATION_r14.md, q13):
+    # the old transform(sequence, i -> substr) lambda built a per-doc
+    # window ARRAY through the interpreted higher-order-function path
+    # (HOF lambdas don't enter whole-stage codegen);
     # exploding the index sequence and slicing with a plain substr
     # keeps the whole expansion in codegen and allocates no arrays.
     # Same window strings, same multiplicity, same distinct set.

@@ -200,9 +200,9 @@ def _adjacent_pairs(df: DataFrame) -> DataFrame:
 def train_deep(
     words: DataFrame, n_merges: int, max_vocab: int | None = 4_000_000
 ) -> list[tuple[str, str, int]]:
-    """Learn `n_merges` BPE merges at PRODUCTION depth (r13 verdict
-    item 5 — `train` at depth 4-16 certifies the dataflow, but a real
-    tokenizer needs thousands of merges). Identical semantics to
+    """Learn `n_merges` BPE merges at PRODUCTION depth (`train` at
+    depth 4-16 certifies the dataflow, but a real tokenizer needs
+    thousands of merges). Identical semantics to
     `train` — weighted pair counts over the word-frequency table,
     argmax with (a, b)-lexicographic ties, greedy leftmost-first
     apply — but the merge LOOP runs driver-side over the collected
@@ -215,8 +215,8 @@ def train_deep(
     shaped at 100 TB — the CORPUS pass (word_counts) is the one
     distributed shuffle, and the vocabulary it produces is
     driver-sized by Heaps' law (a few million types for a trillion
-    tokens). Heaps' law is an expectation, not a guard (r14 verdict
-    item 4), so the collect is HARD-BOUNDED by `max_vocab`: when the
+    tokens). Heaps' law is an expectation, not a guard, so the
+    collect is HARD-BOUNDED by `max_vocab`: when the
     vocabulary exceeds it, only the `max_vocab` most frequent types
     (ties broken by word, so the cut is deterministic) are collected
     — a distributed top-N, never an unbounded pull. The default
@@ -295,7 +295,8 @@ def train(
     on (a, b) lexicographically — stated rule, portable."""
     # lazy lineage cuts: each round's argmax collect (the very next
     # action) materializes the previous cut's blocks — one job per
-    # merge round instead of two (r14). Data identical either way.
+    # merge round instead of two (OPTIMIZATION_r14.md, q14). Data
+    # identical either way.
     df = words.select(
         "word", "n", chars("word").alias("sym")
     ).localCheckpoint(eager=False)

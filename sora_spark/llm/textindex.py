@@ -114,7 +114,7 @@ def rebuild_sidecars(spark, path: str, n_buckets: int) -> None:
     `_terms` is VOCABULARY-sized (10⁸–10⁹ rows at 100 TB), so it is
     written partitioned by the SAME `_tb` term-hash as the postings —
     a multi-task write (one task per bucket, never a coalesce(1)
-    straggler; r11 verdict item 2) that also lets queries prune the
+    straggler) that also lets queries prune the
     sidecar read to their terms' buckets. `_consts` stays the single
     row it is by construction."""
     p = spark.read.parquet(path)
@@ -194,8 +194,7 @@ def delete_from_text_index(
     id_col: str = "doc_id",
 ) -> int:
     """Remove documents from the postings index WITHOUT a rebuild —
-    the GDPR-removal path the r11 verdict named (item 4), and the
-    qix9 ingest merge run in reverse:
+    the GDPR-removal path, and the qix9 ingest merge run in reverse:
 
     1. ONE column-pruned pass over the postings finds the deleted
        docs' rows: their term-hash buckets (the only partitions that

@@ -618,7 +618,7 @@ def chargram_language_id(
     confusion matrix makes the floor visible instead of hiding it.
     """
     # explode the index sequence FIRST, then slice with a scalar
-    # substr (r15, the de_bruijn/e_co recipe — guide §4.1): the
+    # substr (the de_bruijn/e_co recipe, OPTIMIZATION_r15.md): the
     # transform() lambda form evaluates interpreted outside
     # whole-stage codegen and allocates an n-gram array per document
     # before exploding it; same gram multiset, zero intermediate
@@ -751,8 +751,8 @@ def encoding_repair(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("had_crlf", t.contains("\r\n"))
         # the NFC step repairs EVERY decomposed combining mark, so the
         # audit flag covers the full Combining Diacritical Marks block
-        # (U+0300-U+036F), not just U+0301 (r10 ADVICE; same class of
-        # gap as the mojibake-flag fix)
+        # (U+0300-U+036F), not just U+0301 (same class of gap as the
+        # mojibake flag)
         .withColumn("had_combining", t.rlike("[\u0300-\u036f]"))
         .withColumn(
             "had_mojibake",
@@ -784,8 +784,8 @@ def source_divergence(
     distribution, over the global TOP-K vocabulary plus one explicit
     "OTHER" residual bucket per distribution (qta24).
 
-    Why the cap: the r10 shape broadcast the FULL vocabulary into the
-    JS grid; under Heaps' law the distinct-token table of a 100 TB
+    Why the cap: broadcasting the FULL vocabulary into the JS grid
+    does not scale; under Heaps' law the distinct-token table of a 100 TB
     crawl is billions of rows — a driver OOM. A truncated+remainder
     distribution is still a distribution, so JS over it is still a
     valid drift monitor (tail drift shows as OTHER-mass drift), and
@@ -904,7 +904,7 @@ def crossdoc_span_scrub(
     total order (struct-min ordering differs in corner cases). A
     string id would make that arithmetic NULL, every gram's _first
     NULL, and the scrub a silent no-op — so non-integral ids refuse
-    loudly here instead (r11 advisory). Map string ids to a dense
+    loudly here instead. Map string ids to a dense
     bigint (zipWithIndex / xxhash64) before calling."""
     from pyspark.sql import types as T
 

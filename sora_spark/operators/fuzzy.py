@@ -35,7 +35,7 @@ def _with_grams(df: DataFrame, col_name: str, q: int, max_distance: int):
     """`df` with one row per block key in `_g`: the string's q-grams
     plus (below the short cutoff) the dedicated short-string key.
 
-    Explode-first (r15, the de_bruijn recipe — guide §4.1): the old
+    Explode-first (the de_bruijn recipe, OPTIMIZATION_r15.md): the old
     form built the gram ARRAY via a transform() lambda (interpreted,
     one array allocation per row) and exploded it; here the index
     stream explodes first and a scalar substring slices each gram

@@ -174,7 +174,6 @@ def hll_registers(df: DataFrame, col: str, m: int = 64) -> DataFrame:
         # not divide 256 biases low buckets (extra 1/256 occupancy
         # each), and the alpha constants are defined for m >= 16 —
         # so only power-of-two register counts in 16..256 are valid
-        # (r11 review finding)
         raise ValueError(
             f"m must be one of 16/32/64/128/256 (got {m}): bucket "
             "bits come from the first hash byte and the bias "
@@ -427,8 +426,8 @@ def kmv_estimate(sketch: DataFrame, k: int = 64) -> DataFrame:
     v = F.conv(F.substring("kth_hash", 1, 12), 16, 10).cast("double")
     est = F.when(
         # a driver-side count() here would re-execute the whole
-        # upstream distinct+top-k pipeline a second time (r12 review
-        # finding); the branch rides the same single aggregation
+        # upstream distinct+top-k pipeline a second time; the branch
+        # rides the same single aggregation
         F.col("_n") < k,
         F.round(F.col("_n").cast("double"), 4),
     ).otherwise(

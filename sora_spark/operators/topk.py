@@ -183,8 +183,8 @@ def choose_topk_strategy(
     boundary, not a correctness boundary — both paths are exact (qw15
     certifies the salted form against the plain-window oracle), so a
     sampling error costs only performance. Default 5M: a single-task
-    sort of a few million rows is fine (the r10 organic probe's 27k-row
-    hot task was free); past that one reducer owns the whole hot group
+    sort of a few million rows is fine (a measured 27k-row hot task
+    was free); past that one reducer owns the whole hot group
     no matter the cluster size, which is exactly what the salted form
     bounds at k*n_salts rows per task."""
     return (
@@ -208,19 +208,19 @@ def topk_per_group_adaptive(
 ) -> DataFrame:
     """THE per-group top-k entry point: route skewed inputs to the
     salted two-phase form automatically, the same spirit as AQE's
-    skew-join split (which does not cover windows — r10 organic-skew
-    finding). A cheap sampled pre-count estimates the hottest group;
-    past `skew_threshold` rows the salted form runs (every task sorts
-    <= k*n_salts rows regardless of group size), otherwise the plain
-    single-window form (no extra exchange). Identical results either
-    way — qw15's oracle proves the salted/plain equivalence, and both
-    share the (order_col, *tiebreak_cols) total-order precondition.
+    skew-join split (which does not cover windows). A cheap sampled
+    pre-count estimates the hottest group; past `skew_threshold` rows
+    the salted form runs (every task sorts <= k*n_salts rows
+    regardless of group size), otherwise the plain single-window form
+    (no extra exchange). Identical results either way — qw15's oracle
+    proves the salted/plain equivalence, and both share the
+    (order_col, *tiebreak_cols) total-order precondition.
 
-    The r10 verdict's q4 nit closes here: callers no longer need to
-    know their key distribution; the operator measures it."""
+    Callers need not know their key distribution; the operator
+    measures it."""
     # validate BEFORE the sampled pre-count — invalid arguments must
     # not cost a cluster job, and both dispatch targets share these
-    # preconditions (r11 review finding)
+    # preconditions
     clash = {"_salt", "_prn", "rn"} & set(df.columns)
     if clash:
         raise ValueError(

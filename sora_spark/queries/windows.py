@@ -859,7 +859,7 @@ ORDER BY priority, rn
     "big the cluster is and one hot group is one straggler; the "
     "salted form bounds every task's sort at k*n_salts rows. AQE "
     "splits skewed JOIN partitions but not skewed WINDOW partitions "
-    "(r10 organic-skew finding) — this operator is the remedy, and "
+    "— this operator is the remedy, and "
     "the oracle proves exactness (each global top-k row is top-k "
     "within its own salt bucket; both phases share one total order).",
     tags=("window", "topk", "skew"),

@@ -27,6 +27,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from sora_spark import scratch
+
 # Confs that can be set on a live session. Applied both at build time
 # and defensively by the sources layer (the driver owns its session).
 RUNTIME_CONF: dict[str, str] = {
@@ -56,10 +58,9 @@ BUILD_CONF: dict[str, str] = {
     # reference-tracked deletion of RELIABLE checkpoint files (the
     # Graph(reliable_checkpoint_dir=...) mode): without it Spark keeps
     # every per-round checkpoint forever and a 40-round fixpoint
-    # retains ~rounds x dataset bytes in the checkpoint dir (r11
-    # review finding). Read at ContextCleaner construction — must be
-    # a build-time conf; sessions built elsewhere need it too
-    # (documented on Graph).
+    # retains ~rounds x dataset bytes in the checkpoint dir. Read at
+    # ContextCleaner construction — must be a build-time conf;
+    # sessions built elsewhere need it too (documented on Graph).
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
 
@@ -100,12 +101,16 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build a tuned local session. `master` defaults to local[*]."""
+    """Build a tuned local session. `master` defaults to local[*]. The
+    catalog's warehouse (every database directory, `sora_stats.db`
+    included) is this process's scratch directory, not `spark-warehouse/`
+    under the working directory; `extra_conf` may point it elsewhere."""
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     b = SparkSession.builder.appName(app_name).master(master)
-    for k, v in {**BUILD_CONF, **RUNTIME_CONF}.items():
+    warehouse = {"spark.sql.warehouse.dir": scratch.scratch_dir("warehouse")}
+    for k, v in {**BUILD_CONF, **RUNTIME_CONF, **warehouse}.items():
         b = b.config(k, v)
     if shuffle_partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -637,20 +637,76 @@ def test_k_core(spark):
     assert g.k_core(k=3).count() == 0
 
 
-def test_bubble_pop_shuffle_path_matches_broadcast(spark, sf_dir):
-    """pop_bubbles_round above the broadcast gate (broadcast_edges
-    =False → shuffled semi/anti joins) must remove exactly the same
-    edge set as the broadcast path — the shape the 100 TB deployment
-    runs when the edge set exceeds BROADCAST_EDGE_LIMIT."""
-    from sora_spark.graph import Graph
+def test_bubble_pop_shuffle_path_matches_broadcast(spark, sf_dir, monkeypatch):
+    """pop_bubbles_round above the broadcast gate (shuffled semi/anti
+    joins) must remove exactly the same edge set as the broadcast path
+    — the shape a deployment runs when the edge set exceeds
+    BROADCAST_EDGE_LIMIT."""
     from sora_spark.graph.derive import e_co_small
 
     li = tables(spark, sf_dir).lineitem
-    g = Graph(e_co_small(li).localCheckpoint(eager=True))
-    bc = sorted(map(tuple, g.pop_bubbles_round(broadcast_edges=True).collect()))
-    sh = sorted(map(tuple, g.pop_bubbles_round(broadcast_edges=False).collect()))
-    assert bc == sh
-    assert len(bc) < g.edges.count(), "bubble pop must remove edges"
+    e = e_co_small(li).localCheckpoint(eager=True)
+    n = e.count()
+    got = {}
+    for limit in (n + 1, n):
+        monkeypatch.setattr(Graph, "BROADCAST_EDGE_LIMIT", limit)
+        g = Graph(e)
+        got[g._bc()] = sorted(map(tuple, g.pop_bubbles_round().collect()))
+    assert got[True] == got[False]
+    assert len(got[True]) < n, "bubble pop must remove edges"
+
+
+@pytest.mark.parametrize("loop", ["reduce_pipeline", "assembly_pipeline"])
+def test_reduction_loops_broadcast_gate_bound(spark, sf_dir, monkeypatch, loop):
+    """The broadcast gate at its bound: with BROADCAST_EDGE_LIMIT at the
+    input edge count n the first round shuffles, at n + 1 every round
+    broadcasts, and both sides reach the same edges through the same
+    edge counts. `stats["broadcast"]` names each round's side, read
+    from that round's input count."""
+    from sora_spark.graph.derive import e_co_small
+
+    li = tables(spark, sf_dir).lineitem
+    e = e_co_small(li).localCheckpoint(eager=True)
+    n = e.count()
+    rows, counts, sides = {}, {}, {}
+    for limit in (n, n + 1):
+        monkeypatch.setattr(Graph, "BROADCAST_EDGE_LIMIT", limit)
+        stats = {}
+        out = getattr(Graph(e), loop)(stats=stats)
+        rows[limit] = sorted(map(tuple, out.collect()))
+        counts[limit], sides[limit] = stats["edge_counts"], stats["broadcast"]
+        read = counts[limit][: len(sides[limit])]
+        assert sides[limit] == [c < limit for c in read], stats
+    assert sides[n][0] is False and all(sides[n + 1])
+    assert rows[n] == rows[n + 1] and counts[n] == counts[n + 1]
+    assert counts[n][-1] < n, "the loop must remove edges"
+
+
+def test_seeded_graph_skips_the_edge_count(spark):
+    """A Graph seeded with its edge count (`_sub(edges, n)`) picks the
+    connected-components regime without a count job: on an eagerly
+    checkpointed frame the driver regime runs fewer jobs than on the
+    same edges unseeded, and labels them the same."""
+    import uuid
+
+    sc = spark.sparkContext
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5)], "s long, d long"
+    ).localCheckpoint(eager=True)
+
+    def jobs(g):
+        group = f"seeded-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = _sorted(g.connected_components().collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+    n_unseeded, unseeded = jobs(Graph(e))
+    n_seeded, seeded = jobs(Graph(e)._sub(e, 3))
+    assert n_seeded < n_unseeded, (n_seeded, n_unseeded)
+    assert seeded == unseeded == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)]
 
 
 def test_overlap_edges_reconstruct_document_chains(spark):

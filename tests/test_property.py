@@ -680,6 +680,7 @@ def test_graph_property_family(spark, monkeypatch):
     _collect()
 
     default = Graph.DRIVER_CC_EDGE_LIMIT
+    bc_default = Graph.BROADCAST_EDGE_LIMIT
     for edges in examples:
         df = spark.createDataFrame(edges, "s BIGINT, d BIGINT")
         g = Graph(df)
@@ -705,12 +706,16 @@ def test_graph_property_family(spark, monkeypatch):
         }
         assert got_cc == want_cc, f"connected_components_twophase: {edges}"
 
-        got_tr = sorted(
-            (r["s"], r["d"])
-            for r in g.transitive_reduction_round().collect()
-        )
-        assert got_tr == sorted(_py_transitive_round(edges)), \
-            f"transitive round: {edges}"
+        # the transitive round on both sides of the broadcast gate: the
+        # default limit (broadcast) and a limit of 0 (shuffle)
+        for limit in (bc_default, 0):
+            monkeypatch.setattr(Graph, "BROADCAST_EDGE_LIMIT", limit)
+            got_tr = sorted(
+                (r["s"], r["d"])
+                for r in g.transitive_reduction_round().collect()
+            )
+            assert got_tr == sorted(_py_transitive_round(edges)), \
+                f"transitive round (limit {limit}): {edges}"
 
         got_tips = {r["v"] for r in g.tips().collect()}
         assert got_tips == _py_tips(edges), f"tips: {edges}"
@@ -1233,11 +1238,12 @@ def _py_kruskal(edges):
     return msf
 
 
-def test_msf_property_family(spark):
+def test_msf_property_family(spark, monkeypatch):
     import random
 
     from sora_spark.graph import Graph
 
+    default = Graph.DRIVER_CC_EDGE_LIMIT
     rng = random.Random(4242)
     for trial in range(5):
         n_v = rng.randrange(4, 14)
@@ -1253,12 +1259,17 @@ def test_msf_property_family(spark):
         if not edges:
             continue
         df = spark.createDataFrame(edges, "s long, d long, w double")
-        got = {
-            (r["s"], r["d"], r["w"])
-            for r in Graph(df).minimum_spanning_forest().collect()
-        }
         want = _py_kruskal(edges)
-        assert got == want, f"trial {trial}: {sorted(got)} != {sorted(want)}"
+        # each Borůvka contraction under both connected-components
+        # regimes: the default bound (driver) and a bound of 0 (min-label)
+        for bound in (default, 0):
+            monkeypatch.setattr(Graph, "DRIVER_CC_EDGE_LIMIT", bound)
+            got = {
+                (r["s"], r["d"], r["w"])
+                for r in Graph(df).minimum_spanning_forest().collect()
+            }
+            assert got == want, \
+                f"trial {trial}, bound {bound}: {sorted(got)} != {sorted(want)}"
 
 
 def test_scd2_property_family(spark):

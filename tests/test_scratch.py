@@ -60,10 +60,10 @@ def test_first_request_sweeps_dead_pids_once(tmp_path, monkeypatch):
 
 def test_bucketed_tables_stay_in_scratch(tmp_path, sf_dir):
     """qsrc5's bucketed tables are external tables in its scratch
-    directory: a run from another working directory writes no table
-    into the warehouse directory there (Spark's catalog still creates
-    that directory, empty, as the default database location), and the
-    tables go with the process's scratch directory at exit."""
+    directory, and the catalog's warehouse is a scratch directory too:
+    a run from another working directory leaves no `spark-warehouse/`
+    there, and the tables and the warehouse go with the process's
+    scratch directories at exit."""
     env = dict(os.environ, PYTHONPATH=_CHECKOUT, SPARK_GRAFT_CPUS="2")
     child = subprocess.Popen(
         [sys.executable, "-m", "sora_spark", "run", "qsrc5_bucketed_join",
@@ -74,7 +74,8 @@ def test_bucketed_tables_stay_in_scratch(tmp_path, sf_dir):
     out, _ = child.communicate(timeout=300)
     assert child.returncode == 0 and "1-URGENT" in out, out
     warehouse = tmp_path / "spark-warehouse"
-    assert not warehouse.exists() or not os.listdir(warehouse)
-    assert not os.path.exists(
-        os.path.join(scratch.ROOT, f"qsrc5-pid{child.pid}")
-    )
+    assert not warehouse.exists()
+    for name in ("qsrc5", "warehouse"):
+        assert not os.path.exists(
+            os.path.join(scratch.ROOT, f"{name}-pid{child.pid}")
+        ), name
