@@ -13,12 +13,20 @@ Spark-first:
   plan tree grows exponentially and the optimizer stalls (SURVEY §4.3,
   the classic failure mode of DataFrame graph code).
 
+Removal-first family: the tip stage of `reduce_pipeline`, the bubble
+stage of `assembly_pipeline` and `k_core` run one loop (`_peel`). Each
+round derives a small removal set, stops when it is empty, and
+otherwise drops it from the edges with one of two anti-join appliers:
+`_drop_edges` (named edges) or `_drop_vertices` (every edge touching
+a named vertex).
+
 Non-convergence: a loop whose answer IS a fixpoint raises
-`FixpointError` when `max_iter` rounds did not reach it — a partial
-result is never returned as if it were the answer. Loops whose round
-bound is part of their contract (`reduce_pipeline`,
-`assembly_pipeline`, `compact_chains`, `bfs_hops`, `pagerank`,
-`label_propagation`) return once that bound is reached.
+`FixpointError` when `max_iter` rounds did not reach it (`k_core`
+among them) — a partial result is never returned as if it were the
+answer. Loops whose round bound is part of their contract
+(`reduce_pipeline`, `assembly_pipeline`, `compact_chains`,
+`bfs_hops`, `pagerank`, `label_propagation`) return once that bound
+is reached; the two reduction pipelines report `stats["converged"]`.
 
 Scale posture: both size gates read one edge count per `Graph`,
 counted at most once (`_n_edges`) and seeded by every loop that
@@ -317,9 +325,29 @@ class Graph:
         then a cheap anti-join of edges against the removal set — the
         huge 2-path stream is never the shuffle payload (see
         `transitive_edges`)."""
-        removal = self.transitive_edges()
-        rem = F.broadcast(removal) if self._bc() else removal
-        return self.edges.join(rem, ["s", "d"], "left_anti")
+        return self._drop_edges(self.edges, self.transitive_edges(), self._bc())
+
+    @staticmethod
+    def _drop_edges(edges: DataFrame, removal: DataFrame, bc: bool) -> DataFrame:
+        """`edges` minus the (s, d) pairs in `removal`: one anti-join,
+        its removal side broadcast when `bc`."""
+        rem = F.broadcast(removal) if bc else removal
+        return edges.join(rem, ["s", "d"], "left_anti")
+
+    @staticmethod
+    def _drop_vertices(edges: DataFrame, vs: DataFrame, bc: bool) -> DataFrame:
+        """`edges` (s, d) minus every edge with an end in `vs` (column
+        v). Removal sets (tips, sub-k vertices, peeled SCCs, matched
+        vertices) are far under the edge count, so with `bc` BOTH
+        anti-joins are broadcast hash joins in one whole-stage-codegen
+        pass over the edges, which never shuffle. A null end never
+        matches, so its edge is never dropped."""
+        t = F.broadcast(vs) if bc else vs
+        return (
+            edges.join(t.withColumnRenamed("v", "s"), "s", "left_anti")
+            .join(t.withColumnRenamed("v", "d"), "d", "left_anti")
+            .select("s", "d")
+        )
 
     def tips(self, hub_degree: int = 3) -> DataFrame:
         """Dead-end vertices: degree-1 vertices whose sole neighbor has
@@ -642,20 +670,52 @@ class Graph:
             frontier = nxt
         return dist
 
+    def _peel(self, edges, n, removal, drop, max_iter, bc=None):
+        """The removal-first loop (tip stage, bubble stage, `k_core`).
+        Per round: derive `removal(g)` over the round's Graph `g` (seeded
+        with the edge count `n` when known), lazily cut; stop when it is
+        empty, else `drop(edges, removal, side)`, lazily cut and
+        materialized by the round's one count. A non-empty removal set
+        always removes an edge, so there is no "count unchanged" exit.
+        Returns (edges, counts, sides, converged): each round's output
+        count (the detection round repeats its input count) and gate
+        side (read from its input count, or `bc` for the first round
+        when given), and whether a round found nothing to remove."""
+        counts, sides = [], []
+        for _ in range(max_iter):
+            g = self._sub(edges, n)
+            sides.append(g._bc() if bc is None else bc)
+            bc = None
+            rem = removal(g).transform(self._cp_lazy)
+            if rem.count() == 0:
+                counts.append(g._n_edges())
+                return edges, counts, sides, True
+            edges = drop(edges, rem, sides[-1]).transform(self._cp_lazy)
+            n = edges.count()
+            # nudge the driver GC so py4j refs to the PREVIOUS round's
+            # checkpointed blocks release promptly — otherwise the
+            # ContextCleaner drops them at arbitrary times mid-run,
+            # which showed up as ~20% run-to-run bench variance
+            gc.collect()
+            counts.append(n)
+        return edges, counts, sides, False
+
     def reduce_pipeline(
         self,
         max_iter: int = 5,
         hub_degree: int = 3,
         stats: dict | None = None,
     ) -> DataFrame:
-        """The SORA-shaped overlap-reduction loop: alternately remove
-        transitive edges and trim tips until a fixpoint (or max_iter).
-        Returns the surviving edge set. Each round = two bounded join
-        passes + a checkpoint; the convergence count() is the
-        per-round barrier (SURVEY §3.4). `stats` (if given) records
-        {"rounds": k, "edge_counts": [n0, n1, ...], "broadcast": [b1,
-        ...]}, one broadcast-gate side per round, read from the
-        round's input edge count.
+        """The SORA-shaped overlap-reduction loop: remove transitive
+        edges, then trim tips until a fixpoint (or max_iter rounds).
+        Returns the surviving edge set. Each round = one bounded join
+        pass + a lazy cut; the count() is the per-round barrier
+        (SURVEY §3.4). `stats` (if given) records {"rounds": k,
+        "edge_counts": [n0, n1, ...], "broadcast": [b1, ...],
+        "converged": c}: one broadcast-gate side per round, read from
+        the round's input edge count, and whether the tip set was empty
+        within `max_iter` rounds (the bound is part of the contract, so
+        an unconverged result is returned, not raised).
 
         The 2-path transitive-removal join — the loop's dominant cost —
         runs ONLY in round 1: removal can destroy 2-paths but never
@@ -670,75 +730,28 @@ class Graph:
         unrolled reduction rounds (qg11). Measurements: see
         OPTIMIZATION_r14.md."""
         edges = self.edges.transform(self._cp_lazy)
-        prev = self._n_edges(edges)
+        g = self._sub(edges, self._n_edges(edges))
         # rejected: flooring the edge blocks at the core count — every
         # extra task re-deserializes the edge-sized broadcast, so task
         # CPU doubled (see OPTIMIZATION_r15.md)
-        counts = [prev]
-        sides = []
-        rounds = 0
-        for it in range(max_iter):
-            g = self._sub(edges, prev)
-            sides.append(g._bc())
-            if it == 0:
-                # checkpoint the reduced edges BEFORE the tip trim: the
-                # trim plan references this subplan several times (edge
-                # stream + degree/tip derivation), and only the input
-                # exchanges — not the 2-path semi-join itself — get
-                # ReusedExchange'd, so without the cut the round's
-                # heaviest join runs 3-4x. Lazy cut: the tips count job
-                # below materializes it (block-level locks serialize
-                # concurrent first readers), saving the separate
-                # materialize pass.
-                reduced = g.transitive_reduction_round().transform(self._cp_lazy)
-            else:
-                reduced = edges
-            # tips-first convergence: the tip set is degree-1-bounded
-            # and TINY, so materialize it once — when it is empty the
-            # trim is the identity, so the round's anti-join + full
-            # edge-set checkpoint + count are skipped AND no no-op
-            # confirm round is needed; `rounds`/`edge_counts` stop at
-            # the detection round.
-            tips = (
-                self._sub(reduced)
-                .tips(hub_degree=hub_degree)
-                .transform(self._cp_lazy)
-            )
-            rounds += 1
-            if tips.count() == 0:
-                edges = reduced
-                counts.append(edges.count() if it == 0 else prev)
-                break
-            edges = self._trim_with_tips(
-                reduced, tips, sides[-1]
-            ).transform(self._cp_lazy)
-            n = edges.count()
-            # nudge the driver GC so py4j refs to the PREVIOUS round's
-            # checkpointed blocks release promptly — otherwise the
-            # ContextCleaner drops them at arbitrary times mid-run,
-            # which showed up as ~20% run-to-run bench variance
-            gc.collect()
-            counts.append(n)
-            if n == prev:
-                break
-            prev = n
-        if stats is not None:
-            stats.update(rounds=rounds, edge_counts=counts, broadcast=sides)
-        return edges
-
-    @staticmethod
-    def _trim_with_tips(edges: DataFrame, tips: DataFrame, bc: bool) -> DataFrame:
-        """Remove edges touching a tip vertex. The tip set is bounded by
-        the degree-1 vertex count, far under the edge count, so under
-        the broadcast gate BOTH anti-joins are broadcast hash joins in
-        one whole-stage-codegen pass over the edges — the per-round
-        trim never shuffles the edge set."""
-        t = F.broadcast(tips) if bc else tips
-        return (
-            edges.join(t.withColumnRenamed("v", "s"), "s", "left_anti")
-            .join(t.withColumnRenamed("v", "d"), "d", "left_anti")
-            .select("s", "d")
+        if max_iter > 0:
+            # cut the reduced edges BEFORE the tip trim: the trim plan
+            # references this subplan several times (edge stream +
+            # degree/tip derivation), and only the input exchanges —
+            # not the 2-path semi-join itself — get ReusedExchange'd,
+            # so without the cut the round's heaviest join runs 3-4x.
+            # Lazy cut: the first tip count materializes it.
+            edges = g.transitive_reduction_round().transform(self._cp_lazy)
+        edges, counts, sides, converged = self._peel(
+            edges, None, lambda r: r.tips(hub_degree=hub_degree),
+            self._drop_vertices, max_iter, bc=g._bc(),
         )
+        if stats is not None:
+            stats.update(
+                rounds=len(counts), edge_counts=[g._n_edges()] + counts,
+                broadcast=sides, converged=converged,
+            )
+        return edges
 
     def pop_bubbles_round(self, min_mids: int = 2) -> DataFrame:
         """One bubble-pop round: for every bubble pair (u, w) joined by
@@ -754,9 +767,9 @@ class Graph:
         the doomed-mid set (see `_bubble_removals`), the removal set
         is bounded by bubble-pair count << |E| and is broadcast into
         the final anti-join, so the edge set itself never shuffles."""
-        removal = self._bubble_removals(min_mids)
-        rem = F.broadcast(removal) if self._bc() else removal
-        return self.edges.join(rem, ["s", "d"], "left_anti")
+        return self._drop_edges(
+            self.edges, self._bubble_removals(min_mids), self._bc()
+        )
 
     def _bubble_removals(self, min_mids: int) -> DataFrame:
         """The edge-removal set of one bubble-pop round (see
@@ -818,46 +831,27 @@ class Graph:
         runs on the result via `chain_edges` + `compact_chains`
         (qg17). Both stages only REMOVE edges, so an unrolled-SQL
         oracle with unroll >= rounds-to-fixpoint is exactly the
-        fixpoint (qg11b argument, extended). Each bubble round is
-        checkpointed and ends in the count() convergence barrier;
-        `stats` records reduce/bubble round counts, edge counts and the
-        broadcast-gate side of every round (reduce rounds first)."""
+        fixpoint (qg11b argument, extended). Both stages are `_peel`
+        loops bounded by contract at `max_iter` rounds each; `stats`
+        records reduce/bubble round counts, edge counts, the
+        broadcast-gate side of every round (reduce rounds first) and
+        `converged`, true only when both stages reached their
+        fixpoint."""
         rstats: dict = {}
         edges = self.reduce_pipeline(
             max_iter=max_iter, hub_degree=hub_degree, stats=rstats
         )
-        prev = rstats["edge_counts"][-1]
-        counts = list(rstats["edge_counts"])
-        sides = list(rstats["broadcast"])
-        bubble_rounds = 0
-        for _ in range(max_iter):
-            g = self._sub(edges, prev)
-            sides.append(g._bc())
-            # removal-first convergence (same trick as the tips-first
-            # reduce loop): the removal set is bubble-bounded — when
-            # empty, skip the anti-join + full-edge checkpoint AND the
-            # legacy no-op confirm round
-            removal = g._bubble_removals(min_mids).transform(self._cp_lazy)
-            bubble_rounds += 1
-            if removal.count() == 0:
-                counts.append(prev)
-                break
-            edges = edges.join(
-                F.broadcast(removal) if sides[-1] else removal,
-                ["s", "d"],
-                "left_anti",
-            ).transform(self._cp_lazy)
-            n = edges.count()
-            gc.collect()  # release prior round's checkpoint blocks
-            counts.append(n)
-            if n == prev:
-                break
-            prev = n
+        edges, counts, sides, converged = self._peel(
+            edges, rstats["edge_counts"][-1],
+            lambda g: g._bubble_removals(min_mids), self._drop_edges, max_iter,
+        )
         if stats is not None:
-            stats["reduce_rounds"] = rstats["rounds"]
-            stats["bubble_rounds"] = bubble_rounds
-            stats["edge_counts"] = counts
-            stats["broadcast"] = sides
+            stats.update(
+                reduce_rounds=rstats["rounds"], bubble_rounds=len(counts),
+                edge_counts=rstats["edge_counts"] + counts,
+                broadcast=rstats["broadcast"] + sides,
+                converged=rstats["converged"] and converged,
+            )
         return edges
 
     def chain_edges(self) -> DataFrame:
@@ -882,30 +876,28 @@ class Graph:
 
     def k_core(self, k: int = 2, max_iter: int = 50) -> DataFrame:
         """Vertices of the k-core (maximal subgraph where every vertex
-        has degree ≥ k, undirected) → (v,). Iterative peeling: drop
-        sub-k vertices, recompute degrees, repeat to fixpoint — each
-        round is one groupBy + two semi-joins on a checkpointed,
-        shrinking edge set; rounds bounded by peeling depth. Raises
-        FixpointError when `max_iter` rounds are still peeling (a
-        partial peel is NOT a k-core)."""
-        e = self._sym_edges(self.edges).distinct().transform(self._cp)
-        for _ in range(max_iter):
-            deg = e.groupBy("s").agg(F.count("*").alias("_deg"))
-            # change-set-first convergence (SCALE.md): peel only when
-            # sub-k vertices EXIST — the drop set is vertex-bounded and
-            # cheap to test, the skipped work is two semi-joins plus a
-            # full edge checkpoint on the final (no-op) round
-            drop = deg.filter(F.col("_deg") < k).select("s").transform(self._cp)
-            if drop.count() == 0:
-                return e.select(F.col("s").alias("v")).distinct()
-            keep = deg.filter(F.col("_deg") >= k).select("s")
-            e = (
-                e.join(keep, "s", "left_semi")
-                .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
-                .select("s", "d")
-                .transform(self._cp)
-            )
-        raise FixpointError("k_core", max_iter, "still peeling")
+        has degree ≥ k, undirected) → (v,). Iterative peeling (`_peel`):
+        each round's removal set is the sub-k vertices of one groupBy
+        over the lazily cut, shrinking edge set in both orientations,
+        and `_drop_vertices` removes their edges; rounds are bounded by
+        peeling depth. Raises FixpointError when `max_iter` rounds are
+        still peeling (a partial peel is NOT a k-core). An edge with a
+        null end is not an edge of the core: it is dropped first (an
+        anti-join never removes it, so it would peel forever)."""
+        e = self._sym_edges(
+            self.edges.filter(F.col("s").isNotNull() & F.col("d").isNotNull())
+        ).distinct().transform(self._cp_lazy)
+
+        def sub_k(g):
+            deg = g.edges.groupBy(F.col("s").alias("v")).count()
+            return deg.filter(F.col("count") < k).select("v")
+
+        e, _, _, converged = self._peel(
+            e, None, sub_k, self._drop_vertices, max_iter
+        )
+        if not converged:
+            raise FixpointError("k_core", max_iter, "still peeling")
+        return e.select(F.col("s").alias("v")).distinct()
 
     def maximal_matching(
         self, max_iter: int = 30, stats: dict | None = None
@@ -989,12 +981,7 @@ class Graph:
             mv = newm.select(F.col("x").alias("v")).union(
                 newm.select(F.col("y").alias("v"))
             )
-            e = (
-                e.join(mv.withColumnRenamed("v", "s"), "s", "left_anti")
-                .join(mv.withColumnRenamed("v", "d"), "d", "left_anti")
-                .select("s", "d")
-                .transform(self._cp)
-            )
+            e = self._drop_vertices(e, mv, bc=False).transform(self._cp)
         else:
             # The for/else fires when the loop ran all max_iter rounds;
             # the matching is still complete if the last round emptied
@@ -1097,12 +1084,7 @@ class Graph:
             remaining = remaining.join(peel, "v", "left_anti").transform(self._cp)
             if remaining.isEmpty():
                 break
-            edges = (
-                edges.join(peel, edges.s == peel.v, "left_anti")
-                .join(peel.withColumnRenamed("v", "d"), "d", "left_anti")
-                .select("s", "d")
-                .transform(self._cp)
-            )
+            edges = self._drop_vertices(edges, peel, bc=False).transform(self._cp)
         else:
             raise FixpointError(
                 "strongly_connected_components", max_iter,

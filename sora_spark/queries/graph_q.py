@@ -11,7 +11,6 @@ in sora_spark.graph are scale-free (iterative joins + localCheckpoint).
 
 from __future__ import annotations
 
-import os
 import re
 from contextlib import contextmanager
 
@@ -85,19 +84,12 @@ def _require_calibrated_sf(sf_dir: str, what: str) -> None:
     if _UNCALIBRATED_OK:
         return
     if sf > _CALIBRATED_MAX_SF + 1e-12:
-        hint = ""
-        if os.environ.get("SORA_UNCALIBRATED_SF_OK") == "1":
-            hint = (
-                " (the SORA_UNCALIBRATED_SF_OK env escape was removed: "
-                "bench/scale entrypoints scope the bypass via "
-                "graph_q.allow_uncalibrated_sf())"
-            )
         raise ValueError(
             f"{what}: unrolled-fixpoint oracle calibrated for "
             f"sf <= {_CALIBRATED_MAX_SF}, got sf={sf}. Re-measure "
             "rounds-to-fixpoint at this scale and raise the unroll "
             "constant (see graph_q.py fixpoint queries) before "
-            "trusting the hash comparison." + hint
+            "trusting the hash comparison."
         )
 
 

@@ -637,6 +637,82 @@ def test_k_core(spark):
     assert g.k_core(k=3).count() == 0
 
 
+def _k_core_semijoin(edges, k, max_iter=50):
+    """The semi-join k-core loop `Graph.k_core` replaced: keep the
+    edges whose two ends both have degree >= k, eagerly cut, until no
+    vertex is under k."""
+    e = Graph._sym_edges(edges).distinct().localCheckpoint(eager=True)
+    for _ in range(max_iter):
+        deg = e.groupBy("s").agg(F.count("*").alias("_deg"))
+        if deg.filter(F.col("_deg") < k).isEmpty():
+            return e.select(F.col("s").alias("v")).distinct()
+        keep = deg.filter(F.col("_deg") >= k).select("s")
+        e = (
+            e.join(keep, "s", "left_semi")
+            .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
+            .select("s", "d")
+            .localCheckpoint(eager=True)
+        )
+    raise AssertionError("reference k-core did not converge")
+
+
+_NULL_END = [(1, 2), (2, 3), (1, 3), (3, None)]
+
+
+@pytest.mark.parametrize(
+    "edges, ks",
+    [
+        pytest.param(
+            [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)], (1, 2, 3),
+            id="triangle_pendant_chain",
+        ),
+        pytest.param([(i, i + 1) for i in range(79)], (1, 2), id="chain80"),
+        pytest.param("e_co_small", (2, 3, 20), id="e_co_small"),
+        pytest.param(_NULL_END, (1, 2), id="null_end"),
+    ],
+)
+def test_k_core_matches_semijoin_reference(spark, sf_dir, edges, ks):
+    """The `_peel` k-core (anti-join of the sub-k vertices, lazy cuts)
+    returns the old semi-join loop's vertices. The one difference is
+    an edge with a null end: the reference keeps its NULL vertex when
+    no peel fires (k=1 here); `k_core` drops such edges first."""
+    if edges == "e_co_small":
+        from sora_spark.graph.derive import e_co_small
+
+        e = e_co_small(tables(spark, sf_dir).lineitem)
+    else:
+        e = spark.createDataFrame(edges, "s long, d long")
+    for k in ks:
+        ref = _sorted(_k_core_semijoin(e, k).collect())
+        if edges is _NULL_END and k == 1:
+            assert ref == [(1,), (2,), (3,), (None,)]
+        want = [r for r in ref if r != (None,)]
+        assert _sorted(Graph(e).k_core(k=k).collect()) == want, k
+
+
+@pytest.mark.parametrize("loop", ["reduce_pipeline", "assembly_pipeline"])
+def test_reduction_loops_report_converged(spark, sf_dir, loop):
+    """`stats["converged"]`: on the full e_co graph the reduce stage
+    needs 2 rounds (8899 → 404 edges, then an empty tip set), so one
+    round stops at the bound unconverged and the default reaches the
+    fixpoint. Assembly converges only when both of its stages do."""
+    import os
+
+    from sora_spark.graph import e_co
+
+    # the sf0.001 tier beside the configured one: sf0.01 and up reach
+    # the reduce fixpoint in one round
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    e = e_co(tables(spark, sf).lineitem).localCheckpoint(eager=True)
+    for max_iter, converged, counts in (
+        (1, False, [8899, 404]), (5, True, [8899, 404, 404]),
+    ):
+        stats = {}
+        getattr(Graph(e), loop)(max_iter=max_iter, stats=stats)
+        assert stats["converged"] is converged, (max_iter, stats)
+        assert stats["edge_counts"][: len(counts)] == counts, stats
+
+
 def test_bubble_pop_shuffle_path_matches_broadcast(spark, sf_dir, monkeypatch):
     """pop_bubbles_round above the broadcast gate (shuffled semi/anti
     joins) must remove exactly the same edge set as the broadcast path
