@@ -31,7 +31,10 @@ is reached; the two reduction pipelines report `stats["converged"]`.
 Scale posture: both size gates read one edge count per `Graph`,
 counted at most once (`_n_edges`) and seeded by every loop that
 already holds it. Under `BROADCAST_EDGE_LIMIT` edges the reduction
-joins broadcast their small side, above it they shuffle. Connected
+joins broadcast their small side, above it they shuffle. Transitive
+reduction tests each edge for a witness while no vertex has more than
+`HUB_CAP` out- or in-edges (a degree bound read from the aggregate that
+counts the edges), and streams 2-paths above it. Connected
 components runs a driver union-find up to `DRIVER_CC_EDGE_LIMIT`
 edges, where job count and not data sets the wall time, distributed
 min-label propagation above it. Convergence checks are single
@@ -58,6 +61,27 @@ from pyspark.sql.types import (
     LongType,
     ShortType,
 )
+
+from sora_spark.operators._util import floor_partitions
+
+# Count-min sketch shape of the hub gate (`Graph._max_degree`): 4 rows
+# of 4096 cells, 128 KB per sketch and task. A row's largest cell
+# exceeds the largest degree by the degrees hashed beside it, about
+# n / 4096 on n edges, so the bound stays near the true maximum far past
+# the broadcast gate.
+_SKETCH_WIDTH = 4096
+_SKETCH_CONFIDENCE = 0.9375
+
+
+def _sketch_max(buf) -> int:
+    """The least over rows of a row's largest cell in a serialized
+    count-min sketch (version, total, depth, width, depth hash seeds,
+    then the depth x width big-endian long table): an upper bound of
+    every item's count."""
+    buf = bytes(buf)
+    depth, width = map(int, np.frombuffer(buf, ">i4", 2, offset=12))
+    table = np.frombuffer(buf, ">i8", offset=20 + 8 * depth)
+    return int(table.reshape(depth, width).max(axis=1).min())
 
 
 class FixpointError(RuntimeError):
@@ -103,6 +127,7 @@ class Graph:
     vertices: DataFrame | None = None
     reliable_checkpoint_dir: str | None = None
     _edge_count: int | None = field(default=None, init=False, repr=False)
+    _degree_bound: int | None = field(default=None, init=False, repr=False)
 
     def _n_edges(self, rows: DataFrame | None = None) -> int:
         """The edge count both size gates read, counted at most once per
@@ -291,10 +316,76 @@ class Graph:
     # 4.7 s and 0.27 GB against 85 s (34 rounds).
     DRIVER_CC_EDGE_LIMIT = 5_000_000
 
+    # Transitive reduction tests each edge for a witness while no vertex
+    # has more than this many out- or in-edges (`_max_degree`); above
+    # it the 2-path form runs. The witness test hands out(s) and in(d)
+    # to edge (s, d), so a star of N leaves costs ~N² element copies
+    # where the 2-path form streams no path at all. Sweep (local[4] on
+    # 4 cores, warm `transitive_reduction_round().count()`, witness vs
+    # 2-path form): out-stars of 5k / 10k / 20k / 50k leaves 0.27 /
+    # 0.31 / 0.61 / 2.59 s vs 0.21 / 0.18 / 0.17 / 0.17 s; in-stars
+    # 0.18 / 0.28 / 0.56 / 2.61 s vs 0.17 / 0.13 / 0.12 / 0.11 s; a
+    # vertex with 4k in-edges, 4k out-edges and 4k shortcuts 0.20 vs
+    # 0.91 s. The quadratic excess is ~1 ns per copy: ~0.02 s at this
+    # cap, where a dense graph's per-edge win dominates.
+    HUB_CAP = 4_096
+
     def _bc(self) -> bool:
         """The broadcast gate: the edge set is under
         `BROADCAST_EDGE_LIMIT` rows."""
         return self._n_edges() < self.BROADCAST_EDGE_LIMIT
+
+    def _max_degree(self) -> int:
+        """An upper bound of the largest out- or in-degree (edges counted
+        with multiplicity; null ends excluded), read with the edge count
+        from ONE global aggregate: a count-min sketch of s and of d
+        rides on the count, so the hub gate costs no job of its own and
+        seeds `_n_edges` when the count is not yet known. Each sketch
+        cell sums the degrees of the vertices hashed to it, so the
+        least over rows of a row's largest cell bounds every degree; it
+        is exact unless the top vertex shares a cell in every row."""
+        if self._degree_bound is None:
+            def sketch(c):
+                h = F.when(F.col(c).isNotNull(), F.xxhash64(c))
+                return F.count_min_sketch(
+                    h, F.lit(2 / _SKETCH_WIDTH), F.lit(_SKETCH_CONFIDENCE),
+                    F.lit(0),
+                )
+
+            n, *sketches = self.edges.agg(
+                F.count("*"), sketch("s"), sketch("d")
+            ).first()
+            if self._edge_count is None:
+                self._edge_count = n
+            self._degree_bound = max(_sketch_max(b) for b in sketches)
+        return self._degree_bound
+
+    def _witness_form(self) -> bool:
+        """The hub gate: no vertex has more than `HUB_CAP` out- or
+        in-edges, so the per-edge witness test is bounded."""
+        return self._max_degree() <= self.HUB_CAP
+
+    def _witnessed(self, transitive: bool) -> DataFrame:
+        """The rows of `edges`, every input column, whose witness test
+        is `transitive`: edge (s, d) has a witness iff out(s) and in(d)
+        overlap. The two vertex-sized neighbour-set tables (one groupBy
+        each) are left-joined onto the edges, broadcast under the edge
+        gate; a missing set (a null end, or a vertex with no out- or
+        in-edge) means no witness. The probe is CPU-bound and moves few
+        bytes, so it runs on at least `defaultParallelism` partitions."""
+        e = self.edges
+        outs = e.groupBy("s").agg(F.collect_set("d").alias("_outs"))
+        ins = e.groupBy("d").agg(F.collect_set("s").alias("_ins"))
+        if self._bc():
+            outs, ins = F.broadcast(outs), F.broadcast(ins)
+        hit = F.coalesce(F.arrays_overlap("_outs", "_ins"), F.lit(False))
+        return (
+            floor_partitions(e)
+            .join(outs, "s", "left")
+            .join(ins, "d", "left")
+            .filter(hit if transitive else ~hit)
+            .select(*e.columns)
+        )
 
     def _two_paths(self) -> DataFrame:
         e1, e2 = self.edges.alias("e1"), self.edges.alias("e2")
@@ -304,15 +395,23 @@ class Graph:
         )
 
     def transitive_edges(self) -> DataFrame:
-        """Edges (a, c) for which a 2-path a→b→c also exists — the
+        """The distinct (s, d) pairs of the edges that have a witness: a
+        vertex b with edges s→b and b→d (b may be s or d, so self-loops
+        count: a→a→c makes a→c transitive). An edge with a null end is
+        never transitive, and a null b is never a witness. This is the
         removal set of one transitive-reduction round.
 
-        Join shape (the 100 TB-relevant choice): the 2-path stream is
-        Σ_v in(v)·out(v) rows — far bigger than the edge set — so it is
-        semi-joined AGAINST the edges (small side broadcast when under
-        BROADCAST_EDGE_LIMIT) instead of ever being shuffled whole:
-        measured 3-6× faster at sf0.1 than the shuffle-the-paths plan.
-        """
+        Two forms, one answer, chosen by the hub gate. Up to `HUB_CAP`
+        neighbours per vertex the witness test (`_witnessed`) probes
+        each edge once against the vertex-sized neighbour sets, so
+        nothing grows with the 2-path count Σ_v in(v)·out(v). Above it
+        the per-edge test would copy a hub's whole set onto each of its
+        edges, and the 2-path form runs instead: the 2-path stream is
+        semi-joined against the edges (broadcast under
+        `BROADCAST_EDGE_LIMIT`) and de-duplicated, so the stream is
+        never the shuffle payload."""
+        if self._witness_form():
+            return self._witnessed(True).select("s", "d").distinct()
         e = self.edges
         tgt = F.broadcast(e) if self._bc() else e
         return (
@@ -320,19 +419,23 @@ class Graph:
         )
 
     def transitive_reduction_round(self) -> DataFrame:
-        """Surviving edges after removing one round of transitive edges.
-        Two-step shape: removal = 2-paths ∩ edges (bounded by |E|),
-        then a cheap anti-join of edges against the removal set — the
-        huge 2-path stream is never the shuffle payload (see
-        `transitive_edges`)."""
+        """The edges minus their transitive ones (`transitive_edges`):
+        every input row and column of an edge with no witness survives,
+        duplicates and null-end edges included. Under the hub gate this
+        is the witness probe's complement, with no de-duplication and no
+        anti-join; above it, the 2-path removal set is anti-joined from
+        the edges (broadcast under `BROADCAST_EDGE_LIMIT`)."""
+        if self._witness_form():
+            return self._witnessed(False)
         return self._drop_edges(self.edges, self.transitive_edges(), self._bc())
 
     @staticmethod
     def _drop_edges(edges: DataFrame, removal: DataFrame, bc: bool) -> DataFrame:
         """`edges` minus the (s, d) pairs in `removal`: one anti-join,
-        its removal side broadcast when `bc`."""
+        its removal side broadcast when `bc`. Every column of `edges` is
+        kept, in its order."""
         rem = F.broadcast(removal) if bc else removal
-        return edges.join(rem, ["s", "d"], "left_anti")
+        return edges.join(rem, ["s", "d"], "left_anti").select(*edges.columns)
 
     @staticmethod
     def _drop_vertices(edges: DataFrame, vs: DataFrame, bc: bool) -> DataFrame:
@@ -341,12 +444,13 @@ class Graph:
         vertices) are far under the edge count, so with `bc` BOTH
         anti-joins are broadcast hash joins in one whole-stage-codegen
         pass over the edges, which never shuffle. A null end never
-        matches, so its edge is never dropped."""
+        matches, so its edge is never dropped. Every column of `edges`
+        is kept, in its order."""
         t = F.broadcast(vs) if bc else vs
         return (
             edges.join(t.withColumnRenamed("v", "s"), "s", "left_anti")
             .join(t.withColumnRenamed("v", "d"), "d", "left_anti")
-            .select("s", "d")
+            .select(*edges.columns)
         )
 
     def tips(self, hub_degree: int = 3) -> DataFrame:
@@ -717,30 +821,34 @@ class Graph:
         within `max_iter` rounds (the bound is part of the contract, so
         an unconverged result is returned, not raised).
 
-        The 2-path transitive-removal join — the loop's dominant cost —
-        runs ONLY in round 1: removal can destroy 2-paths but never
-        create one, so a set with no transitive edges stays transitive-
-        free under any further edge removal (if (A,C) plus a surviving
-        2-path A→B→C existed after round 1, all three edges survived
-        FROM round 1's input, where (A,C) was therefore transitive and
-        removed — contradiction). Rounds >= 2 are pure tip-trims, and
-        the unrolled oracles (which re-apply the transitive stage every
-        round) still match exactly because that stage is the identity
-        from round 2 on — which is also why `max_iter=2` is exactly two
-        unrolled reduction rounds (qg11). Measurements: see
-        OPTIMIZATION_r14.md."""
-        edges = self.edges.transform(self._cp_lazy)
-        g = self._sub(edges, self._n_edges(edges))
-        # rejected: flooring the edge blocks at the core count — every
-        # extra task re-deserializes the edge-sized broadcast, so task
-        # CPU doubled (see OPTIMIZATION_r15.md)
+        The transitive stage (`transitive_reduction_round`) — the
+        loop's dominant cost — runs ONLY in round 1: removal can destroy
+        2-paths but never create one, so a set with no transitive edges
+        stays transitive-free under any further edge removal (if (A,C)
+        plus a surviving 2-path A→B→C existed after round 1, all three
+        edges survived FROM round 1's input, where (A,C) was therefore
+        transitive and removed — contradiction). Rounds >= 2 are pure
+        tip-trims, and the unrolled oracles (which re-apply the
+        transitive stage every round) still match exactly because that
+        stage is the identity from round 2 on — which is also why
+        `max_iter=2` is exactly two unrolled reduction rounds (qg11).
+        The input edge count n0 comes from the same aggregate as the
+        hub gate's degree bound, so the gate adds no job. Every input
+        column is kept, in its order. Measurements: see
+        OPTIMIZATION_r14.md and CHANGES.md."""
+        g = self._sub(self.edges.transform(self._cp_lazy))
+        # the edge blocks are not floored at the core count: that
+        # widened the 2-path stage, whose broadcast side is edge-sized,
+        # and doubled task CPU (OPTIMIZATION_r15.md). The witness probe
+        # floors only its own per-edge pass, and only below the core
+        # count (`_witnessed`).
+        edges = g.edges
         if max_iter > 0:
             # cut the reduced edges BEFORE the tip trim: the trim plan
             # references this subplan several times (edge stream +
-            # degree/tip derivation), and only the input exchanges —
-            # not the 2-path semi-join itself — get ReusedExchange'd,
-            # so without the cut the round's heaviest join runs 3-4x.
-            # Lazy cut: the first tip count materializes it.
+            # degree/tip derivation), and only input exchanges get
+            # ReusedExchange'd, so without the cut the transitive stage
+            # runs 3-4x. Lazy cut: the first tip count materializes it.
             edges = g.transitive_reduction_round().transform(self._cp_lazy)
         edges, counts, sides, converged = self._peel(
             edges, None, lambda r: r.tips(hub_degree=hub_degree),

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sora_spark.functions import vector
+from sora_spark.operators._util import floor_partitions
 
 # range_search_vectorized ships the probe matrix in the mapInPandas
 # closure; 2M float32-ish probes at dim<=128 is ~2 GB — beyond that the
@@ -1242,10 +1243,7 @@ def _candidate_lists(
         lists = lists.filter(
             F.expr(where) if isinstance(where, str) else where
         )
-    par = spark.sparkContext.defaultParallelism
-    if lists.rdd.getNumPartitions() < par:
-        lists = lists.repartition(par)
-    return p, lists
+    return p, floor_partitions(lists)
 
 
 def _empty_topk(spark, path: str, probes: DataFrame, id_col: str):

@@ -343,12 +343,12 @@ SELECT
 )
 def qg5_transitive_reduction(spark, sf_dir):
     li = tables(spark, sf_dir).lineitem
-    # lazy cut: transitive_edges consumes the edge frame three
-    # times (2-path sides + semi target) and transitive_reduction_round
-    # re-derives the removal set plus the anti side — SEVEN full
-    # e_co_small derivations in one query without the cut (the loops
-    # in reduce_pipeline already checkpoint; this is the one-shot row).
-    # The first count materializes the blocks; every consumer reads them.
+    # lazy cut: the one Graph reads the edge frame once for its hub-gate
+    # aggregate and three times per witness probe (two neighbour-set
+    # groupBys + the probed edges), and each of the two rows below runs
+    # a probe — seven e_co_small derivations without the cut.
+    # reduce_pipeline cuts its own input; this is the one-shot row. The
+    # gate's aggregate materializes the blocks; every consumer reads them.
     g = Graph(e_co_small(li).localCheckpoint(eager=False))
     removed = g.transitive_edges().agg(F.count("*").alias("n_removed"))
     surviving = g.transitive_reduction_round().agg(

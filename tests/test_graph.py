@@ -39,6 +39,103 @@ def test_transitive_reduction(spark):
     assert surviving == {(1, 2), (2, 3)}
 
 
+def _transitive_edges_two_path(g):
+    """The 2-path form of Graph.transitive_edges: every 2-path
+    e1.d == e2.s semi-joined against the edges, de-duplicated."""
+    e1, e2 = g.edges.alias("e1"), g.edges.alias("e2")
+    paths = e1.join(e2, F.col("e1.d") == F.col("e2.s")).select(
+        F.col("e1.s").alias("s"), F.col("e2.d").alias("d")
+    )
+    return paths.join(g.edges, ["s", "d"], "left_semi").distinct()
+
+
+def _assert_transitive_forms_agree(g, witness, bc=None):
+    """`transitive_edges` and `transitive_reduction_round` of `g` equal
+    the 2-path reference (removal set; edges anti-joined by it), row
+    for row and column for column; `witness` names the form the hub
+    gate must pick and `bc` the broadcast gate side."""
+    assert g._witness_form() is witness
+    if bc is not None:
+        assert g._bc() is bc
+    ref = _transitive_edges_two_path(g)
+    assert _sorted(g.transitive_edges().collect()) == _sorted(ref.collect())
+    got = g.transitive_reduction_round()
+    assert got.columns == g.edges.columns
+    want = g.edges.join(ref, ["s", "d"], "left_anti")
+    assert _sorted(got.collect()) == _sorted(want.collect())
+
+
+def _star(n):
+    # hub 0 -> leaves 1..n, leaf 1 -> leaf 2 makes 0 -> 2 transitive
+    return [(0, i) for i in range(1, n + 1)] + [(1, 2)]
+
+
+@pytest.mark.parametrize(
+    "edges, schema",
+    [
+        pytest.param([(1, 1), (1, 3), (2, 2), (2, 4), (4, 4), (5, 6)],
+                     "s long, d long", id="self_loops"),
+        pytest.param([(1, 2), (1, 2), (2, 3), (1, 3), (1, 3), (3, 4), (3, 4)],
+                     "s long, d long", id="duplicates"),
+        pytest.param([(1, None), (None, 3), (1, 3), (None, None), (4, 5),
+                      (5, 6), (4, 6), (None, 6), (6, None), (4, 6)],
+                     "s long, d long", id="null_ends"),
+        pytest.param([("a", "b"), ("b", "c"), ("a", "c"), ("c", "c"),
+                      ("c", "d")], "s string, d string", id="string_ids"),
+        pytest.param([(1, 2, 0.5), (2, 3, 1.0), (1, 3, 2.0), (1, 3, 3.0),
+                      (3, 4, None), (None, 4, 4.0)],
+                     "s long, d long, w double", id="weighted"),
+        pytest.param([], "s long, d long", id="empty"),
+    ],
+)
+def test_witness_test_matches_two_path_form(spark, edges, schema):
+    """The per-edge witness test removes exactly what the 2-path
+    semi-join removes: self-loops (a→a→c makes a→c transitive, and a
+    self-loop is its own witness), duplicate edges (the removal set is
+    distinct, the round keeps every surviving copy), null ends (never
+    transitive, never a witness), string ids and attribute columns,
+    which the round keeps."""
+    e = spark.createDataFrame(edges, schema)
+    _assert_transitive_forms_agree(Graph(e), witness=True)
+
+
+def test_hub_gate_keeps_the_two_path_form(spark, monkeypatch):
+    """Above `HUB_CAP` out- or in-edges on one vertex the 2-path form
+    runs, and at the cap the witness test; both match the
+    reference. Cases: a star at the cap and at cap + 1, a vertex whose
+    in- and out-degree both exceed the cap, and a star over the
+    default cap."""
+    star = _star(Graph.HUB_CAP + 1)
+    _assert_transitive_forms_agree(
+        Graph(spark.createDataFrame(star, "s long, d long")), witness=False
+    )
+    monkeypatch.setattr(Graph, "HUB_CAP", 4)
+    for n, witness in ((4, True), (5, False)):
+        e = spark.createDataFrame(_star(n), "s long, d long")
+        _assert_transitive_forms_agree(Graph(e), witness)
+        in_star = e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+        _assert_transitive_forms_agree(Graph(in_star), witness)
+    # vertex 0: in from 1..5, out to 6..10; shortcuts 1->6, 2->7
+    bow = ([(i, 0) for i in range(1, 6)] + [(0, i) for i in range(6, 11)]
+           + [(1, 6), (2, 7), (6, 7)])
+    _assert_transitive_forms_agree(
+        Graph(spark.createDataFrame(bow, "s long, d long")), witness=False
+    )
+
+
+def test_witness_test_both_broadcast_sides(spark, sf_dir, monkeypatch):
+    """On the co-occurrence graph the witness test gives the 2-path
+    answer on both sides of `BROADCAST_EDGE_LIMIT`: its two
+    neighbour-set joins broadcast under the limit and shuffle at it."""
+    from sora_spark.graph.derive import e_co_small
+
+    e = e_co_small(tables(spark, sf_dir).lineitem).localCheckpoint(eager=True)
+    n = e.count()
+    for limit in (n + 1, n):
+        monkeypatch.setattr(Graph, "BROADCAST_EDGE_LIMIT", limit)
+        _assert_transitive_forms_agree(Graph(e), True, bc=limit > n)
+
+
 def test_tips(spark):
     # hub 1 with neighbors 2,3,4; vertex 5 hangs off 2 (degree-2 nbr -> not a tip)
     g = _g(spark, [(1, 2), (1, 3), (1, 4), (2, 5)])
@@ -271,6 +368,24 @@ def test_reduce_pipeline(spark):
     assert (1, 2) in reduced and (2, 3) in reduced
 
 
+@pytest.mark.parametrize("loop", ["reduce_pipeline", "assembly_pipeline"])
+def test_reduction_loops_keep_input_columns(spark, loop):
+    """Both loops return the input's columns whatever they remove: a
+    directed 3-cycle (no transitive edge, no tip) and a hub with tips
+    (tips trimmed by `_drop_vertices`) both keep `w`."""
+    schema = "s long, d long, w double"
+    cycle = [(1, 2, 0.1), (2, 3, 0.2), (3, 1, 0.3)]
+    hub = [(0, 1, 1.0), (0, 2, 2.0), (0, 3, 3.0), (0, 4, 4.0), (4, 5, 5.0)]
+    for edges, want in ((cycle, cycle), (hub, [(0, 4, 4.0), (4, 5, 5.0)])):
+        stats = {}
+        out = getattr(Graph(spark.createDataFrame(edges, schema)), loop)(
+            stats=stats
+        )
+        assert out.columns == ["s", "d", "w"]
+        assert _sorted(out.collect()) == want
+        assert stats["converged"]
+
+
 def test_degrees_and_two_hop(spark):
     g = _g(spark, [(1, 2), (2, 3)])
     hist = {
@@ -407,7 +522,9 @@ def test_minlabel_cc_raises_instead_of_partial_labels(spark, monkeypatch):
 
 
 def _sorted(rows):
-    return sorted(map(tuple, rows), key=lambda r: (r[0] is None, r))
+    return sorted(
+        map(tuple, rows), key=lambda r: tuple((x is None, x) for x in r)
+    )
 
 
 def _cc_rows(g, bound, monkeypatch, stats=None):
