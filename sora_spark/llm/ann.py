@@ -22,15 +22,20 @@ On-disk contract of an index at `<path>`:
   writer stores each vector's norm as `_nrm`, so a probe pays one dot
   per candidate pair. Plain IVF rows keep every corpus column; IVF-PQ
   rows are (id, `_codes`, `_nrm`, `_cid`).
-- `<path>_centroids`: the codebook (cid, centroid[, branch]). List ids
-  are whatever this table stores. They need not be contiguous, and no
-  reader derives a cid from a centroid's position.
+- `<path>_centroids`: the codebook (cid, centroid, branch). `branch`
+  is NULL under the flat layout (files written without the column
+  read it NULL too). List ids are whatever this table stores. They
+  need not be contiguous, and no reader derives a cid from a
+  centroid's position.
 - `<path>_coarse` (two-level layout only): the branch centroids
   (branch, centroid). Probes pick branches first, then leaves in them.
 - `<path>_pq` (IVF-PQ only): the per-subspace code books (sub, code,
   centroid).
-The layout is read from the filesystem: `_coarse` present means
-two-level, `_pq` present means IVF-PQ.
+Each sidecar's schema is one DDL string in `_SIDECARS`, used by its
+writer and by every read (`_sidecar`), so no read infers a schema
+from a footer. The codebook readers collect a sidecar's few rows and
+order them on the driver. The layout is read from the filesystem:
+`_coarse` present means two-level, `_pq` present means IVF-PQ.
 
 Every top-k path returns (probe_id, rn, neighbor_id, sim), ranked on
 the rounded cosine with neighbour-id tie-break, so results are
@@ -52,6 +57,12 @@ from sora_spark.operators._util import floor_partitions
 # closure; 2M float32-ish probes at dim<=128 is ~2 GB — beyond that the
 # two-sided range_search_shuffle is the right tool, so raise early.
 _RANGE_SEARCH_MAX_PROBES = 2_000_000
+# the declared schema of each index sidecar, by suffix (module docstring)
+_SIDECARS = {
+    "_centroids": "cid BIGINT, centroid ARRAY<DOUBLE>, branch BIGINT",
+    "_coarse": "branch BIGINT, centroid ARRAY<DOUBLE>",
+    "_pq": "sub INT, code INT, centroid ARRAY<DOUBLE>",
+}
 
 
 def _probe_frame(probes: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -593,25 +604,27 @@ def _train_assign(corpus, n_centroids, iters, max_per_level, id_col, vec_col):
     return _assign(corpus, rows, coarse, vec_col), rows, coarse
 
 
+def _put_sidecar(spark, path: str, sfx: str, data) -> None:
+    """Write the `<path><sfx>` sidecar from rows in its `_SIDECARS`
+    schema, as one file."""
+    spark.createDataFrame(data, _SIDECARS[sfx]).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path + sfx)
+
+
+def _sidecar(spark, path: str, sfx: str) -> DataFrame:
+    """The `<path><sfx>` sidecar, read with its declared schema."""
+    return spark.read.schema(_SIDECARS[sfx]).parquet(path + sfx)
+
+
 def _write_codebook(spark, path: str, rows, coarse=None) -> None:
-    """Write `<path>_centroids` from [(cid, centroid, branch or None)],
-    with a `branch` column iff the rows carry branches, and, given
-    `coarse`, `<path>_coarse` (branch = 1-based position)."""
-
-    def put(data, schema: str, sfx: str) -> None:
-        spark.createDataFrame(data, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path + sfx)
-
-    if rows and rows[0][2] is not None:
-        put(rows, "cid BIGINT, centroid ARRAY<DOUBLE>, branch BIGINT",
-            "_centroids")
-    else:
-        put([r[:2] for r in rows], "cid BIGINT, centroid ARRAY<DOUBLE>",
-            "_centroids")
+    """Write `<path>_centroids` from [(cid, centroid, branch or None)]
+    and, given `coarse`, `<path>_coarse` (branch = 1-based
+    position)."""
+    _put_sidecar(spark, path, "_centroids", rows)
     if coarse is not None:
-        put([(i + 1, c) for i, c in enumerate(coarse)],
-            "branch BIGINT, centroid ARRAY<DOUBLE>", "_coarse")
+        _put_sidecar(spark, path, "_coarse",
+                     [(i + 1, c) for i, c in enumerate(coarse)])
 
 
 def _read_codebook(spark, path: str, leaves: bool = True):
@@ -624,17 +637,15 @@ def _read_codebook(spark, path: str, leaves: bool = True):
     if _existing(spark, [path + "_coarse"]):
         coarse = [
             [float(x) for x in r["centroid"]]
-            for r in spark.read.parquet(path + "_coarse")
-            .orderBy("branch").collect()
+            for r in sorted(_sidecar(spark, path, "_coarse").collect(),
+                            key=lambda r: r["branch"])
         ]
         if not leaves:
             return None, coarse
-    rows = [
-        (int(r["cid"]), [float(x) for x in r["centroid"]],
-         r.asDict().get("branch"))
-        for r in spark.read.parquet(path + "_centroids")
-        .orderBy("cid").collect()
-    ]
+    rows = sorted((
+        (int(r["cid"]), [float(x) for x in r["centroid"]], r["branch"])
+        for r in _sidecar(spark, path, "_centroids").collect()
+    ), key=lambda r: r[0])
     return rows, coarse
 
 
@@ -642,7 +653,8 @@ def _read_pq(spark, path: str) -> list[list[list[float]]]:
     """The `<path>_pq` code books: books[s][j] is subspace s's
     centroid for code j + 1."""
     books: dict[int, list[list[float]]] = {}
-    for r in spark.read.parquet(path + "_pq").orderBy("sub", "code").collect():
+    for r in sorted(_sidecar(spark, path, "_pq").collect(),
+                    key=lambda r: (r["sub"], r["code"])):
         books.setdefault(int(r["sub"]), []).append(
             [float(x) for x in r["centroid"]]
         )
@@ -1158,13 +1170,12 @@ def rebuild_ivfpq_index(
         if n_codes is None:
             n_codes = max(len(b) for b in books)
     tmp = path + f".rebuild-{os.getpid()}"
-    write_ivfpq_index(
+    cents = write_ivfpq_index(
         corpus, tmp, n_centroids, m_subs, n_codes, iters,
         id_col, vec_col, max_per_level,
     )
-    n_lists = spark.read.parquet(tmp + "_centroids").count()
     _swap_index_dirs(path, tmp)
-    return {"n_lists": int(n_lists), "n_vectors": corpus.count()}
+    return {"n_lists": len(cents), "n_vectors": corpus.count()}
 
 
 def _candidate_lists(
@@ -1209,7 +1220,7 @@ def _candidate_lists(
             n_probe_coarse,
         )))
         lt = (
-            spark.read.parquet(path + "_centroids")
+            _sidecar(spark, path, "_centroids")
             .groupBy(F.col("branch").alias("_branch"))
             .agg(F.collect_list(F.struct("cid", "centroid")).alias("_leaves"))
         )
@@ -1305,12 +1316,13 @@ def ivf_topk_indexed(
 
     `n_probe=None` derives the scale-safe value from the live index
     (`scaled_n_probe`: ~IVF_SCAN_ROWS expected candidates per probe)
-    with one codebook count + one metadata-cheap index count. Those
-    counts run PER CALL — a hot serving loop (or a bench's timed
-    region) should derive once via `scaled_n_probe` and pass the int;
-    bench.py does exactly that in its untimed setup."""
+    with one codebook count (declared-schema read) + one
+    metadata-cheap index count. Those counts run PER CALL — a hot
+    serving loop (or a bench's timed region) should derive once via
+    `scaled_n_probe` and pass the int; bench.py does exactly that in
+    its untimed setup."""
     if n_probe is None:
-        n_lists = spark.read.parquet(path + "_centroids").count()
+        n_lists = _sidecar(spark, path, "_centroids").count()
         n_vec = spark.read.parquet(path).count()
         n_probe = scaled_n_probe(n_lists, n_vec)
     p, lists = _candidate_lists(
@@ -1586,7 +1598,7 @@ def write_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_per_level: int = 4096,
-) -> None:
+) -> list[list[float]]:
     """IVF-PQ index: the inverted lists store PRODUCT-QUANTIZED codes,
     not vectors — the storage/IO lever for the 10⁹-vector regime that
     partition pruning alone doesn't give. Each vector's dim-d
@@ -1610,7 +1622,9 @@ def write_ivfpq_index(
     which lists are read, PQ bounds the bytes per list. Other bounds:
     n_codes <= 256 (a code must fit the byte the format promises),
     dim % m_subs == 0. `n_centroids=None` applies the same √N
-    build-time rule as write_ivf_index (scaled_ivf_centroids)."""
+    build-time rule as write_ivf_index (scaled_ivf_centroids).
+    Returns the list centroids in cid order, as write_ivf_index
+    does."""
     if n_centroids is None:
         n_centroids = scaled_ivf_centroids(corpus.count())
     if n_codes > 256:
@@ -1639,10 +1653,10 @@ def write_ivfpq_index(
     ]
     _write_lists(assigned, path, "overwrite", id_col, vec_col, books)
     _write_codebook(spark, path, rows, coarse)
-    spark.createDataFrame(
-        [(s, j + 1, c) for s, b in enumerate(books) for j, c in enumerate(b)],
-        "sub INT, code INT, centroid ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "_pq")
+    _put_sidecar(spark, path, "_pq", [
+        (s, j + 1, c) for s, b in enumerate(books) for j, c in enumerate(b)
+    ])
+    return [c for _, c, _ in rows]
 
 
 def ivfpq_topk_indexed(

@@ -13,7 +13,9 @@ phrase/proximity queries. Sidecars: `<path>_terms` (term, df —
 VOCABULARY-sized, so it is itself Hive-partitioned by the same `_tb`
 hash: multi-task writes and bucket-pruned lookups, never a
 coalesce(1) straggler) and `<path>_consts` (n_docs, sum_dl,
-n_buckets — one row by construction).
+n_buckets — one row by construction). Each sidecar's schema is one
+DDL string in `_SIDECARS`, applied by its writer and by every read,
+so no read infers a schema from a footer.
 
 THE SIDECARS ARE A CACHE: df and the corpus constants are pure
 aggregates of the postings relation (dl is denormalized per doc), so
@@ -44,6 +46,14 @@ import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# the declared schema of each index sidecar, by suffix (`_tb` is the
+# `_terms` partition column)
+_SIDECARS = {
+    "_terms": "term STRING, df BIGINT, _tb BIGINT",
+    "_consts": "n_docs BIGINT, sum_dl BIGINT, n_buckets INT",
+}
 
 
 def _postings(
@@ -86,14 +96,26 @@ def _term_buckets(spark, terms: list[str], nb: int) -> list[int]:
     ]
 
 
-def _swap_sidecar(frame: DataFrame, final: str, partition_by=None) -> None:
-    """Write a sidecar under a temp name and swap it in via rename —
-    a crash mid-write leaves either the old or the new sidecar, never
-    a torn one."""
+def _sidecar(spark, path: str, sfx: str) -> DataFrame:
+    """The `<path><sfx>` sidecar, read with its declared schema."""
+    return spark.read.schema(_SIDECARS[sfx]).parquet(path + sfx)
+
+
+def _consts(spark, path: str):
+    """The one `<path>_consts` row."""
+    return _sidecar(spark, path, "_consts").collect()[0]
+
+
+def _swap_sidecar(frame: DataFrame, path: str, sfx: str) -> None:
+    """Write the `<path><sfx>` sidecar in its declared schema (`_terms`
+    partitioned by `_tb`) under a temp name and swap it in via rename
+    — a crash mid-write leaves either the old or the new sidecar,
+    never a torn one."""
+    final = path + sfx
     tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-    w = frame.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
+    w = frame.to(StructType.fromDDL(_SIDECARS[sfx])).write.mode("overwrite")
+    if sfx == "_terms":
+        w = w.partitionBy("_tb")
     w.parquet(tmp)
     old = f"{final}.old-{uuid.uuid4().hex[:8]}"
     if os.path.isdir(final):
@@ -134,8 +156,8 @@ def rebuild_sidecars(spark, path: str, n_buckets: int) -> None:
         )
         .coalesce(1)
     )
-    _swap_sidecar(df_tbl, path + "_terms", partition_by="_tb")
-    _swap_sidecar(consts, path + "_consts")
+    _swap_sidecar(df_tbl, path, "_terms")
+    _swap_sidecar(consts, path, "_consts")
 
 
 def write_text_index(
@@ -178,7 +200,7 @@ def append_to_text_index(
     and BM25 is nonlinear in tf. One tokenize pass over the new
     docs; the sidecar rebuild reads two columns of the index."""
     spark = new_docs.sparkSession
-    consts = spark.read.parquet(path + "_consts").collect()[0]
+    consts = _consts(spark, path)
     nb = int(consts["n_buckets"])
     positional = "positions" in spark.read.parquet(path).columns
     _postings(new_docs, text_col, id_col, positional, nb).write.partitionBy(
@@ -225,7 +247,7 @@ def delete_from_text_index(
         ids_df = spark.createDataFrame(
             [(i,) for i in doc_ids], f"doc_id {'string' if doc_ids and isinstance(doc_ids[0], str) else 'bigint'}"
         )
-    consts_row = spark.read.parquet(path + "_consts").collect()[0]
+    consts_row = _consts(spark, path)
     nb = int(consts_row["n_buckets"])
 
     p = spark.read.parquet(path)
@@ -273,7 +295,7 @@ def delete_from_text_index(
                 )
         # exact-integer sidecar merges (the qix9 merge in reverse)
         dec = spark.read.parquet(os.path.join(scratch, "dec"))
-        terms_tbl = spark.read.parquet(path + "_terms").select("term", "df")
+        terms_tbl = _sidecar(spark, path, "_terms").select("term", "df")
         new_terms = (
             terms_tbl.join(dec, "term", "left")
             .select(
@@ -291,10 +313,10 @@ def delete_from_text_index(
                 int(consts_row["sum_dl"]) - dl_dead,
                 nb,
             )],
-            "n_docs BIGINT, sum_dl BIGINT, n_buckets INT",
+            _SIDECARS["_consts"],
         ).coalesce(1)
-        _swap_sidecar(new_terms, path + "_terms", partition_by="_tb")
-        _swap_sidecar(new_consts, path + "_consts")
+        _swap_sidecar(new_terms, path, "_terms")
+        _swap_sidecar(new_consts, path, "_consts")
         return n_dead
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -313,7 +335,7 @@ def bm25_topk_indexed(
     rounding discipline as textstats.bm25_topk, but reading only the
     query terms' hash buckets instead of the corpus."""
     terms = list(query_terms)
-    consts = spark.read.parquet(path + "_consts").collect()[0]
+    consts = _consts(spark, path)
     n_docs = int(consts["n_docs"])
     if n_docs == 0:
         raise ValueError(
@@ -328,10 +350,9 @@ def bm25_topk_indexed(
     )
     # the _terms sidecar is partitioned by the same _tb hash, so the
     # vocabulary-sized df lookup prunes to the query terms' buckets too
-    dfreq = spark.read.parquet(path + "_terms")
-    if "_tb" in dfreq.columns:
-        dfreq = dfreq.filter(F.col("_tb").isin(buckets))
-    dfreq = dfreq.filter(F.col("term").isin(terms)).select("term", "df")
+    dfreq = _sidecar(spark, path, "_terms").filter(
+        F.col("_tb").isin(buckets) & F.col("term").isin(terms)
+    ).select("term", "df")
     j = p.join(F.broadcast(dfreq), "term")
     idf = F.log(
         (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
@@ -364,7 +385,7 @@ def phrase_docs_indexed(
     terms = list(phrase_terms)
     if len(terms) < 2:
         raise ValueError("phrase needs >= 2 terms")
-    consts = spark.read.parquet(path + "_consts").collect()[0]
+    consts = _consts(spark, path)
     nb = int(consts["n_buckets"])
     p = spark.read.parquet(path).filter(
         F.col("_tb").isin(_term_buckets(spark, terms, nb))
@@ -419,7 +440,7 @@ def kwic_snippets_indexed(
     classic retrieve-then-render split). The text re-split is one
     map-side op on hit rows; positions are 0-based (posexplode's
     convention, same as phrase_docs_indexed)."""
-    consts = spark.read.parquet(path + "_consts").collect()[0]
+    consts = _consts(spark, path)
     nb = int(consts["n_buckets"])
     p = spark.read.parquet(path).filter(
         F.col("_tb").isin(_term_buckets(spark, [term], nb))

@@ -20,9 +20,11 @@ ON-DISK LAYOUT (paths relative to the table root):
   `_bucket=i` subdirectories as separate relpaths). No data file is
   modified or, outside `vacuum`, deleted: rewrites delist directories.
 - `dv/v%08d-<hex>`: deletion-vector sidecars, parquet of
-  (`_dv_file` table-relative file path, `_dv_row` row index in that
-  file). Every read anti-joins the live vectors; `compact` applies
-  them physically and delists them.
+  `_DV_SCHEMA` (`_dv_file` table-relative file path, `_dv_row` row
+  index in that file); the writer and every reader use that one
+  declared schema, so no read infers it from a footer. A read
+  anti-joins the live vectors with the directories they target;
+  `compact` applies them physically and delists them.
 - `cdc/v%08d-<hex>`: change-data-feed sidecars (table columns +
   `_change_type`), listed by data-changing commits on CDF tables.
 
@@ -31,7 +33,10 @@ COMMIT KEYS. Every commit carries `version`, `operation`, `added`,
 Optional keys: `stats` ({relpath: {physical column: {min, max, nulls,
 allnull, bloom}}}, recorded by the commit that adds the directory),
 `dv_added` / `dv_removed` (vector relpaths), `dv_rows` (rows in the
-vectors the commit adds), `cdc`, `pruned_dirs`, `schema_evolved`,
+vectors the commit adds), `dv_targets` ({vector relpath: [data
+relpaths its positions name]}, recorded by the commit that adds the
+vector; clone, restore and checkpoint carry it for the vectors they
+list), `cdc`, `pruned_dirs`, `schema_evolved`,
 `merge_on_read`, `txn` ({app, version}), and per-operation provenance
 (`restored_version`, `cloned_from`, `clustered_by`, `zorder`,
 `renamed`, `dropped`, `small_only`, ...).
@@ -42,8 +47,12 @@ added-minus-removed lists; a directory's stats are those its adding
 commit recorded; `dv_rows` of the live vectors sums the count of every
 commit while at least one vector it added is live (exact for
 single-vector commits, an over-estimate for the multi-vector entries
-clone, restore and checkpoint write). Table metadata folds by the rule
-`_META` declares for each key:
+clone, restore and checkpoint write). A live vector's targets are
+those its adding commit recorded; the directories a read must
+anti-join (its DIRTY set) are the union over live vectors, and a live
+vector without a record (a log written before `dv_targets` existed)
+makes every live directory dirty: correct, only less selective. Table
+metadata folds by the rule `_META` declares for each key:
 
 - latest commit carrying the key wins (an explicit null or empty
   value resets): `check`, `column_map`, `defaults`, `exists_defaults`,
@@ -111,6 +120,8 @@ _CDC = "cdc"
 # _bucket= subdirectory is its own relpath), and a data FILE's
 _DIR_RE = r"(data/v\d{8}-[0-9a-f]+(?:/_bucket=\d+)?)"
 _FILE_RE = _DIR_RE[:-1] + r"/[^/]+)$"
+# the one schema of a deletion-vector sidecar, written and read
+_DV_SCHEMA = "_dv_file STRING, _dv_row BIGINT"
 # below this many live deleted positions the anti-join side is
 # broadcast — a DV that outgrows it still works, it just shuffles
 _DV_BROADCAST_ROWS = 10_000_000
@@ -226,7 +237,8 @@ def _read_state_commits(path: str) -> list[dict]:
         "dv_added": state.get("live_dvs", []),
         "dv_removed": [],
     }
-    for k in (*_META, "stats", "txn_watermarks", "committed_at"):
+    for k in (*_META, "stats", "dv_targets", "txn_watermarks",
+              "committed_at"):
         if state.get(k):
             synthetic[k] = state[k]
     if state.get("live_dvs"):
@@ -242,13 +254,16 @@ class _State(NamedTuple):
     directories and live vectors (listing order), each live
     directory's recorded stats ({} when none), the recorded row count
     of the live vectors (None when a contributing commit recorded
-    none), and every `_META` key folded by its rule."""
+    none), each live vector's recorded target directories (a vector
+    without a record is absent), and every `_META` key folded by its
+    rule."""
 
     version: int
     live: list
     dvs: list
     stats: dict
     dv_rows: int | None
+    dv_targets: dict
     meta: dict
 
 
@@ -270,6 +285,7 @@ def _table_state(commits: list[dict]) -> _State:
     live: list[str] = []
     dvs: list[str] = []
     recorded: dict[str, dict] = {}
+    targets: dict[str, list] = {}
     meta = {k: empty for k, (_rule, empty) in _META.items()}
     for c in commits:
         for r in c.get("removed", []):
@@ -279,6 +295,7 @@ def _table_state(commits: list[dict]) -> _State:
             dvs.remove(r)
         dvs.extend(c.get("dv_added", []))
         recorded.update(c.get("stats", {}))
+        targets.update(c.get("dv_targets", {}))
         for k, (rule, _empty) in _META.items():
             if (rule == "latest" and k in c) or (
                     rule == "schema" and c.get("schema")):
@@ -294,14 +311,15 @@ def _table_state(commits: list[dict]) -> _State:
         dvs=dvs,
         stats={d: recorded.get(d, {}) for d in live},
         dv_rows=_dv_rows(commits, set(dvs)),
+        dv_targets={v: targets[v] for v in dvs if v in targets},
         meta=copy.deepcopy(meta),
     )
 
 
 def checkpoint_log(path: str) -> int:
     """Write a LOG CHECKPOINT: the folded current state (live
-    directories + their stats, live deletion vectors + row count,
-    every `_META` key, per-app txn watermarks) lands in
+    directories + their stats, live deletion vectors + row count and
+    targets, every `_META` key, per-app txn watermarks) lands in
     `_commits/%08d.ckpt.json`, and every later current-state resolve
     reads checkpoint + tail instead of the whole history (Delta's
     _last_checkpoint shape). The per-commit JSONs are kept;
@@ -329,6 +347,8 @@ def checkpoint_log(path: str) -> int:
         "committed_at": commits[-1].get("committed_at"),
         **{k: v for k, v in st.meta.items() if v},
     }
+    if st.dv_targets:
+        state["dv_targets"] = st.dv_targets
     if watermarks:
         state["txn_watermarks"] = watermarks
     final = os.path.join(
@@ -357,16 +377,25 @@ def _with_position(df: DataFrame) -> DataFrame:
 
 def _dv_relation(spark: SparkSession, path: str, st: _State):
     """The union of live deletion-vector sidecars as (_dv_file,
-    _dv_row), broadcast while their recorded row count is known and
-    under _DV_BROADCAST_ROWS."""
+    _dv_row), read with the declared `_DV_SCHEMA` (no footer job),
+    broadcast while their recorded row count is known and under
+    _DV_BROADCAST_ROWS."""
     from pyspark.sql import functions as F
 
-    dv = spark.read.parquet(
-        *[os.path.join(path, d) for d in st.dvs]
-    ).select("_dv_file", "_dv_row")
+    dv = spark.read.schema(_DV_SCHEMA).parquet(
+        *[os.path.join(path, d) for d in st.dvs])
     if st.dv_rows is not None and st.dv_rows <= _DV_BROADCAST_ROWS:
         dv = F.broadcast(dv)
     return dv
+
+
+def _dirty_dirs(st: _State) -> set | None:
+    """The data directories the live vectors target, from the log:
+    the union of their recorded `dv_targets`, or None (every
+    directory) when a live vector has no record."""
+    if any(v not in st.dv_targets for v in st.dvs):
+        return None
+    return {d for v in st.dvs for d in st.dv_targets[v]}
 
 
 def _read_live(
@@ -381,9 +410,11 @@ def _read_live(
     live deletion vector targets them: CLEAN directories scan with no
     join in their subtree, DIRTY directories anti-join the vectors,
     and one unionByName stitches the two, so the read tax tracks the
-    dirty data, not the table. The dirty set comes from one tiny
-    distinct-directories job over the vector sidecars. With no live
-    vectors this is a plain scan.
+    dirty data, not the table. The dirty set is read from the log:
+    the union of the live vectors' recorded targets (`_dirty_dirs`),
+    or every directory when a live vector has no record, so splitting
+    runs no job, and a read with no dirty directory never opens a
+    vector. With no live vectors this is a plain scan.
 
     COLUMN MAPPING: data files carry PHYSICAL names, so the scan uses
     the physical struct and one final projection aliases back to the
@@ -434,35 +465,26 @@ def _read_live(
 
     _check_reader_features(st.meta["reader_features"], "table")
     pschema = _physical_struct(schema, cmap)
-    if not st.dvs or not dirs:
+    affected = _dirty_dirs(st)
+    if affected is None:
+        affected = set(dirs)
+    dirty = [d for d in dirs if d in affected]
+    clean = [d for d in dirs if d not in affected]
+    if not dirty:
         df = _scan(dirs)
         return _logical(_with_position(df) if keep_position else df)
     dv = _dv_relation(spark, path, st)
-    affected = {
-        r[0]
-        for r in dv.select(F.regexp_extract("_dv_file", _DIR_RE, 1))
-        .distinct()
-        .collect()
-    }
-    dirty = [d for d in dirs if d in affected]
-    clean = [d for d in dirs if d not in affected]
-    parts: list[DataFrame] = []
-    if dirty:
-        tagged = _with_position(_scan(dirty))
-        cond = (
-            (tagged["_f"] == dv["_dv_file"])
-            & (tagged["_r"] == dv["_dv_row"])
-        )
-        joined = tagged.join(dv, cond, "left_anti")
-        if not keep_position:
-            joined = joined.drop("_f", "_r")
-        parts.append(joined)
+    tagged = _with_position(_scan(dirty))
+    cond = (
+        (tagged["_f"] == dv["_dv_file"])
+        & (tagged["_r"] == dv["_dv_row"])
+    )
+    out = tagged.join(dv, cond, "left_anti")
+    if not keep_position:
+        out = out.drop("_f", "_r")
     if clean:
         cdf = _scan(clean)
-        parts.append(_with_position(cdf) if keep_position else cdf)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        out = out.unionByName(_with_position(cdf) if keep_position else cdf)
     return _logical(out)
 
 
@@ -981,38 +1003,36 @@ def _write_data(
     return rel, stats
 
 
-def _write_dv(
-    positions: DataFrame, path: str, version: int
-) -> tuple[str | None, int]:
+def _write_dv(positions: DataFrame, path: str, version: int) -> dict:
     """THE deletion-vector writer: the `_f`/`_r` positions of
-    `positions` land in a fresh `dv/v…` sidecar as
-    (_dv_file, _dv_row), their count riding the write as an
-    Observation. Returns (relpath, rows); a sidecar that received no
-    rows is removed and (None, 0) returned, so a writer that matched
-    nothing publishes nothing."""
+    `positions` land in a fresh `dv/v…` sidecar as `_DV_SCHEMA`
+    rows. Their count and the set of data directories they name ride
+    the write as one Observation, so the write runs no extra job.
+    Returns the entry keys that list the vector (`dv_added`,
+    `dv_rows`, `dv_targets`, the reader feature); a sidecar that
+    received no rows is removed and {} returned, so a writer that
+    matched nothing publishes nothing."""
     from pyspark.sql import functions as F
     from pyspark.sql import Observation
 
     obs = Observation()
     rel = os.path.join(_DV, f"v{version:08d}-{uuid.uuid4().hex[:12]}")
+    # `_f` (regexp_extract) and `_r` (row_index) already carry the
+    # string and long types `_DV_SCHEMA` declares
     positions.select(
         F.col("_f").alias("_dv_file"), F.col("_r").alias("_dv_row")
-    ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "error").parquet(os.path.join(path, rel))
+    ).observe(
+        obs, F.count(F.lit(1)).alias("n"),
+        F.collect_set(F.regexp_extract("_dv_file", _DIR_RE, 1)).alias("dirs"),
+    ).write.mode("error").parquet(os.path.join(path, rel))
     n = int(obs.get["n"] or 0)
     if n == 0:
         import shutil
 
         shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
-        return None, 0
-    return rel, n
-
-
-def _dv_entry(rel: str | None, rows: int) -> dict:
-    """The entry keys that list a written vector (none for None)."""
-    if rel is None:
         return {}
-    return {"dv_added": [rel], "dv_rows": rows,
+    return {"dv_added": [rel], "dv_rows": n,
+            "dv_targets": {rel: sorted(obs.get["dirs"])},
             "reader_features": ["deletion_vectors"]}
 
 
@@ -1233,7 +1253,7 @@ def _rename_rebased_rels(path: str, entry: dict, new_version: int) -> None:
     the version embedded in a directory name is load-bearing for
     ExistsDefault backfill, and sidecar names stay consistent with
     their entry. One atomic rename per directory, no data I/O; stats
-    keys follow their directory."""
+    and dv_targets keys follow their directory."""
     for key in ("added", "cdc", "dv_added"):
         rels = entry.get(key)
         if not rels:
@@ -1243,8 +1263,10 @@ def _rename_rebased_rels(path: str, entry: dict, new_version: int) -> None:
             head, _, base = rel.rpartition("/")
             new_rel = f"{head}/v{new_version:08d}-" + base.split("-", 1)[1]
             os.rename(os.path.join(path, rel), os.path.join(path, new_rel))
-            if rel in entry.get("stats", {}):
-                entry["stats"][new_rel] = entry["stats"].pop(rel)
+            for by_rel in (entry.get("stats", {}),
+                           entry.get("dv_targets", {})):
+                if rel in by_rel:
+                    by_rel[new_rel] = by_rel.pop(rel)
             out.append(new_rel)
         entry[key] = out
 
@@ -2149,12 +2171,12 @@ def delete_where(
     )
 
     if deletion_vectors:
-        dv_rel, n = _write_dv(full.filter(cond), path, version)
-        if dv_rel is None:
+        dv = _write_dv(full.filter(cond), path, version)
+        if not dv:
             return None
         entry = {"version": version, "operation": "delete_dv",
                  "added": [], "removed": [],
-                 "pruned_dirs": len(st.live), **_dv_entry(dv_rel, n)}
+                 "pruned_dirs": len(st.live), **dv}
     else:
         touched = _matched_dirs(full, cond, st.live)
         if not touched:
@@ -2227,7 +2249,7 @@ def _merge_on_read(
         .drop("_rn")
     )
     schema = _struct(st.meta)
-    dv_rel, n_dv = None, 0
+    dv: dict = {}
     cur_wins = None
     losers = None
     if touched:
@@ -2243,7 +2265,7 @@ def _merge_on_read(
         )
         # batch wins ties — the rewrite path's _src tiebreak
         losers = j.filter(F.col("_bts") >= F.col(ts_col))
-        dv_rel, n_dv = _write_dv(losers, path, version)
+        dv = _write_dv(losers, path, version)
         cur_wins = (
             j.filter(F.col("_bts") < F.col(ts_col))
             .select(*key_cols).distinct()
@@ -2265,7 +2287,7 @@ def _merge_on_read(
         "version": version, "operation": "merge_upsert",
         "merge_on_read": True,
         "added": [rel] if rel else [], "removed": [],
-        "pruned_dirs": n_pruned, **_dv_entry(dv_rel, n_dv),
+        "pruned_dirs": n_pruned, **dv,
     }
     if evolved:
         entry.update(_evolved_fields(ins.schema))
@@ -2501,8 +2523,8 @@ def _update_on_read(
     cmap = st.meta["column_map"]
     hit_rows = full.filter(F.coalesce(cond, F.lit(False))).localCheckpoint(
         eager=True)
-    dv_rel, n_dv = _write_dv(hit_rows, path, version)
-    if dv_rel is None:
+    dv = _write_dv(hit_rows, path, version)
+    if not dv:
         return None
     tcols = [c for c in full.columns if c not in ("_f", "_r")]
     updated = _apply_set(hit_rows, tcols, cond, set_exprs, st.meta)
@@ -2514,7 +2536,7 @@ def _update_on_read(
         "merge_on_read": True,
         "added": [rel], "removed": [],
         "pruned_dirs": len(st.live),
-        **_dv_entry(dv_rel, n_dv),
+        **dv,
     }
     if st.meta["cdf"]:
         # identical emission to the rewrite path: change-sized
@@ -2753,12 +2775,11 @@ def compact_small(
     if st.dvs:
         # vectors aimed at selected dirs were applied by the read;
         # the rest survive as one residual sidecar
-        dv = spark.read.parquet(
-            *[os.path.join(path, d) for d in st.dvs]
+        resid = _dv_relation(spark, path, st).filter(
+            ~F.regexp_extract("_dv_file", _DIR_RE, 1).isin(small)
         ).select(F.col("_dv_file").alias("_f"), F.col("_dv_row").alias("_r"))
-        resid = dv.filter(~F.regexp_extract("_f", _DIR_RE, 1).isin(small))
         entry["dv_removed"] = st.dvs
-        entry.update(_dv_entry(*_write_dv(resid, path, version)))
+        entry.update(_write_dv(resid, path, version))
     if stats:
         entry["stats"] = {rel: stats}
     return _publish(path, entry)
@@ -2772,7 +2793,8 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
     intact — the rollback is itself time-travelable and shows in
     DESCRIBE HISTORY, nothing is deleted. Pure log manipulation: no
     data is read or written. Re-added directories and vectors carry
-    the stats and row counts their original commits recorded.
+    the stats, row counts and vector targets their original commits
+    recorded.
     Refuses if any directory the target version needs was already
     reclaimed by vacuum (Delta's restore has the same failure
     mode)."""
@@ -2812,6 +2834,12 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
         entry["stats"] = readd_stats
     if entry["dv_added"]:
         entry["dv_rows"] = _dv_rows(commits_then, set(entry["dv_added"])) or 0
+    readd_targets = {
+        d: then.dv_targets[d] for d in entry["dv_added"]
+        if d in then.dv_targets
+    }
+    if readd_targets:
+        entry["dv_targets"] = readd_targets
     return _publish(path, entry)
 
 
@@ -2829,8 +2857,9 @@ def clone_table(spark: SparkSession, src: str, dst: str) -> int:
     restarting the clone's numbering would give post-clone writes
     directory versions BELOW the inherited intro versions and
     backfill their genuine NULLs. The clone carries every folded
-    metadata key, per-directory stats and live DVs — reads of the
-    clone are immediately identical to the source snapshot. Cost is
+    metadata key, per-directory stats and live DVs with their targets
+    — reads of the clone are immediately identical to the source
+    snapshot. Cost is
     metadata-only (one link per file), measured in
     scripts/table_probe.py."""
     st = _table_state(_read_state_commits(src))
@@ -2858,6 +2887,8 @@ def clone_table(spark: SparkSession, src: str, dst: str) -> int:
     if st.dvs:
         entry["dv_added"] = list(st.dvs)
         entry["dv_rows"] = st.dv_rows or 0
+    if st.dv_targets:
+        entry["dv_targets"] = st.dv_targets
     stats = {d: s for d, s in st.stats.items() if s}
     if stats:
         entry["stats"] = stats

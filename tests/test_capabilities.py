@@ -4583,3 +4583,237 @@ def test_backfill_rebase_rename(spark, tmp_path, monkeypatch):
     # pre-evolution row backfills; the batch's explicit NULL stays
     # NULL (the bug: without the rename it read -1.0)
     assert got == {1: -1.0, 2: 2.0, 3: None}, got
+
+
+def _dv_dirty_reference(spark, path, st) -> set:
+    """The dirty set as reads found it before the log recorded vector
+    targets: one distinct-directories job over the live vector
+    sidecars (schema inferred from their footers)."""
+    from sora_spark.sources import commit_log as cl
+
+    if not st.dvs:
+        return set()
+    dv = spark.read.parquet(*[os.path.join(path, d) for d in st.dvs])
+    return {
+        r[0] for r in dv.select(F.regexp_extract("_dv_file", cl._DIR_RE, 1))
+        .distinct().collect()
+    }
+
+
+def _assert_dv_targets_exact(spark, path) -> None:
+    """The live vectors' folded targets equal the reference dirty
+    set, and every live vector has a record."""
+    from sora_spark.sources import commit_log as cl
+
+    from pyspark.sql.types import StructType
+
+    st = cl._table_state(cl._read_state_commits(path))
+    assert st.dvs and set(st.dv_targets) == set(st.dvs), st
+    assert cl._dirty_dirs(st) == _dv_dirty_reference(spark, path, st)
+    for d in st.dvs:
+        written = spark.read.parquet(os.path.join(path, d)).schema
+        assert written.simpleString() == StructType.fromDDL(
+            cl._DV_SCHEMA).simpleString(), written
+
+
+def _dv_targets_table(spark, path: str) -> dict:
+    """A 4-directory table (one 500-row directory `big`, three 2-row
+    ones) → {directory name: relpath}."""
+    from sora_spark.sources import commit_log as cl
+
+    mk = lambda lo, n: spark.range(lo, lo + n).selectExpr(
+        "id AS k", "CAST(id * 2 AS DOUBLE) AS v", "CAST(10 AS BIGINT) AS ts")
+    cl.create_table(spark, path, mk(0, 500), stats_cols=["k"])
+    for lo in (1000, 2000, 3000):
+        cl.append(spark, path, mk(lo, 2), stats_cols=["k"])
+    live = cl._table_state(cl._read_commits(path, None)).live
+    return dict(zip(("big", "a", "b", "c"), live))
+
+
+def test_dv_targets_match_distinct_directories(spark, tmp_path, monkeypatch):
+    """Every writer that lists a deletion vector records the data
+    directories its positions name (`dv_targets`), and the fold of
+    the live vectors' targets equals the dirty set the old
+    distinct-directories job found: after a DV delete (also one that
+    rebases over a racing commit, whose vector is renamed), a
+    merge-on-read, an update-on-read, compact_small's residual,
+    clone_table, restore_table and checkpoint_log. Reads stay equal
+    to the expected rows throughout."""
+    from sora_spark.sources import commit_log as cl
+
+    path = str(tmp_path / "t")
+    dirs = _dv_targets_table(spark, path)
+    rows = lambda p, v=None: sorted(
+        map(tuple, cl.read_table(spark, p, v).collect()))
+
+    v_del = cl.delete_where(spark, path, "k IN (7, 1000)",
+                            deletion_vectors=True)
+    e = cl._read_commits(path, v_del)[-1]
+    assert e["dv_targets"] == {
+        e["dv_added"][0]: sorted([dirs["big"], dirs["a"]])}
+    _assert_dv_targets_exact(spark, path)
+
+    batch = spark.createDataFrame(
+        [(2000, -1.0, 20), (9000, 9.0, 20)], "k bigint, v double, ts bigint")
+    cl.merge_upsert(spark, path, batch, ["k"], "ts", merge_on_read=True)
+    _assert_dv_targets_exact(spark, path)
+
+    cl.update_where(spark, path, "k = 3001", {"v": "-2.0"},
+                    merge_on_read=True)
+    _assert_dv_targets_exact(spark, path)
+    want = rows(path)
+    assert (2000, -1.0, 20) in want and (3001, -2.0, 10) in want
+    assert not any(r[0] in (7, 1000) for r in want)
+
+    # a DV delete that loses the version race rebases in place: the
+    # renamed vector keeps its targets under its new relpath
+    real_publish = cl._publish
+    armed = {"on": True}
+
+    def racing_publish(p, entry):
+        if armed["on"] and entry.get("operation") == "delete_dv":
+            armed["on"] = False
+            real_publish(p, {"version": entry["version"],
+                             "operation": "append",
+                             "added": [], "removed": []})
+        return real_publish(p, entry)
+
+    monkeypatch.setattr(cl, "_publish", racing_publish)
+    v_race = cl.delete_where(spark, path, "k = 8", deletion_vectors=True)
+    monkeypatch.setattr(cl, "_publish", real_publish)
+    e = cl._read_commits(path, v_race)[-1]
+    assert e["dv_added"][0].startswith(f"dv/v{v_race:08d}-")
+    assert e["dv_targets"] == {e["dv_added"][0]: [dirs["big"]]}
+    _assert_dv_targets_exact(spark, path)
+    want = [r for r in want if r[0] != 8]
+    assert rows(path) == want
+
+    def dir_bytes(rel):
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _d, fs in os.walk(os.path.join(path, rel))
+            for f in fs if not f.startswith(("_", ".")))
+
+    st = cl._table_state(cl._read_state_commits(path))
+    small = max(dir_bytes(d) for d in st.live if d != dirs["big"])
+    assert dir_bytes(dirs["big"]) > small + 1
+    v = cl.compact_small(spark, path, max_dir_bytes=small + 1)
+    e = cl._read_commits(path, v)[-1]
+    assert e["removed"] and dirs["big"] not in e["removed"]
+    # only the big directory's positions survive, in one residual
+    assert list(e["dv_targets"].values()) == [[dirs["big"]]]
+    _assert_dv_targets_exact(spark, path)
+    assert rows(path) == want
+
+    dst = str(tmp_path / "clone")
+    cl.clone_table(spark, path, dst)
+    _assert_dv_targets_exact(spark, dst)
+    assert rows(dst) == want
+
+    cl.restore_table(spark, path, v_del)
+    _assert_dv_targets_exact(spark, path)
+    assert rows(path) == rows(path, v_del)
+
+    cl.checkpoint_log(path)
+    assert cl._read_state_commits(path)[0]["operation"] == "checkpoint"
+    _assert_dv_targets_exact(spark, path)
+    assert rows(path) == rows(path, v_del)
+
+
+def test_dv_without_targets_reads_all_dirty(spark, tmp_path):
+    """A log written before vectors recorded their targets (the same
+    table with `dv_targets` stripped from every commit) reads the
+    same rows: a live vector without a record makes every live
+    directory dirty. A later vector recorded on that log leaves the
+    read all-dirty while the old vector is live."""
+    import json
+    import shutil
+
+    from sora_spark.sources import commit_log as cl
+
+    path = str(tmp_path / "t")
+    _dv_targets_table(spark, path)
+    cl.delete_where(spark, path, "k IN (7, 1000)", deletion_vectors=True)
+    batch = spark.createDataFrame(
+        [(2000, -1.0, 20)], "k bigint, v double, ts bigint")
+    cl.merge_upsert(spark, path, batch, ["k"], "ts", merge_on_read=True)
+    old = str(tmp_path / "old")
+    shutil.copytree(path, old)
+    commits = os.path.join(old, "_commits")
+    for f in os.listdir(commits):
+        with open(os.path.join(commits, f)) as fh:
+            c = json.load(fh)
+        c.pop("dv_targets", None)
+        with open(os.path.join(commits, f), "w") as fh:
+            json.dump(c, fh)
+
+    rows = lambda p: sorted(map(tuple, cl.read_table(spark, p).collect()))
+    st = cl._table_state(cl._read_state_commits(old))
+    assert len(st.dvs) == 2 and st.dv_targets == {}
+    assert cl._dirty_dirs(st) is None
+    assert rows(old) == rows(path)
+
+    for p in (path, old):
+        cl.delete_where(spark, p, "k = 3001", deletion_vectors=True)
+    st = cl._table_state(cl._read_state_commits(old))
+    assert len(st.dv_targets) == 1 and cl._dirty_dirs(st) is None
+    assert rows(old) == rows(path)
+    assert not any(r[0] in (7, 1000, 3001) for r in rows(old))
+
+
+def _job_count(spark, fn) -> tuple[int, object]:
+    """(Spark jobs `fn()` starts, its result), counted through the
+    status tracker under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_log_and_codebook_reads_run_no_metadata_jobs(spark, tmp_path):
+    """Reading back what the engine wrote runs no job to rediscover
+    it. `read_table` + one aggregate over a table with one live
+    merge-on-read vector is 3 jobs: no footer job for the vector
+    sidecar and no distinct-directories job (the dirty set is in the
+    log). One flat, exhaustive `ivf_topk_indexed` probe is 5 jobs: no
+    footer job for the codebook and no `orderBy` jobs to sort it."""
+    from sora_spark.llm import ann
+    from sora_spark.sources import commit_log as cl
+
+    path = str(tmp_path / "t")
+    mk = lambda lo, n, ts: spark.range(lo, lo + n).selectExpr(
+        "id AS k", "CAST(id * 2 AS DOUBLE) AS v",
+        f"CAST({ts} AS BIGINT) AS ts")
+    cl.create_table(spark, path, mk(0, 50, 10), stats_cols=["k"])
+    for lo in (100, 200, 300):
+        cl.append(spark, path, mk(lo, 50, 10), stats_cols=["k"])
+    cl.merge_upsert(spark, path, mk(210, 5, 20), ["k"], "ts",
+                    merge_on_read=True)
+    assert len(cl._table_state(cl._read_state_commits(path)).dvs) == 1
+    agg = lambda: cl.read_table(spark, path).agg(
+        F.count("*"), F.sum("v")).collect()
+    agg()
+    n, got = _job_count(spark, agg)
+    assert tuple(got[0]) == (200, 2 * sum(
+        [*range(50), *range(100, 150), *range(200, 250), *range(300, 350)]))
+    assert n == 3, n
+
+    emb = spark.range(64).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin((F.col("id") + 1) * (j + 1)) for j in range(8)])
+        .alias("embedding"))
+    idx = str(tmp_path / "ivf")
+    ann.write_ivf_index(emb, idx, n_centroids=4, iters=1)
+    probes = emb.filter("vec_id % 8 = 0").localCheckpoint(eager=True)
+    probe = lambda: ann.ivf_topk_indexed(
+        spark, idx, probes, k=3, n_probe=4).collect()
+    probe()
+    n, got = _job_count(spark, probe)
+    assert len(got) == 8 * 3
+    assert n == 5, n
